@@ -40,9 +40,6 @@ abstract class PairFoldExpression extends BinaryExpression {
   protected def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
 
-  protected def getD(arr: ArrayData, i: Int, t: DataType): Double =
-    if (t == FloatType) arr.getFloat(i).toDouble else arr.getDouble(i)
-
   protected def genGet(arr: String, i: String, t: DataType): String =
     if (t == FloatType) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
 
@@ -51,13 +48,16 @@ abstract class PairFoldExpression extends BinaryExpression {
   protected def accDecl(a1: String, a2: String, a3: String): String
   protected def accUpdate(x: String, y: String, a1: String, a2: String, a3: String): String
   protected def accResult(a1: String, a2: String, a3: String): String
-  /** Interpreted twin of the generated loop. */
-  protected def evalLoop(a: ArrayData, b: ArrayData, lt: DataType, rt: DataType, n: Int): Any
+  /** Interpreted twin of the generated loop: the shared [[VecKernels]] fold. */
+  protected def fold(a: Array[Double], b: Array[Double], n: Int): Double
 
+  /** The common prefix of both arrays as doubles (null on a null element). */
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    evalLoop(a, b, elemType(left), elemType(right),
-      math.min(a.numElements(), b.numElements()))
+    val n = math.min(a.numElements(), b.numElements())
+    val x = VecKernels.toDoubles(a, elemType(left) == FloatType, n)
+    val y = VecKernels.toDoubles(b, elemType(right) == FloatType, n)
+    if (x == null || y == null) null else fold(x, y, n)
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -88,14 +88,8 @@ case class SquaredL2(left: Expression, right: Expression) extends PairFoldExpres
   protected def accUpdate(x: String, y: String, a1: String, a2: String, a3: String) =
     s"$a2 = $x - $y; $a1 += $a2 * $a2;"
   protected def accResult(a1: String, a2: String, a3: String) = a1
-  protected def evalLoop(a: ArrayData, b: ArrayData, lt: DataType, rt: DataType, n: Int): Any = {
-    var s = 0.0; var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val d = getD(a, i, lt) - getD(b, i, rt); s += d * d; i += 1
-    }
-    s
-  }
+  protected def fold(a: Array[Double], b: Array[Double], n: Int): Double =
+    VecKernels.squaredL2(a, b, n)
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
@@ -107,14 +101,8 @@ case class DotProduct(left: Expression, right: Expression) extends PairFoldExpre
   protected def accUpdate(x: String, y: String, a1: String, a2: String, a3: String) =
     s"$a1 += $x * $y;"
   protected def accResult(a1: String, a2: String, a3: String) = a1
-  protected def evalLoop(a: ArrayData, b: ArrayData, lt: DataType, rt: DataType, n: Int): Any = {
-    var s = 0.0; var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      s += getD(a, i, lt) * getD(b, i, rt); i += 1
-    }
-    s
-  }
+  protected def fold(a: Array[Double], b: Array[Double], n: Int): Double =
+    VecKernels.dot(a, b, n)
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
@@ -129,15 +117,8 @@ case class CosineSim(left: Expression, right: Expression) extends PairFoldExpres
     s"$a1 += $x * $y; $a2 += $x * $x; $a3 += $y * $y;"
   protected def accResult(a1: String, a2: String, a3: String) =
     s"$a1 / (java.lang.Math.sqrt($a2) * java.lang.Math.sqrt($a3))"
-  protected def evalLoop(a: ArrayData, b: ArrayData, lt: DataType, rt: DataType, n: Int): Any = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = getD(a, i, lt); val y = getD(b, i, rt)
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  protected def fold(a: Array[Double], b: Array[Double], n: Int): Double =
+    VecKernels.cosine(a, b, n)
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
@@ -336,24 +317,17 @@ abstract class SqDeqFoldExpression extends BinaryExpression {
 
   private def qElemT: DataType = right.dataType.asInstanceOf[ArrayType].elementType
 
-  /** acc ← acc ⊕ f(x̂, q, step) — the per-element fold. */
-  protected def foldStep(acc: Double, xhat: Double, q: Double, step: Double): Double
+  /** The interpreted fold over dequantized x̂ and q (shared [[VecKernels]] loop). */
+  protected def fold(xhat: Array[Double], q: Array[Double], n: Int): Double
   /** Java source for the same step: updates `acc` from `xhat`, `q`, `step`. */
   protected def genStep(acc: String, xhat: String, q: String, step: String): String
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val code = l.asInstanceOf[ArrayData]; val q = r.asInstanceOf[ArrayData]
-    val isF = qElemT == FloatType
     val n = math.min(math.min(code.numElements(), q.numElements()), mins.length)
-    var acc = 0.0; var i = 0
-    while (i < n) {
-      if (code.isNullAt(i) || q.isNullAt(i)) return null
-      val xhat = mins(i) + code.getInt(i) * steps(i)
-      val qi = if (isF) q.getFloat(i).toDouble else q.getDouble(i)
-      acc = foldStep(acc, xhat, qi, steps(i))
-      i += 1
-    }
-    acc
+    val xhat = VecKernels.dequantize(code, mins, steps, n)
+    val qd = VecKernels.toDoubles(q, qElemT == FloatType, n)
+    if (xhat == null || qd == null) null else fold(xhat, qd, n)
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -385,9 +359,8 @@ case class SqDeqSquaredL2(left: Expression, right: Expression,
                           mins: Array[Double], steps: Array[Double])
     extends SqDeqFoldExpression {
   override def prettyName: String = "sq_deq_squared_l2"
-  protected def foldStep(acc: Double, xhat: Double, q: Double, step: Double): Double = {
-    val d = xhat - q; acc + d * d
-  }
+  protected def fold(xhat: Array[Double], q: Array[Double], n: Int): Double =
+    VecKernels.squaredL2(xhat, q, n)
   protected def genStep(acc: String, xhat: String, q: String, step: String): String =
     s"$acc += ($xhat - $q) * ($xhat - $q);"
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
@@ -399,8 +372,8 @@ case class SqDeqBandBound(left: Expression, right: Expression,
                           mins: Array[Double], steps: Array[Double])
     extends SqDeqFoldExpression {
   override def prettyName: String = "sq_deq_band_bound"
-  protected def foldStep(acc: Double, xhat: Double, q: Double, step: Double): Double =
-    acc + math.abs(xhat - q) * step
+  protected def fold(xhat: Array[Double], q: Array[Double], n: Int): Double =
+    VecKernels.bandBound(xhat, q, steps, n)
   protected def genStep(acc: String, xhat: String, q: String, step: String): String =
     s"$acc += java.lang.Math.abs($xhat - $q) * $step;"
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
@@ -412,8 +385,8 @@ case class SqDeqDot(left: Expression, right: Expression,
                     mins: Array[Double], steps: Array[Double])
     extends SqDeqFoldExpression {
   override def prettyName: String = "sq_deq_dot"
-  protected def foldStep(acc: Double, xhat: Double, q: Double, step: Double): Double =
-    acc + xhat * q
+  protected def fold(xhat: Array[Double], q: Array[Double], n: Int): Double =
+    VecKernels.dot(xhat, q, n)
   protected def genStep(acc: String, xhat: String, q: String, step: String): String =
     s"$acc += $xhat * $q;"
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
@@ -553,11 +526,11 @@ case class AdcLookupSum(codesArr: Expression, cluster: Expression, tables: Expre
 }
 
 /** The `nprobe` nearest coarse clusters of a query, as an ARRAY<INT> of
-  * raw cluster ids — selection order (squaredL2 asc, cluster id asc),
-  * exactly the total order the relational TopKPerKey probe used, so the
-  * probed SET is identical. Evaluated once per query row on the broadcast
-  * side (CodegenFallback is fine there). `centroids` = (id, vector) pairs
-  * like the IVF coarse quantizer holds them. */
+  * raw cluster ids — selection order (squaredL2 asc, cluster id asc) of
+  * [[VecKernels.nearestClusters]], the probe set of every IVF probe.
+  * Evaluated once per query row on the broadcast side (CodegenFallback is
+  * fine there). `centroids` = (id, vector) pairs like the IVF coarse
+  * quantizer holds them. */
 case class NearestClusters(child: Expression,
                            centroids: Array[(Int, Array[Double])], nprobe: Int)
     extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
@@ -576,16 +549,10 @@ case class NearestClusters(child: Expression,
 
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
-    val isF = elemT == FloatType
-    val q = Array.tabulate(arr.numElements())(i =>
-      if (isF) arr.getFloat(i).toDouble else arr.getDouble(i))
-    val ranked = centroids.map { case (c, cen) =>
-      var d = 0.0; var i = 0
-      val n = math.min(cen.length, q.length)
-      while (i < n) { val x = q(i) - cen(i); d += x * x; i += 1 }
-      (d, c)
-    }.sortBy(identity).take(math.max(1, nprobe)).map(_._2)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(ranked)
+    val q = VecKernels.toDoubles(arr, elemT == FloatType, arr.numElements())
+    if (q == null) null
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      VecKernels.nearestClusters(q, centroids, nprobe))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -643,6 +610,84 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** The scalar fold loops behind the interpreted twins above and behind the
+  * fused batch-KNN operator ([[graft.plans.KnnTopK]]): one copy of each
+  * loop, over dense double arrays, accumulating in double strictly left to
+  * right over elements 0..n-1 — the order the generated code uses, so
+  * every caller is bit-equal to the codegen'd expressions. Compiled once
+  * by scalac, so the JIT keeps them warm across queries. */
+object VecKernels {
+
+  /** Σ (a_i − b_i)². */
+  def squaredL2(a: Array[Double], b: Array[Double], n: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < n) { val d = a(i) - b(i); s += d * d; i += 1 }
+    s
+  }
+
+  /** Σ a_i·b_i. */
+  def dot(a: Array[Double], b: Array[Double], n: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** a·b / (‖a‖·‖b‖), the three sums in one pass. */
+  def cosine(a: Array[Double], b: Array[Double], n: Int): Double = {
+    var dt = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a(i); val y = b(i)
+      dt += x * y; na += x * x; nb += y * y; i += 1
+    }
+    dt / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Σ |x̂_i − q_i|·s_i — the SQ8 interval-bound term. */
+  def bandBound(xhat: Array[Double], q: Array[Double], steps: Array[Double], n: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < n) { s += math.abs(xhat(i) - q(i)) * steps(i); i += 1 }
+    s
+  }
+
+  /** The first `n` elements as doubles (float → double is exact); null if
+    * any of them is null. */
+  def toDoubles(a: ArrayData, isFloat: Boolean, n: Int): Array[Double] = {
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) return null
+      out(i) = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      i += 1
+    }
+    out
+  }
+
+  /** x̂_i = mins_i + code_i·steps_i for the first `n` codes; null if any of
+    * them is null. */
+  def dequantize(code: ArrayData, mins: Array[Double], steps: Array[Double],
+                 n: Int): Array[Double] = {
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (code.isNullAt(i)) return null
+      out(i) = mins(i) + code.getInt(i) * steps(i)
+      i += 1
+    }
+    out
+  }
+
+  /** The `nprobe` nearest clusters of `q` by squared L2 over the common
+    * prefix, ties by cluster id — the IVF probe set. */
+  def nearestClusters(q: Array[Double], centroids: Array[(Int, Array[Double])],
+                      nprobe: Int): Array[Int] =
+    centroids.map { case (c, cen) => (squaredL2(q, cen, math.min(cen.length, q.length)), c) }
+      .sortWith { (x, y) =>
+        val c = java.lang.Double.compare(x._1, y._1)
+        c < 0 || (c == 0 && x._2 < y._2)
+      }
+      .take(math.max(1, nprobe)).map(_._2)
 }
 
 /** Column-API entry points. */

@@ -35,7 +35,7 @@ private[graft] trait QueriesOracles { this: Queries.type =>
        |  FROM scored)
        |WHERE rn <= $k ORDER BY qid, score DESC, id""".stripMargin
 
-  /** Oracle for the batch-KNN formulations (window, TopKPerKey, bulk IVF). */
+  /** Oracle for the batch-KNN formulations (exact, SQ8, bulk IVF). */
   private[graft] def knnBatchSqlFor(qids: String): String =
     s"""WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
        |           FROM embeddings WHERE vec_id IN ($qids)),

@@ -370,10 +370,9 @@ private[graft] trait QueriesSearch { this: Queries.type =>
   private[graft] def annSq8Cosine(spark: SparkSession, dir: String): DataFrame =
     sqIndex(spark, dir).searchCosine(qvec(spark, dir, 99), k = 10)
 
-  /** Batch form of the SQ8 cosine arm: per-query bound slack and query
-    * norm as EXPRESSIONS over the broadcast query frame, thresholds via
-    * TopKPerKey, float rerank of survivors only — the codes-then-floats
-    * two-pass shape under the cosine proof. */
+  /** Batch form of the SQ8 cosine arm: one pass of the fused KnnTopK
+    * operator, a per-(row, query) branch-and-bound over the codes under
+    * the cosine proof, float rerank of survivors only. */
   private[graft] def knnBatchSq8Cosine(spark: SparkSession, dir: String): DataFrame = {
     val e = tbl(spark, dir, "embeddings")
     val queries = e.where(col("vec_id").isin(11L, 12L, 13L))
@@ -708,8 +707,9 @@ private[graft] trait QueriesSearch { this: Queries.type =>
       .orderBy(col("qid").asc, col("score").desc, col("id").asc)
   }
 
-  /** Same workload through the custom TopKPerKey LogicalPlan/SparkStrategy
-    * operator — exact results, so it shares knn_batch's oracle. */
+  /** Same workload through the `topKBatchHeap` entry point (an alias of
+    * `topKBatch`, the fused KnnTopK operator) — exact results, so it
+    * shares knn_batch's oracle. */
   private[graft] def knnBatchTopk(spark: SparkSession, dir: String): DataFrame = {
     val e = tbl(spark, dir, "embeddings")
     val queries = e.where(col("vec_id").isin(1L, 2L, 3L))
@@ -719,10 +719,10 @@ private[graft] trait QueriesSearch { this: Queries.type =>
       .orderBy(col("qid").asc, col("score").desc, col("id").asc)
   }
 
-  /** Bulk exact KNN through the SQ8 bound-pruned batch plan: codes-only
-    * first pass → per-query thresholds via TopKPerKey → float rerank of
-    * survivors. Exact by the interval-bound proof ⇒ shares the exact batch
-    * oracle. */
+  /** Bulk exact KNN through the SQ8 bound-pruned batch plan: one fused
+    * KnnTopK pass, per (row, query) a codes-only bound against the query
+    * heap's k-th distance, float rerank of survivors. Exact by the
+    * interval-bound proof ⇒ shares the exact batch oracle. */
   private[graft] def knnBatchSq8(spark: SparkSession, dir: String): DataFrame = {
     val e = tbl(spark, dir, "embeddings")
     val queries = e.where(col("vec_id").isin(7L, 8L, 9L))
@@ -733,8 +733,8 @@ private[graft] trait QueriesSearch { this: Queries.type =>
   }
 
   /** BULK ANN through the IVF index as ONE distributed plan (no per-query
-    * driver probe): centroid ranking via broadcast + bounded heap,
-    * candidates through one cluster equi-join, exact re-rank per query.
+    * driver probe): one fused KnnTopK pass over the assignments, each
+    * task ranking every query's centroids and scoring only probed cells.
     * Exact-recoverable configuration (nprobe = nlist) ⇒ shares the exact
     * batch oracle; the approximate-probe plan shape is spec-pinned. */
   private[graft] def knnBatchIvf(spark: SparkSession, dir: String): DataFrame = {

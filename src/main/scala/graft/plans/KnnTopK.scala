@@ -1,0 +1,475 @@
+package graft.plans
+
+import graft.expr.VecKernels
+import graft.vector.ExactKNN
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, Descending, GenericInternalRow, InterpretedOrdering, InterpretedUnsafeProjection, Literal, Round, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType}
+
+import scala.collection.mutable
+
+/** How the fused batch-KNN operator scores one corpus row against the
+  * query block. The corpus child's columns are, in order, `columns`; the
+  * query child's are (qid, qv). */
+sealed trait KnnScorer extends Serializable {
+  def columns: Seq[String]
+  /** Output scores rounded to 4 dp (selection still uses the unrounded score). */
+  def roundScores: Boolean = false
+  def describe: String
+}
+
+object KnnScorer {
+  /** Every (row, query) pair scored by `metric` on the float vectors. */
+  final case class Exact(metric: ExactKNN.Metric) extends KnnScorer {
+    def columns: Seq[String] = Seq("id", "vector")
+    def describe: String = s"exact $metric"
+  }
+
+  /** SQ8 branch-and-bound by squared L2 (see [[graft.vector.SQIndex]] for the
+    * interval bound and the rounded-tie slack): a pair is pruned when
+    * d̂ − B exceeds the query heap's current k-th distance T plus
+    * 2e-4·(1+T)², otherwise reranked on the float vector. */
+  final case class Sq8L2(mins: Array[Double], steps: Array[Double]) extends KnnScorer {
+    def columns: Seq[String] = Seq("id", "vector", "code")
+    override def roundScores: Boolean = true
+    def describe: String = "sq8 l2sq"
+  }
+
+  /** SQ8 branch-and-bound by cosine: a pair is pruned when the upper bound
+    * (x̂·q + B_q)/(‖x‖‖q‖) falls below the heap's current k-th cosine
+    * minus 2e-4. Zero-norm rows and queries (cosine undefined) are never
+    * scored. */
+  final case class Sq8Cosine(mins: Array[Double], steps: Array[Double]) extends KnnScorer {
+    def columns: Seq[String] = Seq("id", "vector", "code", "nrm")
+    override def roundScores: Boolean = true
+    def describe: String = "sq8 cosine"
+  }
+
+  /** IVF probe: a pair is scored only when the row's cell is among the
+    * query's `nprobe` nearest centroids (squared L2, ties by cluster id). */
+  final case class IvfCells(metric: ExactKNN.Metric, centroids: Array[(Int, Array[Double])],
+                            nprobe: Int) extends KnnScorer {
+    def columns: Seq[String] = Seq("id", "vector", "cluster")
+    def describe: String = s"ivf nprobe=$nprobe $metric"
+  }
+}
+
+/** Fused batch k-nearest-neighbour search: every corpus row (left) against
+  * a broadcast query block (right), keeping a bounded heap per query, in
+  * one pass — the Spark form of `IndexFlatL2.search` over a query matrix.
+  * The |corpus|×|Q| pairs are never materialized: each task scores its
+  * rows against every query in plain compiled Scala ([[VecKernels]], the
+  * same loops the codegen'd expressions' interpreted twins run, so scores
+  * are bit-equal to them) and emits at most k rows per query; one
+  * single-partition exchange feeds the merge, which outputs
+  * (qid, id, score) in (qid asc, score desc, id asc) order.
+  *
+  * Rank order is (unrounded score desc — Spark's double order, so NaN
+  * first and null last — then id asc). Queries with equal qids share a
+  * heap. Output: (qid, id, score). */
+case class KnnTopK(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
+                   qid: Attribute, qv: Attribute, score: Attribute,
+                   left: LogicalPlan, right: LogicalPlan) extends BinaryNode {
+  override def output: Seq[Attribute] = Seq(qid, corpusCols.head, score)
+  override def producedAttributes: AttributeSet = AttributeSet(score)
+  override def stringArgs: Iterator[Any] = Iterator(k, scorer.describe)
+  override protected def withNewChildrenInternal(l: LogicalPlan, r: LogicalPlan): KnnTopK =
+    copy(left = l, right = r)
+}
+
+/** Per-partition phase: scores the local corpus rows against the
+  * broadcast queries and emits each query heap (≤ k rows per qid). */
+case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
+                       qid: Attribute, qv: Attribute, score: Attribute,
+                       left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
+  override def output: Seq[Attribute] = Seq(qid, corpusCols.head, score)
+  override def outputPartitioning: Partitioning =
+    UnknownPartitioning(left.outputPartitioning.numPartitions)
+  override def requiredChildDistribution: Seq[Distribution] =
+    UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
+  override def stringArgs: Iterator[Any] = Iterator(k, scorer.describe)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "pairsScored" -> SQLMetrics.createMetric(sparkContext, "pairs scored"),
+    "sq8Pruned" -> SQLMetrics.createMetric(sparkContext, "pairs pruned by SQ8 bound"),
+    "ivfSkipped" -> SQLMetrics.createMetric(sparkContext, "pairs skipped by IVF cell"),
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val queries: Broadcast[Array[InternalRow]] = right.executeBroadcast[Array[InternalRow]]()
+    val kk = k
+    val sc = scorer
+    def ordinal(a: Attribute, in: Seq[Attribute]): Int = {
+      val i = in.indexWhere(_.exprId == a.exprId)
+      require(i >= 0, s"$a is not in ${in.mkString(",")}")
+      i
+    }
+    val ords = corpusCols.map(ordinal(_, left.output))
+    val types = corpusCols.map(_.dataType)
+    val qOrd = ordinal(qid, right.output)
+    val qvOrd = ordinal(qv, right.output)
+    val qidType = qid.dataType
+    val qvFloat = KnnTopK.isFloatArray(qv.dataType)
+    val (mScored, mPruned, mSkipped, mOut) = (metrics("pairsScored"),
+      metrics("sq8Pruned"), metrics("ivfSkipped"), metrics("numOutputRows"))
+    left.execute().mapPartitions { rows =>
+      val qrows = queries.value
+      if (kk <= 0 || qrows.isEmpty) Iterator.empty
+      else {
+        val block = new KnnTopK.QueryBlock(qrows, qOrd, qidType, qvOrd, qvFloat)
+        val idOrd = KnnTopK.ordering(types.head)
+        val heaps = Array.fill(block.nGroups)(new KnnHeap(kk, idOrd))
+        val counts = new Array[Long](3) // scored, pruned, skipped
+        val scan = KnnTopK.rowScanner(sc, block, heaps, ords, types, counts)
+        rows.foreach(scan)
+        mScored += counts(0); mPruned += counts(1); mSkipped += counts(2)
+        val out = KnnTopK.emitter(qidType, types.head)
+        heaps.indices.iterator.flatMap { g =>
+          heaps(g).sorted.iterator.map { h =>
+            mOut += 1
+            out(block.groupQid(g), h.id, if (h.isNull) null else h.score)
+          }
+        }
+      }
+    }
+  }
+
+  override protected def withNewChildrenInternal(l: SparkPlan, r: SparkPlan): KnnTopKExec =
+    copy(left = l, right = r)
+}
+
+/** Final phase on one partition: merges the per-partition heaps per qid
+  * and outputs (qid asc, score desc, id asc), rounding scores to 4 dp
+  * when the scorer says so (selection is by the unrounded score, the
+  * output order by the rounded one, then id). */
+case class KnnTopKMergeExec(k: Int, roundScores: Boolean, qid: Attribute, idAttr: Attribute,
+                            score: Attribute, child: SparkPlan) extends UnaryExecNode {
+  override def output: Seq[Attribute] = child.output
+  override def requiredChildDistribution: Seq[Distribution] = AllTuples :: Nil
+  override def outputPartitioning: Partitioning = SinglePartition
+  override def outputOrdering: Seq[SortOrder] =
+    Seq(SortOrder(qid, Ascending), SortOrder(score, Descending), SortOrder(idAttr, Ascending))
+  override def stringArgs: Iterator[Any] = Iterator(k, roundScores)
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val kk = k
+    val rnd = roundScores
+    val qidType = qid.dataType
+    val idType = idAttr.dataType
+    child.execute().mapPartitions { rows =>
+      val idOrd = KnnTopK.ordering(idType)
+      val groups = mutable.HashMap.empty[Any, KnnHeap]
+      val qids = mutable.ArrayBuffer.empty[Any]
+      rows.foreach { r =>
+        val q = if (r.isNullAt(0)) null else InternalRow.copyValue(r.get(0, qidType))
+        val heap = groups.getOrElseUpdate(KnnTopK.groupKey(q), { qids += q; new KnnHeap(kk, idOrd) })
+        heap.offer(r.isNullAt(2), r.getDouble(2), if (r.isNullAt(1)) null else r.get(1, idType))
+      }
+      val out = KnnTopK.emitter(qidType, idType)
+      val rounder = Round(BoundReference(0, DoubleType, nullable = true), Literal(4))
+      qids.sorted(KnnTopK.ordering(qidType)).iterator.flatMap { q =>
+        val best = groups(KnnTopK.groupKey(q)).sorted
+        val hits = if (!rnd) best else best.map(h => new KnnHit(h.isNull,
+            if (h.isNull) 0.0 else rounder.eval(InternalRow(h.score)).asInstanceOf[Double], h.id, h.dist))
+          .sortWith((a, b) => KnnHeap.ranks(idOrd, a.isNull, a.score, a.id, b) > 0)
+        hits.iterator.map(h => out(q, h.id, if (h.isNull) null else h.score))
+      }
+    }
+  }
+
+  override protected def withNewChildInternal(c: SparkPlan): KnnTopKMergeExec = copy(child = c)
+}
+
+/** One retained (row, query) hit; `isNull` = null score (a null vector).
+  * `dist` is the squared-L2 distance the SQ8 bound compares against. */
+final class KnnHit(val isNull: Boolean, val score: Double, val id: Any, val dist: Double)
+
+/** Bounded heap of the k best hits under (score desc, id asc); the root
+  * is the worst retained hit. Storage grows with the hits kept, so a
+  * k far above the row count costs nothing up front. */
+final class KnnHeap(k: Int, idOrd: Ordering[Any]) {
+  private val hits = mutable.ArrayBuffer.empty[KnnHit]
+  private def n: Int = hits.length
+
+  def full: Boolean = n >= k
+  def worst: KnnHit = hits(0)
+
+  /** Keeps the hit if it ranks among the k best; `id` is copied on keep. */
+  def offer(isNull: Boolean, score: Double, id: Any, dist: Double = Double.NaN): Unit =
+    if (k > 0) {
+      if (n < k) {
+        hits += new KnnHit(isNull, score, InternalRow.copyValue(id), dist)
+        siftUp(n - 1)
+      } else if (KnnHeap.ranks(idOrd, isNull, score, id, hits(0)) > 0) {
+        hits(0) = new KnnHit(isNull, score, InternalRow.copyValue(id), dist)
+        siftDown(0)
+      }
+    }
+
+  private def worse(i: Int, j: Int): Boolean = {
+    val a = hits(i)
+    KnnHeap.ranks(idOrd, a.isNull, a.score, a.id, hits(j)) < 0
+  }
+
+  private def swap(i: Int, j: Int): Unit = { val t = hits(i); hits(i) = hits(j); hits(j) = t }
+
+  private def siftUp(i0: Int): Unit = {
+    var i = i0
+    while (i > 0 && worse(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+  }
+
+  private def siftDown(i0: Int): Unit = {
+    var i = i0
+    var done = false
+    while (!done) {
+      val l = 2 * i + 1; val r = l + 1
+      var w = i
+      if (l < n && worse(l, w)) w = l
+      if (r < n && worse(r, w)) w = r
+      if (w == i) done = true else { swap(i, w); i = w }
+    }
+  }
+
+  /** The retained hits, best first. */
+  def sorted: Array[KnnHit] =
+    hits.toArray.sortWith((a, b) => KnnHeap.ranks(idOrd, a.isNull, a.score, a.id, b) > 0)
+}
+
+object KnnHeap {
+  /** > 0 when hit a ranks before hit b: score desc in Spark's double order
+    * (NaN above every number, null last), then id asc. */
+  def ranks(idOrd: Ordering[Any], aNull: Boolean, aScore: Double, aId: Any, b: KnnHit): Int = {
+    val c =
+      if (aNull || b.isNull) java.lang.Boolean.compare(b.isNull, aNull)
+      else SQLOrderingUtil.compareDoubles(aScore, b.score)
+    if (c != 0) c else -idOrd.compare(aId, b.id)
+  }
+}
+
+object KnnTopK {
+
+  /** Ascending order over one column's values, nulls first. */
+  def ordering(dt: DataType): Ordering[Any] = {
+    val typed: (Any, Any) => Int = dt match {
+      case LongType => (a, b) => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
+      case IntegerType => (a, b) => Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
+      case _ =>
+        val ord = InterpretedOrdering.forSchema(Seq(dt))
+        (a, b) => ord.compare(new GenericInternalRow(Array[Any](a)), new GenericInternalRow(Array[Any](b)))
+    }
+    (a: Any, b: Any) =>
+      if (a == null) { if (b == null) 0 else -1 }
+      else if (b == null) 1
+      else typed(a, b)
+  }
+
+  private object NullKey
+  def groupKey(v: Any): Any = if (v == null) NullKey else v
+
+  def isFloatArray(dt: DataType): Boolean =
+    dt.asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType == FloatType
+
+  /** The broadcast query block, decoded once per task: dense query
+    * vectors (null for a null vector) and a heap group per distinct qid. */
+  final class QueryBlock(rows: Array[InternalRow], qOrd: Int, qidType: DataType,
+                         qvOrd: Int, qvFloat: Boolean) {
+    val vecs: Array[Array[Double]] = rows.map(vectorOf(_, qvOrd, qvFloat))
+    private val groups = mutable.HashMap.empty[Any, Int]
+    private val qids = mutable.ArrayBuffer.empty[Any]
+    /** Heap group of each query. */
+    val group: Array[Int] = rows.map { r =>
+      val q = if (r.isNullAt(qOrd)) null else InternalRow.copyValue(r.get(qOrd, qidType))
+      groups.getOrElseUpdate(groupKey(q), { qids += q; qids.length - 1 })
+    }
+    /** qid of each heap group. */
+    val groupQid: Array[Any] = qids.toArray
+    def size: Int = vecs.length
+    def nGroups: Int = groupQid.length
+  }
+
+  private def vectorOf(row: InternalRow, ord: Int, isFloat: Boolean): Array[Double] =
+    if (row.isNullAt(ord)) null
+    else { val a = row.getArray(ord); VecKernels.toDoubles(a, isFloat, a.numElements()) }
+
+  /** Slack on the SQ8 L2 pruning threshold: rows that could tie the k-th
+    * after 4-dp rounding are kept (see [[graft.vector.SQIndex]]). */
+  private def l2Slack(t: Double): Double = t + 2e-4 * (1.0 + t) * (1.0 + t)
+
+  /** The per-row body of the partition pass for `scorer`. `counts` =
+    * (pairs scored, pairs pruned by the SQ8 bound, pairs skipped by cell). */
+  def rowScanner(scorer: KnnScorer, qs: QueryBlock, heaps: Array[KnnHeap],
+                 ords: Seq[Int], types: Seq[DataType],
+                 counts: Array[Long]): InternalRow => Unit = {
+    val idOrd = ords.head; val idType = types.head
+    val vOrd = ords(1); val vFloat = isFloatArray(types(1))
+    val nq = qs.size
+    def offerExact(heap: KnnHeap, metric: ExactKNN.Metric, v: Array[Double], q: Array[Double],
+                   id: Any): Unit =
+      if (v == null || q == null) heap.offer(isNull = true, 0.0, id)
+      else heap.offer(isNull = false, metric.scoreOf(v, q), id)
+    scorer match {
+      case KnnScorer.Exact(metric) => row => {
+        val id = if (row.isNullAt(idOrd)) null else row.get(idOrd, idType)
+        val v = vectorOf(row, vOrd, vFloat)
+        var j = 0
+        while (j < nq) {
+          offerExact(heaps(qs.group(j)), metric, v, qs.vecs(j), id)
+          j += 1
+        }
+        counts(0) += nq
+      }
+
+      case KnnScorer.IvfCells(metric, centroids, nprobe) =>
+        val cOrd = ords(2)
+        // cluster → the queries whose probe set holds it; a null query
+        // vector probes the lowest cluster ids (null distances sort first)
+        val byCell = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
+        (0 until nq).foreach { j =>
+          val probe = Option(qs.vecs(j))
+            .map(VecKernels.nearestClusters(_, centroids, nprobe))
+            .getOrElse(centroids.map(_._1).sorted.take(math.max(1, nprobe)))
+          probe.foreach(c => byCell.getOrElseUpdate(c, mutable.ArrayBuffer.empty) += j)
+        }
+        val cells = byCell.view.mapValues(_.toArray).toMap
+        val none = Array.empty[Int]
+        row => {
+          val js = if (row.isNullAt(cOrd)) none else cells.getOrElse(row.getInt(cOrd), none)
+          counts(2) += nq - js.length
+          if (js.nonEmpty) {
+            val id = if (row.isNullAt(idOrd)) null else row.get(idOrd, idType)
+            val v = vectorOf(row, vOrd, vFloat)
+            var i = 0
+            while (i < js.length) {
+              val j = js(i)
+              offerExact(heaps(qs.group(j)), metric, v, qs.vecs(j), id)
+              i += 1
+            }
+            counts(0) += js.length
+          }
+        }
+
+      case KnnScorer.Sq8L2(mins, steps) =>
+        val codeOrd = ords(2)
+        row => if (!row.isNullAt(codeOrd) && !row.isNullAt(vOrd)) {
+          val code = row.getArray(codeOrd)
+          val xhat = VecKernels.dequantize(code, mins, steps, math.min(code.numElements(), mins.length))
+          if (xhat != null) {
+            val id = if (row.isNullAt(idOrd)) null else row.get(idOrd, idType)
+            var v: Array[Double] = null
+            var j = 0
+            while (j < nq) {
+              val q = qs.vecs(j)
+              if (q != null) {
+                val heap = heaps(qs.group(j))
+                val n = math.min(xhat.length, q.length)
+                val pruned = heap.full && {
+                  val lb = VecKernels.squaredL2(xhat, q, n) - VecKernels.bandBound(xhat, q, steps, n)
+                  lb > l2Slack(heap.worst.dist)
+                }
+                if (pruned) counts(1) += 1
+                else {
+                  if (v == null) v = vectorOf(row, vOrd, vFloat)
+                  if (v != null) {
+                    val d = VecKernels.squaredL2(v, q, math.min(v.length, q.length))
+                    heap.offer(isNull = false, 1.0 / (1.0 + d), id, d)
+                    counts(0) += 1
+                  }
+                }
+              }
+              j += 1
+            }
+          }
+        }
+
+      case KnnScorer.Sq8Cosine(mins, steps) =>
+        val codeOrd = ords(2); val nrmOrd = ords(3)
+        // per-query ‖q‖ and B_q = Σ s_i·|q_i| / 2, once per task
+        val qn = qs.vecs.map(q => if (q == null) 0.0 else math.sqrt(VecKernels.dot(q, q, q.length)))
+        val bq = qs.vecs.map(q => if (q == null) 0.0
+          else VecKernels.dot(q.map(math.abs), steps, math.min(q.length, steps.length)) / 2.0)
+        row => if (!row.isNullAt(codeOrd) && !row.isNullAt(vOrd) && !row.isNullAt(nrmOrd)
+            && row.getDouble(nrmOrd) > 0) {
+          val nrm = row.getDouble(nrmOrd)
+          val code = row.getArray(codeOrd)
+          val xhat = VecKernels.dequantize(code, mins, steps, math.min(code.numElements(), mins.length))
+          if (xhat != null) {
+            val id = if (row.isNullAt(idOrd)) null else row.get(idOrd, idType)
+            var v: Array[Double] = null
+            var j = 0
+            while (j < nq) {
+              val q = qs.vecs(j)
+              if (q != null && qn(j) > 0) {
+                val heap = heaps(qs.group(j))
+                val pruned = heap.full && {
+                  val den = nrm * qn(j)
+                  val ub = VecKernels.dot(xhat, q, math.min(xhat.length, q.length)) / den + bq(j) / den
+                  ub < heap.worst.score - 2e-4
+                }
+                if (pruned) counts(1) += 1
+                else {
+                  if (v == null) v = vectorOf(row, vOrd, vFloat)
+                  if (v != null) {
+                    heap.offer(isNull = false, VecKernels.cosine(v, q, math.min(v.length, q.length)), id)
+                    counts(0) += 1
+                  }
+                }
+              }
+              j += 1
+            }
+          }
+        }
+    }
+  }
+
+  /** (qid, id, score) → UnsafeRow, without runtime code generation. */
+  def emitter(qidType: DataType, idType: DataType): (Any, Any, Any) => InternalRow = {
+    val proj = InterpretedUnsafeProjection.createProjection(Seq(
+      BoundReference(0, qidType, nullable = true), BoundReference(1, idType, nullable = true),
+      BoundReference(2, DoubleType, nullable = true)))
+    (q, id, s) => proj(new GenericInternalRow(Array[Any](q, id, s))).copy()
+  }
+
+  /** Register the planner strategy on this session (idempotent). */
+  def install(spark: SparkSession): Unit = {
+    val cur = spark.experimental.extraStrategies
+    if (!cur.contains(KnnStrategy))
+      spark.experimental.extraStrategies = cur :+ KnnStrategy
+  }
+
+  /** Top `k` corpus rows per query: `corpus` carries `scorer.columns`
+    * (id first), `queries` carries (qid, qv). Returns (qid, id, score)
+    * ordered by qid asc, score desc, id asc — the trailing sort is
+    * satisfied by the operator's output order and planned away. k ≤ 0,
+    * an empty query block or an empty corpus give an empty frame. */
+  def apply(corpus: DataFrame, queries: DataFrame, k: Int, scorer: KnnScorer): DataFrame = {
+    val spark = corpus.sparkSession
+    install(spark)
+    val left = GraftColumnBridge.analyzedPlan(corpus.select(scorer.columns.map(col): _*))
+    val right = GraftColumnBridge.analyzedPlan(queries.select(col("qid"), col("qv")))
+    val score = AttributeReference("score", DoubleType, nullable = true)()
+    val node = KnnTopK(k, scorer, left.output, right.output.head, right.output(1), score, left, right)
+    GraftColumnBridge.ofRows(spark, node)
+      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
+  }
+}
+
+/** Planner strategy: logical [[KnnTopK]] → per-partition exec under the
+  * merge exec (EnsureRequirements adds the broadcast of the queries and
+  * the single-partition exchange). */
+object KnnStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case KnnTopK(k, scorer, cols, qid, qv, score, left, right) =>
+      KnnTopKMergeExec(k, scorer.roundScores, qid, cols.head, score,
+        KnnTopKExec(k, scorer, cols, qid, qv, score, planLater(left), planLater(right))) :: Nil
+    case _ => Nil
+  }
+}

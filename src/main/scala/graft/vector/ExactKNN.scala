@@ -1,8 +1,8 @@
 package graft.vector
 
+import graft.expr.VecKernels
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact (brute-force) K-nearest-neighbor search — the reference's `flat`
@@ -17,21 +17,34 @@ import org.apache.spark.sql.functions._
   */
 object ExactKNN {
 
-  sealed trait Metric { def dist(a: Column, b: Column): Column; def score(d: Column): Column }
+  /** A metric as Column expressions, plus `scoreOf`: the same score of one
+    * (row, query) pair in compiled Scala over the common prefix, bit-equal
+    * to `score(dist(row, query))` (the fused batch operator's path). */
+  sealed trait Metric {
+    def dist(a: Column, b: Column): Column
+    def score(d: Column): Column
+    def scoreOf(x: Array[Double], q: Array[Double]): Double
+  }
   /** squared L2 + 1/(1+d) — the reference's scoring (local_db.py:169–176). */
   case object L2Sq extends Metric {
     def dist(a: Column, b: Column): Column = squaredL2(a, b)
     def score(d: Column): Column = distToScore(d)
+    def scoreOf(x: Array[Double], q: Array[Double]): Double =
+      1.0 / (1.0 + VecKernels.squaredL2(x, q, math.min(x.length, q.length)))
   }
   /** true L2 + 1/(1+d) — reference hybrid small-N path (local_db.py:377–378). */
   case object L2 extends Metric {
     def dist(a: Column, b: Column): Column = l2(a, b)
     def score(d: Column): Column = distToScore(d)
+    def scoreOf(x: Array[Double], q: Array[Double]): Double =
+      1.0 / (1.0 + math.sqrt(VecKernels.squaredL2(x, q, math.min(x.length, q.length))))
   }
   /** cosine similarity (higher = closer); dist = −cos so one code path. */
   case object Cosine extends Metric {
     def dist(a: Column, b: Column): Column = -cosine(a, b)
     def score(d: Column): Column = -d
+    def scoreOf(x: Array[Double], q: Array[Double]): Double =
+      VecKernels.cosine(x, q, math.min(x.length, q.length))
   }
 
   /** Score every row: (id, score). No top-k — callers compose. */
@@ -52,45 +65,28 @@ object ExactKNN {
       .limit(k)
 
   /** Batch top-k: every row of `queries` (qidCol, qvecCol) against every row
-    * of `data` — the bulk-similarity-join workload Spark is actually good at.
+    * of `data` — the bulk-similarity-join workload, `IndexFlatL2.search`
+    * over a query matrix.
     *
-    * Plan: broadcast the (small) query side, so the big side streams through
-    * a BroadcastNestedLoopJoin-free `crossJoin(broadcast(...))` with the
-    * distance fused into the projection; per-(qid) top-k via window rank.
-    * The shuffle is (n_data × n_queries) rows *after* projection to
-    * (qid, id, score) — 3 narrow columns — partitioned by qid. For very
-    * large n_queries, flip which side is broadcast or use [[IVFIndex]].
-    */
+    * Plan: the fused [[graft.plans.KnnTopK]] operator. The query block is
+    * broadcast; each corpus partition scores its rows against every query
+    * and keeps one bounded heap per query, so no (row, query) pair is ever
+    * materialized, joined or sorted; ≤ k rows per query per partition go
+    * through one single-partition exchange to the merge, whose output
+    * order (qid asc, score desc, id asc) is the result order. Ties on the
+    * unrounded score break by id asc. For very large query blocks, use
+    * [[IVFIndex.searchBatch]] with `broadcastQueries = false`. */
   def topKBatch(data: DataFrame, idCol: String, vecCol: String,
                 queries: DataFrame, qidCol: String, qvecCol: String,
-                k: Int, metric: Metric = L2Sq): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id").asc)
-    scoredPairs(data, idCol, vecCol, queries, qidCol, qvecCol, metric)
-      .withColumn("__rk", row_number().over(w))
-      .where(col("__rk") <= k)
-      .drop("__rk")
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-  }
+                k: Int, metric: Metric = L2Sq): DataFrame =
+    graft.plans.KnnTopK(
+      data.select(col(idCol).as("id"), col(vecCol).as("vector")),
+      queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv")),
+      k, graft.plans.KnnScorer.Exact(metric))
 
-  /** Same contract as [[topKBatch]], planned through the custom
-    * [[graft.plans.TopKPerKey]] operator instead of a window: bounded
-    * per-key heaps before AND after the shuffle, so only
-    * k × queries × partitions rows shuffle and nothing is fully sorted —
-    * the plan shape that survives a 100 TB corpus. Identical results under
-    * the (score desc, id asc) total order. */
+  /** Alias of [[topKBatch]]. */
   def topKBatchHeap(data: DataFrame, idCol: String, vecCol: String,
                     queries: DataFrame, qidCol: String, qvecCol: String,
                     k: Int, metric: Metric = L2Sq): DataFrame =
-    graft.plans.TopK.perKey(
-      scoredPairs(data, idCol, vecCol, queries, qidCol, qvecCol, metric),
-      Seq("qid"), Seq("score" -> true, "id" -> false), k)
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-
-  private def scoredPairs(data: DataFrame, idCol: String, vecCol: String,
-                          queries: DataFrame, qidCol: String, qvecCol: String,
-                          metric: Metric): DataFrame =
-    data.select(col(idCol).as("id"), col(vecCol).as("__v"))
-      .crossJoin(broadcast(queries.select(col(qidCol).as("qid"), col(qvecCol).as("__qv"))))
-      .select(col("qid"), col("id"),
-        metric.score(metric.dist(col("__v"), col("__qv"))).as("score"))
+    topKBatch(data, idCol, vecCol, queries, qidCol, qvecCol, k, metric)
 }

@@ -91,46 +91,53 @@ final class IVFIndex(val centroids: Array[(Int, Array[Double])],
 
   /** Rank centroids by squared L2 to the query, driver-side. */
   def probeOrder(query: Array[Double]): Array[Int] =
-    centroids.sortBy { case (_, c) =>
-      var s = 0.0; var i = 0
-      while (i < math.min(c.length, query.length)) { val d = c(i) - query(i); s += d * d; i += 1 }
-      s
-    }.map(_._1)
+    graft.expr.VecKernels.nearestClusters(query, centroids, centroids.length)
 
   /** BULK ANN: N queries through the IVF probe as ONE distributed plan —
     * no per-query driver round-trip (the single-query [[search]] ranks
-    * centroids driver-side; a loop over it is N Spark jobs). The
-    * driver-held centroid set joins the query frame as a broadcast
-    * (|Q| × nlist narrow rows), [[graft.plans.TopKPerKey]] keeps each
-    * query's `nprobe` nearest clusters with bounded heaps (no global
-    * sort), and all candidates arrive through ONE equi-join against the
-    * cluster-partitioned assignment frame, exact-re-ranked per query by a
-    * second bounded heap. With the on-disk assignment layout
-    * (`partitionBy(cluster)`) and `broadcastQueries = true`, the cluster
-    * join is broadcast-shaped, so Spark's dynamic partition pruning can
-    * skip unprobed cluster files — the bulk analog of the single-probe
-    * partition pruning. Set `broadcastQueries = false` for query batches
-    * too large to broadcast: the join becomes a shuffle on `cluster`,
-    * still touching only probed-cluster rows.
-    * Output contract matches [[ExactKNN.topKBatch]]: (qid, id, score),
-    * exact within the probed clusters; nprobe = nlist recovers the exact
-    * batch scan bit-for-bit. `saltBuckets`: 1 = unsalted, 0 = derive from
-    * the assignment histogram ([[autoSaltBuckets]] — corpus-as-batch
-    * skew), -1 = derive from the BATCH's probe-cluster histogram (the
-    * external-query-batch dial, round 15), > 1 = explicit. */
+    * centroids driver-side; a loop over it is N Spark jobs).
+    *
+    * `broadcastQueries = true`: the fused [[graft.plans.KnnTopK]]
+    * operator scans the assignment frame once with the query block
+    * broadcast. Each task computes every query's probe set — its `nprobe`
+    * nearest centroids by squared L2, ties by cluster id, the same set as
+    * [[probedCandidates]] and [[probeOrder]] — and scores a (row, query)
+    * pair only when the row's cell is in that set, keeping one bounded
+    * heap per query. No candidate join, no pair frame; one
+    * single-partition exchange to the merge.
+    *
+    * `broadcastQueries = false`, for query batches too large to
+    * broadcast: candidates come from [[probedCandidates]] (a shuffle join
+    * on `cluster`, touching only probed-cluster rows) and are cut per
+    * query by the bounded-heap [[graft.plans.TopKPerKey]]. `saltBuckets`
+    * applies to this arm only: 1 = unsalted, 0 = derive from the
+    * assignment histogram ([[autoSaltBuckets]] — corpus-as-batch skew),
+    * -1 = derive from the BATCH's probe-cluster histogram (the
+    * external-query-batch dial, round 15), > 1 = explicit.
+    *
+    * Output contract matches [[ExactKNN.topKBatch]]: (qid, id, score)
+    * ordered (qid, score desc, id), exact within the probed clusters;
+    * nprobe = nlist recovers the exact batch scan bit-for-bit. Results are
+    * bit-identical across the two arms and every salt. */
   def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
                   k: Int, nprobe: Int,
                   metric: ExactKNN.Metric = ExactKNN.L2Sq,
                   broadcastQueries: Boolean = true,
-                  saltBuckets: Int = 1): DataFrame = {
-    val cand = probedCandidates(queries, qidCol, qvecCol, nprobe,
-      broadcastQueries, saltBuckets)
-    graft.plans.TopK.perKey(
-      cand.select(col("qid"), col("id"),
-        metric.score(metric.dist(col("vector"), col("__qv"))).as("score")),
-      Seq("qid"), Seq("score" -> true, "id" -> false), k)
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-  }
+                  saltBuckets: Int = 1): DataFrame =
+    if (broadcastQueries)
+      graft.plans.KnnTopK(
+        assignments.select(col("id"), col("vector"), col("cluster").cast("int").as("cluster")),
+        queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv")),
+        k, graft.plans.KnnScorer.IvfCells(metric, centroids, nprobe))
+    else {
+      val cand = probedCandidates(queries, qidCol, qvecCol, nprobe,
+        broadcastQueries, saltBuckets)
+      graft.plans.TopK.perKey(
+        cand.select(col("qid"), col("id"),
+          metric.score(metric.dist(col("vector"), col("__qv"))).as("score")),
+        Seq("qid"), Seq("score" -> true, "id" -> false), k)
+        .orderBy(col("qid").asc, col("score").desc, col("id").asc)
+    }
 
   /** The probe-restricted candidate frame behind [[searchBatch]], exposed
     * so OTHER per-row scorers (the PQ ADC batch, r9 ADVICE) can share the

@@ -45,8 +45,6 @@ final class SQIndex(val data: DataFrame, // (id, vector, code) persisted
   /** Σ s_i²/4 — the constant slack of the upper bound. */
   private val slackS: Double = steps.map(s => s * s / 4.0).sum
 
-  private def stepsLit: Column = VectorFunctions.vecLit(steps)
-
   /** Fused dequantize-and-fold kernels (round 18): d̂, B and x̂·q straight
     * from the code bytes in one generated loop each, with the quantizer
     * arrays as plan reference objects — replaces the interpreted
@@ -116,43 +114,22 @@ final class SQIndex(val data: DataFrame, // (id, vector, code) persisted
       .limit(k)
   }
 
-  /** Batch exact top-k — ONE distributed plan for every query. Pass 1
-    * touches CODES only: dequantized bounds for all (query, row) pairs,
-    * then per-query k-th upper bound through the bounded-heap
-    * [[graft.plans.TopKPerKey]] operator (k·|Q|·partitions rows shuffle,
-    * nothing sorts globally). Pass 2 joins the |Q|-row threshold frame
-    * back (broadcast), keeps bound-surviving pairs, and reranks those on
-    * floats — at scale the float column is decoded only for survivors,
-    * which is the entire point of scanning codes first. Same tie slack
-    * and exactness argument as [[search]], per query. */
-  def searchBatch(queries: DataFrame, qidCol: String, qvCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(qidCol).as("qid"),
-      col(qvCol).cast("array<double>").as("__qv")))
-    val scored = data.crossJoin(q).select(col("qid"), col("id"), col("vector"), col("__qv"),
-      dhatOf(col("code"), col("__qv")).as("dhat"),
-      bbOf(col("code"), col("__qv")).as("bb"))
-    val thr = graft.plans.TopK.perKey(
-        scored.select(col("qid"), col("id"),
-          (col("dhat") + col("bb") + lit(slackS)).as("ub")),
-        Seq("qid"), Seq("ub" -> false, "id" -> false), k)
-      .groupBy(col("qid")).agg(max(col("ub")).as("t0"))
-      .select(col("qid").as("__tq"),
-        (col("t0") + lit(2e-4) * (lit(1.0) + col("t0")) * (lit(1.0) + col("t0"))).as("__t"))
-    // Rank the rerank pass by the UNROUNDED score (then round for output):
-    // the batch oracle's row_number orders by unrounded s DESC, id — as does
-    // ExactKNN.topKBatch — so on an exact 4-dp boundary tie at rank k the
-    // selected rows match. (The single-query `search` keeps rounded-order
-    // selection because its oracle `knnSql` orders by the rounded alias.)
-    graft.plans.TopK.perKey(
-        scored.join(broadcast(thr), col("qid") === col("__tq"))
-          .where(col("dhat") - col("bb") <= col("__t"))
-          .select(col("qid"), col("id"),
-            VectorFunctions.distToScore(
-              VectorFunctions.squaredL2(col("vector"), col("__qv"))).as("score")),
-        Seq("qid"), Seq("score" -> true, "id" -> false), k)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-  }
+  /** Batch exact top-k — ONE pass of the fused [[graft.plans.KnnTopK]]
+    * operator over the index with the query block broadcast: per
+    * partition and per query, a branch-and-bound over the codes. A
+    * (row, query) pair is pruned when its lower bound d̂ − B exceeds the
+    * query heap's current k-th exact distance T plus the rounded-tie
+    * slack 2e-4·(1+T)² (the same proof and slack as [[search]]); only
+    * the pairs that survive read the row's float vector and enter the
+    * heap. ≤ k rows per query per partition reach the merge through one
+    * single-partition exchange. Ranked by the UNROUNDED score, then id —
+    * the batch oracle's row_number order and ExactKNN.topKBatch's — and
+    * rounded to 4 dp for output, ordered (qid, rounded score desc, id).
+    * Rows with a null code are skipped. */
+  def searchBatch(queries: DataFrame, qidCol: String, qvCol: String, k: Int): DataFrame =
+    graft.plans.KnnTopK(data,
+      queries.select(col(qidCol).as("qid"), col(qvCol).as("qv")),
+      k, graft.plans.KnnScorer.Sq8L2(mins, steps))
 
   /** Candidate count for a query — the pruning diagnostic (spec + SCALE),
     * measuring exactly the set [[search]] reranks. */
@@ -194,42 +171,18 @@ final class SQIndex(val data: DataFrame, // (id, vector, code) persisted
       .limit(k)
   }
 
-  /** Batch cosine exact top-k — ONE distributed plan, the metric
-    * transpose of [[searchBatch]]: pass 1 computes per-(query, row)
-    * cosine bounds from CODES + the stored row norm (per-query slack
-    * B_q = Σ sᵢ|qᵢ|/2 and query norm are expressions over the broadcast
-    * query frame, not driver scalars), per-query thresholds through the
-    * bounded-heap TopKPerKey (k-th LARGEST lower bound), pass 2 keeps
-    * bound-surviving pairs and reranks on floats. Ranked by UNROUNDED
-    * cosine then rounded for output — the batch tie discipline
-    * [[searchBatch]] follows. Zero-norm rows drop out via NaN. */
+  /** Batch cosine exact top-k — the metric transpose of [[searchBatch]]
+    * in the same fused operator: a pair is pruned when its upper bound
+    * (x̂·q + B_q)/(‖x‖‖q‖), with B_q = Σ sᵢ|qᵢ|/2 and the stored row norm
+    * `nrm`, falls below the query heap's current k-th exact cosine minus
+    * the rounded-tie slack 2e-4; survivors are reranked on floats. Ranked
+    * by UNROUNDED cosine then id, rounded for output. Zero-norm rows and
+    * queries (cosine undefined) are never scored. */
   def searchBatchCosine(queries: DataFrame, qidCol: String, qvCol: String,
-                        k: Int): DataFrame = {
-    // per-query scalars (norm, bound slack) computed ONCE in the broadcast
-    // query frame instead of per (row, query) pair — round 18, guide §2.3
-    // "project before the exchange" applied to the cross join
-    val q = broadcast(queries.select(col(qidCol).as("qid"),
-        col(qvCol).cast("array<double>").as("__qv"))
-      .withColumn("__qn", sqrt(VectorFunctions.dot(col("__qv"), col("__qv"))))
-      .withColumn("__bq",
-        VectorFunctions.dot(transform(col("__qv"), v => abs(v)), stepsLit) / 2.0))
-    val scored = data.crossJoin(q).select(col("qid"), col("id"), col("vector"), col("__qv"),
-      (deqDotOf(col("code"), col("__qv")) / (col("nrm") * col("__qn"))).as("chat"),
-      (col("__bq") / (col("nrm") * col("__qn"))).as("bb"))
-    val thr = graft.plans.TopK.perKey(
-        scored.select(col("qid"), col("id"), (col("chat") - col("bb")).as("lb")),
-        Seq("qid"), Seq("lb" -> true, "id" -> false), k)
-      .groupBy(col("qid")).agg(min(col("lb")).as("t0"))
-      .select(col("qid").as("__tq"), (col("t0") - lit(2e-4)).as("__t"))
-    graft.plans.TopK.perKey(
-        scored.join(broadcast(thr), col("qid") === col("__tq"))
-          .where(col("chat") + col("bb") >= col("__t"))
-          .select(col("qid"), col("id"),
-            VectorFunctions.cosine(col("vector"), col("__qv")).as("score")),
-        Seq("qid"), Seq("score" -> true, "id" -> false), k)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-  }
+                        k: Int): DataFrame =
+    graft.plans.KnnTopK(data,
+      queries.select(col(qidCol).as("qid"), col(qvCol).as("qv")),
+      k, graft.plans.KnnScorer.Sq8Cosine(mins, steps))
 
   /** Pruning diagnostic for the cosine arm (spec + SCALE). */
   def candidateCountCosine(q: Array[Double], k: Int): Long = {

@@ -155,11 +155,10 @@ class GraphIndexSpec extends AnyFunSuite {
   test("unbounded beam (ef = 0) is EXACT: equals the flat batch scan bit for bit") {
     val queries = emb.where(col("vec_id").isin(3L, 21L, 77L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = ExactKNN.topKBatch(emb, "vec_id", "embedding", queries, "qid", "qv", k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val viaGraph = index.searchBatch(queries, "qid", "qv", k = 5, ef = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(viaGraph == exact)
+    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+      BruteForceKnn.rows(queries, "qid", "qv"), 5, BruteForceKnn.L2Sq)
+    val viaGraph = BruteForceKnn.collect(index.searchBatch(queries, "qid", "qv", k = 5, ef = 0))
+    assert(BruteForceKnn.same(viaGraph, exact), s"$viaGraph\n$exact")
   }
 
   test("searchBatch returns a checkpointed distributed frame — no driver collect (r6 VERDICT #6)") {
@@ -184,8 +183,9 @@ class GraphIndexSpec extends AnyFunSuite {
     val qids = (0L until 10L).map(_ * 13)
     val queries = emb.where(col("vec_id").isin(qids.map(Long.box): _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = ExactKNN.topKBatch(emb, "vec_id", "embedding", queries, "qid", "qv", k = 10)
-      .collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
+    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+        BruteForceKnn.rows(queries, "qid", "qv"), 10, BruteForceKnn.L2Sq)
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val got = index.searchBatch(queries, "qid", "qv", k = 10, ef = 64, maxHops = 6)
       .collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val recalls = qids.map(q => (exact(q) intersect got.getOrElse(q, Set.empty)).size / 10.0)
@@ -259,11 +259,10 @@ class GraphIndexSpec extends AnyFunSuite {
     assert(appended.n == emb.count())
     val queries = emb.where(col("vec_id").isin(3L, 450L)) // one old, one appended
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = ExactKNN.topKBatch(emb, "vec_id", "embedding", queries, "qid", "qv", k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val viaGraph = appended.searchBatch(queries, "qid", "qv", k = 5, ef = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(viaGraph == exact)
+    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+      BruteForceKnn.rows(queries, "qid", "qv"), 5, BruteForceKnn.L2Sq)
+    val viaGraph = BruteForceKnn.collect(appended.searchBatch(queries, "qid", "qv", k = 5, ef = 0))
+    assert(BruteForceKnn.same(viaGraph, exact), s"$viaGraph\n$exact")
     // every appended node is wired into the graph (ring + knn edges)
     val srcs = appended.edges.select(col("src")).distinct().count()
     assert(srcs == appended.n)

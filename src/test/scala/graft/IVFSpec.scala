@@ -28,8 +28,9 @@ class IVFSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val queries = emb.where(col("vec_id").isin(3L, 17L, 42L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = ExactKNN.topKBatch(emb, "vec_id", "embedding", queries, "qid", "qv", k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+        BruteForceKnn.rows(queries, "qid", "qv"), 5, BruteForceKnn.L2Sq)
+      .map { case (q, id, _) => (q, id) }
     val viaIvf = index.searchBatch(queries, "qid", "qv", k = 5, nprobe = index.nlist)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(viaIvf == exact)

@@ -1,0 +1,232 @@
+package graft
+
+import graft.plans.KnnTopKExec
+import graft.vector.{ExactKNN, IVFIndex, SQIndex}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The fused batch-KNN operator ([[graft.plans.KnnTopK]]) behind the exact,
+  * SQ8 and IVF batch paths, against the driver-side [[BruteForceKnn]]:
+  * bit-identical results over planted ties, duplicate and null vectors,
+  * k > N and |Q| = 1, at every corpus partition count and shuffle width;
+  * the plan shape; the exec's metrics; the empty cases. */
+class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  private lazy val spark = TestSpark.spark
+  private val dim = 6
+
+  private val corpusSchema = StructType(Seq(StructField("id", LongType, nullable = false),
+    StructField("vector", ArrayType(FloatType, containsNull = false), nullable = true)))
+  private val querySchema = StructType(Seq(StructField("qid", LongType, nullable = false),
+    StructField("qv", ArrayType(FloatType, containsNull = false), nullable = true)))
+
+  /** Coordinates on a half-integer grid (exact in float) so that distances
+    * tie exactly; every 9th row duplicates an earlier vector, every 13th
+    * is null; no zero vector (cosine would be undefined). */
+  private def corpusRows(seed: Int, n: Int): Seq[(Long, Array[Double])] = {
+    val rnd = new scala.util.Random(seed)
+    def vec(): Array[Double] = {
+      val v = Array.fill(dim)((rnd.nextInt(7) - 3) * 0.5)
+      if (v.forall(_ == 0.0)) vec() else v
+    }
+    val base = (0 until n).map(i => (i.toLong, vec()))
+    base.map { case (id, v) =>
+      if (id % 13 == 12) (id, null)
+      else if (id % 9 == 8) (id, base((id / 3).toInt)._2.clone())
+      else (id, v)
+    }
+  }
+
+  private def frame(rows: Seq[(Long, Array[Double])], schema: StructType, parts: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (id, v) =>
+      Row(id, if (v == null) null else v.map(_.toFloat).toSeq)
+    }, parts), schema)
+
+  private def queryRows(seed: Int, n: Int, corpus: Seq[(Long, Array[Double])]) = {
+    val rnd = new scala.util.Random(seed * 31 + n)
+    (0 until n).map { j =>
+      // half the queries sit ON a corpus vector (ties at distance 0)
+      val v = if (j % 2 == 0) corpus.filter(_._2 != null)(rnd.nextInt(corpus.size / 2))._2
+              else Array.fill(dim)((rnd.nextInt(9) - 4) * 0.25)
+      (100L + j, v)
+    }
+  }
+
+  private def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  private def check(what: String, got: DataFrame, want: Seq[(Long, Long, java.lang.Double)]): Unit = {
+    val g = BruteForceKnn.collect(got)
+    assert(BruteForceKnn.same(g, want), s"$what\n got: $g\nwant: $want")
+  }
+
+  private val n = 60
+  private val ks = Seq(1, 4, n + 3)
+
+  test("property: exact L2Sq/L2/cosine batch == brute force at partitions {1,3,7} x shuffle {1,7}") {
+    val rows = corpusRows(7, n)
+    val metrics = Seq(ExactKNN.L2Sq -> BruteForceKnn.L2Sq, ExactKNN.L2 -> BruteForceKnn.L2,
+      ExactKNN.Cosine -> BruteForceKnn.Cosine)
+    for (sp <- Seq(1, 7); parts <- Seq(1, 3, 7)) withShufflePartitions(sp) {
+      val corpus = frame(rows, corpusSchema, parts)
+      for (nq <- Seq(1, 4); k <- ks; (m, bm) <- metrics) {
+        val qs = queryRows(parts + k, nq, rows)
+        val got = ExactKNN.topKBatch(corpus, "id", "vector", frame(qs, querySchema, 1),
+          "qid", "qv", k, m)
+        check(s"exact $m parts=$parts sp=$sp |Q|=$nq k=$k", got,
+          BruteForceKnn.topK(rows, qs, k, bm))
+      }
+    }
+  }
+
+  test("property: SQ8 batch (L2 and cosine) == brute force at partitions {1,3,7} x shuffle {1,7}") {
+    val rows = corpusRows(11, n)
+    // SQ8 never scores a null vector; cosine also skips zero-norm rows
+    val live = rows.filter(_._2 != null)
+    for (sp <- Seq(1, 7); parts <- Seq(1, 3, 7)) withShufflePartitions(sp) {
+      val index = SQIndex.build(frame(rows, corpusSchema, parts), "id", "vector")
+      try for (nq <- Seq(1, 4); k <- ks) {
+        val qs = queryRows(parts * 5 + k, nq, rows)
+        val q = frame(qs, querySchema, 1)
+        check(s"sq8 l2 parts=$parts sp=$sp |Q|=$nq k=$k", index.searchBatch(q, "qid", "qv", k),
+          BruteForceKnn.topK(live, qs, k, BruteForceKnn.L2Sq, round = true))
+        check(s"sq8 cosine parts=$parts sp=$sp |Q|=$nq k=$k",
+          index.searchBatchCosine(q, "qid", "qv", k),
+          BruteForceKnn.topK(live, qs, k, BruteForceKnn.Cosine, round = true))
+      } finally index.dispose()
+    }
+  }
+
+  /** An IVF index over `rows` with centroids trained on the non-null rows;
+    * null-vector rows sit in cell 0 of the assignment frame. */
+  private def ivfOver(rows: Seq[(Long, Array[Double])], parts: Int): (IVFIndex, Map[Long, Int]) = {
+    val trained = IVFIndex.build(frame(rows.filter(_._2 != null), corpusSchema, 1), "id", "vector",
+      nlist = 5)
+    val cents = trained.centroids
+    trained.dispose()
+    def nearest(v: Array[Double]): Int = cents.minBy { case (c, cen) =>
+      (v.zip(cen).map { case (a, b) => (a - b) * (a - b) }.foldLeft(0.0)(_ + _), c)
+    }._1
+    val cell = rows.map { case (id, v) => id -> (if (v == null) 0 else nearest(v)) }.toMap
+    val schema = corpusSchema.add(StructField("cluster", IntegerType, nullable = false))
+    val assignments = spark.createDataFrame(spark.sparkContext.parallelize(rows.map {
+      case (id, v) => Row(id, if (v == null) null else v.map(_.toFloat).toSeq, cell(id))
+    }, parts), schema)
+    (new IVFIndex(cents, assignments, cents.length), cell)
+  }
+
+  /** The probe set recomputed on the driver: nprobe nearest centroids by
+    * squared L2, ties by cluster id. */
+  private def probe(index: IVFIndex, q: Array[Double], nprobe: Int): Set[Int] =
+    index.centroids.toSeq.map { case (c, cen) =>
+      var d = 0.0
+      for (i <- cen.indices) d += (q(i) - cen(i)) * (q(i) - cen(i))
+      (d, c)
+    }.sorted.take(nprobe).map(_._2).toSet
+
+  test("property: IVF broadcast arm == brute force over the probed cells at partitions {1,3,7} x shuffle {1,7}") {
+    val rows = corpusRows(23, n)
+    for (sp <- Seq(1, 7); parts <- Seq(1, 3, 7)) withShufflePartitions(sp) {
+      val (index, cell) = ivfOver(rows, parts)
+      for (nq <- Seq(1, 4); k <- ks; nprobe <- Seq(1, 2, index.nlist)) {
+        val qs = queryRows(parts + nprobe + k, nq, rows)
+        val got = index.searchBatch(frame(qs, querySchema, 1), "qid", "qv", k, nprobe)
+        check(s"ivf parts=$parts sp=$sp |Q|=$nq k=$k nprobe=$nprobe", got,
+          BruteForceKnn.topK(rows, qs, k, BruteForceKnn.L2Sq,
+            eligible = (_, q, id) => probe(index, q, nprobe).contains(cell(id))))
+      }
+    }
+  }
+
+  private def finalPlan(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
+
+  private def knnExec(p: SparkPlan): KnnTopKExec =
+    collect(p) { case e: KnnTopKExec => e }.head
+
+  /** The index frames and a 3-row query block used by the plan and metric pins. */
+  private lazy val fixture = {
+    val rows = corpusRows(5, 300)
+    val corpus = frame(rows, corpusSchema, 3).cache()
+    val sq = SQIndex.build(corpus, "id", "vector")
+    val (ivf, _) = ivfOver(rows, 3)
+    val queries = frame(queryRows(5, 3, rows), querySchema, 1)
+    (rows, corpus, sq, ivf, queries)
+  }
+
+  test("plan shape: exact, SQ8 and IVF batch run KnnTopK — no NLJ, no sort, no range exchange, one shuffle") {
+    val (_, corpus, sq, ivf, queries) = fixture
+    val plans = Seq(
+      "exact" -> ExactKNN.topKBatchHeap(corpus, "id", "vector", queries, "qid", "qv", 5),
+      "sq8" -> sq.searchBatch(queries, "qid", "qv", 5),
+      "ivf" -> ivf.searchBatch(queries, "qid", "qv", 5, nprobe = 2))
+    for ((name, df) <- plans) {
+      val p = finalPlan(df)
+      val shuffles = collect(p) { case s: ShuffleExchangeExec => s }
+      assert(collect(p) { case e: KnnTopKExec => e }.size == 1, s"$name:\n$p")
+      assert(collect(p) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"$name:\n$p")
+      assert(collect(p) { case s: org.apache.spark.sql.execution.SortExec => s }.isEmpty, s"$name:\n$p")
+      assert(!shuffles.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]), s"$name:\n$p")
+      assert(shuffles.size <= 1, s"$name:\n$p")
+    }
+  }
+
+  test("metrics: pairs scored, pairs pruned by the SQ8 bound, pairs skipped by IVF cell") {
+    val (rows, corpus, sq, ivf, queries) = fixture
+    val total = rows.size.toLong * 3
+    val live = rows.count(_._2 != null).toLong * 3
+    def m(e: KnnTopKExec, name: String): Long = e.metrics(name).value
+
+    val exact = knnExec(finalPlan(ExactKNN.topKBatch(corpus, "id", "vector", queries, "qid", "qv", 5)))
+    assert(m(exact, "pairsScored") == total)
+    assert(m(exact, "sq8Pruned") == 0 && m(exact, "ivfSkipped") == 0)
+
+    val s = knnExec(finalPlan(sq.searchBatch(queries, "qid", "qv", 5)))
+    assert(m(s, "pairsScored") + m(s, "sq8Pruned") == live)
+    assert(m(s, "sq8Pruned") > 0, s"the SQ8 bound pruned nothing: ${s.metrics}")
+
+    val v = knnExec(finalPlan(ivf.searchBatch(queries, "qid", "qv", 5, nprobe = 2)))
+    assert(m(v, "pairsScored") + m(v, "ivfSkipped") == total)
+    assert(m(v, "ivfSkipped") > 0 && m(v, "pairsScored") > 0, v.metrics.toString)
+  }
+
+  test("k <= 0 gives an empty (qid, id, score) frame on every batch path, like the single-query topK") {
+    val (rows, corpus, sq, ivf, queries) = fixture
+    assert(ExactKNN.topK(corpus, "id", "vector", rows.head._2, 0).collect().isEmpty)
+    for (k <- Seq(0, -1)) {
+      val frames = Seq(
+        ExactKNN.topKBatch(corpus, "id", "vector", queries, "qid", "qv", k),
+        sq.searchBatch(queries, "qid", "qv", k),
+        sq.searchBatchCosine(queries, "qid", "qv", k),
+        ivf.searchBatch(queries, "qid", "qv", k, nprobe = 2))
+      frames.foreach { df =>
+        assert(df.columns.toSeq == Seq("qid", "id", "score"))
+        assert(df.collect().isEmpty, s"k=$k")
+      }
+    }
+  }
+
+  test("an empty query frame or an empty corpus gives an empty (qid, id, score) frame") {
+    val (_, corpus, sq, ivf, queries) = fixture
+    val noQueries = queries.limit(0)
+    val noRows = corpus.limit(0)
+    val frames = Seq(
+      ExactKNN.topKBatch(corpus, "id", "vector", noQueries, "qid", "qv", 5),
+      sq.searchBatch(noQueries, "qid", "qv", 5),
+      ivf.searchBatch(noQueries, "qid", "qv", 5, nprobe = 2),
+      ExactKNN.topKBatch(noRows, "id", "vector", queries, "qid", "qv", 5),
+      SQIndex.build(noRows, "id", "vector").searchBatch(queries, "qid", "qv", 5))
+    frames.foreach { df =>
+      assert(df.columns.toSeq == Seq("qid", "id", "score"))
+      assert(df.collect().isEmpty)
+    }
+  }
+}

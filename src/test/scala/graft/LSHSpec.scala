@@ -31,8 +31,9 @@ class LSHSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val queries = emb.where(col("vec_id").isin(3L, 21L, 77L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = ExactKNN.topKBatch(emb, "vec_id", "embedding", queries, "qid", "qv", k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+        BruteForceKnn.rows(queries, "qid", "qv"), 5, BruteForceKnn.L2Sq)
+      .map { case (q, id, _) => (q, id) }
     val viaLsh = index.searchBatch(queries, "qid", "qv", k = 5, exact = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(viaLsh == exact)
@@ -86,12 +87,11 @@ class LSHSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val queries = emb.where(col("vec_id") < 60)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = ExactKNN.topKBatch(emb, "vec_id", "embedding", queries, "qid", "qv", k = 4)
-      .where(col("qid") =!= col("id"))
-    val cut = graft.plans.TopK.perKey(exact, Seq("qid"),
-        Seq("score" -> true, "id" -> false), 3)
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // the exact graph: each node's 3 best OTHER vectors
+    val cut = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+        BruteForceKnn.rows(queries, "qid", "qv"), 3, BruteForceKnn.L2Sq,
+        eligible = (qid, _, id) => qid != id)
+      .map { case (q, id, _) => (q, id) }
     assert(viaLsh == cut)
   }
 

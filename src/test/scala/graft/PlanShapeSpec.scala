@@ -51,7 +51,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("knn_batch_topk: custom heap operator, not a window sort") {
     val p = plan("knn_batch_topk")
-    assert(p.contains("TopKPerKey"), p)
+    assert(p.contains("KnnTopK"), p)
     assert(!p.contains("WindowExec"), p)
   }
 

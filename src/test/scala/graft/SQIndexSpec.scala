@@ -98,26 +98,19 @@ class SQIndexSpec extends AnyFunSuite {
   test("searchBatchCosine: bound-pruned batch equals the exact cosine batch scan") {
     val queries = emb.where(col("vec_id").isin(11L, 42L, 99L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = ExactKNN.topKBatch(emb, "vec_id", "embedding", queries, "qid", "qv",
-        k = 5, ExactKNN.Cosine)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val sq = index.searchBatchCosine(queries, "qid", "qv", k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(sq == exact)
+    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+      BruteForceKnn.rows(queries, "qid", "qv"), 5, BruteForceKnn.Cosine, round = true)
+    val sq = BruteForceKnn.collect(index.searchBatchCosine(queries, "qid", "qv", k = 5))
+    assert(BruteForceKnn.same(sq, exact), s"$sq\n$exact")
   }
 
   test("searchBatch: bound-pruned batch equals the exact batch scan") {
     val queries = emb.where(col("vec_id").isin(5L, 77L, 300L))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = ExactKNN.topKBatch(emb, "vec_id", "embedding", queries, "qid", "qv", k = 5)
-      .select(col("qid"), col("id"), round(col("score"), 4).as("score"))
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val sq = index.searchBatch(queries, "qid", "qv", k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(sq == exact)
+    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+      BruteForceKnn.rows(queries, "qid", "qv"), 5, BruteForceKnn.L2Sq, round = true)
+    val sq = BruteForceKnn.collect(index.searchBatch(queries, "qid", "qv", k = 5))
+    assert(BruteForceKnn.same(sq, exact), s"$sq\n$exact")
   }
 
   test("save/load roundtrip: loaded index returns identical results, quantizer intact") {
