@@ -244,7 +244,7 @@ private[graft] trait QueriesSearch { this: Queries.type =>
        |SELECT id, round(raw, 4) AS score FROM top ORDER BY score DESC, id""".stripMargin
 
   /** The widened-probe batch-hybrid arm through the GRAPH-typed facade:
-    * `searchTopKBatch`'s graph dispatch (iterative frontier traversal,
+    * `AnnIndex.searchBatch`'s graph arm (iterative frontier traversal,
     * unbounded beam at efSearch ≥ corpus ⇒ the probe's top-100 is exact)
     * feeding the same zero-scatter + fusion pipeline — so the gate shares
     * hybrid_batch_probe's oracle VERBATIM while exercising a completely
@@ -662,7 +662,7 @@ private[graft] trait QueriesSearch { this: Queries.type =>
     * pre-filter semi-joins the candidate pool before the final top-k cut.
     * Unbounded beam (efSearch ≥ corpus) ⇒ the filtered answer is exact and
     * shares the filtered exact-KNN oracle; tuned-beam filtered recall is
-    * the usual widened-probe story (searchTopK widens ef 4× under a
+    * the usual widened-probe story (AnnIndex.search widens ef 4× under a
     * filter). */
   private[graft] def knnPrefilterGraph(spark: SparkSession, dir: String): DataFrame =
     graphDb(spark, dir)

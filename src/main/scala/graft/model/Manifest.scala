@@ -17,8 +17,8 @@ import org.apache.hadoop.fs.Path
   */
 final case class Manifest(
     dim: Int,
-    indexType: String,          // what the user asked for ('hnsw'|'flat'|'ivfpq')
-    effectiveType: String,      // what is physically built ('flat'|'ivf')
+    indexType: String,     // asked for: 'hnsw'|'flat'|'ivfpq'|'lsh'|'graph'|'ivf'|'pq'
+    effectiveType: String, // built: 'flat'|'ivf'|'ivfpq'|'pq'|'lsh'|'graph' (flat after a degrade)
     efConstruction: Int = 200,
     m: Int = 16,
     ivfClusters: Int = 100,
@@ -64,15 +64,9 @@ object Manifest {
     * random-projection LSH for 'lsh'; the plain IVF probe for 'ivf'
     * (ef_search → nprobe); the navigable-graph index for 'hnsw' and
     * 'graph' — hnsw's native meaning, with ef_search as the traversal
-    * beam. */
-  def effectiveFor(indexType: String): String = indexType match {
-    case "flat" => "flat"
-    case "ivfpq" => "ivfpq"
-    case "pq" => "pq"
-    case "lsh" => "lsh"
-    case "ivf" => "ivf"
-    case _ => "graph" // 'hnsw' and 'graph'
-  }
+    * beam. `indexType` is one of [[knownTypes]]. */
+  def effectiveFor(indexType: String): String =
+    if (indexType == "hnsw") "graph" else indexType
 
   private val Field = """"(\w+)"\s*:\s*("?)([^",}]*)\2""".r
 

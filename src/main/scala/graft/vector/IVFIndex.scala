@@ -419,13 +419,12 @@ object IVFIndex {
     * partitioned-parquet READ, never persisted, so a probe's
     * `cluster IN (probed…)` predicate becomes file-level PARTITION
     * PRUNING: only nprobe/nlist of the files are opened (IVFSpec pins
-    * `PartitionFilters` in the probe's scan). The eager `fromFrames`
-    * path caches the whole assignment frame — the reference's in-RAM
-    * index model, right when the index fits memory; `open` is the mode
-    * where it does not, and pruned I/O is the entire point of IVF.
-    * `indexDir` is the `$path/index` directory [[graft.VectorDatabase]]
-    * `save` writes. */
-  /** `configuredNlist`, when given, overrides the persisted centroid count
+    * `PartitionFilters` in the probe's scan). The eager load caches the
+    * opened assignment frame — the reference's in-RAM index model, right
+    * when the index fits memory; `open` alone is the mode where it does
+    * not, and pruned I/O is the entire point of IVF. `indexDir` is the
+    * `$path/index` directory [[graft.VectorDatabase]] `save` writes.
+    * `configuredNlist`, when given, overrides the persisted centroid count
     * as the reported `nlist` — so the lazy and eager load paths of the same
     * saved index agree on nprobe clamping even when k-means degraded to
     * fewer clusters than configured (r4 ADVICE). */
@@ -438,14 +437,6 @@ object IVFIndex {
     val assigns = spark.read.parquet(s"$indexDir/assignments")
     new IVFIndex(centers.sortBy(_._1), assigns,
       configuredNlist.getOrElse(centers.length))
-  }
-
-  /** Restore from frames persisted by save (centroids small, collect). */
-  def fromFrames(centroidsDf: DataFrame, assignments: DataFrame, nlist: Int): IVFIndex = {
-    val centers = centroidsDf.select(col("cluster"), col("centroid"))
-      .collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    new IVFIndex(centers.sortBy(_._1), assignments, nlist, Seq(assignments))
   }
 
   def centroidsToDf(spark: SparkSession, index: IVFIndex): DataFrame = {

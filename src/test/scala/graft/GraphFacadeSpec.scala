@@ -1,5 +1,6 @@
 package graft
 
+import graft.vector.{AnnIndex, GraphIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,6 +26,9 @@ class GraphFacadeSpec extends AnyFunSuite {
     db.add(rows.map(_._1).toSeq, rows.map(_._2).toSeq)
     db
   }
+
+  private def graphOf(db: VectorDatabase): Option[GraphIndex] =
+    db.indexIfBuilt.collect { case AnnIndex.Graph(g) => g }
 
   test("create accepts 'graph'; repr shows the effective type") {
     val db = VectorDatabase.create(spark, 64, "graph")
@@ -63,7 +67,7 @@ class GraphFacadeSpec extends AnyFunSuite {
     try {
       g.save(tmp)
       val loaded = VectorDatabase.load(spark, tmp)
-      assert(loaded.graphIfBuilt.isDefined, "graph index not rehydrated on load")
+      assert(graphOf(loaded).isDefined, "graph index not rehydrated on load")
       val q = corpus(60)(11)._2
       val a = g.queryVector(q, topK = 8).collect().map(r => (r.getLong(0), r.getDouble(1)))
       val b = loaded.queryVector(q, topK = 8).collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -115,10 +119,10 @@ class GraphFacadeSpec extends AnyFunSuite {
     val db = build("graph", n = 40)
     try {
       db.queryVector(corpus(40)(1)._2, topK = 3) // forces the graph build
-      val before = db.graphIfBuilt.get
+      val before = graphOf(db).get
       val extra = corpus(60).drop(40)
       db.add(extra.map(_._1).toSeq, extra.map(_._2).toSeq)
-      val after = db.graphIfBuilt.get
+      val after = graphOf(db).get
       assert(after ne before, "append must produce a new chained index")
       assert(after.n == 60)
       // exact escape hatch still exact over the appended union

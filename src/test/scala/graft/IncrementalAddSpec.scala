@@ -1,6 +1,6 @@
 package graft
 
-import graft.vector.ExactKNN
+import graft.vector.{AnnIndex, ExactKNN, IVFIndex, LSHIndex, PQIndex, ResidualPQ}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +23,16 @@ class IncrementalAddSpec extends AnyFunSuite {
     db
   }
 
+  // the collection's one index slot, narrowed to the case each test built
+  private def ivfOf(db: VectorDatabase): Option[IVFIndex] =
+    db.indexIfBuilt.collect { case AnnIndex.Ivf(i) => i }
+  private def lshOf(db: VectorDatabase): Option[LSHIndex] =
+    db.indexIfBuilt.collect { case AnnIndex.Lsh(i) => i }
+  private def rpqOf(db: VectorDatabase): Option[ResidualPQ] =
+    db.indexIfBuilt.collect { case AnnIndex.IvfPq(i) => i }
+  private def pqOf(db: VectorDatabase): Option[PQIndex] =
+    db.indexIfBuilt.collect { case AnnIndex.Pq(i) => i }
+
   /** Exact brute-force over the live canonical frame — the truth the
     * exact-recoverable probe must reproduce after the add. */
   private def bruteForce(db: VectorDatabase, q: Array[Float], k: Int): Seq[(Long, Double)] =
@@ -33,11 +43,11 @@ class IncrementalAddSpec extends AnyFunSuite {
   test("ivf: add() keeps the trained centroids (no Lloyd), adopts the batch, answers exactly") {
     val db = mkDb("ivf", 60)
     db.queryVector(vec(), topK = 3).collect() // force the lazy IVF build
-    val before = db.ivfIfBuilt.get
+    val before = ivfOf(db).get
     val centroidsBefore = before.centroids
     val batch = Seq.fill(10)(vec())
     db.add(Seq.tabulate(10)(i => s"new $i"), batch, None)
-    val after = db.ivfIfBuilt
+    val after = ivfOf(db)
     assert(after.isDefined, "add() must maintain the index, not invalidate it")
     assert(after.get.centroids eq centroidsBefore,
       "add() retrained the coarse quantizer — incremental maintenance must reuse it")
@@ -54,9 +64,9 @@ class IncrementalAddSpec extends AnyFunSuite {
   test("ivf: appended rows land in their nearest existing cluster") {
     val db = mkDb("ivf", 60)
     db.queryVector(vec(), topK = 1).collect()
-    val idx0 = db.ivfIfBuilt.get
+    val idx0 = ivfOf(db).get
     db.add(Seq("a"), Seq(vec()), None)
-    val idx = db.ivfIfBuilt.get
+    val idx = ivfOf(db).get
     val centers = idx.centroids.sortBy(_._1).map(_._2)
     val row = idx.assignments.where(col("id") === 60L).head()
     val v = row.getSeq[Float](row.fieldIndex("vector")).map(_.toDouble).toArray
@@ -75,13 +85,13 @@ class IncrementalAddSpec extends AnyFunSuite {
       db.close()
       val loaded = VectorDatabase.load(spark, tmp.toString)
       assert(loaded.count == 60)
-      val centroidsLoaded = loaded.ivfIfBuilt.get.centroids
+      val centroidsLoaded = ivfOf(loaded).get.centroids
       val batch = Seq.fill(5)(vec())
       loaded.add(Seq.tabulate(5)(i => s"post-load $i"), batch, None)
       assert(loaded.count == 65)
       assert(loaded.getDocument(60L).contains("post-load 0"))
       assert(loaded.getDocument(64L).contains("post-load 4"))
-      assert(loaded.ivfIfBuilt.get.centroids eq centroidsLoaded,
+      assert(ivfOf(loaded).get.centroids eq centroidsLoaded,
         "add() on a loaded collection must reuse the persisted centroids")
       val q = batch(2)
       val got = loaded.queryVector(q, topK = 3).collect()
@@ -99,18 +109,18 @@ class IncrementalAddSpec extends AnyFunSuite {
       db.close()
       val lazyDb = VectorDatabase.load(spark, tmp.toString, lazyIndexes = true)
       // nlist from the manifest, not the persisted centroid count (r4 ADVICE)
-      assert(lazyDb.ivfIfBuilt.get.nlist == lazyDb.manifest.ivfClusters)
+      assert(ivfOf(lazyDb).get.nlist == lazyDb.manifest.ivfClusters)
       // an approximate probe (nprobe < nlist) through the FACADE must reach
       // the parquet scan as a partition filter — the 100 TB read path
-      val narrow = lazyDb.ivfIfBuilt.get
+      val narrow = ivfOf(lazyDb).get
         .search(vec().map(_.toDouble), k = 3, nprobe = 2)
       val plan = narrow.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
         s"lazy probe did not prune partitions:\n$plan")
-      val centroidsBefore = lazyDb.ivfIfBuilt.get.centroids
+      val centroidsBefore = ivfOf(lazyDb).get.centroids
       val batch = Seq.fill(4)(vec())
       lazyDb.add(Seq.tabulate(4)(i => s"lazy $i"), batch, None)
-      assert(lazyDb.ivfIfBuilt.get.centroids eq centroidsBefore)
+      assert(ivfOf(lazyDb).get.centroids eq centroidsBefore)
       val q = batch(1)
       val got = lazyDb.queryVector(q, topK = 3).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -122,13 +132,13 @@ class IncrementalAddSpec extends AnyFunSuite {
   test("lsh: add() keeps the hyperplanes, widens maxNorm, finds appended rows exactly") {
     val db = mkDb("lsh", 60)
     db.queryVector(vec(), topK = 3).collect() // force the lazy LSH build
-    val planesBefore = db.lshIfBuilt.get.hyperplanes
-    val normBefore = db.lshIfBuilt.get.maxNorm
+    val planesBefore = lshOf(db).get.hyperplanes
+    val normBefore = lshOf(db).get.maxNorm
     // a deliberately out-of-range vector: maxNorm must widen to cover it,
     // or the exact-probe radius would silently miss it
     val big = Array.fill(dim)(3f)
     db.add(Seq("big"), Seq(big), None)
-    val idx = db.lshIfBuilt.get
+    val idx = lshOf(db).get
     assert(idx.hyperplanes eq planesBefore,
       "add() must hash with the existing hyperplanes, not re-derive them")
     assert(idx.maxNorm >= math.sqrt(dim * 9.0) - 1e-9 && idx.maxNorm > normBefore)
@@ -142,27 +152,27 @@ class IncrementalAddSpec extends AnyFunSuite {
     val db = VectorDatabase.create(spark, dim, "lsh", m = 2)
     db.add(Seq.tabulate(10)(i => s"d$i"), Seq.fill(10)(vec()), None)
     db.queryVector(vec(), topK = 2).collect()
-    assert(db.lshIfBuilt.get.hyperplanes.length == 2)
+    assert(lshOf(db).get.hyperplanes.length == 2)
     // efConstruction → bounded Lloyd refinement schedule
-    assert(VectorDatabase.refineItersFor(0) == 0)
-    assert(VectorDatabase.refineItersFor(199) == 0)
-    assert(VectorDatabase.refineItersFor(200) == 1)
-    assert(VectorDatabase.refineItersFor(450) == 2)
-    assert(VectorDatabase.refineItersFor(5000) == 3)
+    assert(AnnIndex.refineItersFor(0) == 0)
+    assert(AnnIndex.refineItersFor(199) == 0)
+    assert(AnnIndex.refineItersFor(200) == 1)
+    assert(AnnIndex.refineItersFor(450) == 2)
+    assert(AnnIndex.refineItersFor(5000) == 3)
   }
 
   test("ivfpq: add() keeps the residual codebooks + coarse centroids, encodes only the batch") {
     val db = mkDb("ivfpq", 60) // efSearch = 10·nlist ⇒ the exact hatch
     db.queryVector(vec(), topK = 3).collect() // force IVF + residual-PQ builds
-    val booksBefore = db.rpqIfBuilt.get.codebooks
-    val coarseBefore = db.rpqIfBuilt.get.centroids
+    val booksBefore = rpqOf(db).get.codebooks
+    val coarseBefore = rpqOf(db).get.centroids
     val batch = Seq.fill(8)(vec())
     db.add(Seq.tabulate(8)(i => s"pq $i"), batch, None)
-    assert(db.rpqIfBuilt.get.codebooks eq booksBefore,
+    assert(rpqOf(db).get.codebooks eq booksBefore,
       "add() retrained the residual codebooks — incremental maintenance must reuse them")
-    assert(db.rpqIfBuilt.get.centroids eq coarseBefore,
+    assert(rpqOf(db).get.centroids eq coarseBefore,
       "add() replaced the coarse quantizer — the trained centroids must stay fixed")
-    assert(db.rpqIfBuilt.get.codes.count() == 68)
+    assert(rpqOf(db).get.codes.count() == 68)
     // the exact hatch stays exact over the union: appended rows carry a
     // valid per-row err bound regardless of quantizer fit
     val q = batch(3)
@@ -175,11 +185,11 @@ class IncrementalAddSpec extends AnyFunSuite {
   test("pq: add() keeps the raw codebooks, encodes only the batch") {
     val db = mkDb("pq", 60)
     db.queryVector(vec(), topK = 3).collect() // force the raw PQ build
-    val booksBefore = db.pqIfBuilt.get.codebooks
+    val booksBefore = pqOf(db).get.codebooks
     db.add(Seq.tabulate(8)(i => s"pq $i"), Seq.fill(8)(vec()), None)
-    assert(db.pqIfBuilt.get.codebooks eq booksBefore,
+    assert(pqOf(db).get.codebooks eq booksBefore,
       "add() retrained the PQ codebooks — incremental maintenance must reuse them")
-    assert(db.pqIfBuilt.get.codes.count() == 68)
+    assert(pqOf(db).get.codes.count() == 68)
     // the flat ADC scan runs over the updated codes and returns k rows
     val r = db.queryVector(vec(), topK = 5).collect()
     assert(r.length == 5)
