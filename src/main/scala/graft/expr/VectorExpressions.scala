@@ -403,8 +403,8 @@ case class SqDeqDot(left: Expression, right: Expression,
   * callers look up cluster 0. Evaluated once per QUERY row on the
   * broadcast side (|Q| rows), so interpreted eval is fine (CodegenFallback);
   * the per-corpus-row work stays in [[AdcLookupSum]], which IS codegen.
-  * Arithmetic order matches the relational qdFrame/adcTables builders
-  * exactly: x = (q_i − cen_i) − book_i, d += x·x, i ascending. */
+  * Each centroid's block is [[VecKernels.adcTable]], the loop every ADC
+  * table in the engine is built with. */
 case class AdcFlatTables(child: Expression,
                          centroids: Array[Array[Double]],
                          codebooks: Array[Array[Array[Double]]])
@@ -429,35 +429,13 @@ case class AdcFlatTables(child: Expression,
     val kk = codebooks.map(_.length).max
     val dim = math.min(arr.numElements(),
       codebooks.map(_.head.length).sum) // m · subDim
-    val subDim = dim / m
     val q = Array.tabulate(dim)(i =>
       if (isF) arr.getFloat(i).toDouble else arr.getDouble(i))
     val cens: Array[Array[Double]] =
       if (centroids.isEmpty) Array(new Array[Double](dim)) else centroids
     val flat = new Array[Double](cens.length * m * kk)
-    var c = 0
-    while (c < cens.length) {
-      val cen = cens(c)
-      if (cen != null && cen.length >= dim) {
-        var s = 0
-        while (s < m) {
-          val book = codebooks(s)
-          var j = 0
-          while (j < book.length) {
-            val b = book(j)
-            var d = 0.0; var i = 0
-            while (i < subDim) {
-              val x = (q(s * subDim + i) - cen(s * subDim + i)) - b(i)
-              d += x * x; i += 1
-            }
-            flat(c * m * kk + s * kk + j) = d
-            j += 1
-          }
-          s += 1
-        }
-      }
-      c += 1
-    }
+    for ((cen, c) <- cens.zipWithIndex if cen != null && cen.length >= dim)
+      VecKernels.adcTable(q, cen, codebooks, dim / m, kk, flat, c * m * kk)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(flat)
   }
 
@@ -523,40 +501,6 @@ case class AdcLookupSum(codesArr: Expression, cluster: Expression, tables: Expre
 
   override protected def withNewChildrenInternal(f: Expression, sec: Expression, t: Expression): Expression =
     copy(codesArr = f, cluster = sec, tables = t)
-}
-
-/** The `nprobe` nearest coarse clusters of a query, as an ARRAY<INT> of
-  * raw cluster ids — selection order (squaredL2 asc, cluster id asc) of
-  * [[VecKernels.nearestClusters]], the probe set of every IVF probe.
-  * Evaluated once per query row on the broadcast side (CodegenFallback is
-  * fine there). `centroids` = (id, vector) pairs like the IVF coarse
-  * quantizer holds them. */
-case class NearestClusters(child: Expression,
-                           centroids: Array[(Int, Array[Double])], nprobe: Int)
-    extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def prettyName: String = "nearest_clusters"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(t, _) if t == FloatType || t == DoubleType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an ARRAY<FLOAT|DOUBLE> arg, got ${other.simpleString}")
-  }
-
-  private def elemT: DataType = child.dataType.asInstanceOf[ArrayType].elementType
-
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val q = VecKernels.toDoubles(arr, elemT == FloatType, arr.numElements())
-    if (q == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      VecKernels.nearestClusters(q, centroids, nprobe))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** |A ∩ B| of two SORTED, de-duplicated ARRAY<STRING> columns via a single
@@ -678,6 +622,34 @@ object VecKernels {
     out
   }
 
+  /** The flat ADC table of query `q` against coarse centroid `cen` (a zero
+    * centroid for plain PQ): out(off + s·kk + j) = Σ_i ((q_i − cen_i) −
+    * codebooks(s)(j)_i)² over subspace s's `subDim` coordinates, i
+    * ascending. */
+  def adcTable(q: Array[Double], cen: Array[Double], codebooks: Array[Array[Array[Double]]],
+               subDim: Int, kk: Int, out: Array[Double], off: Int): Unit = {
+    var s = 0
+    while (s < codebooks.length) {
+      val book = codebooks(s)
+      var j = 0
+      while (j < book.length) {
+        val b = book(j)
+        var d = 0.0; var i = 0
+        while (i < subDim) {
+          val x = (q(s * subDim + i) - cen(s * subDim + i)) - b(i)
+          d += x * x; i += 1
+        }
+        out(off + s * kk + j) = d
+        j += 1
+      }
+      s += 1
+    }
+  }
+
+  /** The LSH bucket of `q` along unit direction `w`: ⌊q·w / bucketLength⌋. */
+  def lshBucket(q: Array[Double], w: Array[Double], bucketLength: Double): Int =
+    math.floor(dot(q, w, math.min(q.length, w.length)) / bucketLength).toInt
+
   /** The `nprobe` nearest clusters of `q` by squared L2 over the common
     * prefix, ties by cluster id — the IVF probe set. */
   def nearestClusters(q: Array[Double], centroids: Array[(Int, Array[Double])],
@@ -715,6 +687,4 @@ object VectorExpr {
     c(AdcFlatTables(x(q), centroids, codebooks))
   def adcLookupSum(codes: Column, cluster: Column, tables: Column, m: Int, kk: Int): Column =
     c(AdcLookupSum(x(codes), x(cluster), x(tables), m, kk))
-  def nearestClusters(q: Column, centroids: Array[(Int, Array[Double])], nprobe: Int): Column =
-    c(NearestClusters(x(q), centroids, nprobe))
 }

@@ -458,9 +458,10 @@ private[graft] trait QueriesSearch { this: Queries.type =>
       PQIndex.buildFromAnchors(tbl(spark, dir, "embeddings"), "vec_id", "embedding",
         dim = 64, m = 8, anchorFilter = col("vec_id") < 16))
 
-  /** BULK ADC: N queries against the compressed corpus in one plan —
-    * per-query distance tables as a frame, one (s, code) equi-join, one
-    * map-side-combined sum. Anchor codebooks keep it SQL-reproducible. */
+  /** BULK ADC: N queries against the compressed corpus in one pass of
+    * the fused KnnTopK operator — each task builds every query's distance
+    * tables once and sums m table lookups per (row, query) pair. Anchor
+    * codebooks keep it SQL-reproducible. */
   private[graft] def annPqBatch(spark: SparkSession, dir: String): DataFrame = {
     val e = tbl(spark, dir, "embeddings")
     val queries = e.where(col("vec_id").isin(11L, 12L))
@@ -747,11 +748,11 @@ private[graft] trait QueriesSearch { this: Queries.type =>
       .orderBy(col("qid").asc, col("score").desc, col("id").asc)
   }
 
-  /** BULK ANN through the LSH tables: queries hash with the same plane
-    * literals, both sides meet on one (table, bucket) equi-join, exact
-    * re-rank per query. `exact = true` = provable-superset radius over the
-    * batch ⇒ shares the exact batch oracle (tuned-radius recall pinned in
-    * LSHSpec). */
+  /** BULK ANN through the LSH tables: one fused KnnTopK pass, each task
+    * hashing every query with the same planes and re-ranking exactly only
+    * the in-bucket (row, query) pairs. `exact = true` = provable-superset
+    * radius over the batch ⇒ shares the exact batch oracle (tuned-radius
+    * recall pinned in LSHSpec). */
   private[graft] def knnBatchLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = tbl(spark, dir, "embeddings")
     val queries = e.where(col("vec_id").isin(7L, 8L, 9L))
@@ -821,12 +822,12 @@ private[graft] trait QueriesSearch { this: Queries.type =>
       .orderBy(col("id"))
   }
 
-  /** The same k-NN graph through the LSH SHUFFLE arm (r5 VERDICT #3): a
-    * corpus-sized batch must never broadcast — both bucket joins shuffle
-    * on their keys ([[graft.vector.LSHIndex.searchBatch]]
-    * `broadcastQueries = false`). `exact = true` probes the
+  /** The same k-NN graph through the LSH tables (r5 VERDICT #3): a
+    * corpus-sized query side must never broadcast, so
+    * [[graft.vector.LSHIndex.knnGraph]] meets the exploded (table, bucket)
+    * rows of both sides on shuffled equi-joins. `exact = true` probes the
     * provable-superset radius, so the graph shares knn_graph's exact
-    * oracle bit for bit; arm equality is additionally spec-pinned. */
+    * oracle bit for bit (pinned in LSHSpec too). */
   private[graft] def knnGraphLshQ(spark: SparkSession, dir: String): DataFrame =
     lshIndex(spark, dir).knnGraph(tbl(spark, dir, "embeddings"),
         "vec_id", "embedding", k = 3, exact = true,

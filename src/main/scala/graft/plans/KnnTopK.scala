@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, Descending, GenericInternalRow, InterpretedOrdering, InterpretedUnsafeProjection, Literal, Round, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.col
@@ -61,6 +61,31 @@ object KnnScorer {
     def columns: Seq[String] = Seq("id", "vector", "cluster")
     def describe: String = s"ivf nprobe=$nprobe $metric"
   }
+
+  /** Product-quantized ADC: d̂ = Σ_s table_q[s·kk + code_s], folded in
+    * ascending s, score 1/(1+d̂). Each query's tables are built once per
+    * task with [[VecKernels.adcTable]]. With no `centroids` the codes are
+    * plain PQ: one implicit zero centroid, every row scored. Otherwise they
+    * are residuals against the row's `cluster` cell, and a pair is scored
+    * only when that cell is among the query's `nprobe` nearest centroids
+    * (as [[IvfCells]]; a null query vector probes nothing). A code outside
+    * its codebook, or a codes row not m long, fails the task with a named
+    * error. */
+  final case class Adc(codebooks: Array[Array[Array[Double]]],
+                       centroids: Array[(Int, Array[Double])], nprobe: Int) extends KnnScorer {
+    def columns: Seq[String] =
+      if (centroids.isEmpty) Seq("id", "codes") else Seq("id", "codes", "cluster")
+    def describe: String = if (centroids.isEmpty) "pq adc" else s"residual pq adc nprobe=$nprobe"
+  }
+
+  /** LSH bucket probe: a pair is scored by `metric` only when, in some
+    * table t, the row's bucket h_t is within `radius` of the query's,
+    * |h_t − qb_t| ≤ radius. Rows with null hashes are never scored. */
+  final case class LshBuckets(planes: Array[Array[Double]], bucketLength: Double,
+                              radius: Int, metric: ExactKNN.Metric) extends KnnScorer {
+    def columns: Seq[String] = Seq("id", "vector", "hashes")
+    def describe: String = s"lsh radius=$radius $metric"
+  }
 }
 
 /** Fused batch k-nearest-neighbour search: every corpus row (left) against
@@ -101,7 +126,7 @@ case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "pairsScored" -> SQLMetrics.createMetric(sparkContext, "pairs scored"),
     "sq8Pruned" -> SQLMetrics.createMetric(sparkContext, "pairs pruned by SQ8 bound"),
-    "ivfSkipped" -> SQLMetrics.createMetric(sparkContext, "pairs skipped by IVF cell"),
+    "probeSkipped" -> SQLMetrics.createMetric(sparkContext, "pairs skipped by probe (IVF or PQ cell, LSH bucket)"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override protected def doExecute(): RDD[InternalRow] = {
@@ -120,7 +145,7 @@ case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
     val qidType = qid.dataType
     val qvFloat = KnnTopK.isFloatArray(qv.dataType)
     val (mScored, mPruned, mSkipped, mOut) = (metrics("pairsScored"),
-      metrics("sq8Pruned"), metrics("ivfSkipped"), metrics("numOutputRows"))
+      metrics("sq8Pruned"), metrics("probeSkipped"), metrics("numOutputRows"))
     left.execute().mapPartitions { rows =>
       val qrows = queries.value
       if (kk <= 0 || qrows.isEmpty) Iterator.empty
@@ -300,12 +325,19 @@ object KnnTopK {
     if (row.isNullAt(ord)) null
     else { val a = row.getArray(ord); VecKernels.toDoubles(a, isFloat, a.numElements()) }
 
+  /** cell → the queries whose probe set `probe(j)` holds it. */
+  private def byCell(nq: Int, probe: Int => Array[Int]): Map[Int, Array[Int]] = {
+    val cells = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
+    (0 until nq).foreach(j => probe(j).foreach(c => cells.getOrElseUpdate(c, mutable.ArrayBuffer.empty) += j))
+    cells.view.mapValues(_.toArray).toMap
+  }
+
   /** Slack on the SQ8 L2 pruning threshold: rows that could tie the k-th
     * after 4-dp rounding are kept (see [[graft.vector.SQIndex]]). */
   private def l2Slack(t: Double): Double = t + 2e-4 * (1.0 + t) * (1.0 + t)
 
   /** The per-row body of the partition pass for `scorer`. `counts` =
-    * (pairs scored, pairs pruned by the SQ8 bound, pairs skipped by cell). */
+    * (pairs scored, pairs pruned by the SQ8 bound, pairs skipped by probe). */
   def rowScanner(scorer: KnnScorer, qs: QueryBlock, heaps: Array[KnnHeap],
                  ords: Seq[Int], types: Seq[DataType],
                  counts: Array[Long]): InternalRow => Unit = {
@@ -330,16 +362,11 @@ object KnnTopK {
 
       case KnnScorer.IvfCells(metric, centroids, nprobe) =>
         val cOrd = ords(2)
-        // cluster → the queries whose probe set holds it; a null query
-        // vector probes the lowest cluster ids (null distances sort first)
-        val byCell = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
-        (0 until nq).foreach { j =>
-          val probe = Option(qs.vecs(j))
-            .map(VecKernels.nearestClusters(_, centroids, nprobe))
-            .getOrElse(centroids.map(_._1).sorted.take(math.max(1, nprobe)))
-          probe.foreach(c => byCell.getOrElseUpdate(c, mutable.ArrayBuffer.empty) += j)
-        }
-        val cells = byCell.view.mapValues(_.toArray).toMap
+        // a null query vector probes the lowest cluster ids (null
+        // distances sort first)
+        val cells = byCell(nq, j => Option(qs.vecs(j))
+          .map(VecKernels.nearestClusters(_, centroids, nprobe))
+          .getOrElse(centroids.map(_._1).sorted.take(math.max(1, nprobe))))
         val none = Array.empty[Int]
         row => {
           val js = if (row.isNullAt(cOrd)) none else cells.getOrElse(row.getInt(cOrd), none)
@@ -354,6 +381,95 @@ object KnnTopK {
               i += 1
             }
             counts(0) += js.length
+          }
+        }
+
+      case KnnScorer.Adc(codebooks, centroids, nprobe) =>
+        val codesOrd = ords(1)
+        val residual = centroids.nonEmpty
+        val cOrd = if (residual) ords(2) else -1
+        val label = if (residual) "ResidualPQ" else "PQIndex"
+        val m = codebooks.length
+        val kk = codebooks.map(_.length).max
+        val subDim = codebooks.head.head.length
+        val cens = if (residual) centroids.toMap else Map(0 -> new Array[Double](m * subDim))
+        val cells = byCell(nq, j =>
+          if (!residual) Array(0)
+          else if (qs.vecs(j) == null) Array.empty[Int]
+          else VecKernels.nearestClusters(qs.vecs(j), centroids, nprobe))
+        // per probed cell, its queries and their tables (null for a null query)
+        val probes = cells.map { case (c, js) => c -> (js, js.map { j =>
+          val q = qs.vecs(j)
+          if (q == null) null
+          else { val t = new Array[Double](m * kk); VecKernels.adcTable(q, cens(c), codebooks, subDim, kk, t, 0); t }
+        }) }
+        val none = (Array.empty[Int], Array.empty[Array[Double]])
+        val codes = new Array[Int](m)
+        row => {
+          val cell = if (!residual) 0 else if (row.isNullAt(cOrd)) -1 else row.getInt(cOrd)
+          val (js, ts) = probes.getOrElse(cell, none)
+          counts(2) += nq - js.length
+          if (js.nonEmpty) {
+            val id = if (row.isNullAt(idOrd)) null else row.get(idOrd, idType)
+            val hasCodes = !row.isNullAt(codesOrd)
+            if (hasCodes) {
+              val arr = row.getArray(codesOrd)
+              require(arr.numElements() == m,
+                s"$label codes row $id has ${arr.numElements()} codes, expected $m")
+              var s = 0
+              while (s < m) {
+                val code = arr.getInt(s)
+                require(code >= 0 && code < codebooks(s).length,
+                  s"$label codes row $id has code $code outside the trained codebooks")
+                codes(s) = code; s += 1
+              }
+            }
+            var i = 0
+            while (i < js.length) {
+              val heap = heaps(qs.group(js(i)))
+              val t = ts(i)
+              if (t == null || !hasCodes) heap.offer(isNull = true, 0.0, id)
+              else {
+                var d = 0.0; var s = 0
+                while (s < m) { d += t(s * kk + codes(s)); s += 1 }
+                heap.offer(isNull = false, 1.0 / (1.0 + d), id)
+              }
+              i += 1
+            }
+            counts(0) += js.length
+          }
+        }
+
+      case KnnScorer.LshBuckets(planes, bucketLength, radius, metric) =>
+        val hOrd = ords(2)
+        val qb = qs.vecs.map(q =>
+          if (q == null) null else planes.map(VecKernels.lshBucket(q, _, bucketLength)))
+        def inSomeBucket(h: ArrayData, b: Array[Int]): Boolean = {
+          var t = 0
+          val nt = math.min(h.numElements(), b.length)
+          while (t < nt) {
+            if (!h.isNullAt(t) && math.abs(h.getInt(t).toLong - b(t)) <= radius) return true
+            t += 1
+          }
+          false
+        }
+        row => {
+          val h = if (row.isNullAt(hOrd)) null else row.getArray(hOrd)
+          var loaded = false
+          var id: Any = null
+          var v: Array[Double] = null
+          var j = 0
+          while (j < nq) {
+            if (h != null && qb(j) != null && inSomeBucket(h, qb(j))) {
+              if (!loaded) {
+                id = if (row.isNullAt(idOrd)) null else row.get(idOrd, idType)
+                v = vectorOf(row, vOrd, vFloat)
+                loaded = true
+              }
+              offerExact(heaps(qs.group(j)), metric, v, qs.vecs(j), id)
+              counts(0) += 1
+            } else counts(2) += 1
+            j += 1
           }
         }
 

@@ -74,8 +74,9 @@ object ExactKNN {
     * materialized, joined or sorted; ≤ k rows per query per partition go
     * through one single-partition exchange to the merge, whose output
     * order (qid asc, score desc, id asc) is the result order. Ties on the
-    * unrounded score break by id asc. For very large query blocks, use
-    * [[IVFIndex.searchBatch]] with `broadcastQueries = false`. */
+    * unrounded score break by id asc. The query block must fit a
+    * broadcast; a corpus-sized query side is the k-NN graph's job
+    * ([[IVFIndex.knnGraph]], [[LSHIndex.knnGraph]]). */
   def topKBatch(data: DataFrame, idCol: String, vecCol: String,
                 queries: DataFrame, qidCol: String, qvecCol: String,
                 k: Int, metric: Metric = L2Sq): DataFrame =

@@ -56,11 +56,11 @@ final class IVFIndex(val centroids: Array[(Int, Array[Double])],
       nlist, retained :+ assigned)
   }
 
-  /** Skew-DERIVED salt for the corpus-as-batch probed join (r13 VERDICT
-    * #8 — the fixed `saltBuckets = 16` dial was tuned to one probe
-    * geometry and generalizes to neither a uniform corpus, where it pays
-    * 16× probe replication for nothing, nor a corpus MORE skewed than the
-    * probe). One ≤ nlist-row aggregation over the assignment frame
+  /** Skew-DERIVED salt for [[knnGraph]]'s corpus-as-batch probed join
+    * (r13 VERDICT #8 — the fixed 16-way salt was tuned to one
+    * probe geometry and generalizes to neither a uniform corpus, where it
+    * pays 16× probe replication for nothing, nor a corpus MORE skewed than
+    * the probe). One ≤ nlist-row aggregation over the assignment frame
     * (cached per index — "one count per build", the autoBitsPerBand
     * discipline) estimates each cell's pair block as |c|² and picks the
     * smallest salt that brings the hottest block under the balanced
@@ -68,20 +68,14 @@ final class IVFIndex(val centroids: Array[(Int, Array[Double])],
     * replication paid), Zipf-clustered ones to the actual skew ratio,
     * capped at the parallelism (finer splits than cores cannot help).
     * Results are bit-identical at any value; this only repartitions. */
-  /** Per-cluster row counts of the assignment frame — ≤ nlist rows,
-    * computed once per index (shared by [[autoSaltBuckets]] and the
-    * batch-derived salt, round 15). */
-  lazy val clusterHistogram: Map[Int, Long] =
-    assignments.groupBy(col("cluster")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
   lazy val autoSaltBuckets: Int = {
     val p = math.max(1,
       assignments.sparkSession.sparkContext.defaultParallelism)
-    val counts = clusterHistogram.values.toArray
+    val counts = assignments.groupBy(col("cluster")).count()
+      .collect().map(_.getLong(1))
     val s = IVFIndex.saltForHistogram(counts, p)
     if (s > 1)
-      System.err.println(s"[ivf.salt] skew-derived saltBuckets=$s " +
+      System.err.println(s"[ivf.salt] skew-derived salt=$s " +
         s"(hottest cell ${if (counts.isEmpty) 0L else counts.max} of " +
         s"${counts.sum} rows across ${counts.length} cells, parallelism $p): " +
         "the probed candidate join splits the hot cell's pair block " +
@@ -95,71 +89,38 @@ final class IVFIndex(val centroids: Array[(Int, Array[Double])],
 
   /** BULK ANN: N queries through the IVF probe as ONE distributed plan —
     * no per-query driver round-trip (the single-query [[search]] ranks
-    * centroids driver-side; a loop over it is N Spark jobs).
-    *
-    * `broadcastQueries = true`: the fused [[graft.plans.KnnTopK]]
-    * operator scans the assignment frame once with the query block
-    * broadcast. Each task computes every query's probe set — its `nprobe`
-    * nearest centroids by squared L2, ties by cluster id, the same set as
-    * [[probedCandidates]] and [[probeOrder]] — and scores a (row, query)
-    * pair only when the row's cell is in that set, keeping one bounded
-    * heap per query. No candidate join, no pair frame; one
-    * single-partition exchange to the merge.
-    *
-    * `broadcastQueries = false`, for query batches too large to
-    * broadcast: candidates come from [[probedCandidates]] (a shuffle join
-    * on `cluster`, touching only probed-cluster rows) and are cut per
-    * query by the bounded-heap [[graft.plans.TopKPerKey]]. `saltBuckets`
-    * applies to this arm only: 1 = unsalted, 0 = derive from the
-    * assignment histogram ([[autoSaltBuckets]] — corpus-as-batch skew),
-    * -1 = derive from the BATCH's probe-cluster histogram (the
-    * external-query-batch dial, round 15), > 1 = explicit.
-    *
-    * Output contract matches [[ExactKNN.topKBatch]]: (qid, id, score)
-    * ordered (qid, score desc, id), exact within the probed clusters;
-    * nprobe = nlist recovers the exact batch scan bit-for-bit. Results are
-    * bit-identical across the two arms and every salt. */
+    * centroids driver-side; a loop over it is N Spark jobs). The fused
+    * [[graft.plans.KnnTopK]] operator scans the assignment frame once with
+    * the query block broadcast. Each task computes every query's probe set
+    * — its `nprobe` nearest centroids by squared L2, ties by cluster id,
+    * the same set as [[probedCandidates]] and [[probeOrder]] — and scores
+    * a (row, query) pair only when the row's cell is in that set, keeping
+    * one bounded heap per query. No candidate join, no pair frame; one
+    * single-partition exchange to the merge. Output contract matches
+    * [[ExactKNN.topKBatch]]: (qid, id, score) ordered (qid, score desc,
+    * id), exact within the probed clusters; nprobe = nlist recovers the
+    * exact batch scan bit-for-bit. */
   def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
                   k: Int, nprobe: Int,
-                  metric: ExactKNN.Metric = ExactKNN.L2Sq,
-                  broadcastQueries: Boolean = true,
-                  saltBuckets: Int = 1): DataFrame =
-    if (broadcastQueries)
-      graft.plans.KnnTopK(
-        assignments.select(col("id"), col("vector"), col("cluster").cast("int").as("cluster")),
-        queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv")),
-        k, graft.plans.KnnScorer.IvfCells(metric, centroids, nprobe))
-    else {
-      val cand = probedCandidates(queries, qidCol, qvecCol, nprobe,
-        broadcastQueries, saltBuckets)
-      graft.plans.TopK.perKey(
-        cand.select(col("qid"), col("id"),
-          metric.score(metric.dist(col("vector"), col("__qv"))).as("score")),
-        Seq("qid"), Seq("score" -> true, "id" -> false), k)
-        .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-    }
+                  metric: ExactKNN.Metric = ExactKNN.L2Sq): DataFrame =
+    graft.plans.KnnTopK(
+      assignments.select(col("id"), col("vector"), col("cluster").cast("int").as("cluster")),
+      queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv")),
+      k, graft.plans.KnnScorer.IvfCells(metric, centroids, nprobe))
 
-  /** The probe-restricted candidate frame behind [[searchBatch]], exposed
-    * so OTHER per-row scorers (the PQ ADC batch, r9 ADVICE) can share the
-    * per-query IVF restriction: each query's `nprobe` nearest centroids
-    * via broadcast + bounded heaps, candidates through ONE equi-join
-    * against the cluster-partitioned assignment frame. Output keeps
-    * (qid, __qv, cluster) plus every assignment column (id, vector). */
-  /** `saltBuckets > 1` splits every (cluster) join key into that many
-    * deterministic sub-keys (assignments salted by id hash, probe rows
-    * replicated across all salts — the same candidate set, partitioned):
-    * the SKEW dial for corpus-as-batch callers on clustered geometry,
-    * where one hot cell's |queries in cell| × |cell| pair block otherwise
-    * lands on ONE task (measured round 13: the auto-sharded 200 k graph
-    * build ran 7.6× slower on Zipf-clustered embeddings than on uniform
-    * ones, ~3 cores busy — the hottest cell's quadratic block was a
-    * single straggler). Cost: probe-side rows × saltBuckets. Results are
-    * bit-identical at any value. `saltBuckets = 0` resolves through
-    * [[autoSaltBuckets]] — derived from the assignment histogram instead
-    * of hand-tuned (r13 VERDICT #8). */
+  /** The probe-restricted candidate pairs as a frame — the scan-volume
+    * diagnostic: each query's `nprobe` nearest centroids (broadcast +
+    * bounded heaps), candidates through ONE equi-join against the
+    * cluster-partitioned assignment frame with the probe rows broadcast.
+    * Output keeps (qid, __qv, cluster) plus every assignment column
+    * (id, vector). */
   def probedCandidates(queries: DataFrame, qidCol: String, qvecCol: String,
-                       nprobe: Int, broadcastQueries: Boolean = true,
-                       saltBuckets: Int = 1): DataFrame = {
+                       nprobe: Int): DataFrame =
+    assignments.join(broadcast(probeRows(queries, qidCol, qvecCol, nprobe)), Seq("cluster"))
+
+  /** (qid, __qv, cluster) for each query's `nprobe` nearest clusters. */
+  private def probeRows(queries: DataFrame, qidCol: String, qvecCol: String,
+                        nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     val cents = centroids.toSeq.map { case (c, v) => (c, v.toSeq) }
@@ -169,58 +130,33 @@ final class IVFIndex(val centroids: Array[(Int, Array[Double])],
     val ranked = q.crossJoin(broadcast(cents))
       .select(col("qid"), col("__qv"), col("cluster"),
         graft.expr.VectorExpr.squaredL2(col("__qv"), col("centroid")).as("__cd"))
-    val probed0 = graft.plans.TopK.perKey(ranked, Seq("qid"),
+    graft.plans.TopK.perKey(ranked, Seq("qid"),
         Seq("__cd" -> false, "cluster" -> false), math.max(1, nprobe))
       .select(col("qid"), col("__qv"), col("cluster"))
-    // saltBuckets = -1 (round 15, r14 VERDICT #6): derive the salt from
-    // the BATCH's probe-cluster histogram instead of the corpus's.
-    // autoSaltBuckets (0) models corpus-as-batch skew — each cell's pair
-    // block |c|² — which is blind to an EXTERNAL query batch whose skew
-    // differs from the corpus's: the true block is q_c × |c| (probe rows
-    // landing in cell c × cell size). One extra ≤ nlist-row count on the
-    // probed frame (persisted so the count and the join share the ranked
-    // topk work) prices it exactly; a batch that probes no hot cell pays
-    // zero replication even on a skewed corpus, and vice versa.
-    val (probed, salt) =
-      if (saltBuckets == -1) {
-        val p = probed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val qc = p.groupBy(col("cluster")).count()
-          .collect().map(r => (r.getInt(0), r.getLong(1)))
-        val par = math.max(1, spark.sparkContext.defaultParallelism)
-        val blocks = qc.map { case (c, q) => (q, clusterHistogram.getOrElse(c, 0L)) }
-        val s = IVFIndex.saltForBlocks(blocks, par)
-        if (s > 1)
-          System.err.println(s"[ivf.salt] batch-derived saltBuckets=$s " +
-            s"(hottest probed block ${if (blocks.isEmpty) 0L else
-              blocks.map(b => b._1 * b._2).max} pair candidates, " +
-            s"parallelism $par)")
-        (p: DataFrame, s)
-      } else (probed0, if (saltBuckets == 0) autoSaltBuckets else saltBuckets)
-    if (salt <= 1) {
-      val probedSide = if (broadcastQueries) broadcast(probed) else probed
-      assignments.join(probedSide, Seq("cluster"))
-    } else {
-      val aSalted = assignments.withColumn("__salt",
-        pmod(xxhash64(col("id")), lit(salt)).cast("int"))
-      val pSalted = probed.withColumn("__salt",
-        explode(array((0 until salt).map(lit(_)): _*)))
-      val probedSide = if (broadcastQueries) broadcast(pSalted) else pSalted
-      aSalted.join(probedSide, Seq("cluster", "__salt")).drop("__salt")
-    }
   }
 
   /** k-NN GRAPH over an embedding frame: every vector's k nearest OTHER
     * vectors — the all-corpus bulk-ANN composition that diversity
     * sampling, graph-based clustering and hubness analysis start from.
-    * ONE [[searchBatch]] with the corpus itself as the query side (the
-    * shuffle arm — a corpus-sized "batch" must not broadcast), k+1 to
-    * absorb the guaranteed self-hit, then a bounded re-cut after dropping
-    * self (exact: the true top-k-excluding-self is always contained in
-    * the top-(k+1)-including-self). Exact at nprobe = nlist; approximate
-    * below, like every probe. `nodesFilter` restricts which vectors get
-    * edges (neighbors still come from the WHOLE index) — the incremental
-    * shape (extend the graph for a new node batch), and the cost dial:
-    * the exact full graph is inherently |nodes| × corpus work.
+    * The corpus itself is the query side, so nothing broadcasts: each
+    * node's probe rows meet the assignments on one shuffled cluster
+    * equi-join, k+1 absorbs the guaranteed self-hit, then a bounded re-cut
+    * after dropping self (exact: the true top-k-excluding-self is always
+    * contained in the top-(k+1)-including-self). Exact at nprobe = nlist
+    * (via [[IVFIndex.knnGraphExact]]); approximate below, like every
+    * probe. `nodesFilter` restricts which vectors get edges (neighbors
+    * still come from the WHOLE index) — the incremental shape (extend the
+    * graph for a new node batch), and the cost dial: the exact full graph
+    * is inherently |nodes| × corpus work.
+    *
+    * The join is salted by [[autoSaltBuckets]]: every node in a hot cell
+    * meets that whole cell, so without it a clustered corpus puts one
+    * cell's |cell|² pair block on a single task (measured round 13: the
+    * 200 k graph build ran 7.6× slower on Zipf-clustered embeddings than
+    * on uniform ones, ~3 cores busy). A salt s > 1 splits every cluster
+    * key into s sub-keys (assignments salted by id hash, probe rows
+    * replicated across all salts — the same candidate set, partitioned),
+    * at s× probe-row cost; uniform corpora resolve to 1 and pay nothing.
     * Output: (qid, id, score) × k per qid. */
   def knnGraph(emb: DataFrame, idCol: String, vecCol: String,
                k: Int, nprobe: Int,
@@ -229,16 +165,19 @@ final class IVFIndex(val centroids: Array[(Int, Array[Double])],
     val src = nodesFilter.map(emb.where).getOrElse(emb)
     if (nprobe >= nlist)
       return IVFIndex.knnGraphExact(emb, src, idCol, vecCol, k, metric)
-    // the corpus-as-batch probed arm salts the candidate join: every
-    // query in a hot cell meets that whole cell, so a clustered corpus
-    // concentrates |cell|² work on single tasks without it (see
-    // probedCandidates; measured round 13). saltBuckets = 0 derives the
-    // salt from this index's assignment histogram (r13 VERDICT #8) —
-    // uniform corpora pay no replication, skewed ones split the hot cell.
-    val res = searchBatch(
-      src.select(col(idCol).as("qid"), col(vecCol).as("qv")),
-      "qid", "qv", k + 1, nprobe, metric, broadcastQueries = false,
-      saltBuckets = 0)
+    val probed = probeRows(src, idCol, vecCol, nprobe)
+    val salt = autoSaltBuckets
+    val cand =
+      if (salt <= 1) assignments.join(probed, Seq("cluster"))
+      else assignments.withColumn("__salt", pmod(xxhash64(col("id")), lit(salt)).cast("int"))
+        .join(probed.withColumn("__salt", explode(array((0 until salt).map(lit(_)): _*))),
+          Seq("cluster", "__salt"))
+        .drop("__salt")
+    val res = graft.plans.TopK.perKey(
+        cand.select(col("qid"), col("id"),
+          metric.score(metric.dist(col("vector"), col("__qv"))).as("score")),
+        Seq("qid"), Seq("score" -> true, "id" -> false), k + 1)
+      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
     graft.plans.TopK.perKey(res.where(col("qid") =!= col("id")),
         Seq("qid"), Seq("score" -> true, "id" -> false), k)
       .orderBy(col("qid").asc, col("score").desc, col("id").asc)
@@ -333,21 +272,6 @@ object IVFIndex {
     if (share <= 0.0) 1
     else math.min(math.max(1, parallelism),
       math.max(1, math.ceil(sq.max / share).toInt))
-  }
-
-  /** The BATCH-aware sizing rule (round 15, r14 VERDICT #6): `blocks` =
-    * (probe rows landing in the cell, cell rows) per probed cluster —
-    * the candidate join puts q_c × |c| pairs of cell c on ONE task.
-    * Same smallest-split-under-the-balanced-share rule as
-    * [[saltForHistogram]] (which is the q_c = |c| corpus-as-batch
-    * special case), capped at the parallelism. */
-  def saltForBlocks(blocks: Array[(Long, Long)], parallelism: Int): Int = {
-    if (blocks.length <= 1) return 1
-    val work = blocks.map { case (q, c) => q.toDouble * c.toDouble }
-    val share = work.sum / math.max(1, parallelism)
-    if (share <= 0.0) 1
-    else math.min(math.max(1, parallelism),
-      math.max(1, math.ceil(work.max / share).toInt))
   }
 
   /** Effective cluster count after the reference's tiny-dataset shrink

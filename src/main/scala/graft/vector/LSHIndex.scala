@@ -63,114 +63,56 @@ final class LSHIndex(val hyperplanes: Array[Array[Double]],
       retained :+ hashedBatch)
   }
 
-  private def bucketOf(query: Array[Double], w: Array[Double]): Int = {
-    var s = 0.0; var i = 0
-    while (i < math.min(w.length, query.length)) { s += w(i) * query(i); i += 1 }
-    math.floor(s / bucketLength).toInt
-  }
-
   /** Candidate filter: ∃ table t with hash_t ∈ [bucket_t(q) − r, + r]. */
   private def candidates(query: Array[Double], radius: Int): DataFrame = {
     val pred = hyperplanes.zipWithIndex.map { case (w, t) =>
-      val b = bucketOf(query, w)
+      val b = graft.expr.VecKernels.lshBucket(query, w, bucketLength)
       col("hashes").getItem(t).between(b - radius, b + radius)
     }.reduce(_ || _)
     hashed.where(pred)
   }
 
-  /** BULK ANN through the LSH tables as ONE distributed plan — the batch
-    * analog of [[search]] (whose bucket predicate is driver-built per
-    * query; a loop over it is N Spark jobs). Both sides land on the same
-    * narrow (table, bucket) key: queries hash with the SAME plane literals
-    * and explode to one row per (query, table, probe offset) —
-    * |Q| × tables × (2r+1) rows — while the corpus side explodes `hashed`
-    * to (id, table, bucket) once. One equi-join yields candidates,
-    * distinct (qid, id) pairs re-rank exactly via bounded per-query heaps.
-    * `exact = true` widens the radius to the provable-superset bound over
-    * the WHOLE batch (max corpus norm + max query norm), making the result
-    * bit-equal to the exact batch scan — the oracle-gated configuration.
-    *
-    * `broadcastQueries` (r5 VERDICT #3; [[IVFIndex.searchBatch]] is the
-    * template): `true` broadcasts the probe and query frames — the right
-    * shape for bounded query batches (the corpus is never shuffled).
-    * `false` is the corpus-scale arm — a corpus-as-batch "query" side
-    * (the [[knnGraph]] shape) is |corpus| × tables × (2r+1) probe rows,
-    * which must never broadcast; both joins become shuffles on their keys
-    * ((table, bucket), then qid), still touching only in-bucket
-    * candidates. Arm equality is spec-pinned in LSHSpec.
-    * Output contract matches [[ExactKNN.topKBatch]]: (qid, id, score). */
+  /** BULK ANN through the LSH tables in one pass of the fused
+    * [[graft.plans.KnnTopK]] operator — the batch analog of [[search]]
+    * (whose bucket predicate is driver-built per query; a loop over it is
+    * N Spark jobs). Each task hashes every query once with the same
+    * planes; a (row, query) pair is re-ranked exactly only when the row
+    * falls within the probe radius of the query's bucket in some table,
+    * and one bounded heap per query keeps the top k. The corpus is never
+    * exploded, joined or shuffled. `exact = true` widens the radius to the
+    * provable-superset bound over the WHOLE batch (max corpus norm + max
+    * query norm), making the result bit-equal to the exact batch scan —
+    * the oracle-gated configuration. Output contract matches
+    * [[ExactKNN.topKBatch]]: (qid, id, score). */
   def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
                   k: Int, probeRadius: Int = 0, exact: Boolean = false,
-                  metric: ExactKNN.Metric = ExactKNN.L2Sq,
-                  broadcastQueries: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast => bcast}
+                  metric: ExactKNN.Metric = ExactKNN.L2Sq): DataFrame = {
     val q = queries.select(col(qidCol).as("qid"),
       col(qvecCol).cast("array<double>").as("__qv"))
-    val r =
-      if (!exact) probeRadius
-      else {
-        val mq = q.select(max(sqrt(graft.expr.VectorExpr.dot(col("__qv"), col("__qv")))))
-          .head().getDouble(0)
-        math.ceil((maxNorm + mq) / bucketLength).toInt
-      }
-    val scored =
-      if (broadcastQueries) {
-        // Round 18 (guide §2.4 "remove shuffles outright"): the bounded-
-        // batch arm used to EXPLODE the corpus to (id, table, bucket) rows,
-        // equi-join the exploded probe grid, DISTINCT the (qid, id) pairs
-        // (one Exchange), then join the vectors back and the queries back —
-        // four joins/exchanges to evaluate what is, per (row, query) pair,
-        // a 4-term bucket-range predicate. Each query row now carries its
-        // bucket array; ONE cross join against the broadcast frame filters
-        // on ∃ table t: |hash_t − qb_t| ≤ r directly (plain getItem/between
-        // conjuncts — codegen, no HOF lambda), yielding each surviving
-        // (qid, id) pair exactly once, vector already in hand. Candidate
-        // set and scores are bit-identical to the explode+join+distinct
-        // form — same predicate, same metric expression. The corpus is
-        // never exploded, never shuffled, never re-joined.
-        val qb = q.withColumn("__qb", array(hyperplanes.map { w =>
-          floor(graft.expr.VectorExpr.dot(col("__qv"),
-            graft.functions.VectorFunctions.vecLit(w)) / bucketLength).cast("int")
-        }: _*))
-        val inSomeBucket = hyperplanes.indices.map { t =>
-          col("hashes").getItem(t).between(
-            col("__qb").getItem(t) - r, col("__qb").getItem(t) + r)
-        }.reduce(_ || _)
-        hashed.crossJoin(bcast(qb))
-          .where(inSomeBucket)
-          .select(col("qid"), col("id"),
-            metric.score(metric.dist(col("vector"), col("__qv"))).as("score"))
-      } else {
-        // corpus-scale arm (corpus-as-batch "queries", e.g. [[knnGraph]]):
-        // a cross join is |corpus|² — keep the exploded (table, bucket)
-        // equi-join shape, where both sides shuffle on narrow keys and only
-        // in-bucket pairs materialize.
-        val qBuckets = hyperplanes.zipWithIndex.map { case (w, t) =>
-          struct(lit(t).as("table"),
-            floor(graft.expr.VectorExpr.dot(col("__qv"),
-              graft.functions.VectorFunctions.vecLit(w)) / bucketLength).cast("int").as("b"))
-        }
-        val probes = q
-          .select(col("qid"), col("__qv"), explode(array(qBuckets: _*)).as("tb"))
-          .select(col("qid"), col("__qv"), col("tb.table").as("table"),
-            explode(sequence(col("tb.b") - r, col("tb.b") + r)).as("bucket"))
-        val corpus = hashed.select(col("id"), posexplode(col("hashes")).as(Seq("table", "bucket")))
-        val cand = corpus.join(probes.select(col("qid"), col("table"), col("bucket")),
-            Seq("table", "bucket"))
-          .select(col("qid"), col("id")).distinct()
-        cand
-          .join(hashed.select(col("id"), col("vector")), Seq("id"))
-          .join(q, Seq("qid"))
-          .select(col("qid"), col("id"),
-            metric.score(metric.dist(col("vector"), col("__qv"))).as("score"))
-      }
-    graft.plans.TopK.perKey(scored, Seq("qid"), Seq("score" -> true, "id" -> false), k)
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
+    graft.plans.KnnTopK(hashed.select(col("id"), col("vector"), col("hashes")),
+      q.select(col("qid"), col("__qv").as("qv")), k,
+      graft.plans.KnnScorer.LshBuckets(hyperplanes, bucketLength,
+        batchRadius(q, probeRadius, exact), metric))
   }
 
-  /** k-NN GRAPH through the LSH tables — the corpus-as-batch composition
-    * over [[searchBatch]]'s shuffle arm, mirroring [[IVFIndex.knnGraph]]:
-    * k+1 absorbs the guaranteed self-hit, a bounded re-cut drops it.
+  /** The probe radius for a (qid, __qv) batch: `probeRadius`, or with
+    * `exact` the provable-superset radius over the batch's max norm (a
+    * batch without a non-null vector has nothing to widen for). */
+  private def batchRadius(q: DataFrame, probeRadius: Int, exact: Boolean): Int =
+    if (!exact) probeRadius
+    else {
+      val mq = q.select(max(sqrt(graft.expr.VectorExpr.dot(col("__qv"), col("__qv"))))).head()
+      if (mq.isNullAt(0)) probeRadius
+      else math.ceil((maxNorm + mq.getDouble(0)) / bucketLength).toInt
+    }
+
+  /** k-NN GRAPH through the LSH tables — the corpus-as-batch composition,
+    * mirroring [[IVFIndex.knnGraph]]: k+1 absorbs the guaranteed self-hit,
+    * a bounded re-cut drops it. A corpus-sized query side must never
+    * broadcast, so both sides explode to (table, bucket) rows — queries
+    * |Q| × tables × (2r+1), the corpus once — and meet on one shuffled
+    * equi-join; the distinct (qid, id) candidates re-rank exactly via
+    * bounded per-query heaps. Only in-bucket pairs ever materialize.
     * `exact = true` (the oracle-gated configuration) probes the
     * provable-superset radius, so the graph is bit-equal to the exact
     * k-NN graph; a tuned `probeRadius` is the at-scale path, approximate
@@ -182,9 +124,27 @@ final class LSHIndex(val hyperplanes: Array[Array[Double]],
                metric: ExactKNN.Metric = ExactKNN.L2Sq,
                nodesFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val src = nodesFilter.map(emb.where).getOrElse(emb)
-    val res = searchBatch(
-      src.select(col(idCol).as("qid"), col(vecCol).as("qv")),
-      "qid", "qv", k + 1, probeRadius, exact, metric, broadcastQueries = false)
+    val q = src.select(col(idCol).as("qid"), col(vecCol).cast("array<double>").as("__qv"))
+    val r = batchRadius(q, probeRadius, exact)
+    val qBuckets = hyperplanes.zipWithIndex.map { case (w, t) =>
+      struct(lit(t).as("table"),
+        floor(graft.expr.VectorExpr.dot(col("__qv"),
+          graft.functions.VectorFunctions.vecLit(w)) / bucketLength).cast("int").as("b"))
+    }
+    val probes = q
+      .select(col("qid"), col("__qv"), explode(array(qBuckets: _*)).as("tb"))
+      .select(col("qid"), col("__qv"), col("tb.table").as("table"),
+        explode(sequence(col("tb.b") - r, col("tb.b") + r)).as("bucket"))
+    val corpus = hashed.select(col("id"), posexplode(col("hashes")).as(Seq("table", "bucket")))
+    val scored = corpus.join(probes.select(col("qid"), col("table"), col("bucket")),
+        Seq("table", "bucket"))
+      .select(col("qid"), col("id")).distinct()
+      .join(hashed.select(col("id"), col("vector")), Seq("id"))
+      .join(q, Seq("qid"))
+      .select(col("qid"), col("id"),
+        metric.score(metric.dist(col("vector"), col("__qv"))).as("score"))
+    val res = graft.plans.TopK.perKey(scored, Seq("qid"), Seq("score" -> true, "id" -> false), k + 1)
+      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
     graft.plans.TopK.perKey(res.where(col("qid") =!= col("id")),
         Seq("qid"), Seq("score" -> true, "id" -> false), k)
       .orderBy(col("qid").asc, col("score").desc, col("id").asc)

@@ -62,96 +62,25 @@ final class PQIndex(val codes: DataFrame,
   }
 
   /** ADC distance tables for `query`: m × 256 squared sub-distances. */
-  def adcTables(query: Array[Double]): Array[Array[Double]] =
-    Array.tabulate(m) { s =>
-      val off = s * subDim
-      codebooks(s).map { c =>
-        var d = 0.0; var i = 0
-        while (i < subDim) { val x = query(off + i) - c(i); d += x * x; i += 1 }
-        d
-      }
-    }
-
-  /** BULK ADC: N queries against the compressed corpus as ONE distributed
-    * plan — the batch analog of [[search]] (whose m × 256 distance table
-    * is driver-built per query). The per-query tables become a FRAME:
-    * queries × the broadcast (s, code, centroid) codebook rows
-    * (|Q| × m × 256 narrow rows), the codes frame explodes once to
-    * (id, s, code), and one equi-join on (s, code) + a map-side-combined
-    * groupBy(qid, id) sum IS the asymmetric distance computation —
-    * N × m × |Q| tiny rows, the standard relational ADC formulation.
-    * Bounded per-query heaps cut to k. Output: (qid, id, score),
-    * score = 1/(1+dist), same contract as [[ExactKNN.topKBatch]].
-    * `among` restricts scoring to a PER-QUERY candidate pair frame
-    * (first column qid, second id) — the batch analog of [[search]]'s
-    * id-set restriction, used by the facade's ivfpq batch path so the
-    * batch probe set matches the single-query IVF restriction
-    * (r9 ADVICE #1). The restriction applies BEFORE the ADC join: only
-    * candidate (qid, id) pairs reach the groupBy sum. */
-  def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
-                  k: Int, among: Option[DataFrame] = None,
-                  broadcastQueries: Boolean = true): DataFrame = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val q = queries.select(col(qidCol).as("qid"),
-      col(qvecCol).cast("array<double>").as("__qv"))
-    lazy val qd = {
-      val cb = codebooks.zipWithIndex.flatMap { case (book, s) =>
-        book.zipWithIndex.map { case (c, code) => (s, code, c.toSeq) }
-      }.toSeq.toDF("s", "code", "centroid")
-      q.crossJoin(broadcast(cb))
-        .select(col("qid"), col("s"), col("code"),
-          graft.expr.VectorExpr.squaredL2(
-            slice(col("__qv"), col("s") * subDim + 1, lit(subDim)),
-            col("centroid")).as("d2"))
-    }
-    // `broadcastQueries = true` (the bounded-batch default, matching
-    // IVFIndex/LSHIndex.searchBatch): each broadcast query row CARRIES its
-    // flat ADC table (round 18, VERDICT #7 — the closure-table kernel
-    // extended to query frames), so the distance is one codegen'd O(m)
-    // lookup fold per (row, query) pair: no codes explode, no (s, code)
-    // join, no groupBy re-key of N × m rows — the three Exchanges the
-    // relational ADC paid vanish. Fixed ascending-s fold replaces the
-    // shuffle-merge sum (the exactBounds determinism argument).
-    // `false` is the corpus-scale-batch arm and keeps the relational
-    // explode + shuffle-hash join, where a cross join would be |corpus|².
-    val qdSide = (df: DataFrame) =>
-      if (broadcastQueries) broadcast(df) else df.hint("shuffle_hash")
+  def adcTables(query: Array[Double]): Array[Array[Double]] = {
     val kk = codebooks.map(_.length).max
-    val dist = among match {
-      case Some(cand) =>
-        val pairs = cand.select(col(cand.columns(0)).cast("long").as("qid"),
-          col(cand.columns(1)).cast("long").as("id"))
-        // restrict BEFORE the explode: semi-join the un-exploded codes
-        // frame (one row per id) against the candidate ids, so the m-way
-        // fan-out and its shuffle touch only candidate rows — with a 10%
-        // probe the explode stage shrinks 10× (round-10 review)
-        val restricted = codes
-          .join(pairs.select(col("id")).distinct().hint("shuffle_hash"),
-            Seq("id"), "left_semi")
-          .select(col("id"), (posexplode(col("codes"))).as(Seq("s", "code")))
-        restricted.join(pairs.hint("shuffle_hash"), Seq("id"))
-          .join(qdSide(qd), Seq("qid", "s", "code"))
-          .groupBy(col("qid"), col("id"))
-          .agg(sum(col("d2")).as("dist"))
-      case None if broadcastQueries =>
-        val qt = q.withColumn("__adc",
-          graft.expr.VectorExpr.adcFlatTables(col("__qv"), Array.empty, codebooks))
-        codes.crossJoin(broadcast(qt))
-          .select(col("qid"), col("id"),
-            graft.expr.VectorExpr.adcLookupSum(
-              col("codes").cast("array<int>"), lit(0), col("__adc"), m, kk).as("dist"))
-      case None =>
-        codes.select(col("id"), (posexplode(col("codes"))).as(Seq("s", "code")))
-          .join(qdSide(qd), Seq("s", "code"))
-          .groupBy(col("qid"), col("id"))
-          .agg(sum(col("d2")).as("dist"))
-    }
-    graft.plans.TopK.perKey(
-      dist.select(col("qid"), col("id"), (lit(1.0) / (lit(1.0) + col("dist"))).as("score")),
-      Seq("qid"), Seq("score" -> true, "id" -> false), k)
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
+    val flat = new Array[Double](m * kk)
+    graft.expr.VecKernels.adcTable(query, new Array[Double](dim), codebooks, subDim, kk, flat, 0)
+    Array.tabulate(m)(s => flat.slice(s * kk, s * kk + codebooks(s).length))
   }
+
+  /** BULK ADC: N queries against the compressed corpus in one pass of the
+    * fused [[graft.plans.KnnTopK]] operator — the batch analog of
+    * [[search]]. Each task builds every query's m × 256 distance table
+    * once; a row's distance is its m table lookups summed in ascending
+    * subspace order, so no (row, query) pair is materialized. A code
+    * outside its codebook fails with a named error. Output: (qid, id,
+    * score), score = 1/(1+dist), same contract as [[ExactKNN.topKBatch]]. */
+  def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String, k: Int): DataFrame =
+    graft.plans.KnnTopK(
+      codes.select(col("id"), col("codes").cast("array<int>").as("codes")),
+      queries.select(col(qidCol).as("qid"), col(qvecCol).cast("array<double>").as("qv")),
+      k, graft.plans.KnnScorer.Adc(codebooks, Array.empty, nprobe = 1))
 
   /** Per-(subspace, code) quantization-CELL RADIUS: max over assigned rows
     * of ‖x_s − c_{s,code}‖, computed in ONE distributed pass (codes ⋈

@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,13 +19,11 @@ import org.apache.spark.storage.StorageLevel
   * distance to the full reconstruction, so √d̂ ± err brackets ‖q − x‖ by
   * the triangle inequality) — a provable candidate superset from a
   * codes-only pass, float-reranked. Every rung computes d̂ as one per-row
-  * fold over a flat ADC table ([[flatAdc]]'s layout): the exact rung and
-  * the single-query [[search]] ship it in a task closure; the
-  * broadcast-batch [[searchBatch]] arm carries it per query row via the
-  * AdcFlatTables expression with the probed-cluster restriction as an
-  * array_contains filter (round 18, VERDICT #7). Only the
-  * corpus-scale-batch arm (broadcastQueries = false) keeps the relational
-  * (cluster, s, code) join, where a cross join would be |corpus| × |Q|.
+  * fold over flat ADC tables built by [[graft.expr.VecKernels.adcTable]]:
+  * the exact rung and the single-query [[search]] ship [[flatAdc]] in a
+  * task closure; [[searchBatch]] runs the fused
+  * [[graft.plans.KnnTopK]] operator, which builds each query's tables
+  * once per task for its probed cells only.
   *
   * Scope: build + exact search + incremental [[append]] + [[ResidualPQ.save]]/
   * [[ResidualPQ.load]] persistence + diagnostics — the full lifecycle
@@ -79,22 +77,16 @@ final class ResidualPQ(val codes: DataFrame, // (id, cluster, codes, err)
     * doubles) and shipped in a task closure — shared by the exact rung's
     * bounds and (round 18, VERDICT #7) the approximate ADC [[search]]. */
   private def flatAdc(query: Array[Double]): Array[Double] = {
-    require(centroids.nonEmpty,
-      "ResidualPQ has no coarse centroids — cannot build ADC tables")
+    requireCoarse()
     val kk = codebooks.map(_.length).max
-    val maxCluster = centroids.map(_._1).max
-    val flat = new Array[Double]((maxCluster + 1) * m * kk)
-    for ((c, cen) <- centroids; s <- 0 until m; (book, j) <- codebooks(s).zipWithIndex) {
-      var d = 0.0
-      var i = 0
-      while (i < subDim) {
-        val x = (query(s * subDim + i) - cen(s * subDim + i)) - book(i)
-        d += x * x; i += 1
-      }
-      flat(c * m * kk + s * kk + j) = d
-    }
+    val flat = new Array[Double]((centroids.map(_._1).max + 1) * m * kk)
+    for ((c, cen) <- centroids)
+      graft.expr.VecKernels.adcTable(query, cen, codebooks, subDim, kk, flat, c * m * kk)
     flat
   }
+
+  private def requireCoarse(): Unit = require(centroids.nonEmpty,
+    "ResidualPQ has no coarse centroids — cannot build ADC tables")
 
   /** FAISS `IndexIVFPQ`'s actual QUERY path (round 11 — the approximate
     * ADC rung beside [[searchExact]]'s exact one): the `nprobe` coarse
@@ -161,105 +153,39 @@ final class ResidualPQ(val codes: DataFrame, // (id, cluster, codes, err)
       .limit(k)
   }
 
-  /** BULK residual ADC: N queries against the compressed corpus as ONE
-    * distributed plan (round 11 — [[PQIndex.searchBatch]]'s residual
-    * analog, completing the family's batch matrix). Fully relational, no
-    * driver loop: per-query coarse probing is queries × the broadcast
-    * centroid table cut to `nprobe` by a bounded per-key heap; the
-    * per-(query, cluster) ADC tables are a FRAME — probed (qid, cluster)
-    * pairs × the broadcast (cluster, s, code, cen_s, book) grid, d̂
-    * partials as one codegen'd expression — and the codes explode streams
-    * through the broadcast table join into a map-side-combined
-    * groupBy(qid, id) sum. The probed restriction rides the equi-join
-    * keys: un-probed (qid, cluster) pairs simply have no table rows.
-    * Output contract = [[PQIndex.searchBatch]]: (qid, id, score),
-    * (score desc, id asc) per qid. Qids must identify ONE query each —
-    * a repeated qid would double every d̂ partial through the table join
-    * (round-11 review), and collapsing duplicates has no defined winner
-    * in a distributed plan (round-12 ADVICE: the old `dropDuplicates`
-    * was a nondeterministic pick). Uniqueness is ASSERTED inside the
-    * plan (a window count + assert_true filter predicate, so column
-    * pruning cannot elide it and no extra driver job runs): duplicate
-    * qids fail the query with a named error. */
+  /** BULK residual ADC: N queries against the compressed corpus in one
+    * pass of the fused [[graft.plans.KnnTopK]] operator — the batch analog
+    * of [[search]], with the same probe sets (each query's `nprobe`
+    * nearest centroids, ties by cluster id) and the same fixed
+    * ascending-s fold. Each task inverts the probe sets into cell →
+    * queries and builds a query's ADC tables once, only for its probed
+    * cells; a row is scored only against the queries probing its cell.
+    * Only (qid, qv) is broadcast, never a table. A code outside its
+    * codebook, or an index without coarse centroids, fails with a named
+    * error. Output contract = [[PQIndex.searchBatch]]: (qid, id, score),
+    * (score desc, id asc) per qid. Qids must identify ONE query each: a
+    * repeated qid would merge two queries' heaps, and collapsing
+    * duplicates has no defined winner in a distributed plan (round-12
+    * ADVICE: the old `dropDuplicates` was a nondeterministic pick).
+    * Uniqueness is ASSERTED inside the plan (a window count +
+    * assert_true filter predicate, so column pruning cannot elide it and
+    * no extra driver job runs): duplicate qids fail the query with a
+    * named error. */
   def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
-                  k: Int, nprobe: Int = 4,
-                  broadcastQueries: Boolean = true): DataFrame = {
+                  k: Int, nprobe: Int = 4): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
-    val spark = codes.sparkSession
-    import spark.implicits._
+    requireCoarse()
     val q = queries.select(col(qidCol).as("qid"),
-      col(qvecCol).cast("array<double>").as("__qv"))
+      col(qvecCol).cast("array<double>").as("qv"))
       .withColumn("__nq", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))))
       .where(assert_true(col("__nq") === 1,
         concat(lit("duplicate qid in ResidualPQ.searchBatch: "),
           col("qid").cast("string"))).isNull)
-      .drop("__nq")
-    val dist =
-      if (broadcastQueries) {
-        // Round 18 (VERDICT #7): each broadcast query row carries its
-        // probed-cluster set AND its flat ADC table (the [[flatAdc]]
-        // layout, built by the AdcFlatTables expression — same arithmetic,
-        // same order), so the per-(row, query) distance is one codegen'd
-        // O(m) lookup fold behind an array_contains(probed, cluster)
-        // filter. The old shape exploded the codes m-fold, joined a
-        // per-(query, cluster) table frame and re-keyed through a
-        // groupBy(qid, id) Exchange; the probed restriction now rides the
-        // filter instead of the join keys. Probed SET selection is the
-        // same (cd2 asc, cluster asc) total order as the TopKPerKey rank
-        // it replaces.
-        val kk = codebooks.map(_.length).max
-        val cenDense = {
-          val a = new Array[Array[Double]](centroids.map(_._1).max + 1)
-          for ((c, v) <- centroids) a(c) = v
-          a
-        }
-        val qt = q
-          .withColumn("__probed",
-            graft.expr.VectorExpr.nearestClusters(col("__qv"), centroids, nprobe))
-          .withColumn("__adc",
-            graft.expr.VectorExpr.adcFlatTables(col("__qv"), cenDense, codebooks))
-        codes.crossJoin(broadcast(qt))
-          .where(array_contains(col("__probed"), col("cluster").cast("int")))
-          .select(col("qid"), col("id"),
-            graft.expr.VectorExpr.adcLookupSum(col("codes").cast("array<int>"),
-              col("cluster").cast("int"), col("__adc"), m, kk).as("dist"))
-      } else {
-        // corpus-scale-batch arm: a cross join is |corpus| × |Q| — keep the
-        // relational ADC (probed pairs + table grid on the join keys,
-        // shuffle-hash), where only probed (cluster, s, code) rows meet.
-        val cenDF = centroids.toSeq.map { case (c, cen) => (c, cen.toSeq) }
-          .toDF("cluster", "cen")
-        val probed = graft.plans.TopK.perKey(
-          q.crossJoin(broadcast(cenDF))
-            .select(col("qid"), col("cluster"),
-              graft.expr.VectorExpr.squaredL2(col("__qv"), col("cen")).as("cd2")),
-          Seq("qid"), Seq("cd2" -> false, "cluster" -> false), nprobe)
-          .select(col("qid"), col("cluster"))
-        val grid = (for {
-          (c, cen) <- centroids.toSeq
-          s <- 0 until m
-          (bk, j) <- codebooks(s).zipWithIndex
-        } yield (c, s, j, cen.slice(s * subDim, (s + 1) * subDim).toSeq, bk.toSeq))
-          .toDF("cluster", "s", "code", "cen_s", "bk")
-        val qd = q.join(probed, Seq("qid"))
-          .join(broadcast(grid), Seq("cluster"))
-          .select(col("qid"), col("cluster"), col("s"), col("code"),
-            graft.expr.VectorExpr.squaredL2(
-              zip_with(slice(col("__qv"), col("s") * subDim + 1, lit(subDim)),
-                col("cen_s"), (a, b) => a - b),
-              col("bk")).as("d2"))
-        codes
-          .select(col("id"), col("cluster"), posexplode(col("codes")).as(Seq("s", "code")))
-          .join(qd.hint("shuffle_hash"), Seq("cluster", "s", "code"))
-          .groupBy(col("qid"), col("id"))
-          .agg(sum(col("d2")).as("dist"))
-      }
-    graft.plans.TopK.perKey(
-      dist.select(col("qid"), col("id"),
-        (lit(1.0) / (lit(1.0) + col("dist"))).as("score")),
-      Seq("qid"), Seq("score" -> true, "id" -> false), k)
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
+    graft.plans.KnnTopK(
+      codes.select(col("id"), col("codes").cast("array<int>").as("codes"),
+        col("cluster").cast("int").as("cluster")),
+      q, k, graft.plans.KnnScorer.Adc(codebooks, centroids, nprobe))
   }
 
   /** EXACT top-k through the residual codes: pass 1 joins the exploded

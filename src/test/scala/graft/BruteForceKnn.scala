@@ -39,6 +39,28 @@ object BruteForceKnn {
       }
   }
 
+  /** Plain or residual PQ by asymmetric distance. A row's vector slot
+    * carries (cell, code_0, …, code_{m−1}); per subspace s the query minus
+    * the cell's centroid (a zero centroid when `centroids` has no entry)
+    * is compared with codebook entry code_s, and the m sub-distances add
+    * up in ascending s. Score 1/(1+d). */
+  final case class Adc(codebooks: Array[Array[Array[Double]]], centroids: Map[Int, Vec]) extends Metric {
+    def score(x: Vec, q: Vec): java.lang.Double =
+      if (x == null || q == null) null
+      else {
+        val sub = codebooks.head.head.length
+        val cen = centroids.getOrElse(x(0).toInt, new Array[Double](q.length))
+        var d = 0.0
+        for (s <- codebooks.indices) {
+          val b = codebooks(s)(x(s + 1).toInt)
+          var e = 0.0
+          for (i <- 0 until sub) { val y = (q(s * sub + i) - cen(s * sub + i)) - b(i); e += y * y }
+          d += e
+        }
+        1.0 / (1.0 + d)
+      }
+  }
+
   /** (id, vector) pairs of a frame with a float or double array column. */
   def rows(df: DataFrame, idCol: String, vecCol: String): Seq[(Long, Vec)] =
     df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")).collect().toSeq

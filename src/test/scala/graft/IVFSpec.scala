@@ -34,11 +34,6 @@ class IVFSpec extends AnyFunSuite {
     val viaIvf = index.searchBatch(queries, "qid", "qv", k = 5, nprobe = index.nlist)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(viaIvf == exact)
-    // non-broadcast (shuffle-on-cluster) arm: identical results
-    val shuffled = index.searchBatch(queries, "qid", "qv", k = 5,
-      nprobe = index.nlist, broadcastQueries = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(shuffled == exact)
   }
 
   test("searchBatch: narrow probe keeps per-query results inside the probed clusters") {
@@ -159,54 +154,40 @@ class IVFSpec extends AnyFunSuite {
   }
 
   test("autoSaltBuckets: derived once per index; salted auto path bit-identical to unsalted") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val s = index.autoSaltBuckets
     assert(s >= 1 && s <= spark.sparkContext.defaultParallelism)
-    val queries = emb.where(col("vec_id").isin(5L, 23L))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val unsalted = index.searchBatch(queries, "qid", "qv", k = 7, nprobe = 4,
-        saltBuckets = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val auto = index.searchBatch(queries, "qid", "qv", k = 7, nprobe = 4,
-        saltBuckets = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(auto == unsalted)
-  }
-
-  test("saltForBlocks: batch-aware rule — corpus special case, batch skew, no-hot-cell batch (r14 VERDICT #6)") {
-    // corpus-as-batch special case: q_c = |c| reproduces saltForHistogram
-    val counts = Array(50000L) ++ Array.fill(49)(1020L)
-    assert(IVFIndex.saltForBlocks(counts.map(c => (c, c)), 32) ==
-      IVFIndex.saltForHistogram(counts, 32))
-    // a batch probing ONLY cold cells (uniformly, >= P of them) on a
-    // skewed corpus pays no salt
-    val cold = Array.fill(32)((10L, 1000L))
-    assert(IVFIndex.saltForBlocks(cold, 32) == 1)
-    // a batch concentrated on the corpus's hot cell splits
-    val hot = Array((1000L, 50000L)) ++ Array.fill(31)((10L, 1000L))
-    val s = IVFIndex.saltForBlocks(hot, 32)
-    assert(s >= 24 && s <= 32, s"expected near-cap salt, got $s")
-    // degenerate
-    assert(IVFIndex.saltForBlocks(Array.empty[(Long, Long)], 32) == 1)
-    assert(IVFIndex.saltForBlocks(Array((5L, 5L)), 32) == 1)
-  }
-
-  test("searchBatch saltBuckets = -1: batch-derived salt is bit-identical to unsalted") {
-    import org.apache.spark.sql.functions.col
-    val queries = emb.where(col("vec_id").isin(5L, 23L, 41L))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val unsalted = index.searchBatch(queries, "qid", "qv", k = 7, nprobe = 4,
-        saltBuckets = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val batchDerived = index.searchBatch(queries, "qid", "qv", k = 7, nprobe = 4,
-        saltBuckets = -1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(batchDerived == unsalted)
-    // shuffle arm too (the corpus-as-batch caller shape)
-    val shuffled = index.searchBatch(queries, "qid", "qv", k = 7, nprobe = 4,
-        broadcastQueries = false, saltBuckets = -1)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(shuffled == unsalted)
+    assert(index.autoSaltBuckets == s)
+    // The salted auto path is knnGraph's join; its unsalted answer is the
+    // brute force over the probed cells, compared bit for bit.
+    // 8 cells 10 apart on the first axis; cell 0 holds 100 of the 170
+    // rows, so its |c|^2 pair block dominates and the join must salt.
+    // Half-integer jitter keeps coordinates exact in float and plants ties.
+    val rnd = new scala.util.Random(3)
+    val cents = Array.tabulate(8)(c => (c, Array(c * 10.0, 0.0, 0.0, 0.0)))
+    val rows = (0 until 170).map { i =>
+      val c = if (i < 100) 0 else 1 + (i - 100) % 7
+      (i.toLong, c, Array.tabulate(4)(d => (if (d == 0) c * 10.0 else 0.0) + (rnd.nextInt(7) - 3) * 0.5))
+    }
+    val schema = StructType(Seq(StructField("id", LongType), StructField("vector", ArrayType(FloatType)),
+      StructField("cluster", IntegerType)))
+    val frame = spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (id, c, v) =>
+      Row(id, v.map(_.toFloat).toSeq, c) }, 3), schema)
+    val skewed = new IVFIndex(cents, frame, cents.length)
+    assert(skewed.autoSaltBuckets > 1 &&
+      skewed.autoSaltBuckets <= spark.sparkContext.defaultParallelism, skewed.autoSaltBuckets)
+    val nprobe = 2
+    def probed(q: Array[Double]): Set[Int] = cents.toSeq.map { case (c, cen) =>
+      (q.indices.map(i => (q(i) - cen(i)) * (q(i) - cen(i))).foldLeft(0.0)(_ + _), c)
+    }.sorted.take(nprobe).map(_._2).toSet
+    val cell = rows.map { case (id, c, _) => id -> c }.toMap
+    val vecs = rows.map { case (id, _, v) => (id, v) }
+    val want = BruteForceKnn.topK(vecs, vecs, 3, BruteForceKnn.L2Sq,
+      eligible = (qid, q, id) => qid != id && probed(q).contains(cell(id)))
+    val got = BruteForceKnn.collect(
+      skewed.knnGraph(frame, "id", "vector", k = 3, nprobe = nprobe))
+    assert(BruteForceKnn.same(got, want), s"\n got: $got\nwant: $want")
   }
 
   test("open(): lazy on-disk probe does file-level partition pruning, same results as in-memory") {

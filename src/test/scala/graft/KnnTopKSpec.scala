@@ -1,18 +1,19 @@
 package graft
 
 import graft.plans.KnnTopKExec
-import graft.vector.{ExactKNN, IVFIndex, SQIndex}
+import graft.vector.{ExactKNN, IVFIndex, LSHIndex, PQIndex, ResidualPQ, SQIndex}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused batch-KNN operator ([[graft.plans.KnnTopK]]) behind the exact,
-  * SQ8 and IVF batch paths, against the driver-side [[BruteForceKnn]]:
+  * SQ8, IVF, PQ, residual-PQ and LSH batch paths, against the driver-side
+  * [[BruteForceKnn]]:
   * bit-identical results over planted ties, duplicate and null vectors,
   * k > N and |Q| = 1, at every corpus partition count and shuffle width;
   * the plan shape; the exec's metrics; the empty cases. */
@@ -126,8 +127,8 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** The probe set recomputed on the driver: nprobe nearest centroids by
     * squared L2, ties by cluster id. */
-  private def probe(index: IVFIndex, q: Array[Double], nprobe: Int): Set[Int] =
-    index.centroids.toSeq.map { case (c, cen) =>
+  private def probe(centroids: Array[(Int, Array[Double])], q: Array[Double], nprobe: Int): Set[Int] =
+    centroids.toSeq.map { case (c, cen) =>
       var d = 0.0
       for (i <- cen.indices) d += (q(i) - cen(i)) * (q(i) - cen(i))
       (d, c)
@@ -142,9 +143,73 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         val got = index.searchBatch(frame(qs, querySchema, 1), "qid", "qv", k, nprobe)
         check(s"ivf parts=$parts sp=$sp |Q|=$nq k=$k nprobe=$nprobe", got,
           BruteForceKnn.topK(rows, qs, k, BruteForceKnn.L2Sq,
-            eligible = (_, q, id) => probe(index, q, nprobe).contains(cell(id))))
+            eligible = (_, q, id) => probe(index.centroids, q, nprobe).contains(cell(id))))
       }
     }
+  }
+
+  private val codesSchema = StructType(Seq(StructField("id", LongType, nullable = false),
+    StructField("cluster", IntegerType, nullable = false),
+    StructField("codes", ArrayType(IntegerType, containsNull = false), nullable = false)))
+
+  /** (id, cell, codes) of a PQ codes frame; cell 0 without a cluster column. */
+  private def codeRows(codes: DataFrame): Seq[(Long, Int, Array[Int])] = {
+    val cell = if (codes.columns.contains("cluster")) codes("cluster") else org.apache.spark.sql.functions.lit(0)
+    codes.select(codes("id"), cell, codes("codes")).collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2).toArray))
+  }
+
+  private def codesFrame(rows: Seq[(Long, Int, Array[Int])], parts: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map { case (id, c, cs) =>
+      Row(id, c, cs.toSeq) }, parts), codesSchema)
+
+  /** The brute-force ADC encoding of code rows: (id, cell +: codes). */
+  private def adcRows(rows: Seq[(Long, Int, Array[Int])]): Seq[(Long, Array[Double])] =
+    rows.map { case (id, c, cs) => (id, (c +: cs.toSeq).map(_.toDouble).toArray) }
+
+  /** Some table puts row vector `x` within `r` buckets of `q`'s. */
+  private def inBucket(lsh: LSHIndex, r: Int, x: Array[Double], q: Array[Double]): Boolean =
+    x != null && lsh.hyperplanes.exists { w =>
+      def b(v: Array[Double]): Long = math.floor(
+        v.zip(w).map { case (a, c) => a * c }.foldLeft(0.0)(_ + _) / lsh.bucketLength).toLong
+      math.abs(b(x) - b(q)) <= r
+    }
+
+  test("property: PQ, residual PQ and LSH batch == brute force at partitions {1,3,7} x shuffle {1,7}") {
+    val rows = corpusRows(29, n)
+    val live = rows.filter(_._2 != null)
+    val vec = rows.toMap
+    val trainOn = frame(live, corpusSchema, 1)
+    val pq = PQIndex.build(trainOn, "id", "vector", dim, m = 3)
+    val ivf = IVFIndex.build(trainOn, "id", "vector", nlist = 5)
+    val rpq = ResidualPQ.build(ivf, dim, m = 3)
+    val (pqRows, rpqRows) = (codeRows(pq.codes), codeRows(rpq.codes))
+    val rpqCell = rpqRows.map { case (id, c, _) => id -> c }.toMap
+    for (sp <- Seq(1, 7); parts <- Seq(1, 3, 7)) withShufflePartitions(sp) {
+      val pqp = new PQIndex(codesFrame(pqRows, parts).drop("cluster"), pq.codebooks, dim)
+      val rpqp = new ResidualPQ(codesFrame(rpqRows, parts), rpq.centroids, rpq.codebooks, dim)
+      val lsh = LSHIndex.build(frame(rows, corpusSchema, parts), "id", "vector",
+        numHashTables = 3, bucketLength = 1.0)
+      try for (nq <- Seq(1, 4); k <- ks) {
+        val qs = queryRows(parts * 3 + k, nq, rows)
+        val q = frame(qs, querySchema, 1)
+        val at = s"parts=$parts sp=$sp |Q|=$nq k=$k"
+        check(s"pq $at", pqp.searchBatch(q, "qid", "qv", k),
+          BruteForceKnn.topK(adcRows(pqRows), qs, k, BruteForceKnn.Adc(pq.codebooks, Map.empty)))
+        for (nprobe <- Seq(1, 2, rpq.centroids.length))
+          check(s"residual pq nprobe=$nprobe $at", rpqp.searchBatch(q, "qid", "qv", k, nprobe),
+            BruteForceKnn.topK(adcRows(rpqRows), qs, k,
+              BruteForceKnn.Adc(rpq.codebooks, rpq.centroids.toMap),
+              eligible = (_, qv, id) => probe(rpq.centroids, qv, nprobe).contains(rpqCell(id))))
+        for (r <- Seq(0, 1))
+          check(s"lsh radius=$r $at", lsh.searchBatch(q, "qid", "qv", k, probeRadius = r),
+            BruteForceKnn.topK(rows, qs, k, BruteForceKnn.L2Sq,
+              eligible = (_, qv, id) => inBucket(lsh, r, vec(id), qv)))
+        check(s"lsh exact $at", lsh.searchBatch(q, "qid", "qv", k, exact = true),
+          BruteForceKnn.topK(live, qs, k, BruteForceKnn.L2Sq))
+      } finally lsh.dispose()
+    }
+    pq.dispose(); rpq.dispose(); ivf.dispose()
   }
 
   private def finalPlan(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
@@ -160,6 +225,15 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val (ivf, _) = ivfOver(rows, 3)
     val queries = frame(queryRows(5, 3, rows), querySchema, 1)
     (rows, corpus, sq, ivf, queries)
+  }
+
+  /** PQ, residual-PQ and LSH indexes over the fixture corpus. */
+  private lazy val compressed = {
+    val (_, corpus, _, _, _) = fixture
+    val live = corpus.where(org.apache.spark.sql.functions.col("vector").isNotNull)
+    val rpq = ResidualPQ.build(IVFIndex.build(live, "id", "vector", nlist = 5), dim, m = 3)
+    (PQIndex.build(live, "id", "vector", dim, m = 3), rpq, LSHIndex.build(corpus, "id", "vector",
+      numHashTables = 3, bucketLength = 1.0))
   }
 
   test("plan shape: exact, SQ8 and IVF batch run KnnTopK — no NLJ, no sort, no range exchange, one shuffle") {
@@ -179,6 +253,23 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("plan shape: PQ, residual PQ and LSH batch run KnnTopK — no cartesian, no corpus exchange") {
+    val (_, _, _, _, queries) = fixture
+    val (pq, rpq, lsh) = compressed
+    val plans = Seq(
+      "pq" -> pq.searchBatch(queries, "qid", "qv", 5),
+      "residual pq" -> rpq.searchBatch(queries, "qid", "qv", 5, nprobe = 2),
+      "lsh" -> lsh.searchBatch(queries, "qid", "qv", 5, probeRadius = 1))
+    for ((name, df) <- plans) {
+      val p = finalPlan(df)
+      val execs = collect(p) { case e: KnnTopKExec => e }
+      assert(execs.size == 1, s"$name:\n$p")
+      assert(collect(p) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty, s"$name:\n$p")
+      assert(collect(p) { case j: CartesianProductExec => j }.isEmpty, s"$name:\n$p")
+      assert(collect(execs.head.left) { case s: ShuffleExchangeExec => s }.isEmpty, s"$name:\n$p")
+    }
+  }
+
   test("metrics: pairs scored, pairs pruned by the SQ8 bound, pairs skipped by IVF cell") {
     val (rows, corpus, sq, ivf, queries) = fixture
     val total = rows.size.toLong * 3
@@ -187,26 +278,30 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
     val exact = knnExec(finalPlan(ExactKNN.topKBatch(corpus, "id", "vector", queries, "qid", "qv", 5)))
     assert(m(exact, "pairsScored") == total)
-    assert(m(exact, "sq8Pruned") == 0 && m(exact, "ivfSkipped") == 0)
+    assert(m(exact, "sq8Pruned") == 0 && m(exact, "probeSkipped") == 0)
 
     val s = knnExec(finalPlan(sq.searchBatch(queries, "qid", "qv", 5)))
     assert(m(s, "pairsScored") + m(s, "sq8Pruned") == live)
     assert(m(s, "sq8Pruned") > 0, s"the SQ8 bound pruned nothing: ${s.metrics}")
 
     val v = knnExec(finalPlan(ivf.searchBatch(queries, "qid", "qv", 5, nprobe = 2)))
-    assert(m(v, "pairsScored") + m(v, "ivfSkipped") == total)
-    assert(m(v, "ivfSkipped") > 0 && m(v, "pairsScored") > 0, v.metrics.toString)
+    assert(m(v, "pairsScored") + m(v, "probeSkipped") == total)
+    assert(m(v, "probeSkipped") > 0 && m(v, "pairsScored") > 0, v.metrics.toString)
   }
 
   test("k <= 0 gives an empty (qid, id, score) frame on every batch path, like the single-query topK") {
     val (rows, corpus, sq, ivf, queries) = fixture
+    val (pq, rpq, lsh) = compressed
     assert(ExactKNN.topK(corpus, "id", "vector", rows.head._2, 0).collect().isEmpty)
     for (k <- Seq(0, -1)) {
       val frames = Seq(
         ExactKNN.topKBatch(corpus, "id", "vector", queries, "qid", "qv", k),
         sq.searchBatch(queries, "qid", "qv", k),
         sq.searchBatchCosine(queries, "qid", "qv", k),
-        ivf.searchBatch(queries, "qid", "qv", k, nprobe = 2))
+        ivf.searchBatch(queries, "qid", "qv", k, nprobe = 2),
+        pq.searchBatch(queries, "qid", "qv", k),
+        rpq.searchBatch(queries, "qid", "qv", k, nprobe = 2),
+        lsh.searchBatch(queries, "qid", "qv", k, probeRadius = 1))
       frames.foreach { df =>
         assert(df.columns.toSeq == Seq("qid", "id", "score"))
         assert(df.collect().isEmpty, s"k=$k")
@@ -216,12 +311,16 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("an empty query frame or an empty corpus gives an empty (qid, id, score) frame") {
     val (_, corpus, sq, ivf, queries) = fixture
+    val (pq, rpq, lsh) = compressed
     val noQueries = queries.limit(0)
     val noRows = corpus.limit(0)
     val frames = Seq(
       ExactKNN.topKBatch(corpus, "id", "vector", noQueries, "qid", "qv", 5),
       sq.searchBatch(noQueries, "qid", "qv", 5),
       ivf.searchBatch(noQueries, "qid", "qv", 5, nprobe = 2),
+      pq.searchBatch(noQueries, "qid", "qv", 5),
+      rpq.searchBatch(noQueries, "qid", "qv", 5, nprobe = 2),
+      lsh.searchBatch(noQueries, "qid", "qv", 5, exact = true),
       ExactKNN.topKBatch(noRows, "id", "vector", queries, "qid", "qv", 5),
       SQIndex.build(noRows, "id", "vector").searchBatch(queries, "qid", "qv", 5))
     frames.foreach { df =>

@@ -62,23 +62,6 @@ class LSHSpec extends AnyFunSuite {
     }
   }
 
-  test("searchBatch arms agree: broadcastQueries=false ≡ true (r5 VERDICT #3)") {
-    import org.apache.spark.sql.functions.col
-    val queries = emb.where(col("vec_id").isin(3L, 21L, 77L, 140L))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    def rows(bq: Boolean) =
-      index.searchBatch(queries, "qid", "qv", k = 5, probeRadius = 1,
-          broadcastQueries = bq)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(rows(bq = false) == rows(bq = true))
-    // and in the exact configuration too (the knn_graph_lsh gate shape)
-    def exactRows(bq: Boolean) =
-      index.searchBatch(queries, "qid", "qv", k = 5, exact = true,
-          broadcastQueries = bq)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(exactRows(bq = false) == exactRows(bq = true))
-  }
-
   test("knnGraph over LSH (shuffle arm, exact radius) ≡ exact k-NN graph") {
     import org.apache.spark.sql.functions.col
     val nodes = Some(col("vec_id") < 60)

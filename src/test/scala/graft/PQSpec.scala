@@ -212,6 +212,23 @@ class PQSpec extends AnyFunSuite {
     assert(batch == single)
   }
 
+  test("searchBatch: a code outside its codebook fails with a named error") {
+    import org.apache.spark.sql.functions.{array, col, lit, when}
+    // row 42's first code points one past its codebook: unchecked, the
+    // lookup would read the next subspace's table and score it silently
+    val book = pq.codebooks.head.length
+    val corrupt = pq.codes.withColumn("codes", when(col("id") === 42L,
+      array((lit(book) +: Seq.fill(pq.m - 1)(lit(0))): _*)).otherwise(col("codes")))
+    val bad = new PQIndex(corrupt, pq.codebooks, pq.dim)
+    val queries = emb.where(col("vec_id") === 5L)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val e = intercept[Exception](bad.searchBatch(queries, "qid", "qv", k = 3).collect())
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: msgs(t.getCause)
+    assert(msgs(e).exists(_.contains(s"PQIndex codes row 42 has code $book outside the trained codebooks")),
+      s"expected the named error, got: ${msgs(e)}")
+  }
+
   test("anchor-codebook build: codes bounded by anchor count, deterministic") {
     import org.apache.spark.sql.functions.col
     val anchored = PQIndex.buildFromAnchors(emb, "vec_id", "embedding",

@@ -160,6 +160,28 @@ class ResidualPQSpec extends AnyFunSuite {
       s"expected the named assert, got: ${msgs(e)}")
   }
 
+  test("searchBatch: a bad code or a missing coarse quantizer fails with a named error") {
+    import org.apache.spark.sql.functions.{array, when}
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: msgs(t.getCause)
+    val queries = emb.where(col("vec_id") === 7L)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    // row 42's last code points one past its codebook: unchecked, the
+    // lookup would read the next cell's table and score it silently
+    val book = rpq.codebooks.last.length
+    val corrupt = rpq.codes.withColumn("codes", when(col("id") === 42L,
+      array((Seq.fill(rpq.m - 1)(lit(0)) :+ lit(book)): _*)).otherwise(col("codes")))
+    val bad = new ResidualPQ(corrupt, rpq.centroids, rpq.codebooks, rpq.dim)
+    // probe every cell so row 42 is scored
+    val e = intercept[Exception](
+      bad.searchBatch(queries, "qid", "qv", k = 3, nprobe = rpq.centroids.length).collect())
+    assert(msgs(e).exists(_.contains(s"ResidualPQ codes row 42 has code $book outside the trained codebooks")),
+      s"expected the named error, got: ${msgs(e)}")
+    val noCoarse = new ResidualPQ(rpq.codes, Array.empty, rpq.codebooks, rpq.dim)
+    val e2 = intercept[IllegalArgumentException](noCoarse.searchBatch(queries, "qid", "qv", k = 3))
+    assert(e2.getMessage.contains("ResidualPQ has no coarse centroids"), e2.getMessage)
+  }
+
   test("append: trained quantizer + codebooks reused (object identity), exact over the union") {
     val cut = 150L
     val head = emb.where(col("vec_id") < cut)
