@@ -40,8 +40,11 @@ object BM25CostProbe {
     for (batch <- Seq(50L, 250L, 1000L, n - baseN)) {
       val b = docs.where(col("doc_id") >= baseN && col("doc_id") < baseN + batch)
       // both constructors force their aggregates eagerly, so the bare call
-      // IS the maintenance cost: append materializes batch postings + the
-      // vocabulary merge; build re-tokenizes and re-shuffles the corpus
+      // IS the maintenance cost: append materializes the batch's forward
+      // rows + the vocabulary merge; build re-tokenizes and re-shuffles the
+      // corpus. After the first append the base's vocabulary frame is
+      // released, so later appends from the base recompute it from the
+      // (cached) base forward rows.
       val (inc, tInc) = timed(base.append(b, "doc_id", "text"))
       val (_, tFull) = timed {
         val ix = BM25.build(docs.where(col("doc_id") < baseN + batch), "doc_id", "text")
@@ -49,9 +52,9 @@ object BM25CostProbe {
       }
       val (_, tq) = timed(query(inc))
       println(f"[bm25cost] batch=$batch%5d  append = $tInc%5.2f s   full rebuild = $tFull%5.2f s   query-after-append = $tq%5.2f s")
-      // NOT inc.dispose(): the appended index owns the shared base's frames
-      // (chain dispose) and the next iteration reuses the base; the probe
-      // JVM exits right after, so the handful of delta frames just lapse.
+      // NOT inc.dispose(): the appended index owns the shared base's
+      // forward frame (chain dispose) and the next iteration reuses the
+      // base; the probe JVM exits right after, so the delta frames lapse.
       val _ = inc
     }
     spark.stop()

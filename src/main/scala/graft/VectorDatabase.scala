@@ -1,9 +1,11 @@
 package graft
 
 import graft.model.Manifest
+import graft.plans.{KnnScorer, KnnTopK, TopK}
 import graft.text.BM25
 import graft.vector.{AnnIndex, ExactKNN}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -13,7 +15,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * {{{ id LONG, doc STRING, vector ARRAY<FLOAT>, meta STRING (JSON) }}}
   *
-  * plus derived index frames (BM25 postings, IVF centroids/assignments, PQ
+  * plus derived index frames (BM25 forward rows, IVF centroids/assignments, PQ
   * codes) — an "index" here is data, not a live C++ object (SURVEY §1.3).
   *
   * Contracts preserved from the reference (SURVEY §2.5):
@@ -70,7 +72,7 @@ class VectorDatabase private (
 
   // ---- derived indexes: built lazily on first use, maintained
   // INCREMENTALLY on add (existing quantizers adopt the batch, a live
-  // BM25 index merges the batch's postings/df delta — see adoptBatch;
+  // BM25 index merges the batch's forward rows/df delta — see adoptBatch;
   // ≙ hnsw add_items ldb:78–80, improving on the reference's per-add
   // BM25 rebuild ldb:73–75 at equal results) ----
   private var bm25Var: Option[BM25.Index] = None
@@ -87,9 +89,8 @@ class VectorDatabase private (
     * Cleared on any append (the snapshot is save-time) — queryMetadata then
     * falls back to the in-memory canonical-JSON path, same results. */
   private var metaVarVar: Option[DataFrame] = None
-  // package-private so VectorDatabaseSpec can pin the probe arm's SPARSE
-  // scatter shape (row count ≪ N×|Q|, r9 VERDICT #1) — never mutated by tests
-  private[graft] var hybridCache: Option[DataFrame] = None
+  // the single-query hybridSearch's persisted (id, ts, vs) pass
+  private var hybridCache: Option[DataFrame] = None
 
   private def bm25: BM25.Index = bm25Var.getOrElse {
     val b = BM25.build(df, "id", "doc"); bm25Var = Some(b); b
@@ -122,7 +123,7 @@ class VectorDatabase private (
     * the same hyperplanes, PQ encodes with the trained codebooks — no
     * retraining, no re-scan of the already-indexed corpus; cost ∝ |batch|.
     * BM25 (r5 VERDICT #6 — previously the one remaining full-corpus scan
-    * on the ingest path): a live index merges the batch's postings and
+    * on the ingest path): a live index merges the batch's forward rows and
     * per-term df delta and recomputes the corpus scalars over the merged
     * vocabulary ([[graft.text.BM25.Index.append]]) — value-equal to the
     * reference's full rebuild (`_build_bm25_index` per add, ldb:73–75),
@@ -405,13 +406,16 @@ class VectorDatabase private (
     * `filter` (or scoring 0) are never returned (ldb:390–401). Mirrors the
     * reference's physical switch: exact true-L2 brute force at
     * N ≤ `exactThreshold` (default 1000, ldb:359), index probe with widened
-    * k = max(10·topK, 100) + zero-scatter above (ldb:361–374).
+    * k = max(10·topK, 100) + zero-scatter above (ldb:361–374). The text
+    * scores are the dense [[BM25.Index.score]] projection — the same fold
+    * the batch twin runs, so [[hybridSearchBatch]] ≡ this per query, bit
+    * for bit.
     *
     * The scored frame is computed ONCE: both max-normalizers come from a
     * single aggregate over a persisted (id, ts, vs) pass (r1 VERDICT #3 —
-    * the unpersisted formulation re-ran the BM25 join and the distance scan
-    * per max). The cached pass is retained for the final ranking and
-    * released on the next hybridSearch/add. */
+    * the unpersisted formulation re-ran the text projection and the
+    * distance scan per max). The cached pass is retained for the final
+    * ranking and released on the next hybridSearch/add. */
   def hybridSearch(queryText: String, queryVector: Array[Float], topK: Int = 5,
                    vectorWeight: Double = 0.5,
                    filter: Option[Column] = None,
@@ -449,24 +453,33 @@ class VectorDatabase private (
     if (returnScores) r else r.select(col("id"))
   }
 
-  /** BULK hybrid search — N (qid, text, vector) queries through ONE
-    * distributed plan, the batch twin of [[hybridSearch]] (the last
-    * reference pipeline, ldb:323–401, without one). Per query the
-    * semantics are EXACTLY the single-query path's: dense BM25 text
-    * scores (ldb:130), dense vector scores (true-L2 brute force at
-    * N ≤ `exactThreshold`, widened-probe + zero-scatter above,
-    * ldb:359–374), per-query max-normalize (ldb:381–384), weighted
-    * fusion, zero-drop (ldb:399–401), top-k.
+  /** BULK hybrid search — N (qid, text, vector) queries in one call, the
+    * batch twin of [[hybridSearch]] (the last reference pipeline,
+    * ldb:323–401, without one). Per query the semantics are EXACTLY the
+    * single-query path's: dense BM25 text scores (ldb:130), dense vector
+    * scores (true-L2 brute force at N ≤ `exactThreshold`, widened-probe +
+    * zero-scatter above, ldb:359–374), per-query max-normalize
+    * (ldb:381–384), weighted fusion, filter and `restrict` masks after
+    * fusion (ldb:390–392), zero-drop (ldb:399–401), top-k.
     *
-    * Scale shape: the text side is the frames-path sparse BM25
-    * ([[BM25.Index.scoreBatchFrames]] — no query-proportional driver
-    * state); the vector side is produced dense corpus-side with the
-    * |Q|-row query frame BROADCAST, so the only fact-sized shuffle is
-    * the ONE (qid, id) score join that fuses them. The per-query maxes
-    * are a |Q|-row aggregate (map-side partial combine) broadcast back —
-    * the scalable analog of a per-query window, which would funnel each
-    * query's whole corpus through one partition. The final cut is the
-    * bounded-heap [[graft.plans.TopKPerKey]].
+    * The query block is collected once; its text side becomes each
+    * query's weighted terms (one vocabulary lookup).
+    *  - Exact arm: every (query, doc) pair scores vs and ts (the BM25 fold
+    *    as a projection) in one pass over the corpus, the queries
+    *    broadcast.
+    *  - Probe arm, a bounded-candidate fusion: a doc outside the query's
+    *    vector probe set has vs = 0, so its fused score is monotone in ts
+    *    (for vectorWeight ≤ 1) and only the BM25 top topK + W of the
+    *    filtered docs can reach the result (at most W of them are probe
+    *    docs; W = max(10·topK, 100), the widened k). The fusion reads one
+    *    vector `searchBatch` at W (collected) and one BM25
+    *    [[graft.plans.KnnTopK]] pass over the filtered docs that keeps,
+    *    per query, that top topK + W and the exact ts of its probe docs —
+    *    at most (2W + topK)·|Q| (query, doc) pairs, fused on one partition
+    *    with nothing persisted. tm is the largest ts; under a filter or
+    *    restrict that comes from one more BM25 pass at k = 1 over every
+    *    doc, since the maxes are taken before the masks. Under `restrict`
+    *    the text side is every restricted pair sharing a term.
     * Output: (qid, id, score), qid asc, score desc, id-asc ties. */
   def hybridSearchBatch(queries: DataFrame, qidCol: String, textCol: String,
                         vecCol: String, topK: Int = 5,
@@ -476,77 +489,102 @@ class VectorDatabase private (
                         exactThreshold: Long = 1000L,
                         restrict: Option[DataFrame] = None): DataFrame = {
     if (nRows == 0) return emptyBatchResult // ldb:346–347, per query
-    val q = queries.select(col(qidCol).cast("long").as("qid"),
-      col(textCol).as("__qtext"), col(vecCol).cast("array<double>").as("__qv"))
-    val ts = bm25.scoreBatchFrames(q, "qid", "__qtext")
-      .withColumnRenamed("score", "ts")
-    val exactArm = nRows <= exactThreshold
-    val vs =
-      if (exactArm)
-        // small-N exact arm: true-L2 scores for every (query, doc) pair —
-        // corpus scan × broadcast queries, no shuffle (ldb:375–378)
-        df.select(col("id"), col("vector"))
-          .crossJoin(broadcast(q.select(col("qid"), col("__qv"))))
+    val block = queries.select(col(qidCol).cast("long").as("qid"),
+      col(textCol).as("__qtext"), col(vecCol).cast("array<double>").as("__qv")).collect()
+    val text = bm25
+    val payloads = text.payloads(block.map(r => (r.getLong(0), r.getString(1))).toSeq)
+    def local(rows: Seq[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    def weighted(es: Seq[(String, Double, Double)]) = es.map { case (t, c, d) => Row(t, c, d) }
+    // (qid, __qv, qv): the vector and the weighted terms of each query
+    val qblock = local(block.zip(payloads).map { case (r, (qid, es)) =>
+        Row(qid, r.get(2), weighted(es)) }.toSeq,
+      StructType(Seq(StructField("qid", LongType), StructField("__qv", ArrayType(DoubleType)),
+        StructField("qv", BM25.payloadType))))
+    val terms = qblock.select(col("qid"), col("qv"))
+    val restrictPairs = restrict.map(r0 => r0.select(col(r0.columns(0)).cast("long").as("qid"),
+      col(r0.columns(1)).cast("long").as("id")))
+    val rows =
+      if (nRows <= exactThreshold) {
+        val docs = df.select(col("id"), col("vector"),
+          filter.fold(lit(true))(p => coalesce(p, lit(false))).as("cand"))
+        docs.join(text.forward, Seq("id"))
+          .crossJoin(broadcast(qblock))
           .select(col("qid"), col("id"),
-            ExactKNN.L2.score(ExactKNN.L2.dist(col("vector"), col("__qv"))).as("vs"))
-      else {
-        // widened index probe (ldb:361–374): squared-L2 score discipline,
-        // k = max(10·topK, 100) per query. The reference's dense
-        // zero-scatter (ldb:365–374) is NOT materialized: a (qid, id)
-        // pair absent from both the probe and the sparse BM25 frame has
-        // fused score 0 and always dies at the K10 zero-drop, and maxes
-        // over non-negative scores are unchanged by 0-fill — so the
-        // sparse full-outer join below is bit-identical at k·|Q| + text
-        // pairs instead of N×|Q| rows (r9 VERDICT #1: the dense scatter
-        // defeats the probe's purpose at scale).
-        val widened = math.min(nRows, math.max(10L * topK, 100L)).toInt
-        index.searchBatch(df, nRows, manifestVar, q.select(col("qid"), col("__qv")), widened)
-          .withColumnRenamed("score", "vs")
-          .select(col("qid"), col("id"), col("vs"))
+            ExactKNN.L2.score(ExactKNN.L2.dist(col("vector"), col("__qv"))).as("vs"),
+            coalesce(text.foldColumn(col("qv")), lit(0.0)).as("ts"), col("cand"))
+      } else {
+        require(vectorWeight <= 1.0,
+          s"the probe arm needs vectorWeight <= 1 (text weight >= 0), got $vectorWeight")
+        val widened = math.min(nRows, math.max(10L * topK, 100L)).toInt // ldb:361
+        val probe = index.searchBatch(df, nRows, manifestVar, qblock.select(col("qid"), col("__qv")),
+            widened).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.get(2)))
+        val passing: Long => Boolean = filter match {
+          case Some(p) =>
+            val ids = probe.map(_._2).distinct.toSeq
+            if (ids.isEmpty) _ => false
+            else df.where(p && col("id").isin(ids: _*)).select(col("id")).collect()
+              .map(_.getLong(0)).toSet
+          case None => _ => true
+        }
+        val probed = local(probe.map { case (qid, id, vs) => Row(qid, id, vs, null, passing(id)) }.toSeq,
+          StructType(Seq(StructField("qid", LongType), StructField("id", LongType),
+            StructField("vs", DoubleType), StructField("ts", DoubleType),
+            StructField("cand", BooleanType))))
+        val corpus = filter.fold(text.forward)(p =>
+          text.forward.join(df.where(p).select(col("id")), Seq("id"), "left_semi"))
+        def textRows(f: DataFrame, cand: Column) = f.select(col("qid"), col("id"),
+          lit(null).cast("double").as("vs"), col("score").as("ts"), cand.as("cand"))
+        val textSide = restrictPairs match {
+          case None =>
+            // query j twice in one pass: at 2j over the filtered docs, and
+            // at 2j + 1 over its probe docs only, for their exact ts
+            val probeIds = probe.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+            val twins = local(payloads.zipWithIndex.flatMap { case ((_, es), j) =>
+                Seq(Row(2L * j, weighted(es)), Row(2L * j + 1, weighted(es))) },
+              StructType(Seq(StructField("qid", LongType), StructField("qv", BM25.payloadType))))
+            val only = payloads.indices.map(j =>
+              (2L * j + 1) -> probeIds.getOrElse(payloads(j)._1, Set.empty[Long])).toMap
+            val pass = KnnTopK(corpus, twins, topK + widened, KnnScorer.Bm25(text.stats, only))
+              .withColumn("main", col("qid") % 2 === 0)
+              .withColumn("qid", element_at(typedLit(payloads.map(_._1)),
+                shiftright(col("qid"), 1).cast("int") + 1))
+            textRows(pass, col("main"))
+          case Some(rp) =>
+            // every restricted pair sharing a term: the restrict frame
+            // bounds this input
+            textRows(rp.join(corpus, Seq("id")).join(broadcast(terms), Seq("qid"))
+              .select(col("qid"), col("id"), text.foldColumn(col("qv")).as("score"))
+              .where(col("score").isNotNull), lit(true))
+        }
+        // tm is the largest ts over every doc: under a mask, one more pass
+        val all = Seq(probed, textSide) ++
+          (if (filter.isEmpty && restrict.isEmpty) Nil
+           else Seq(textRows(KnnTopK(text.forward, terms, 1, KnnScorer.Bm25(text.stats)),
+             lit(false))))
+        // one partition: the input is bounded, so the merge, the maxes and
+        // the cut below plan with no exchange
+        all.reduce(_ unionByName _).coalesce(1)
+          .groupBy(col("qid"), col("id"))
+          .agg(coalesce(max(col("vs")), lit(0.0)).as("vs"),
+            coalesce(max(col("ts")), lit(0.0)).as("ts"), max(col("cand")).as("cand"))
       }
-    // the ONE fact-sized score join: exact arm = sparse text scores into
-    // dense vector pairs (left); probe arm = sparse ∪ sparse (full outer) —
-    // misses on either side restored to the dense contract's 0.0
-    hybridCache.foreach(_.unpersist(blocking = false))
-    val joined0 =
-      if (exactArm)
-        vs.join(ts, Seq("qid", "id"), "left")
-          .select(col("qid"), col("id"),
-            coalesce(col("ts"), lit(0.0)).as("ts"), col("vs"))
-      else
-        vs.join(ts, Seq("qid", "id"), "full_outer")
-          .select(col("qid"), col("id"),
-            coalesce(col("ts"), lit(0.0)).as("ts"),
-            coalesce(col("vs"), lit(0.0)).as("vs"))
-    val joined = joined0.persist(StorageLevel.MEMORY_AND_DISK)
-    hybridCache = Some(joined) // released on the next hybrid call / add
-    val maxes = joined.groupBy(col("qid"))
-      .agg(max(col("ts")).as("__tm"), max(col("vs")).as("__vm"))
-    val fused = joined.join(broadcast(maxes), Seq("qid"))
-      .select(col("qid"), col("id"),
-        (lit(vectorWeight) *
-           when(col("__vm") > 0, col("vs") / col("__vm")).otherwise(col("vs")) +
-         lit(1.0 - vectorWeight) *
-           when(col("__tm") > 0, col("ts") / col("__tm")).otherwise(col("ts"))).as("score"))
-    val globalMasked = filter match {
-      case Some(p) => fused.join(df.where(p).select(col("id")), Seq("id"), "left_semi")
-      case None => fused
-    }
+    val perQuery = Window.partitionBy(col("qid"))
+    val tm = max(col("ts")).over(perQuery)
+    val vm = max(col("vs")).over(perQuery)
+    val fused = rows
+      .select(col("qid"), col("id"), col("cand"),
+        (lit(vectorWeight) * when(vm > 0, col("vs") / vm).otherwise(col("vs")) +
+         lit(1.0 - vectorWeight) * when(tm > 0, col("ts") / tm).otherwise(col("ts"))).as("score"))
+      .where(col("cand"))
     // per-query restrict frame (the batch analog of F7's per-call mask):
     // first column = qid, second = id; semi-join on BOTH keys so each
     // query carries its own allow-list. Applied before the zero-drop, like
     // the reference's mask multiply (ldb:390–392) precedes the > 0 guard.
-    val masked = restrict match {
-      case Some(r0) =>
-        val pairs = r0.select(col(r0.columns(0)).cast("long").as("qid"),
-          col(r0.columns(1)).cast("long").as("id"))
-        globalMasked.join(pairs, Seq("qid", "id"), "left_semi")
-      case None => globalMasked
-    }
-    val r = graft.plans.TopK.perKey(masked.where(col("score") > 0), // zero-drop
+    val masked = restrictPairs.fold(fused)(rp => fused.join(rp, Seq("qid", "id"), "left_semi"))
+    val r = TopK.perKey(masked.where(col("score") > 0), // zero-drop
         Seq("qid"), Seq("score" -> true, "id" -> false), topK)
-      // explicit: the semi-join USING (id) on the filter arm moves the
-      // join key first; the contract is (qid, id, score) on both arms
       .select(col("qid"), col("id"), col("score"))
       .orderBy(col("qid").asc, col("score").desc, col("id").asc)
     if (returnScores) r else r.select(col("qid"), col("id"))

@@ -223,7 +223,7 @@ private[graft] trait QueriesEvents { this: Queries.type =>
     * BM25 over the streamed corpus + widened vector probe + zero-scatter
     * + max-normalize + weighted fusion — and the answer must equal the
     * batch-ingested collection's bit for bit (same data ⇒ same corpus
-    * scalars, postings, and probe results), so the gate shares
+    * scalars, forward rows, and probe results), so the gate shares
     * hybrid_probe's full SQL oracle verbatim. Pins that streaming ingest
     * preserves EVERY query modality, not just the KNN scan the other
     * streaming_ingest gates check. Forced probe arm (threshold 0) keeps

@@ -87,14 +87,11 @@ private[graft] trait QueriesSearch { this: Queries.type =>
       .orderBy(col("score").desc, col("id").asc)
       .limit(10)
 
-  /** BULK text retrieval: N queries through ONE postings join + one
-    * map-side-combined (qid, id) aggregate, each query's results bounded
-    * by the TopKPerKey heap operator — the training-data-mining shape
-    * (millions of mined queries against the corpus), never N separate
-    * scoring passes. The gate drives the FRAMES path (r7 VERDICT #7):
-    * the query side stays a DataFrame end to end, so the plan under test
-    * is the one a mined-query batch would run — the driver-Seq
-    * `scoreBatchTopK` (bounded at ~thousands of queries) stays as the
+  /** BULK text retrieval: N queries through ONE fused KnnTopK pass over
+    * the BM25 forward frame, each query's results bounded by its heap —
+    * never N separate scoring passes. The gate drives the FRAMES path
+    * (r7 VERDICT #7): tokenization and the df lookup run as a plan over
+    * the query DataFrame — the driver-Seq `scoreBatchTopK` stays as the
     * reference-API convenience, row-equality-pinned in BM25Spec. */
   private[graft] def textBm25Batch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

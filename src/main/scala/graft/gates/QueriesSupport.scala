@@ -170,7 +170,7 @@ private[graft] trait QueriesSupport { this: Queries.type =>
 
   /** Incrementally-extended BM25 index (r5 VERDICT #6): built over the
     * first 80% of the corpus, appended with the rest through the
-    * mergeable postings/df delta — statistics provably equal to the full
+    * mergeable forward rows/df delta — statistics provably equal to the full
     * rebuild (BM25IncrementalSpec), so the gate shares text_bm25's
     * full-rebuild oracle verbatim. */
   private[graft] val bm25IncCache = new Memo[BM25.Index](memoMax, "bm25IncCache")(_.dispose())

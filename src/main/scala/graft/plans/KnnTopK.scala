@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.expr.VecKernels
+import graft.text.BM25
 import graft.vector.ExactKNN
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -8,18 +9,19 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, Descending, GenericInternalRow, InterpretedOrdering, InterpretedUnsafeProjection, Literal, Round, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
 /** How the fused batch-KNN operator scores one corpus row against the
   * query block. The corpus child's columns are, in order, `columns`; the
-  * query child's are (qid, qv). */
+  * query child's are (qid, qv), qv a vector except for [[KnnScorer.Bm25]]. */
 sealed trait KnnScorer extends Serializable {
   def columns: Seq[String]
   /** Output scores rounded to 4 dp (selection still uses the unrounded score). */
@@ -69,8 +71,8 @@ object KnnScorer {
     * are residuals against the row's `cluster` cell, and a pair is scored
     * only when that cell is among the query's `nprobe` nearest centroids
     * (as [[IvfCells]]; a null query vector probes nothing). A code outside
-    * its codebook, or a codes row not m long, fails the task with a named
-    * error. */
+    * its codebook, a codes row not m long, or (residual codes) a qid held
+    * by two queries fails the task with a named error. */
   final case class Adc(codebooks: Array[Array[Array[Double]]],
                        centroids: Array[(Int, Array[Double])], nprobe: Int) extends KnnScorer {
     def columns: Seq[String] =
@@ -86,11 +88,23 @@ object KnnScorer {
     def columns: Seq[String] = Seq("id", "vector", "hashes")
     def describe: String = s"lsh radius=$radius $metric"
   }
+
+  /** Okapi BM25 over the index's forward frame (sorted distinct `terms`,
+    * aligned `tfs`, `dl`): qv is the query's weighted-term payload
+    * ([[BM25.payloadType]]). A pair is scored by [[BM25.fold]] only when
+    * the doc shares a term with the query and, for a qid in `only`, its id
+    * is listed there (qids and ids LONG); the rest count as skipped. */
+  final case class Bm25(stats: BM25.Stats, only: Map[Long, Set[Long]] = Map.empty)
+      extends KnnScorer {
+    def columns: Seq[String] = Seq("id", "terms", "tfs", "dl")
+    def describe: String = "bm25"
+  }
 }
 
 /** Fused batch k-nearest-neighbour search: every corpus row (left) against
-  * a broadcast query block (right), keeping a bounded heap per query, in
-  * one pass — the Spark form of `IndexFlatL2.search` over a query matrix.
+  * the query block (right, collected and broadcast), keeping a bounded
+  * heap per query, in one pass — the Spark form of `IndexFlatL2.search`
+  * over a query matrix.
   * The |corpus|×|Q| pairs are never materialized: each task scores its
   * rows against every query in plain compiled Scala ([[VecKernels]], the
   * same loops the codegen'd expressions' interpreted twins run, so scores
@@ -112,7 +126,10 @@ case class KnnTopK(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
 }
 
 /** Per-partition phase: scores the local corpus rows against the
-  * broadcast queries and emits each query heap (≤ k rows per qid). */
+  * broadcast queries and emits each query heap (≤ k rows per qid). The
+  * query child is read with `executeCollect` and broadcast here, so a
+  * local block (`LocalTableScanExec`) costs no job and any other plan the
+  * one job a `BroadcastExchangeExec` would run. */
 case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
                        qid: Attribute, qv: Attribute, score: Attribute,
                        left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
@@ -120,17 +137,18 @@ case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
   override def outputPartitioning: Partitioning =
     UnknownPartitioning(left.outputPartitioning.numPartitions)
   override def requiredChildDistribution: Seq[Distribution] =
-    UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
+    UnspecifiedDistribution :: UnspecifiedDistribution :: Nil
   override def stringArgs: Iterator[Any] = Iterator(k, scorer.describe)
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "pairsScored" -> SQLMetrics.createMetric(sparkContext, "pairs scored"),
     "sq8Pruned" -> SQLMetrics.createMetric(sparkContext, "pairs pruned by SQ8 bound"),
-    "probeSkipped" -> SQLMetrics.createMetric(sparkContext, "pairs skipped by probe (IVF or PQ cell, LSH bucket)"),
+    "probeSkipped" -> SQLMetrics.createMetric(sparkContext,
+      "pairs skipped by probe (IVF or PQ cell, LSH bucket, no shared BM25 term)"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val queries: Broadcast[Array[InternalRow]] = right.executeBroadcast[Array[InternalRow]]()
+    val queries: Broadcast[Array[InternalRow]] = sparkContext.broadcast(right.executeCollect())
     val kk = k
     val sc = scorer
     def ordinal(a: Attribute, in: Seq[Attribute]): Int = {
@@ -185,9 +203,13 @@ case class KnnTopKMergeExec(k: Int, roundScores: Boolean, qid: Attribute, idAttr
     Seq(SortOrder(qid, Ascending), SortOrder(score, Descending), SortOrder(idAttr, Ascending))
   override def stringArgs: Iterator[Any] = Iterator(k, roundScores)
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val kk = k
     val rnd = roundScores
+    val mOut = metrics("numOutputRows")
     val qidType = qid.dataType
     val idType = idAttr.dataType
     child.execute().mapPartitions { rows =>
@@ -206,7 +228,7 @@ case class KnnTopKMergeExec(k: Int, roundScores: Boolean, qid: Attribute, idAttr
         val hits = if (!rnd) best else best.map(h => new KnnHit(h.isNull,
             if (h.isNull) 0.0 else rounder.eval(InternalRow(h.score)).asInstanceOf[Double], h.id, h.dist))
           .sortWith((a, b) => KnnHeap.ranks(idOrd, a.isNull, a.score, a.id, b) > 0)
-        hits.iterator.map(h => out(q, h.id, if (h.isNull) null else h.score))
+        hits.iterator.map { h => mOut += 1; out(q, h.id, if (h.isNull) null else h.score) }
       }
     }
   }
@@ -304,10 +326,11 @@ object KnnTopK {
     dt.asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType == FloatType
 
   /** The broadcast query block, decoded once per task: dense query
-    * vectors (null for a null vector) and a heap group per distinct qid. */
-  final class QueryBlock(rows: Array[InternalRow], qOrd: Int, qidType: DataType,
-                         qvOrd: Int, qvFloat: Boolean) {
-    val vecs: Array[Array[Double]] = rows.map(vectorOf(_, qvOrd, qvFloat))
+    * vectors (null for a null vector; vector scorers only) and a heap
+    * group per distinct qid. */
+  final class QueryBlock(val rows: Array[InternalRow], qOrd: Int, qidType: DataType,
+                         val qvOrd: Int, qvFloat: Boolean) {
+    lazy val vecs: Array[Array[Double]] = rows.map(vectorOf(_, qvOrd, qvFloat))
     private val groups = mutable.HashMap.empty[Any, Int]
     private val qids = mutable.ArrayBuffer.empty[Any]
     /** Heap group of each query. */
@@ -317,7 +340,7 @@ object KnnTopK {
     }
     /** qid of each heap group. */
     val groupQid: Array[Any] = qids.toArray
-    def size: Int = vecs.length
+    def size: Int = rows.length
     def nGroups: Int = groupQid.length
   }
 
@@ -393,6 +416,11 @@ object KnnTopK {
         val kk = codebooks.map(_.length).max
         val subDim = codebooks.head.head.length
         val cens = if (residual) centroids.toMap else Map(0 -> new Array[Double](m * subDim))
+        if (residual && qs.nGroups < qs.size) {
+          val dup = qs.group.indices.find(j => qs.group.indexOf(qs.group(j)) != j).get
+          throw new IllegalArgumentException(
+            s"duplicate qid in ResidualPQ.searchBatch: ${qs.groupQid(qs.group(dup))}")
+        }
         val cells = byCell(nq, j =>
           if (!residual) Array(0)
           else if (qs.vecs(j) == null) Array.empty[Int]
@@ -471,6 +499,44 @@ object KnnTopK {
             } else counts(2) += 1
             j += 1
           }
+        }
+
+      case KnnScorer.Bm25(stats, only) =>
+        val termsOrd = ords(1); val tfsOrd = ords(2); val dlOrd = ords(3)
+        val queries = qs.rows.map(r =>
+          stats.query(if (r.isNullAt(qs.qvOrd)) null else r.getArray(qs.qvOrd)))
+        val allowed: Array[Set[Long]] = qs.group.map(g =>
+          if (only.isEmpty) null else only.getOrElse(qs.groupQid(g).asInstanceOf[Long], null))
+        // term → the queries weighting it: a row is folded only against
+        // the queries it shares a term with, each once
+        val byTerm = new java.util.HashMap[UTF8String, mutable.ArrayBuffer[Int]]()
+        queries.indices.foreach(j => queries(j).terms.foreach(t =>
+          byTerm.computeIfAbsent(t, _ => mutable.ArrayBuffer.empty) += j))
+        val folded = Array.fill(nq)(-1L)
+        var rowNo = 0L
+        row => {
+          rowNo += 1
+          var shared = 0
+          if (!row.isNullAt(termsOrd)) {
+            val terms = row.getArray(termsOrd)
+            val tfs = row.getArray(tfsOrd)
+            val dl = row.getInt(dlOrd).toDouble
+            val id = if (row.isNullAt(idOrd)) null else row.get(idOrd, idType)
+            var t = 0
+            while (t < terms.numElements()) {
+              val js = byTerm.get(terms.getUTF8String(t))
+              if (js != null) js.foreach { j =>
+                if (folded(j) != rowNo &&
+                    (allowed(j) == null || allowed(j).contains(id.asInstanceOf[Long]))) {
+                  folded(j) = rowNo
+                  heaps(qs.group(j)).offer(isNull = false, BM25.fold(stats, queries(j), terms, tfs, dl), id)
+                  shared += 1
+                }
+              }
+              t += 1
+            }
+          }
+          counts(0) += shared; counts(2) += nq - shared
         }
 
       case KnnScorer.Sq8L2(mins, steps) =>
@@ -579,8 +645,8 @@ object KnnTopK {
 }
 
 /** Planner strategy: logical [[KnnTopK]] → per-partition exec under the
-  * merge exec (EnsureRequirements adds the broadcast of the queries and
-  * the single-partition exchange). */
+  * merge exec (EnsureRequirements adds the single-partition exchange; the
+  * per-partition exec broadcasts the query block itself). */
 object KnnStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case KnnTopK(k, scorer, cols, qid, qv, score, left, right) =>

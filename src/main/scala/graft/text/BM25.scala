@@ -1,11 +1,18 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.plans.{KnnScorer, KnnTopK}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, QuaternaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Okapi BM25, decomposed relationally. Parameters and fine print replicate
-  * the `rank_bm25.BM25Okapi` defaults the reference depends on
+/** Okapi BM25. Parameters and fine print replicate the
+  * `rank_bm25.BM25Okapi` defaults the reference depends on
   * (local_db.py:38,73–75): k1=1.5, b=0.75, epsilon=0.25, and the epsilon
   * floor — raw idf `ln((N−df+0.5)/(df+0.5))`; terms with negative raw idf get
   * `epsilon · avg(raw idf over the whole vocabulary)` instead.
@@ -13,14 +20,18 @@ import org.apache.spark.storage.StorageLevel
   * Tokenization replicates Python's argless `str.split()` (local_db.py:74,129):
   * split on runs of any whitespace, dropping empty tokens.
   *
-  * The index is ONE persisted DataFrame `postings(id, term, tf, dl)` — the
-  * inverted index with document length denormalized in — plus three collected
-  * corpus scalars (n, avgdl, avgIdf). Collecting the scalars is deliberate:
-  * they are table statistics (3 doubles regardless of corpus size), the same
-  * role `avgdl` plays inside BM25Okapi. At 100 TB the postings frame is a
-  * bucketed-by-term table on disk; a query is then: per-term df lookup over
-  * the (term, df) side table → few-row broadcast join into postings → one
-  * map-side-combinable groupBy(id) sum. No full-corpus pass per query.
+  * The index is a persisted FORWARD frame `(id, terms, tfs, dl)` — one row
+  * per document: its distinct terms in ascending UTF-8 byte order, their
+  * counts, and its token count — beside the persisted vocabulary
+  * `docFreq(term, df)` and three corpus scalars (n, avgdl, avgIdf; table
+  * statistics, the role `avgdl` plays inside BM25Okapi). Every score is
+  * ONE compiled-Scala fold, [[fold]], over a document row and a query's
+  * weighted terms: the dense [[Index.score]] runs it as a projection, the
+  * batch paths as the [[KnnScorer.Bm25]] scorer of the fused
+  * [[graft.plans.KnnTopK]] pass. The fold adds the shared terms'
+  * contributions in ascending term order, so a score's bits do not depend
+  * on partitioning, and the avgIdf sum is exact (decimal), for the same
+  * reason.
   */
 object BM25 {
 
@@ -48,261 +59,314 @@ object BM25 {
   def tokenizeQuery(q: String): Array[String] =
     graft.expr.Grams.tokens(q)
 
+  /** A query as the fold reads it: `array<struct<term, qtf, df>>` — each
+    * term the vocabulary holds, its count in the query and its df. The
+    * weight qtf·idf(df) is derived where the payload is decoded
+    * ([[Stats.query]]), so every path weights a term with the same bits. */
+  val payloadType: ArrayType = ArrayType(StructType(Seq(
+    StructField("term", StringType), StructField("qtf", DoubleType),
+    StructField("df", DoubleType))))
+
+  /** A decoded query: its terms in ascending UTF-8 byte order and their
+    * weights. */
+  final class Query(val terms: Array[UTF8String], val weights: Array[Double])
+
+  /** The corpus statistics a score reads. */
+  final case class Stats(n: Long, avgdl: Double, avgIdf: Double, params: Params) {
+    /** idf with the rank_bm25 epsilon floor. */
+    def idf(df: Double): Double = {
+      val raw = math.log((n - df + 0.5) / (df + 0.5))
+      if (raw < 0) params.epsilon * avgIdf else raw
+    }
+
+    /** Decodes a [[payloadType]] value; null is the query with no term. */
+    def query(payload: ArrayData): Query = {
+      val m = if (payload == null) 0 else payload.numElements()
+      val entries = (0 until m).map { i =>
+        val e = payload.getStruct(i, 3)
+        (e.getUTF8String(0).clone(), e.getDouble(1) * idf(e.getDouble(2)))
+      }.sortWith((a, b) => a._1.compareTo(b._1) < 0)
+      new Query(entries.map(_._1).toArray, entries.map(_._2).toArray)
+    }
+  }
+
+  /** BM25 of one document for one query: Σ over the terms they share, in
+    * ascending term order, of w·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)).
+    * `terms` holds the document's distinct terms in ascending UTF-8 byte
+    * order, `tfs` their counts. NaN when the two share no term (a shared
+    * term implies dl ≥ 1, so every real score is finite). */
+  def fold(stats: Stats, q: Query, terms: ArrayData, tfs: ArrayData, dl: Double): Double = {
+    val k1 = stats.params.k1; val b = stats.params.b
+    var s = 0.0
+    var shared = false
+    var i = 0; var j = 0
+    val nt = terms.numElements(); val nq = q.terms.length
+    while (i < nt && j < nq) {
+      val c = terms.getUTF8String(i).compareTo(q.terms(j))
+      if (c < 0) i += 1
+      else if (c > 0) j += 1
+      else {
+        val tf = tfs.getInt(i).toDouble
+        s += q.weights(j) * tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / stats.avgdl))
+        shared = true
+        i += 1; j += 1
+      }
+    }
+    if (shared) s else Double.NaN
+  }
+
+  /** [[fold]] as a column: null when the document shares no term. A
+    * foldable payload is decoded once per task. */
+  case class Bm25Fold(payload: Expression, terms: Expression, tfs: Expression, dl: Expression,
+                      stats: Stats) extends QuaternaryExpression with CodegenFallback {
+    override def prettyName: String = "bm25"
+    override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
+    override def first: Expression = payload
+    override def second: Expression = terms
+    override def third: Expression = tfs
+    override def fourth: Expression = dl
+
+    @transient private lazy val fixed: Query =
+      if (payload.foldable) stats.query(payload.eval().asInstanceOf[ArrayData]) else null
+
+    override def nullSafeEval(p: Any, t: Any, f: Any, d: Any): Any = {
+      val q = if (fixed != null) fixed else stats.query(p.asInstanceOf[ArrayData])
+      val s = fold(stats, q, t.asInstanceOf[ArrayData], f.asInstanceOf[ArrayData],
+        d.asInstanceOf[Int].toDouble)
+      if (s.isNaN) null else s
+    }
+
+    override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression,
+                                                   d: Expression): Bm25Fold =
+      copy(payload = a, terms = b, tfs = c, dl = d)
+  }
+
+  /** A document's tokens → struct(terms, tfs, dl): its distinct terms in
+    * ascending UTF-8 byte order, their counts, and the token count. Null
+    * tokens count as an empty document. */
+  case class TermFreqs(child: Expression) extends UnaryExpression with CodegenFallback {
+    override def prettyName: String = "term_freqs"
+    override def dataType: DataType = StructType(Seq(
+      StructField("terms", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("tfs", ArrayType(IntegerType, containsNull = false), nullable = false),
+      StructField("dl", IntegerType, nullable = false)))
+    override def nullable: Boolean = false
+
+    override def eval(input: InternalRow): Any = {
+      val toks = child.eval(input).asInstanceOf[ArrayData]
+      val counts = new java.util.TreeMap[UTF8String, Integer]()
+      val dl = if (toks == null) 0 else toks.numElements()
+      var i = 0
+      while (i < dl) {
+        counts.merge(toks.getUTF8String(i).clone(), 1, (a, b) => a + b)
+        i += 1
+      }
+      val terms = new Array[Any](counts.size); val tfs = new Array[Any](counts.size)
+      var j = 0
+      counts.forEach { (t, c) => terms(j) = t; tfs(j) = c.intValue; j += 1 }
+      InternalRow(new GenericArrayData(terms), new GenericArrayData(tfs), dl)
+    }
+
+    override protected def withNewChildInternal(c: Expression): TermFreqs = copy(child = c)
+  }
+
   /** The materialized text index.
     *
-    * @param postings (id LONG, term STRING, tf DOUBLE, dl DOUBLE) — persisted
-    * @param docFreq  (term STRING, df DOUBLE) — persisted, vocabulary-sized
-    * @param docIds   (id LONG, dl DOUBLE) — all doc ids (zero-score docs must
-    *                 still be rankable, BM25Okapi.get_scores is dense)
+    * @param forward (id, terms ARRAY<STRING>, tfs ARRAY<INT>, dl INT) — one
+    *                row per document, empty-text documents included
+    *                (BM25Okapi.get_scores is dense); persisted
+    * @param docFreq (term STRING, df DOUBLE) — persisted, vocabulary-sized
     */
-  final class Index(val postings: DataFrame, val docFreq: DataFrame,
-                    val docIds: DataFrame, val n: Long, val totalDl: Long,
-                    val avgIdf: Double, val params: Params,
-                    private val retained: Seq[DataFrame] = Nil) {
+  final class Index(val forward: DataFrame, val docFreq: DataFrame, val n: Long,
+                    val totalDl: Long, val avgIdf: Double, val params: Params,
+                    private val retained: Seq[DataFrame]) {
 
     /** Derived identically on the build and append paths: dl is an integer
       * token count, so the LONG total is exact and avgdl = totalDl/n is
       * bit-stable across any append sequence reaching the same corpus. */
     val avgdl: Double = if (n == 0) 0.0 else totalDl.toDouble / n
 
-    /** Releases every frame this index's append CHAIN persisted — an
-      * appended index owns its parent's frames (the parent is dropped on
-      * append; its postings remain part of the child's lineage), so
-      * disposing the newest index releases the whole chain. */
+    val stats: Stats = Stats(n, avgdl, avgIdf, params)
+
+    /** Releases the frames this index holds: every forward piece its
+      * append chain added and its current vocabulary frame. */
     def dispose(): Unit = retained.foreach(_.unpersist(blocking = false))
 
     /** Incremental statistics maintenance (r5 VERDICT #6): extend the
-      * index by `batch` with NO re-scan of the indexed corpus — the last
-      * full-corpus pass on the ingest path. The reference rebuilds from
-      * scratch per add (`_build_bm25_index`, local_db.py:73–75); the
-      * mergeable decomposition is: batch postings/doc-lengths are computed
-      * from the batch alone (cost ∝ |batch|), the per-term df DELTA merges
-      * into the vocabulary frame (one vocabulary-sized shuffle — term
-      * space, never document space), and the corpus scalars recompute
-      * exactly: n and totalDl add, avgIdf re-averages over the MERGED
-      * vocabulary (one vocabulary-sized aggregate; it is a global mean of
-      * per-term idfs, which an append genuinely shifts for every term).
-      * BM25IncrementalSpec pins value equality with the full rebuild; the
-      * text_bm25_incremental gate shares the full-rebuild oracle.
-      * At 100 TB: postings/docIds unions are append-only file writes on a
-      * term-bucketed table; only the df merge and avgIdf aggregate run,
-      * both vocabulary-sized. */
+      * index by `batch` with NO re-scan of the indexed corpus. The
+      * reference rebuilds from scratch per add (`_build_bm25_index`,
+      * local_db.py:73–75); here the batch's forward rows are computed from
+      * the batch alone and unioned on, the batch's per-term df delta
+      * merges into the vocabulary, and the corpus scalars recompute
+      * exactly (n and totalDl add; avgIdf re-averages over the merged
+      * vocabulary — a global mean of per-term idfs that an append shifts
+      * for every term). BM25IncrementalSpec pins value equality with the
+      * full rebuild and a plan that grows by a bounded amount per append.
+      *
+      * Each frame the append extends reads its parent once, and neither
+      * its plan nor its tasks grow with the number of appends:
+      *  - the forward frame is a union of cached pieces (not a cached
+      *    union), so its plan grows by one piece per append;
+      *  - the merged vocabulary is the parent ∪ the batch's df delta,
+      *    summed per term through one vocabulary-sized shuffle, which ends
+      *    the RDD chain a task serializes (a broadcast-join merge chained
+      *    every append's RDD and overflowed the task-deserialization stack
+      *    near the 40th append), and is cached under a leaf plan: a cached
+      *    frame over its cached parent prints the parent's plan twice under
+      *    adaptive execution (initial and final plan), so a nested
+      *    vocabulary plan's string would double with every append.
+      * The superseded vocabulary frame is released once its successor is
+      * materialized; this index then no longer owns it. */
     def append(batch: DataFrame, idCol: String, textCol: String): Index = {
-      val toks = batch.select(col(idCol).as("id"), tokenize(col(textCol)).as("toks"))
-      val bPostings = toks
-        .select(col("id"), size(col("toks")).cast("double").as("dl"),
-          explode(col("toks")).as("term"))
-        .groupBy(col("id"), col("term"))
-        .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val bDocIds = toks.select(col("id"), size(col("toks")).cast("double").as("dl"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (nB, dlB) = bDocIds.agg(count(lit(1)), sum(col("dl")).cast("long"))
-        .head() match {
-          case r => (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      val spark = forward.sparkSession
+      val bForward = forwardOf(batch, idCol, textCol).persist(StorageLevel.MEMORY_AND_DISK)
+      val (nB, dlB) = totals(bForward)
+      val merged =
+        if (nB == 0) docFreq
+        else {
+          val m = docFreq
+            .unionByName(bForward.select(explode(col("terms")).as("term"))
+              .groupBy(col("term")).agg(count(lit(1)).cast("double").as("df")))
+            .groupBy(col("term")).agg(sum(col("df")).as("df"))
+          spark.createDataFrame(m.rdd, m.schema).persist(StorageLevel.MEMORY_AND_DISK)
         }
-      // df merge WITHOUT shuffling the vocabulary (round-10 review; the
-      // union + groupBy re-exchanged the whole vocabulary frame per
-      // append when only the BATCH's terms change): existing terms take
-      // the batch delta through a broadcast left join (vocabulary streams
-      // in place), batch-only terms arrive by anti-joining the delta
-      // against the batch∩vocabulary hit set — itself batch-bounded, so
-      // every join broadcasts a batch-sized side. Values are identical to
-      // the union+groupBy sum (df + delta for common terms, delta alone
-      // for new terms, df alone for untouched terms).
-      val delta = bPostings.groupBy(col("term"))
-        .agg(count(lit(1)).cast("double").as("__dfb"))
-      val hits = docFreq.select(col("term"))
-        .join(broadcast(delta.select(col("term"))), Seq("term"))
-      val mergedDf = docFreq
-        .join(broadcast(delta), Seq("term"), "left")
-        .na.fill(0.0, Seq("__dfb"))
-        .select(col("term"), (col("df") + col("__dfb")).as("df"))
-        .unionByName(delta.join(broadcast(hits), Seq("term"), "left_anti")
-          .select(col("term"), col("__dfb").as("df")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
       val n2 = n + nB
-      val avgIdf2 =
-        if (n2 == 0) 0.0
-        else mergedDf
-          .agg(avg(log((lit(n2.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))))
-          .head() match { case r => if (r.isNullAt(0)) 0.0 else r.getDouble(0) }
-      new Index(postings.unionByName(bPostings), mergedDf,
-        docIds.unionByName(bDocIds), n2, totalDl + dlB, avgIdf2, params,
-        Seq(bPostings, bDocIds, mergedDf) ++ retained)
+      val avgIdf2 = avgIdfOf(merged, n2) // materializes `merged`
+      val kept =
+        if (merged eq docFreq) retained
+        else { docFreq.unpersist(blocking = false); retained.filterNot(_ eq docFreq) :+ merged }
+      new Index(forward.unionByName(bForward), merged, n2, totalDl + dlB, avgIdf2, params,
+        kept :+ bForward)
     }
 
-    /** idf with the rank_bm25 epsilon floor, computed on the driver from the
-      * per-term df — query terms are few, so this is O(|query|). */
-    private def idf(df: Double): Double = {
-      val raw = math.log((n - df + 0.5) / (df + 0.5))
-      if (raw < 0) params.epsilon * avgIdf else raw
+    private def requireDocs(): Unit =
+      if (n == 0)
+        throw new IllegalStateException("No documents in the database") // ldb:127–128
+
+    /** Each query's [[payloadType]] entries (term, qtf, df) for the terms
+      * the vocabulary holds — ONE vocabulary lookup for the batch's
+      * distinct terms. */
+    private[graft] def payloads(queries: Seq[(Long, String)]): Seq[(Long, Seq[(String, Double, Double)])] = {
+      val qtfs = queries.map { case (qid, q) =>
+        qid -> tokenizeQuery(q).groupBy(identity).view.mapValues(_.length.toDouble).toSeq
+      }
+      val terms = qtfs.flatMap(_._2.map(_._1)).distinct
+      val dfByTerm: Map[String, Double] =
+        if (terms.isEmpty) Map.empty
+        else docFreq.where(col("term").isin(terms: _*))
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      qtfs.map { case (qid, tf) =>
+        qid -> tf.flatMap { case (t, c) => dfByTerm.get(t).map(df => (t, c, df)) }
+      }
     }
+
+    /** [[fold]] of the forward columns `terms`, `tfs`, `dl` of the frame it
+      * is evaluated over, for the query in `payload`; null when the
+      * document shares no term. */
+    private[graft] def foldColumn(payload: Column): Column =
+      GraftColumnBridge.column(Bm25Fold(GraftColumnBridge.expression(payload),
+        GraftColumnBridge.expression(col("terms")), GraftColumnBridge.expression(col("tfs")),
+        GraftColumnBridge.expression(col("dl")), stats))
 
     /** Score every document for `query` → (id, score). Dense: docs sharing no
       * term with the query score 0.0 but are present (local_db.py:130).
       * Query-term multiplicity multiplies the contribution, as in
       * rank_bm25's loop over query tokens. */
     def score(query: String): DataFrame = {
-      if (n == 0)
-        throw new IllegalStateException("No documents in the database") // ldb:127–128
-      val spark = postings.sparkSession
-      import spark.implicits._
-      val qtf = tokenizeQuery(query).groupBy(identity)
-        .view.mapValues(_.length.toDouble).toMap
-      // per-term df lookup: a filtered scan of the (small, persisted)
-      // vocabulary frame — the relational analog of a dictionary lookup.
-      val dfByTerm: Map[String, Double] =
-        if (qtf.isEmpty) Map.empty
-        else docFreq.where(col("term").isin(qtf.keys.toSeq: _*))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      // weight folds qtf and idf into one per-term constant.
-      val weights = qtf.toSeq.flatMap { case (t, q) =>
-        dfByTerm.get(t).map(df => (t, q * idf(df)))
-      }
-      val matched =
-        if (weights.isEmpty) spark.emptyDataFrame
-          .select(lit(0L).as("id"), lit(0.0).as("score")).limit(0)
-        else {
-          val (k1, b) = (params.k1, params.b)
-          postings
-            .join(broadcast(weights.toDF("term", "w")), Seq("term"))
-            .groupBy(col("id"))
-            .agg(sum(col("w") * col("tf") * lit(k1 + 1.0) /
-              (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))))
-              .as("score"))
-        }
-      docIds.select("id")
-        .join(matched, Seq("id"), "left")
-        .select(col("id"), coalesce(col("score"), lit(0.0)).as("score"))
+      requireDocs()
+      val entries = payloads(Seq(0L -> query)).head._2
+      forward.select(col("id"), coalesce(
+        foldColumn(GraftColumnBridge.column(Literal(payloadData(entries), payloadType))),
+        lit(0.0)).as("score"))
     }
 
-    /** BULK retrieval: score N queries through ONE postings join. All
-      * queries' (qid, term, weight) rows broadcast together; one join + one
-      * map-side-combinable groupBy(qid, id) later, [[graft.plans.TopKPerKey]]
-      * bounds each query's result to k. Sparse output (only matched docs) —
-      * the dense zero-score contract of [[score]] does not compose with a
-      * top-k cut.
+    /** BULK retrieval: the top k documents of each query, ONE fused
+      * [[KnnTopK]] pass over the forward frame — a document is a
+      * candidate for the queries it shares a term with. Sparse (only docs
+      * sharing ≥ 1 query term; no score > 0 cut, since BM25 scores are
+      * legitimately ALL negative when the epsilon-floored avg idf is
+      * negative): (qid, id, score), qid asc, score desc, id asc.
       *
-      * BOUND (r4 ADVICE): the query set arrives as a driver Seq and its
-      * distinct terms become one `isin` filter + a broadcast weights frame —
-      * driver memory and expression size grow with the batch, so this path
-      * serves up to ~thousands of queries. For mined-query volumes
-      * (millions), use [[scoreBatchTopKFrames]], whose query side is a
-      * DataFrame end to end. */
+      * BOUND: the query block — each query's weighted terms — lives on the
+      * driver and is broadcast to every task, and the batch's distinct
+      * terms become one `isin` filter over the vocabulary; both grow with
+      * the batch, so a call serves up to ~thousands of queries. */
     def scoreBatchTopK(queries: Seq[(Long, String)], k: Int): DataFrame = {
-      if (n == 0)
-        throw new IllegalStateException("No documents in the database")
-      val spark = postings.sparkSession
-      import spark.implicits._
-      val qtf: Seq[(Long, String, Double)] = queries.flatMap { case (qid, q) =>
-        tokenizeQuery(q).groupBy(identity).view.mapValues(_.length.toDouble)
-          .toSeq.map { case (t, c) => (qid, t, c) }
-      }
-      val terms = qtf.map(_._2).distinct
-      val dfByTerm: Map[String, Double] =
-        if (terms.isEmpty) Map.empty
-        else docFreq.where(col("term").isin(terms: _*))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val weights = qtf.flatMap { case (qid, t, c) =>
-        dfByTerm.get(t).map(df => (qid, t, c * idf(df)))
-      }
-      if (weights.isEmpty)
-        return spark.emptyDataFrame
-          .select(lit(0L).as("qid"), lit(0L).as("id"), lit(0.0).as("score")).limit(0)
-      val (k1, b) = (params.k1, params.b)
-      val scored = postings
-        .join(broadcast(weights.toDF("qid", "term", "w")), Seq("term"))
-        .groupBy(col("qid"), col("id"))
-        .agg(sum(col("w") * col("tf") * lit(k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))))
-          .as("score"))
-      // no score>0 cut: BM25 scores are legitimately ALL negative when the
-      // epsilon-floored avg idf is negative (high-df vocabularies) — the
-      // sparse contract is "docs sharing ≥1 query term", period
-      graft.plans.TopK.perKey(scored, Seq("qid"),
-        Seq(("score", true), ("id", false)), k)
+      requireDocs()
+      val block = forward.sparkSession.createDataFrame(
+        java.util.Arrays.asList(payloads(queries).map { case (qid, es) =>
+          Row(qid, es.map { case (t, c, df) => Row(t, c, df) }) }: _*),
+        StructType(Seq(StructField("qid", LongType), StructField("qv", payloadType))))
+      KnnTopK(forward, block, k, KnnScorer.Bm25(stats))
     }
 
-    /** [[scoreBatchTopK]] at mined-query scale: the query set is a
-      * DataFrame (`qidCol`, `textCol`) and stays distributed end to end —
-      * tokenization (the same `str.split()` contract), per-term df lookup
-      * (an equi-join against the vocabulary frame instead of a collected
-      * map + isin), and idf weighting all run as one plan with NO
-      * query-proportional driver state (r4 ADVICE). The three corpus
-      * scalars (n, avgdl, avgIdf) remain literals — they are table
-      * statistics, independent of both corpus and batch size. Same output
-      * contract: sparse (qid, id, score), top-k per qid. BM25Spec pins
-      * row-for-row equality with the Seq path. */
+    /** [[scoreBatchTopK]] with the query set as a DataFrame (`qidCol`,
+      * `textCol`): tokenization (the same `str.split()` contract), term
+      * counting and the per-term df lookup (an equi-join against the
+      * vocabulary frame instead of a collected map + isin) run as one
+      * plan, whose result is the fused pass's query block. Same output;
+      * BM25Spec pins row-for-row equality with the Seq path. */
     def scoreBatchTopKFrames(queries: DataFrame, qidCol: String,
-                             textCol: String, k: Int): DataFrame =
-      graft.plans.TopK.perKey(scoreBatchFrames(queries, qidCol, textCol),
-        Seq("qid"), Seq(("score", true), ("id", false)), k)
-
-    /** The frames-path scoring WITHOUT the top-k cut: sparse (qid, id,
-      * score) over docs sharing ≥ 1 query term — the building block the
-      * batch hybrid fusion densifies (it left-joins these rows into its
-      * corpus-wide pair frame and coalesces the misses to the dense
-      * contract's 0.0, ldb:130). Same plan as [[scoreBatchTopKFrames]]
-      * minus the heap. */
-    def scoreBatchFrames(queries: DataFrame, qidCol: String,
-                         textCol: String): DataFrame = {
-      if (n == 0)
-        throw new IllegalStateException("No documents in the database")
-      val qtf = queries.select(col(qidCol).cast("long").as("qid"),
-          explode(BM25.tokenize(col(textCol))).as("term"))
-        .groupBy(col("qid"), col("term"))
-        .agg(count(lit(1)).cast("double").as("qtf"))
-      val raw = log((lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+                             textCol: String, k: Int): DataFrame = {
+      requireDocs()
       // inner join ⇒ terms absent from the corpus drop out, exactly like the
       // Seq path's dfByTerm.get(...) flatMap
-      val weights = qtf.join(docFreq, Seq("term"))
-        .select(col("qid"), col("term"),
-          (col("qtf") *
-            when(raw < 0, lit(params.epsilon * avgIdf)).otherwise(raw)).as("w"))
-      val (k1, b) = (params.k1, params.b)
-      postings
-        .join(weights, Seq("term"))
-        .groupBy(col("qid"), col("id"))
-        .agg(sum(col("w") * col("tf") * lit(k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl))))
-          .as("score"))
+      val block = queries.select(col(qidCol).cast("long").as("qid"),
+          explode(tokenize(col(textCol))).as("term"))
+        .groupBy(col("qid"), col("term"))
+        .agg(count(lit(1)).cast("double").as("qtf"))
+        .join(docFreq, Seq("term"))
+        .groupBy(col("qid"))
+        .agg(collect_list(struct(col("term"), col("qtf"), col("df"))).as("qv"))
+      KnnTopK(forward, block, k, KnnScorer.Bm25(stats))
     }
   }
 
+  private def payloadData(entries: Seq[(String, Double, Double)]): ArrayData =
+    new GenericArrayData(entries.map { case (t, c, df) =>
+      InternalRow(UTF8String.fromString(t), c, df) }.toArray[Any])
+
+  /** (idCol, textCol) → the forward rows (id, terms, tfs, dl). */
+  private def forwardOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"),
+        GraftColumnBridge.column(TermFreqs(GraftColumnBridge.expression(tokenize(col(textCol)))))
+          .as("f"))
+      .select(col("id"), col("f.terms").as("terms"), col("f.tfs").as("tfs"), col("f.dl").as("dl"))
+
+  /** (document count, total token count) of a forward frame. */
+  private def totals(forward: DataFrame): (Long, Long) =
+    forward.agg(count(lit(1)), sum(col("dl"))).head() match {
+      case r => (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+
+  /** rank_bm25's epsilon floor references the average RAW idf over the
+    * whole vocabulary (negatives included). The sum runs in decimal, exact
+    * in any order, so avgIdf does not depend on how the vocabulary is
+    * partitioned. */
+  private def avgIdfOf(docFreq: DataFrame, n: Long): Double =
+    if (n == 0) 0.0
+    else {
+      val raw = log((lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+      val r = docFreq.agg(sum(raw.cast(DecimalType(38, 18))), count(lit(1))).head()
+      if (r.isNullAt(0) || r.getLong(1) == 0) 0.0
+      else r.getDecimal(0).divide(java.math.BigDecimal.valueOf(r.getLong(1)),
+        java.math.MathContext.DECIMAL128).doubleValue()
+    }
+
   /** Build (and persist) the index from (idCol, textCol) of `docs` — the
     * deterministic batch analog of the reference's full rebuild on every add
-    * (local_db.py:73–75). One shuffle for the (id, term) tf aggregation, one
-    * for the per-term df; the three corpus scalars are collected as stats. */
+    * (local_db.py:73–75). The forward rows need no shuffle, the per-term df
+    * one; the three corpus scalars are collected as stats. */
   def build(docs: DataFrame, idCol: String, textCol: String,
             params: Params = Params()): Index = {
-    val toks = docs.select(col(idCol).as("id"), tokenize(col(textCol)).as("toks"))
-    val postings = toks
-      .select(col("id"), size(col("toks")).cast("double").as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy(col("id"), col("term"))
-      .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val docFreq = postings.groupBy(col("term"))
+    val forward = forwardOf(docs, idCol, textCol).persist(StorageLevel.MEMORY_AND_DISK)
+    val docFreq = forward.select(explode(col("terms")).as("term"))
+      .groupBy(col("term"))
       .agg(count(lit(1)).cast("double").as("df"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // straight from the tokenized scan — covers empty-text docs (dl=0) and
-    // costs no shuffle, unlike re-deriving doc ids from the postings agg
-    val docIds = toks.select(col("id"), size(col("toks")).cast("double").as("dl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (n, totalDl) = docIds.agg(count(lit(1)), sum(col("dl")).cast("long"))
-      .head() match {
-        case r => (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-    // rank_bm25's epsilon floor references the average RAW idf over the whole
-    // vocabulary (negatives included) — one aggregate over the df frame.
-    val avgIdf =
-      if (n == 0) 0.0
-      else docFreq
-        .agg(avg(log((lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))))
-        .head() match { case r => if (r.isNullAt(0)) 0.0 else r.getDouble(0) }
-    new Index(postings, docFreq, docIds, n, totalDl, avgIdf, params,
-      Seq(postings, docFreq, docIds))
+    val (n, totalDl) = totals(forward)
+    new Index(forward, docFreq, n, totalDl, avgIdfOf(docFreq, n), params, Seq(forward, docFreq))
   }
 
   /** Convenience: build + score in one call over a (id, text) document table. */

@@ -167,21 +167,15 @@ final class ResidualPQ(val codes: DataFrame, // (id, cluster, codes, err)
     * repeated qid would merge two queries' heaps, and collapsing
     * duplicates has no defined winner in a distributed plan (round-12
     * ADVICE: the old `dropDuplicates` was a nondeterministic pick).
-    * Uniqueness is ASSERTED inside the plan (a window count +
-    * assert_true filter predicate, so column pruning cannot elide it and
-    * no extra driver job runs): duplicate qids fail the query with a
-    * named error. */
+    * Uniqueness is asserted by the scorer on the collected query block
+    * (no extra job runs): duplicate qids fail the query with a named
+    * error. */
   def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
                   k: Int, nprobe: Int = 4): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
     requireCoarse()
     val q = queries.select(col(qidCol).as("qid"),
       col(qvecCol).cast("array<double>").as("qv"))
-      .withColumn("__nq", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))))
-      .where(assert_true(col("__nq") === 1,
-        concat(lit("duplicate qid in ResidualPQ.searchBatch: "),
-          col("qid").cast("string"))).isNull)
     graft.plans.KnnTopK(
       codes.select(col("id"), col("codes").cast("array<int>").as("codes"),
         col("cluster").cast("int").as("cluster")),

@@ -1,19 +1,20 @@
 package graft
 
 import graft.plans.KnnTopKExec
+import graft.text.BM25
 import graft.vector.{ExactKNN, IVFIndex, LSHIndex, PQIndex, ResidualPQ, SQIndex}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fused batch-KNN operator ([[graft.plans.KnnTopK]]) behind the exact,
-  * SQ8, IVF, PQ, residual-PQ and LSH batch paths, against the driver-side
-  * [[BruteForceKnn]]:
+  * SQ8, IVF, PQ, residual-PQ, LSH and BM25 batch paths, against the
+  * driver-side [[BruteForceKnn]]:
   * bit-identical results over planted ties, duplicate and null vectors,
   * k > N and |Q| = 1, at every corpus partition count and shuffle width;
   * the plan shape; the exec's metrics; the empty cases. */
@@ -289,6 +290,51 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(m(v, "probeSkipped") > 0 && m(v, "pairsScored") > 0, v.metrics.toString)
   }
 
+  /** A small text corpus, its BM25 index and a query batch. */
+  private lazy val text = {
+    import spark.implicits._
+    val docs = Seq("the cat sat", "a dog barked at the cat", "quick brown fox", "lorem ipsum",
+      "cat and dog", "", "fox fox fox")
+    val ix = BM25.build(docs.zipWithIndex.map { case (d, i) => (i.toLong, d) }.toDF("id", "doc"),
+      "id", "doc")
+    (docs, ix, Seq(1L -> "cat", 2L -> "fox dog", 3L -> "nothing known", 4L -> "the the lorem"))
+  }
+
+  test("plan shape: a local query block is read with no broadcast exchange; BM25 and hybrid batches run KnnTopK") {
+    val (rows, corpus, _, _, _) = fixture
+    val local = spark.createDataFrame(java.util.Arrays.asList(queryRows(5, 3, rows).map { case (q, v) =>
+      Row(q, v.map(_.toFloat).toSeq) }: _*), querySchema)
+    val exact = finalPlan(ExactKNN.topKBatchHeap(corpus, "id", "vector", local, "qid", "qv", 5))
+    assert(collect(knnExec(exact).right) { case l: LocalTableScanExec => l }.nonEmpty, s"$exact")
+    assert(collect(exact) { case b: BroadcastExchangeExec => b }.isEmpty, s"$exact")
+
+    val (_, ix, qs) = text
+    val bm = finalPlan(ix.scoreBatchTopK(qs, 2))
+    assert(collect(bm) { case e: KnnTopKExec => e }.size == 1, s"$bm")
+    assert(collect(bm) { case b: BroadcastExchangeExec => b }.isEmpty, s"$bm")
+    assert(collect(bm) { case j: CartesianProductExec => j }.isEmpty, s"$bm")
+
+    val db = VectorDatabase.create(spark, dim, "flat")
+    db.add(text._1, text._1.indices.map(i => rows(i)._2.map(_.toFloat)), None)
+    val hq = spark.createDataFrame(java.util.Arrays.asList(qs.zipWithIndex.map { case ((q, t), j) =>
+        Row(q, t, rows(j)._2.map(_.toFloat).toSeq) }: _*),
+      StructType(Seq(StructField("qid", LongType), StructField("text", StringType),
+        StructField("qv", ArrayType(FloatType)))))
+    val hy = finalPlan(db.hybridSearchBatch(hq, "qid", "text", "qv", topK = 2, exactThreshold = 0L))
+    assert(collect(hy) { case e: KnnTopKExec => e }.nonEmpty, s"$hy")
+    assert(collect(hy) { case j: CartesianProductExec => j }.isEmpty, s"$hy")
+    assert(collect(hy) { case s: ShuffleExchangeExec => s }.size == 1, s"$hy")
+  }
+
+  test("metrics: BM25 pairs scored are the (doc, query) pairs sharing a term, the rest skipped") {
+    val (docs, ix, qs) = text
+    val sharing = (for (d <- docs; (_, q) <- qs
+      if q.split(" ").toSet.intersect(d.split(" ").filter(_.nonEmpty).toSet).nonEmpty) yield 1).size
+    val e = knnExec(finalPlan(ix.scoreBatchTopK(qs, 2)))
+    assert(e.metrics("pairsScored").value == sharing)
+    assert(e.metrics("probeSkipped").value == docs.size * qs.size - sharing)
+  }
+
   test("k <= 0 gives an empty (qid, id, score) frame on every batch path, like the single-query topK") {
     val (rows, corpus, sq, ivf, queries) = fixture
     val (pq, rpq, lsh) = compressed
@@ -301,7 +347,8 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         ivf.searchBatch(queries, "qid", "qv", k, nprobe = 2),
         pq.searchBatch(queries, "qid", "qv", k),
         rpq.searchBatch(queries, "qid", "qv", k, nprobe = 2),
-        lsh.searchBatch(queries, "qid", "qv", k, probeRadius = 1))
+        lsh.searchBatch(queries, "qid", "qv", k, probeRadius = 1),
+        text._2.scoreBatchTopK(text._3, k))
       frames.foreach { df =>
         assert(df.columns.toSeq == Seq("qid", "id", "score"))
         assert(df.collect().isEmpty, s"k=$k")

@@ -1,12 +1,15 @@
 package graft
 
+import graft.plans.KnnTopKMergeExec
+import org.apache.spark.sql.execution.{LocalTableScanExec, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** 1:1 port of the reference's pytest contracts (test_local_db.py),
   * parametrized over the three index types (test:47 etc.), plus the
   * §2.5 fine-print pins. */
-class VectorDatabaseSpec extends AnyFunSuite {
+class VectorDatabaseSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
   private val indexTypes = Seq("hnsw", "flat", "ivfpq", "pq")
@@ -299,15 +302,19 @@ class VectorDatabaseSpec extends AnyFunSuite {
     val qs = Seq((0L, "needle", bigVecs(7).map(_.toDouble).toSeq),
                  (1L, "common5 common17", bigVecs(123).map(_.toDouble).toSeq))
     val qdf = qs.toDF("qid", "qtext", "qv")
-    val batch = db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 5,
-        exactThreshold = 0L).collect()
+    val batchDf = db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 5,
+        exactThreshold = 0L)
+    val batch = batchDf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // (2) the materialized scatter IS sparse: probed (≤100/query) ∪ text
-    // matches — never the corpus×batch fill (dense = 600 rows here).
-    // Inspected BEFORE the single-query calls below replace the cache with
-    // their (reference-faithful) dense N-row frames.
-    val cached = db.hybridCache.get.count()
-    assert(cached <= 250, s"scatter has $cached rows — dense would be ${n * qs.size}")
+    // (2) the fusion input IS sparse: probed (≤100/query) ∪ text matches —
+    // never the corpus×batch fill (dense = 600 rows here). Read from the
+    // executed plan: the rows each input of the fusion's union produced.
+    val union = collect(batchDf.queryExecution.executedPlan) { case u: UnionExec => u }.head
+    val fused = union.children.map(c => collectFirst(c) {
+      case l: LocalTableScanExec => l.metrics("numOutputRows").value
+      case m: KnnTopKMergeExec => m.metrics("numOutputRows").value
+    }.get).sum
+    assert(fused <= 250, s"fusion input has $fused rows — dense would be ${n * qs.size}")
     // (1) bit-identical to the DENSE formulation: the single-query path
     // still materializes the reference's N-row zero-scatter (ldb:365–374)
     val single = qs.flatMap { case (qid, t, v) =>
