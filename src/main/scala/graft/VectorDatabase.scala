@@ -1,14 +1,16 @@
 package graft
 
 import graft.model.Manifest
-import graft.plans.{KnnScorer, KnnTopK, TopK}
+import graft.plans.{KnnHeap, KnnScorer, KnnTopK}
 import graft.text.BM25
 import graft.vector.{AnnIndex, ExactKNN}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** The reference engine's public API surface (VectorDatabase,
   * local_db.py:11–401), re-expressed over one canonical DataFrame
@@ -89,8 +91,6 @@ class VectorDatabase private (
     * Cleared on any append (the snapshot is save-time) — queryMetadata then
     * falls back to the in-memory canonical-JSON path, same results. */
   private var metaVarVar: Option[DataFrame] = None
-  // the single-query hybridSearch's persisted (id, ts, vs) pass
-  private var hybridCache: Option[DataFrame] = None
 
   private def bm25: BM25.Index = bm25Var.getOrElse {
     val b = BM25.build(df, "id", "doc"); bm25Var = Some(b); b
@@ -111,8 +111,6 @@ class VectorDatabase private (
     bm25Var = None
     indexVar.foreach(_.dispose())
     indexVar = None
-    hybridCache.foreach(_.unpersist())
-    hybridCache = None
     metaVarVar = None
   }
 
@@ -132,8 +130,6 @@ class VectorDatabase private (
   private def adoptBatch(batch: DataFrame): Unit = {
     bm25Var = bm25Var.map(_.append(batch, "id", "doc"))
     indexVar = indexVar.map(_.append(batch, manifestVar))
-    hybridCache.foreach(_.unpersist())
-    hybridCache = None
   }
 
   // test/inspection access to the live vector index (IncrementalAddSpec
@@ -403,84 +399,65 @@ class VectorDatabase private (
   // ---------------------------------------------------------------------
 
   /** Weighted fusion of max-normalized BM25 and vector scores; docs failing
-    * `filter` (or scoring 0) are never returned (ldb:390–401). Mirrors the
-    * reference's physical switch: exact true-L2 brute force at
-    * N ≤ `exactThreshold` (default 1000, ldb:359), index probe with widened
-    * k = max(10·topK, 100) + zero-scatter above (ldb:361–374). The text
-    * scores are the dense [[BM25.Index.score]] projection — the same fold
-    * the batch twin runs, so [[hybridSearchBatch]] ≡ this per query, bit
-    * for bit.
-    *
-    * The scored frame is computed ONCE: both max-normalizers come from a
-    * single aggregate over a persisted (id, ts, vs) pass (r1 VERDICT #3 —
-    * the unpersisted formulation re-ran the text projection and the
-    * distance scan per max). The cached pass is retained for the final
-    * ranking and released on the next hybridSearch/add. */
+    * `filter` (or scoring 0) are never returned (ldb:390–401). A batch of
+    * one: the query runs through [[hybridSearchBatch]]'s fusion, so the
+    * reference's physical switch (exact true-L2 brute force at
+    * N ≤ `exactThreshold`, default 1000, ldb:359; index probe with widened
+    * k = max(10·topK, 100) + zero-scatter above, ldb:361–374), the scores
+    * and the tie order are the batch's, and nothing is persisted. The
+    * result is a local frame (id, score), score desc, id-asc ties; its
+    * driver-memory BOUND is the batch's at |Q| = 1. */
   def hybridSearch(queryText: String, queryVector: Array[Float], topK: Int = 5,
                    vectorWeight: Double = 0.5,
                    filter: Option[Column] = None,
                    returnScores: Boolean = true,
                    exactThreshold: Long = 1000L): DataFrame = {
     if (nRows == 0) return emptyResult // ldb:346–347
-    val q = queryVector.map(_.toDouble)
-    val t = bm25.score(queryText).withColumnRenamed("score", "ts")
-    val v =
-      if (nRows <= exactThreshold)
-        ExactKNN.scoreAll(df, "id", "vector", q, ExactKNN.L2).withColumnRenamed("score", "vs")
-      else {
-        val widened = math.min(nRows, math.max(10L * topK, 100L)).toInt // ldb:361
-        val probed = index.search(df, nRows, manifestVar, q, widened)
-          .withColumnRenamed("score", "vs")
-        df.select(col("id")).join(probed, Seq("id"), "left")
-          .select(col("id"), coalesce(col("vs"), lit(0.0)).as("vs")) // score scatter, ldb:365–374
-      }
-    hybridCache.foreach(_.unpersist(blocking = false))
-    val joined = t.join(v, Seq("id")).persist(StorageLevel.MEMORY_AND_DISK)
-    hybridCache = Some(joined)
-    val mr = joined.agg(max(col("ts")), max(col("vs"))).head()
-    val tm = if (mr.isNullAt(0)) 0.0 else mr.getDouble(0)
-    val vm = if (mr.isNullAt(1)) 0.0 else mr.getDouble(1)
-    val fused = joined.select(col("id"),
-      (lit(vectorWeight) * (if (vm > 0) col("vs") / lit(vm) else col("vs")) +
-       lit(1.0 - vectorWeight) * (if (tm > 0) col("ts") / lit(tm) else col("ts"))).as("score"))
-    val masked = filter match {
-      case Some(p) => fused.join(df.where(p).select(col("id")), Seq("id"), "left_semi")
-      case None => fused
-    }
-    val r = masked.where(col("score") > 0) // zero-drop, ldb:399–401
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(topK)
+    val q = Option(queryVector).map(_.map(_.toDouble)).orNull
+    val hits = fusedTopK(Seq((0L, queryText, q)), topK, vectorWeight, filter, exactThreshold, None)
+    val r = spark.createDataFrame(java.util.Arrays.asList(hits.map(h => Row(h._2, h._3)): _*),
+      resultSchema)
     if (returnScores) r else r.select(col("id"))
   }
 
   /** BULK hybrid search — N (qid, text, vector) queries in one call, the
     * batch twin of [[hybridSearch]] (the last reference pipeline,
-    * ldb:323–401, without one). Per query the semantics are EXACTLY the
-    * single-query path's: dense BM25 text scores (ldb:130), dense vector
-    * scores (true-L2 brute force at N ≤ `exactThreshold`, widened-probe +
-    * zero-scatter above, ldb:359–374), per-query max-normalize
-    * (ldb:381–384), weighted fusion, filter and `restrict` masks after
-    * fusion (ldb:390–392), zero-drop (ldb:399–401), top-k.
+    * ldb:323–401, without one). Per query: dense BM25 text scores
+    * (ldb:130), dense vector scores (true-L2 brute force at
+    * N ≤ `exactThreshold`, widened-probe + zero-scatter above,
+    * ldb:359–374; a null query vector scores 0 on every doc), per-query
+    * max-normalize (ldb:381–384), weighted fusion, filter and `restrict`
+    * masks after fusion (ldb:390–392), zero-drop (ldb:399–401), top-k.
     *
     * The query block is collected once; its text side becomes each
-    * query's weighted terms (one vocabulary lookup).
+    * query's weighted terms (one vocabulary lookup). Both arms end in one
+    * fusion routine ([[VectorDatabase.fuse]]) over (qid, id, vs, ts, cand)
+    * rows: per query it merges the rows by id taking the maxes, normalizes,
+    * weights, masks, drops zeros and cuts the top k.
     *  - Exact arm: every (query, doc) pair scores vs and ts (the BM25 fold
     *    as a projection) in one pass over the corpus, the queries
-    *    broadcast.
+    *    broadcast; the rows are shuffled by qid and fused per query on
+    *    the executors, and the ≤ topK·|Q| results collected.
     *  - Probe arm, a bounded-candidate fusion: a doc outside the query's
     *    vector probe set has vs = 0, so its fused score is monotone in ts
     *    (for vectorWeight ≤ 1) and only the BM25 top topK + W of the
     *    filtered docs can reach the result (at most W of them are probe
-    *    docs; W = max(10·topK, 100), the widened k). The fusion reads one
-    *    vector `searchBatch` at W (collected) and one BM25
-    *    [[graft.plans.KnnTopK]] pass over the filtered docs that keeps,
-    *    per query, that top topK + W and the exact ts of its probe docs —
-    *    at most (2W + topK)·|Q| (query, doc) pairs, fused on one partition
-    *    with nothing persisted. tm is the largest ts; under a filter or
-    *    restrict that comes from one more BM25 pass at k = 1 over every
-    *    doc, since the maxes are taken before the masks. Under `restrict`
-    *    the text side is every restricted pair sharing a term.
-    * Output: (qid, id, score), qid asc, score desc, id-asc ties. */
+    *    docs; W = max(10·topK, 100), the widened k). One vector
+    *    `searchBatch` at W and one BM25 [[graft.plans.KnnTopK]] pass over
+    *    the filtered docs — per query that top topK + W and the exact ts
+    *    of its probe docs — are collected and fused on the driver. tm is
+    *    the largest ts; under a filter or restrict that comes from one
+    *    more BM25 pass at k = 1 over every doc, since the maxes are taken
+    *    before the masks. Under `restrict` the text side is every
+    *    restricted pair sharing a term, fused on the executors as in the
+    *    exact arm.
+    *
+    * BOUND (driver memory): the query block; each vector and BM25 pass's
+    * merge holds k·|Q| rows plus one task's output; the driver fusion reads
+    * at most (topK + 2W)·|Q| rows after merging pairs (3W + topK + 1 per
+    * query before); every other path collects ≤ topK·|Q| fused rows.
+    * Output: a local frame (qid, id, score), qid asc, score desc, id-asc
+    * ties. */
   def hybridSearchBatch(queries: DataFrame, qidCol: String, textCol: String,
                         vecCol: String, topK: Int = 5,
                         vectorWeight: Double = 0.5,
@@ -488,116 +465,119 @@ class VectorDatabase private (
                         returnScores: Boolean = true,
                         exactThreshold: Long = 1000L,
                         restrict: Option[DataFrame] = None): DataFrame = {
-    if (nRows == 0) return emptyBatchResult // ldb:346–347, per query
-    val block = queries.select(col(qidCol).cast("long").as("qid"),
-      col(textCol).as("__qtext"), col(vecCol).cast("array<double>").as("__qv")).collect()
+    val hits =
+      if (nRows == 0) Nil // ldb:346–347, per query
+      else {
+        val block = queries.select(col(qidCol).cast("long"), col(textCol),
+            col(vecCol).cast("array<double>")).collect()
+          .map(r => (r.getLong(0), r.getString(1),
+            if (r.isNullAt(2)) null else r.getSeq[Double](2).toArray))
+        fusedTopK(block.toSeq, topK, vectorWeight, filter, exactThreshold, restrict)
+      }
+    val r = spark.createDataFrame(java.util.Arrays.asList(hits.map(h => Row(h._1, h._2, h._3)): _*),
+      batchResultSchema)
+    if (returnScores) r else r.select(col("qid"), col("id"))
+  }
+
+  /** The hybrid top-k of a collected query block (qid, text, vector or
+    * null): (qid, id, score), qid asc, score desc, id asc. */
+  private def fusedTopK(block: Seq[(Long, String, Array[Double])], topK: Int, vectorWeight: Double,
+                        filter: Option[Column], exactThreshold: Long,
+                        restrict: Option[DataFrame]): Seq[(Long, Long, Double)] = {
     val text = bm25
-    val payloads = text.payloads(block.map(r => (r.getLong(0), r.getString(1))).toSeq)
+    val payloads = text.payloads(block.map(b => (b._1, b._2)))
     def local(rows: Seq[Row], schema: StructType): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     def weighted(es: Seq[(String, Double, Double)]) = es.map { case (t, c, d) => Row(t, c, d) }
     // (qid, __qv, qv): the vector and the weighted terms of each query
-    val qblock = local(block.zip(payloads).map { case (r, (qid, es)) =>
-        Row(qid, r.get(2), weighted(es)) }.toSeq,
+    val qblock = local(block.zip(payloads).map { case ((_, _, v), (qid, es)) =>
+        Row(qid, if (v == null) null else v.toSeq, weighted(es)) },
       StructType(Seq(StructField("qid", LongType), StructField("__qv", ArrayType(DoubleType)),
         StructField("qv", BM25.payloadType))))
     val terms = qblock.select(col("qid"), col("qv"))
     val restrictPairs = restrict.map(r0 => r0.select(col(r0.columns(0)).cast("long").as("qid"),
       col(r0.columns(1)).cast("long").as("id")))
-    val rows =
-      if (nRows <= exactThreshold) {
-        val docs = df.select(col("id"), col("vector"),
-          filter.fold(lit(true))(p => coalesce(p, lit(false))).as("cand"))
-        docs.join(text.forward, Seq("id"))
-          .crossJoin(broadcast(qblock))
-          .select(col("qid"), col("id"),
-            ExactKNN.L2.score(ExactKNN.L2.dist(col("vector"), col("__qv"))).as("vs"),
-            coalesce(text.foldColumn(col("qv")), lit(0.0)).as("ts"), col("cand"))
-      } else {
-        require(vectorWeight <= 1.0,
-          s"the probe arm needs vectorWeight <= 1 (text weight >= 0), got $vectorWeight")
-        val widened = math.min(nRows, math.max(10L * topK, 100L)).toInt // ldb:361
-        val probe = index.searchBatch(df, nRows, manifestVar, qblock.select(col("qid"), col("__qv")),
-            widened).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.get(2)))
-        val passing: Long => Boolean = filter match {
-          case Some(p) =>
-            val ids = probe.map(_._2).distinct.toSeq
-            if (ids.isEmpty) _ => false
-            else df.where(p && col("id").isin(ids: _*)).select(col("id")).collect()
-              .map(_.getLong(0)).toSet
-          case None => _ => true
-        }
-        val probed = local(probe.map { case (qid, id, vs) => Row(qid, id, vs, null, passing(id)) }.toSeq,
-          StructType(Seq(StructField("qid", LongType), StructField("id", LongType),
-            StructField("vs", DoubleType), StructField("ts", DoubleType),
-            StructField("cand", BooleanType))))
-        val corpus = filter.fold(text.forward)(p =>
-          text.forward.join(df.where(p).select(col("id")), Seq("id"), "left_semi"))
-        def textRows(f: DataFrame, cand: Column) = f.select(col("qid"), col("id"),
-          lit(null).cast("double").as("vs"), col("score").as("ts"), cand.as("cand"))
-        val textSide = restrictPairs match {
-          case None =>
-            // query j twice in one pass: at 2j over the filtered docs, and
-            // at 2j + 1 over its probe docs only, for their exact ts
-            val probeIds = probe.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-            val twins = local(payloads.zipWithIndex.flatMap { case ((_, es), j) =>
-                Seq(Row(2L * j, weighted(es)), Row(2L * j + 1, weighted(es))) },
-              StructType(Seq(StructField("qid", LongType), StructField("qv", BM25.payloadType))))
-            val only = payloads.indices.map(j =>
-              (2L * j + 1) -> probeIds.getOrElse(payloads(j)._1, Set.empty[Long])).toMap
-            val pass = KnnTopK(corpus, twins, topK + widened, KnnScorer.Bm25(text.stats, only))
-              .withColumn("main", col("qid") % 2 === 0)
-              .withColumn("qid", element_at(typedLit(payloads.map(_._1)),
-                shiftright(col("qid"), 1).cast("int") + 1))
-            textRows(pass, col("main"))
-          case Some(rp) =>
-            // every restricted pair sharing a term: the restrict frame
-            // bounds this input
-            textRows(rp.join(corpus, Seq("id")).join(broadcast(terms), Seq("qid"))
-              .select(col("qid"), col("id"), text.foldColumn(col("qv")).as("score"))
-              .where(col("score").isNotNull), lit(true))
-        }
-        // tm is the largest ts over every doc: under a mask, one more pass
-        val all = Seq(probed, textSide) ++
-          (if (filter.isEmpty && restrict.isEmpty) Nil
-           else Seq(textRows(KnnTopK(text.forward, terms, 1, KnnScorer.Bm25(text.stats)),
-             lit(false))))
-        // one partition: the input is bounded, so the merge, the maxes and
-        // the cut below plan with no exchange
-        all.reduce(_ unionByName _).coalesce(1)
-          .groupBy(col("qid"), col("id"))
-          .agg(coalesce(max(col("vs")), lit(0.0)).as("vs"),
-            coalesce(max(col("ts")), lit(0.0)).as("ts"), max(col("cand")).as("cand"))
+    val (k, w) = (topK, vectorWeight)
+    // rows shuffled by qid, each query fused on the executors; a restrict
+    // pair is a candidate only where its row already is one
+    def fuseOnExecutors(rows: DataFrame): Seq[(Long, Long, Double)] = {
+      val masked = restrictPairs.fold(rows) { rp =>
+        rows.join(rp.distinct().withColumn("__ok", lit(true)), Seq("qid", "id"), "left")
+          .withColumn("cand", col("cand") && coalesce(col("__ok"), lit(false)))
       }
-    val perQuery = Window.partitionBy(col("qid"))
-    val tm = max(col("ts")).over(perQuery)
-    val vm = max(col("vs")).over(perQuery)
-    val fused = rows
-      .select(col("qid"), col("id"), col("cand"),
-        (lit(vectorWeight) * when(vm > 0, col("vs") / vm).otherwise(col("vs")) +
-         lit(1.0 - vectorWeight) * when(tm > 0, col("ts") / tm).otherwise(col("ts"))).as("score"))
-      .where(col("cand"))
-    // per-query restrict frame (the batch analog of F7's per-call mask):
-    // first column = qid, second = id; semi-join on BOTH keys so each
-    // query carries its own allow-list. Applied before the zero-drop, like
-    // the reference's mask multiply (ldb:390–392) precedes the > 0 guard.
-    val masked = restrictPairs.fold(fused)(rp => fused.join(rp, Seq("qid", "id"), "left_semi"))
-    val r = TopK.perKey(masked.where(col("score") > 0), // zero-drop
-        Seq("qid"), Seq("score" -> true, "id" -> false), topK)
-      .select(col("qid"), col("id"), col("score"))
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-    if (returnScores) r else r.select(col("qid"), col("id"))
+      masked.select(col("qid"), col("id"), col("vs"), col("ts"), col("cand"))
+        .repartition(col("qid")).rdd
+        .mapPartitions(part => fuse(part.map(r => FusionRow(r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) null else r.getDouble(2), if (r.isNullAt(3)) null else r.getDouble(3),
+          !r.isNullAt(4) && r.getBoolean(4))), k, w).iterator)
+        .collect().toSeq.sortBy(_._1)
+    }
+    if (nRows <= exactThreshold) {
+      val docs = df.select(col("id"), col("vector"),
+        filter.fold(lit(true))(p => coalesce(p, lit(false))).as("cand"))
+      fuseOnExecutors(docs.join(text.forward, Seq("id"))
+        .crossJoin(broadcast(qblock))
+        .select(col("qid"), col("id"),
+          ExactKNN.L2.score(ExactKNN.L2.dist(col("vector"), col("__qv"))).as("vs"),
+          coalesce(text.foldColumn(col("qv")), lit(0.0)).as("ts"), col("cand")))
+    } else {
+      require(vectorWeight <= 1.0,
+        s"the probe arm needs vectorWeight <= 1 (text weight >= 0), got $vectorWeight")
+      val widened = math.min(nRows, math.max(10L * topK, 100L)).toInt // ldb:361
+      val probe = index.searchBatch(df, nRows, manifestVar, qblock.select(col("qid"), col("__qv")),
+          widened).collect()
+        .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) null else Double.box(r.getDouble(2))))
+      val passing: Long => Boolean = filter match {
+        case Some(p) =>
+          val ids = probe.map(_._2).distinct.toSeq
+          if (ids.isEmpty) _ => false
+          else df.where(p && col("id").isin(ids: _*)).select(col("id")).collect()
+            .map(_.getLong(0)).toSet
+        case None => _ => true
+      }
+      val probed = probe.toSeq.map { case (qid, id, vs) => FusionRow(qid, id, vs, null, passing(id)) }
+      val corpus = filter.fold(text.forward)(p =>
+        text.forward.join(df.where(p).select(col("id")), Seq("id"), "left_semi"))
+      // tm is the largest ts over every doc: under a mask, one more pass
+      def tmPass = KnnTopK(text.forward, terms, 1, KnnScorer.Bm25(text.stats))
+      restrictPairs match {
+        case None =>
+          // query j twice in one pass: at 2j over the filtered docs, and
+          // at 2j + 1 over its probe docs only, for their exact ts
+          val probeIds = probe.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+          val twins = local(payloads.zipWithIndex.flatMap { case ((_, es), j) =>
+              Seq(Row(2L * j, weighted(es)), Row(2L * j + 1, weighted(es))) },
+            StructType(Seq(StructField("qid", LongType), StructField("qv", BM25.payloadType))))
+          val only = payloads.indices.map(j =>
+            (2L * j + 1) -> probeIds.getOrElse(payloads(j)._1, Set.empty[Long])).toMap
+          val textRows = KnnTopK(corpus, twins, topK + widened, KnnScorer.Bm25(text.stats, only))
+            .collect().toSeq.map { r =>
+              val t = r.getLong(0)
+              FusionRow(payloads((t >> 1).toInt)._1, r.getLong(1), null, r.getDouble(2), t % 2 == 0)
+            }
+          val tmRows = if (filter.isEmpty) Nil else tmPass.collect().toSeq.map(r =>
+            FusionRow(r.getLong(0), r.getLong(1), null, r.getDouble(2), cand = false))
+          fuse((probed ++ textRows ++ tmRows).iterator, k, w)
+        case Some(rp) =>
+          // every restricted pair sharing a term: the restrict frame
+          // bounds this input
+          val probeFrame = local(probed.map(f => Row(f.qid, f.id, f.vs, f.ts, f.cand)),
+            StructType(Seq(StructField("qid", LongType), StructField("id", LongType),
+              StructField("vs", DoubleType), StructField("ts", DoubleType),
+              StructField("cand", BooleanType))))
+          val textSide = rp.join(corpus, Seq("id")).join(broadcast(terms), Seq("qid"))
+            .select(col("qid"), col("id"), lit(null).cast("double").as("vs"),
+              text.foldColumn(col("qv")).as("ts"), lit(true).as("cand"))
+            .where(col("ts").isNotNull)
+          val tmSide = tmPass.select(col("qid"), col("id"), lit(null).cast("double").as("vs"),
+            col("score").as("ts"), lit(false).as("cand"))
+          fuseOnExecutors(probeFrame.unionByName(textSide).unionByName(tmSide))
+      }
+    }
   }
 
   private def emptyResult: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("id", LongType), StructField("score", DoubleType))))
-
-  private def emptyBatchResult: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("qid", LongType), StructField("id", LongType),
-        StructField("score", DoubleType))))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], resultSchema)
 
   // ---------------------------------------------------------------------
   // S3 save / S4 load (ldb:210–265)
@@ -629,6 +609,56 @@ object VectorDatabase {
     StructField("doc", StringType, nullable = false),
     StructField("vector", ArrayType(FloatType, containsNull = false), nullable = false),
     StructField("meta", StringType, nullable = false)))
+
+  private val resultSchema: StructType = StructType(Seq(StructField("id", LongType),
+    StructField("score", DoubleType)))
+  private val batchResultSchema: StructType = StructType(StructField("qid", LongType) +: resultSchema)
+
+  /** One (query, doc) input row of the hybrid fusion: a null vs or ts is a
+    * side that did not score the pair; `cand` = the doc may be returned. */
+  private[graft] final case class FusionRow(qid: Long, id: Long, vs: java.lang.Double,
+                                            ts: java.lang.Double, cand: Boolean)
+
+  /** The hybrid fusion (ldb:376–401) over the rows of any set of queries,
+    * each query's rows all present: per query, the rows merge by id (the
+    * max vs, the max ts, cand if any row has it; a side with no score is
+    * 0); tm and vm are the largest ts and vs over every merged doc;
+    * score = w·(vm > 0 ? vs/vm : vs) + (1 − w)·(tm > 0 ? ts/tm : ts);
+    * the candidates scoring above 0 are cut to the k best by (score desc,
+    * id asc). Comparisons follow Spark's double order (NaN above every
+    * number), the arithmetic the SQL fusion's. Output (qid, id, score),
+    * qid asc, score desc, id asc. */
+  private[graft] def fuse(rows: Iterator[FusionRow], k: Int, w: Double): Seq[(Long, Long, Double)] = {
+    final class Doc(var vs: java.lang.Double, var ts: java.lang.Double, var cand: Boolean)
+    def max(a: Double, b: Double): Double = if (SQLOrderingUtil.compareDoubles(a, b) >= 0) a else b
+    def maxOf(a: java.lang.Double, b: java.lang.Double): java.lang.Double =
+      if (a == null) b else if (b == null) a else max(a, b)
+    def positive(x: Double): Boolean = SQLOrderingUtil.compareDoubles(x, 0.0) > 0
+    val byQuery = mutable.HashMap.empty[Long, mutable.HashMap[Long, Doc]]
+    rows.foreach { r =>
+      val docs = byQuery.getOrElseUpdate(r.qid, mutable.HashMap.empty)
+      docs.get(r.id) match {
+        case Some(d) => d.vs = maxOf(d.vs, r.vs); d.ts = maxOf(d.ts, r.ts); d.cand ||= r.cand
+        case None => docs(r.id) = new Doc(r.vs, r.ts, r.cand)
+      }
+    }
+    def or0(x: java.lang.Double): Double = if (x == null) 0.0 else x
+    byQuery.keys.toSeq.sorted.flatMap { qid =>
+      val docs = byQuery(qid)
+      val tm = docs.values.iterator.map(d => or0(d.ts)).reduce(max)
+      val vm = docs.values.iterator.map(d => or0(d.vs)).reduce(max)
+      val heap = new KnnHeap(k, KnnTopK.ordering(LongType))
+      docs.foreach { case (id, d) =>
+        if (d.cand) {
+          val (vs, ts) = (or0(d.vs), or0(d.ts))
+          val score = w * (if (positive(vm)) vs / vm else vs) +
+            (1.0 - w) * (if (positive(tm)) ts / tm else ts)
+          if (positive(score)) heap.offer(isNull = false, score, id)
+        }
+      }
+      heap.sorted.toSeq.map(h => (qid, h.id.asInstanceOf[Long], h.score))
+    }
+  }
 
   /** Collapse the union lineage after this many appends (streaming ingest
     * calls appendFrame once per micro-batch). */

@@ -9,10 +9,11 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, Descending, GenericInternalRow, InterpretedOrdering, InterpretedUnsafeProjection, Literal, Round, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{Distribution, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, ShuffledRowRDD, SparkPlan, SparkStrategy, UnaryExecNode, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics, SQLShuffleReadMetricsReporter, SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -108,9 +109,12 @@ object KnnScorer {
   * The |corpus|×|Q| pairs are never materialized: each task scores its
   * rows against every query in plain compiled Scala ([[VecKernels]], the
   * same loops the codegen'd expressions' interpreted twins run, so scores
-  * are bit-equal to them) and emits at most k rows per query; one
-  * single-partition exchange feeds the merge, which outputs
-  * (qid, id, score) in (qid asc, score desc, id asc) order.
+  * are bit-equal to them) and emits at most k rows per query; the merge
+  * ([[KnnTopKMergeExec]]) takes each query's global k best and outputs
+  * (qid, id, score) in (qid asc, score desc, id asc) order. A `collect`
+  * of the result is one job, the merge running on the driver as task
+  * results arrive; a plan that consumes the rows gets them from one
+  * partition behind a shuffle inside the merge node.
   *
   * Rank order is (unrounded score desc — Spark's double order, so NaN
   * first and null last — then id asc). Queries with equal qids share a
@@ -190,46 +194,60 @@ case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
     copy(left = l, right = r)
 }
 
-/** Final phase on one partition: merges the per-partition heaps per qid
-  * and outputs (qid asc, score desc, id asc), rounding scores to 4 dp
-  * when the scorer says so (selection is by the unrounded score, the
-  * output order by the rounded one, then id). */
+/** Final phase: merges the per-partition heaps per qid and outputs
+  * (qid asc, score desc, id asc), rounding scores to 4 dp when the scorer
+  * says so (selection is by the unrounded score, the output order by the
+  * rounded one, then id). Spark's own global top-k idiom
+  * (`TakeOrderedAndProjectExec`): the node requires no child distribution,
+  * so the planner adds no exchange and adaptive execution runs no stage
+  * job for it.
+  *  - `executeCollect` (a `collect` of the result) runs the per-partition
+  *    pass as one job and merges each task's heaps into the driver-side
+  *    heaps as the task's result arrives, so the driver holds at most
+  *    k·|Q| rows plus one task's output.
+  *  - `doExecute` (any plan that consumes the rows) moves the per-partition
+  *    heaps to one partition through a shuffle inside the node and merges
+  *    them there; its read and write metrics are the node's.
+  * Both paths merge with one [[KnnTopK.Merge]]. */
 case class KnnTopKMergeExec(k: Int, roundScores: Boolean, qid: Attribute, idAttr: Attribute,
                             score: Attribute, child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
-  override def requiredChildDistribution: Seq[Distribution] = AllTuples :: Nil
   override def outputPartitioning: Partitioning = SinglePartition
   override def outputOrdering: Seq[SortOrder] =
     Seq(SortOrder(qid, Ascending), SortOrder(score, Descending), SortOrder(idAttr, Ascending))
   override def stringArgs: Iterator[Any] = Iterator(k, roundScores)
 
-  override lazy val metrics: Map[String, SQLMetric] = Map(
+  private lazy val writeMetrics = SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sparkContext)
+  private lazy val readMetrics = SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sparkContext)
+  override lazy val metrics: Map[String, SQLMetric] = readMetrics ++ writeMetrics ++ Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val kk = k
-    val rnd = roundScores
+  override def executeCollect(): Array[InternalRow] = {
+    val m = new KnnTopK.Merge(k, roundScores, qid.dataType, idAttr.dataType)
+    sparkContext.runJob(child.execute(), (rows: Iterator[InternalRow]) => rows.map(_.copy()).toArray,
+      (_: Int, rows: Array[InternalRow]) => rows.foreach(m.offer))
+    val out = m.result()
     val mOut = metrics("numOutputRows")
-    val qidType = qid.dataType
-    val idType = idAttr.dataType
-    child.execute().mapPartitions { rows =>
-      val idOrd = KnnTopK.ordering(idType)
-      val groups = mutable.HashMap.empty[Any, KnnHeap]
-      val qids = mutable.ArrayBuffer.empty[Any]
-      rows.foreach { r =>
-        val q = if (r.isNullAt(0)) null else InternalRow.copyValue(r.get(0, qidType))
-        val heap = groups.getOrElseUpdate(KnnTopK.groupKey(q), { qids += q; new KnnHeap(kk, idOrd) })
-        heap.offer(r.isNullAt(2), r.getDouble(2), if (r.isNullAt(1)) null else r.get(1, idType))
-      }
-      val out = KnnTopK.emitter(qidType, idType)
-      val rounder = Round(BoundReference(0, DoubleType, nullable = true), Literal(4))
-      qids.sorted(KnnTopK.ordering(qidType)).iterator.flatMap { q =>
-        val best = groups(KnnTopK.groupKey(q)).sorted
-        val hits = if (!rnd) best else best.map(h => new KnnHit(h.isNull,
-            if (h.isNull) 0.0 else rounder.eval(InternalRow(h.score)).asInstanceOf[Double], h.id, h.dist))
-          .sortWith((a, b) => KnnHeap.ranks(idOrd, a.isNull, a.score, a.id, b) > 0)
-        hits.iterator.map { h => mOut += 1; out(q, h.id, if (h.isNull) null else h.score) }
-      }
+    mOut += out.length
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(mOut))
+    out
+  }
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val rows = child.execute()
+    val one =
+      if (rows.getNumPartitions == 1) rows
+      else new ShuffledRowRDD(ShuffleExchangeExec.prepareShuffleDependency(rows, child.output,
+        SinglePartition, new UnsafeRowSerializer(child.output.size), writeMetrics), readMetrics)
+    val (kk, rnd, qidType, idType) = (k, roundScores, qid.dataType, idAttr.dataType)
+    val mOut = metrics("numOutputRows")
+    one.mapPartitions { part =>
+      val m = new KnnTopK.Merge(kk, rnd, qidType, idType)
+      part.foreach(m.offer)
+      val out = m.result()
+      mOut += out.length
+      out.iterator
     }
   }
 
@@ -612,6 +630,36 @@ object KnnTopK {
     }
   }
 
+  /** The global merge of per-partition heaps: offered (qid, id, score)
+    * rows in any order, `result` gives each qid's k best (qid asc, score
+    * desc, id asc), scores rounded to 4 dp when `round` (selection by the
+    * unrounded score, output order by the rounded one, then id). Offered
+    * values are copied, so a reused input row is safe. */
+  final class Merge(k: Int, round: Boolean, qidType: DataType, idType: DataType) {
+    private val idOrd = ordering(idType)
+    private val groups = mutable.HashMap.empty[Any, KnnHeap]
+    private val qids = mutable.ArrayBuffer.empty[Any]
+
+    def offer(r: InternalRow): Unit = {
+      val q = if (r.isNullAt(0)) null else InternalRow.copyValue(r.get(0, qidType))
+      val heap = groups.getOrElseUpdate(groupKey(q), { qids += q; new KnnHeap(k, idOrd) })
+      heap.offer(r.isNullAt(2), if (r.isNullAt(2)) 0.0 else r.getDouble(2),
+        if (r.isNullAt(1)) null else r.get(1, idType))
+    }
+
+    def result(): Array[InternalRow] = {
+      val out = emitter(qidType, idType)
+      val rounder = Round(BoundReference(0, DoubleType, nullable = true), Literal(4))
+      qids.sorted(ordering(qidType)).iterator.flatMap { q =>
+        val best = groups(groupKey(q)).sorted
+        val hits = if (!round) best else best.map(h => new KnnHit(h.isNull,
+            if (h.isNull) 0.0 else rounder.eval(InternalRow(h.score)).asInstanceOf[Double], h.id, h.dist))
+          .sortWith((a, b) => KnnHeap.ranks(idOrd, a.isNull, a.score, a.id, b) > 0)
+        hits.iterator.map(h => out(q, h.id, if (h.isNull) null else h.score))
+      }.toArray
+    }
+  }
+
   /** (qid, id, score) → UnsafeRow, without runtime code generation. */
   def emitter(qidType: DataType, idType: DataType): (Any, Any, Any) => InternalRow = {
     val proj = InterpretedUnsafeProjection.createProjection(Seq(
@@ -645,8 +693,10 @@ object KnnTopK {
 }
 
 /** Planner strategy: logical [[KnnTopK]] → per-partition exec under the
-  * merge exec (EnsureRequirements adds the single-partition exchange; the
-  * per-partition exec broadcasts the query block itself). */
+  * merge exec. Neither requires a child distribution, so the planner adds
+  * no exchange: the per-partition exec broadcasts the query block itself,
+  * and the merge exec brings the heaps together itself (on the driver for
+  * a `collect`, else through its own single-partition shuffle). */
 object KnnStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case KnnTopK(k, scorer, cols, qid, qv, score, left, right) =>

@@ -71,8 +71,8 @@ object ExactKNN {
     * Plan: the fused [[graft.plans.KnnTopK]] operator. The query block is
     * broadcast; each corpus partition scores its rows against every query
     * and keeps one bounded heap per query, so no (row, query) pair is ever
-    * materialized, joined or sorted; ≤ k rows per query per partition go
-    * through one single-partition exchange to the merge, whose output
+    * materialized, joined or sorted; ≤ k rows per query per partition
+    * reach the merge (on the driver for a `collect`), whose output
     * order (qid asc, score desc, id asc) is the result order. Ties on the
     * unrounded score break by id asc. The query block must fit a
     * broadcast; a corpus-sized query side is the k-NN graph's job

@@ -95,8 +95,9 @@ final class IVFIndex(val centroids: Array[(Int, Array[Double])],
     * — its `nprobe` nearest centroids by squared L2, ties by cluster id,
     * the same set as [[probedCandidates]] and [[probeOrder]] — and scores
     * a (row, query) pair only when the row's cell is in that set, keeping
-    * one bounded heap per query. No candidate join, no pair frame; one
-    * single-partition exchange to the merge. Output contract matches
+    * one bounded heap per query. No candidate join, no pair frame, no
+    * exchange: the heaps merge on the driver for a `collect`. Output
+    * contract matches
     * [[ExactKNN.topKBatch]]: (qid, id, score) ordered (qid, score desc,
     * id), exact within the probed clusters; nprobe = nlist recovers the
     * exact batch scan bit-for-bit. */

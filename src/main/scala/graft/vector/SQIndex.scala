@@ -121,8 +121,8 @@ final class SQIndex(val data: DataFrame, // (id, vector, code) persisted
     * query heap's current k-th exact distance T plus the rounded-tie
     * slack 2e-4·(1+T)² (the same proof and slack as [[search]]); only
     * the pairs that survive read the row's float vector and enter the
-    * heap. ≤ k rows per query per partition reach the merge through one
-    * single-partition exchange. Ranked by the UNROUNDED score, then id —
+    * heap. ≤ k rows per query per partition reach the merge (on the
+    * driver for a `collect`). Ranked by the UNROUNDED score, then id —
     * the batch oracle's row_number order and ExactKNN.topKBatch's — and
     * rounded to 4 dp for output, ordered (qid, rounded score desc, id).
     * Rows with a null code are skipped. */

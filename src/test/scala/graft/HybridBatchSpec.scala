@@ -6,11 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The batch hybrid search against a dense driver-side fusion — dense
-  * BM25Okapi text scores, the exact top-W vector scores (W = max(10·topK,
-  * 100); every doc on the exact arm), per-query max normalisation, filter
-  * and restrict masks after fusion, zero-drop, (score desc, id asc) — and
-  * the BM25 and hybrid scores' independence of partitioning. */
+/** The batch hybrid search against a dense driver-side fusion
+  * ([[HybridRef]]) on both arms, and the BM25 and hybrid scores'
+  * independence of partitioning. */
 class HybridBatchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dim = 4
@@ -42,51 +40,9 @@ class HybridBatchSpec extends AnyFunSuite {
       (0 until n).map(_ => gridVec(rnd)))
   }
 
-  private def tokens(s: String): Seq[String] = s.trim.split("\\s+").filter(_.nonEmpty).toSeq
-
-  /** rank_bm25.BM25Okapi, sparse: docs sharing a query token. */
-  private def bm25(c: Corpus, query: String): Map[Int, Double] = {
-    val docs = c.docs.map(tokens)
-    val n = docs.size.toDouble
-    val avgdl = docs.map(_.size).sum / n
-    val df = docs.flatMap(_.distinct).groupBy(identity).view.mapValues(_.size.toDouble).toMap
-    val raw = df.view.mapValues(d => math.log((n - d + 0.5) / (d + 0.5))).toMap
-    val avgIdf = raw.values.sum / raw.size
-    val idf = raw.view.mapValues(v => if (v < 0) 0.25 * avgIdf else v).toMap
-    val qts = tokens(query).filter(idf.contains)
-    docs.indices.flatMap { i =>
-      val d = docs(i)
-      if (!qts.exists(d.contains)) None
-      else Some(i -> qts.map { t =>
-        val tf = d.count(_ == t).toDouble
-        if (tf == 0) 0.0 else idf(t) * tf * 2.5 / (tf + 1.5 * (0.25 + 0.75 * d.size / avgdl))
-      }.sum)
-    }.toMap
-  }
-
-  private def sqL2(a: Array[Float], b: Array[Float]): Double =
-    a.indices.map { i => val d = a(i).toDouble - b(i).toDouble; d * d }.sum
-
-  /** The dense fusion rule, per query. */
-  private def expected(c: Corpus, text: String, q: Array[Float], topK: Int, w: Double,
-                       probe: Boolean, pass: Int => Boolean): Seq[(Long, Double)] = {
-    val ts = bm25(c, text)
-    val vs: Map[Int, Double] =
-      if (!probe) c.docs.indices.map(i => i -> 1.0 / (1.0 + math.sqrt(sqL2(c.vecs(i), q)))).toMap
-      else c.docs.indices.map(i => i -> 1.0 / (1.0 + sqL2(c.vecs(i), q)))
-        .sortBy { case (i, s) => (-s, i) }.take(math.min(c.n, math.max(10 * topK, 100))).toMap
-    val tm = (ts.values ++ Seq(0.0)).max
-    val vm = (vs.values ++ Seq(0.0)).max
-    c.docs.indices.map { i =>
-      val (v, t) = (vs.getOrElse(i, 0.0), ts.getOrElse(i, 0.0))
-      i.toLong -> (w * (if (vm > 0) v / vm else v) + (1 - w) * (if (tm > 0) t / tm else t))
-    }.filter { case (i, s) => pass(i.toInt) && s > 0 }
-      .sortBy { case (i, s) => (-s, i) }.take(topK)
-  }
-
   private def queryFrame(qs: Seq[(Long, String, Array[Float])]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(qs.map { case (qid, t, v) =>
-        Row(qid, t, v.toSeq) }: _*),
+        Row(qid, t, if (v == null) null else v.toSeq) }: _*),
       StructType(Seq(StructField("qid", LongType), StructField("text", StringType),
         StructField("qv", ArrayType(FloatType)))))
 
@@ -110,7 +66,7 @@ class HybridBatchSpec extends AnyFunSuite {
         vectorWeight = w, filter = filter.map(_._1), exactThreshold = threshold, restrict = allow))
       qs.foreach { case (qid, text, q) =>
         val pass = (i: Int) => filter.forall(_._2(i)) && restrict.forall(_(qid, i))
-        val want = expected(c, text, q, topK, w, probe = threshold == 0L, pass)
+        val want = HybridRef.expected(c.docs, c.vecs, text, q, topK, w, probe = threshold == 0L, pass)
         val g = got.getOrElse(qid, Nil)
         val at = s"$what (threshold $threshold) qid $qid"
         assert(g.map(_._1) == want.map(_._1), s"$at\n got: $g\nwant: $want")
@@ -156,7 +112,7 @@ class HybridBatchSpec extends AnyFunSuite {
     // every term sits in more than half the docs: every raw idf is negative
     val c = Corpus((0 until 240).map(i => if (i % 4 == 0) "x y" else "x y z"),
       (0 until 240).map(_ => gridVec(rnd)))
-    assert(bm25(c, "x z").values.forall(_ < 0))
+    assert(HybridRef.bm25(c.docs, "x z").values.forall(_ < 0))
     checkAll("negative", c, c.db(), queries(7, Seq("x z", "z", "y y")), 5)
   }
 
@@ -171,6 +127,16 @@ class HybridBatchSpec extends AnyFunSuite {
     val qs = queries(9, Seq("tie", "tie other"))
     checkAll("ties", c, c.db(), qs, 5)
     checkAll("ties, text only", c, c.db(), qs, 5, w = 0.0)
+  }
+
+  test("a null query vector scores vs = 0 on both arms, |Q| in {1,3}") {
+    val rnd = new scala.util.Random(41)
+    val qs = Seq((1L, "w0 w3", null: Array[Float]), (2L, "w7 w12", gridVec(rnd)),
+      (3L, "w1 w2", gridVec(rnd)))
+    checkAll("null qv alone", corpus, db, qs.take(1), 5)
+    checkAll("null qv beside normal queries", corpus, db, qs, 5)
+    checkAll("null qv, filtered", corpus, db, qs, 5,
+      filter = Some((col("meta").contains("\"a\""), (i: Int) => i % 2 == 0)))
   }
 
   test("BM25 and hybrid scores are bit-identical at corpus partitions {1,3,7} x shuffle {1,7,32}") {

@@ -320,10 +320,99 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         Row(q, t, rows(j)._2.map(_.toFloat).toSeq) }: _*),
       StructType(Seq(StructField("qid", LongType), StructField("text", StringType),
         StructField("qv", ArrayType(FloatType)))))
-    val hy = finalPlan(db.hybridSearchBatch(hq, "qid", "text", "qv", topK = 2, exactThreshold = 0L))
-    assert(collect(hy) { case e: KnnTopKExec => e }.nonEmpty, s"$hy")
-    assert(collect(hy) { case j: CartesianProductExec => j }.isEmpty, s"$hy")
-    assert(collect(hy) { case s: ShuffleExchangeExec => s }.size == 1, s"$hy")
+    // the hybrid batch is fused on the driver and returned as a local
+    // frame; the passes it ran are the vector and the BM25 KnnTopK, with
+    // no cartesian and no exchange
+    var hy: DataFrame = null
+    val ran = SparkProbe.plans {
+      hy = db.hybridSearchBatch(hq, "qid", "text", "qv", topK = 2, exactThreshold = 0L)
+    }
+    assert(collect(finalPlan(hy)) { case l: LocalTableScanExec => l }.size == 1, s"${finalPlan(hy)}")
+    val passes = ran.filter(p => collect(p) { case e: KnnTopKExec => e }.nonEmpty)
+    assert(passes.size == 2, ran.mkString("\n"))
+    passes.foreach { p =>
+      assert(collect(p) { case j: CartesianProductExec => j }.isEmpty, s"$p")
+      assert(collect(p) { case s: ShuffleExchangeExec => s }.isEmpty, s"$p")
+    }
+  }
+
+  test("merge paths: collect (driver merge) == rows read through execute, every scorer, partitions {1,3,7} x shuffle {1,7}") {
+    import org.apache.spark.sql.functions.col
+    val rows = corpusRows(37, n)
+    val live = rows.filter(_._2 != null)
+    val (docs, _, texts) = text
+    val trainOn = frame(live, corpusSchema, 1)
+    val pqTrained = PQIndex.build(trainOn, "id", "vector", dim, m = 3)
+    val ivfTrained = IVFIndex.build(trainOn, "id", "vector", nlist = 5)
+    val rpqTrained = ResidualPQ.build(ivfTrained, dim, m = 3)
+    val (pqRows, rpqRows) = (codeRows(pqTrained.codes), codeRows(rpqTrained.codes))
+    for (sp <- Seq(1, 7); parts <- Seq(1, 3, 7)) withShufflePartitions(sp) {
+      val corpus = frame(rows, corpusSchema, parts)
+      val sq = SQIndex.build(corpus, "id", "vector")
+      val (ivf, _) = ivfOver(rows, parts)
+      val pq = new PQIndex(codesFrame(pqRows, parts).drop("cluster"), pqTrained.codebooks, dim)
+      val rpq = new ResidualPQ(codesFrame(rpqRows, parts), rpqTrained.centroids, rpqTrained.codebooks, dim)
+      val lsh = LSHIndex.build(corpus, "id", "vector", numHashTables = 3, bucketLength = 1.0)
+      val bm = BM25.build(spark.createDataFrame(spark.sparkContext.parallelize(
+        docs.zipWithIndex.map { case (d, i) => Row(i.toLong, d) }, parts),
+        StructType(Seq(StructField("id", LongType), StructField("doc", StringType)))), "id", "doc")
+      val q = frame(queryRows(parts + sp, 4, rows), querySchema, 1)
+      try {
+        val frames = Seq(
+          "exact" -> ExactKNN.topKBatch(corpus, "id", "vector", q, "qid", "qv", 4),
+          "sq8 l2" -> sq.searchBatch(q, "qid", "qv", 4),
+          "sq8 cosine" -> sq.searchBatchCosine(q, "qid", "qv", 4),
+          "ivf" -> ivf.searchBatch(q, "qid", "qv", 4, nprobe = 2),
+          "pq" -> pq.searchBatch(q, "qid", "qv", 4),
+          "residual pq" -> rpq.searchBatch(q, "qid", "qv", 4, nprobe = 2),
+          "lsh" -> lsh.searchBatch(q, "qid", "qv", 4, probeRadius = 1),
+          "bm25" -> bm.scoreBatchTopK(texts, 2))
+        for ((name, df) <- frames) {
+          val at = s"$name parts=$parts sp=$sp"
+          val driver = df.collect().toSeq
+          assert(driver.nonEmpty, at)
+          assert(df.rdd.collect().toSeq == driver, s"$at: .rdd")
+          assert(df.where(col("id") >= 0L).collect().toSeq == driver, s"$at: filter above")
+          assert(df.count() == driver.size, s"$at: count")
+          val joined = df.join(spark.range(1000).toDF("id"), Seq("id"))
+            .select("qid", "id", "score").collect().toSeq
+          assert(joined.sortBy(r => (r.getLong(0), r.getLong(1))) ==
+            driver.sortBy(r => (r.getLong(0), r.getLong(1))), s"$at: join above")
+        }
+      } finally { sq.dispose(); lsh.dispose(); bm.dispose() }
+    }
+    pqTrained.dispose(); rpqTrained.dispose(); ivfTrained.dispose()
+  }
+
+  test("jobs: a collected batch search is one job, a BM25 batch two, a hybrid probe arm three") {
+    val (rows, corpus, sq, ivf, _) = fixture
+    val (pq, rpq, lsh) = compressed
+    val local = spark.createDataFrame(java.util.Arrays.asList(queryRows(5, 3, rows).map { case (q, v) =>
+      Row(q, v.map(_.toFloat).toSeq) }: _*), querySchema)
+    val searches = Seq(
+      "exact" -> ExactKNN.topKBatch(corpus, "id", "vector", local, "qid", "qv", 5),
+      "sq8 l2" -> sq.searchBatch(local, "qid", "qv", 5),
+      "sq8 cosine" -> sq.searchBatchCosine(local, "qid", "qv", 5),
+      "ivf" -> ivf.searchBatch(local, "qid", "qv", 5, nprobe = 2),
+      "pq" -> pq.searchBatch(local, "qid", "qv", 5),
+      "residual pq" -> rpq.searchBatch(local, "qid", "qv", 5, nprobe = 2),
+      "lsh" -> lsh.searchBatch(local, "qid", "qv", 5, probeRadius = 1))
+    for ((name, df) <- searches) {
+      df.collect() // materialize the cached index frames outside the count
+      assert(SparkProbe.jobs(df.collect()) == 1, name)
+    }
+    val (docs, ix, qs) = text
+    ix.scoreBatchTopK(qs, 2).collect()
+    assert(SparkProbe.jobs(ix.scoreBatchTopK(qs, 2).collect()) == 2, "bm25: vocabulary lookup + pass")
+    val db = VectorDatabase.create(spark, dim, "flat")
+    db.add(docs, docs.indices.map(i => rows(i)._2.map(_.toFloat)), None)
+    val hq = spark.createDataFrame(java.util.Arrays.asList(qs.zipWithIndex.map { case ((q, t), j) =>
+        Row(q, t, rows(j)._2.map(_.toFloat).toSeq) }: _*),
+      StructType(Seq(StructField("qid", LongType), StructField("text", StringType),
+        StructField("qv", ArrayType(FloatType)))))
+    def hybrid() = db.hybridSearchBatch(hq, "qid", "text", "qv", topK = 2, exactThreshold = 0L).collect()
+    hybrid()
+    assert(SparkProbe.jobs(hybrid()) == 3, "hybrid probe arm: vocabulary lookup, vector pass, BM25 pass")
   }
 
   test("metrics: BM25 pairs scored are the (doc, query) pairs sharing a term, the rest skipped") {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.KnnTopKMergeExec
-import org.apache.spark.sql.execution.{LocalTableScanExec, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -302,32 +301,31 @@ class VectorDatabaseSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val qs = Seq((0L, "needle", bigVecs(7).map(_.toDouble).toSeq),
                  (1L, "common5 common17", bigVecs(123).map(_.toDouble).toSeq))
     val qdf = qs.toDF("qid", "qtext", "qv")
-    val batchDf = db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 5,
-        exactThreshold = 0L)
-    val batch = batchDf.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    var batch = Seq.empty[(Long, Long, Double)]
+    val plans = SparkProbe.plans {
+      batch = db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 5, exactThreshold = 0L)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    }
     // (2) the fusion input IS sparse: probed (≤100/query) ∪ text matches —
     // never the corpus×batch fill (dense = 600 rows here). Read from the
-    // executed plan: the rows each input of the fusion's union produced.
-    val union = collect(batchDf.queryExecution.executedPlan) { case u: UnionExec => u }.head
-    val fused = union.children.map(c => collectFirst(c) {
-      case l: LocalTableScanExec => l.metrics("numOutputRows").value
-      case m: KnnTopKMergeExec => m.metrics("numOutputRows").value
-    }.get).sum
+    // two KnnTopK passes the call ran (the vector probe and the BM25
+    // twin): the rows their merges produced.
+    val merges = plans.flatMap(p => collect(p) { case m: KnnTopKMergeExec => m })
+    assert(merges.size == 2, s"expected the vector and the BM25 pass: ${plans.mkString("\n")}")
+    val fused = merges.map(_.metrics("numOutputRows").value).sum
     assert(fused <= 250, s"fusion input has $fused rows — dense would be ${n * qs.size}")
-    // (1) bit-identical to the DENSE formulation: the single-query path
-    // still materializes the reference's N-row zero-scatter (ldb:365–374)
-    val single = qs.flatMap { case (qid, t, v) =>
-      db.hybridSearch(t, v.map(_.toFloat).toArray, topK = 5, exactThreshold = 0L)
-        .collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
+    // (1) equal to the DENSE formulation (the reference's N-row
+    // zero-scatter, ldb:365–374) computed on the driver: ids rank for
+    // rank, scores within 1e-9 (the driver sums BM25 terms in another order)
+    qs.foreach { case (qid, t, v) =>
+      val want = HybridRef.expected(bigDocs, bigVecs.toIndexedSeq, t, v.map(_.toFloat).toArray, 5, 0.5,
+        probe = true, _ => true)
+      val got = batch.filter(_._1 == qid).map(r => (r._2, r._3))
+      assert(got.map(_._1) == want.map(_._1), s"qid $qid: sparse batch $got != dense $want")
+      got.zip(want).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-9, s"qid $qid: $a vs $b") }
     }
-    assert(batch.toSeq == single,
-      s"sparse batch ${batch.toSeq} != dense per-query $single")
-    // (3) plan shape: no corpus-side cartesian feeding the fusion — the
-    // probe arm's physical plan contains no CartesianProduct
-    val plan = db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 5,
-      exactThreshold = 0L).queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), s"dense cross survived:\n$plan")
+    // (3) no corpus-side cartesian feeding the fusion
+    plans.foreach(p => assert(!p.toString.contains("CartesianProduct"), s"dense cross survived:\n$p"))
   }
 
   test("batch ivfpq arm probes the SAME per-query IVF candidate set as the single path (r9 ADVICE)") {
