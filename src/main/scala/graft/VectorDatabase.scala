@@ -34,9 +34,7 @@ import scala.collection.mutable
   *    nprobe = max(1, clusters/10) (ldb:52); raw PQ (FAISS IndexPQ — flat
   *    ADC, no coarse quantizer) stays reachable as `pq`. At
   *    efSearch ≥ 10 × ivfClusters the ivfpq arm takes the EXACT escape
-  *    hatch: the per-row stored reconstruction error brackets the true
-  *    distance (triangle inequality), so a codes-only bound pass + float
-  *    rerank reproduces the flat scan bit for bit; `hnsw` is served by
+  *    hatch, the flat scan; `hnsw` is served by
   *    the REAL navigable-graph index
   *    (round-7 flip — ef_search is the traversal beam, its native hnsw
   *    meaning; the measured SCALE.md curves put the graph at recall 0.96+
@@ -524,8 +522,8 @@ class VectorDatabase private (
       require(vectorWeight <= 1.0,
         s"the probe arm needs vectorWeight <= 1 (text weight >= 0), got $vectorWeight")
       val widened = math.min(nRows, math.max(10L * topK, 100L)).toInt // ldb:361
-      val probe = index.searchBatch(df, nRows, manifestVar, qblock.select(col("qid"), col("__qv")),
-          widened).collect()
+      val probe = index.searchBatch(df, nRows, manifestVar, block.map(b => (b._1, b._3)), widened)
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) null else Double.box(r.getDouble(2))))
       val passing: Long => Boolean = filter match {
         case Some(p) =>
@@ -685,7 +683,7 @@ object VectorDatabase {
     *    numHashTables (build-time recall-vs-memory).
     *  - `"ivfpq"`: IVF coarse probe + RESIDUAL PQ ADC (faiss.IndexIVFPQ's
     *    actual construction, round 12); efSearch ≥ 10 × ivfClusters takes
-    *    the exact escape hatch (bound-pruned float rerank ≡ flat scan).
+    *    the exact escape hatch (the flat scan).
     *  - `"pq"`: raw product quantization (FAISS IndexPQ) — flat ADC over
     *    the codes, no coarse quantizer.
     *  - `ivfClusters`, `pqCodeSize` are native (ldb:27–28). */

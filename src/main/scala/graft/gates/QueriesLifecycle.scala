@@ -196,11 +196,9 @@ private[graft] trait QueriesLifecycle { this: Queries.type =>
       .select(col("id"), r4(col("score")).as("score"))
       .orderBy(col("score").desc, col("id").asc)
 
-  /** F5 through the residual exact hatch: the preFilter narrows BOTH the
-    * codes-only bound pass and the rerank (a global threshold over
-    * unfiltered codes could sit below a restricted winner and wrongly
-    * prune it — ResidualPQ.searchExact's restrict contract), so the
-    * filtered answer shares the filtered exact-KNN oracle. */
+  /** F5 through the ivfpq exact hatch: the hatch is the exact scan over
+    * the pre-filtered corpus, so the filtered answer shares the filtered
+    * exact-KNN oracle. */
   private[graft] def knnPrefilterIvfpq(spark: SparkSession, dir: String): DataFrame =
     ivfpqDb(spark, dir)
       .queryVector(qvec(spark, dir, 47).map(_.toFloat), topK = 5,
@@ -211,7 +209,7 @@ private[graft] trait QueriesLifecycle { this: Queries.type =>
   /** S3+S4 for the LSH index type, oracle-gated — completes the save/load
     * matrix (flat: save_load_knn; ivf eager+lazy: incremental_add_knn /
     * ann_ivf_lazy; ivfpq: facade_ivfpq_knn's full lifecycle through the
-    * residual exact hatch). efSearch = 6400 ⇒ multiprobe radius 128, beyond the
+    * ivfpq exact hatch). efSearch = 6400 ⇒ multiprobe radius 128, beyond the
     * provable-superset bound (maxNorm + qNorm)/bucketLength ≈ 37 for this
     * corpus, so the loaded facade probe is exact-recoverable and shares
     * the exact-KNN oracle. */

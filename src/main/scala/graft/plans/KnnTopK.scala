@@ -5,17 +5,16 @@ import graft.text.BM25
 import graft.vector.ExactKNN
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, Descending, GenericInternalRow, InterpretedOrdering, InterpretedUnsafeProjection, Literal, Round, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, BoundReference, Descending, GenericInternalRow, InterpretedOrdering, InterpretedUnsafeProjection, Literal, NamedExpression, Round, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
-import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, ShuffledRowRDD, SparkPlan, SparkStrategy, UnaryExecNode, UnsafeRowSerializer}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics, SQLShuffleReadMetricsReporter, SQLShuffleWriteMetricsReporter}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.functions.{array_contains, col, typedLit}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
@@ -57,12 +56,31 @@ object KnnScorer {
     def describe: String = "sq8 cosine"
   }
 
+  /** A scorer over an IVF-celled corpus (a `cluster` column): a row is
+    * scored only against the queries whose probe set holds its cell. */
+  sealed trait CellProbe extends KnnScorer {
+    def centroids: Array[(Int, Array[Double])]
+    /** The cells query vector `q` (null for a null vector) probes. */
+    def probe(q: Array[Double]): Array[Int]
+    /** The union of the probe sets of `qs`, or None when it is every cell:
+      * the rows a corpus-side `cluster IN (…)` filter may drop unscored. */
+    def probedCells(qs: Seq[Array[Double]]): Option[Seq[Int]] = {
+      val cells = qs.iterator.flatMap(probe).toSet
+      if (centroids.forall(c => cells(c._1))) None else Some(cells.toSeq.sorted)
+    }
+  }
+
   /** IVF probe: a pair is scored only when the row's cell is among the
     * query's `nprobe` nearest centroids (squared L2, ties by cluster id). */
   final case class IvfCells(metric: ExactKNN.Metric, centroids: Array[(Int, Array[Double])],
-                            nprobe: Int) extends KnnScorer {
+                            nprobe: Int) extends CellProbe {
     def columns: Seq[String] = Seq("id", "vector", "cluster")
     def describe: String = s"ivf nprobe=$nprobe $metric"
+    /** A null query vector probes the lowest cluster ids (null distances
+      * sort first) and scores null there. */
+    def probe(q: Array[Double]): Array[Int] =
+      if (q == null) centroids.map(_._1).sorted.take(math.max(1, nprobe))
+      else VecKernels.nearestClusters(q, centroids, nprobe)
   }
 
   /** Product-quantized ADC: d̂ = Σ_s table_q[s·kk + code_s], folded in
@@ -75,10 +93,15 @@ object KnnScorer {
     * its codebook, a codes row not m long, or (residual codes) a qid held
     * by two queries fails the task with a named error. */
   final case class Adc(codebooks: Array[Array[Array[Double]]],
-                       centroids: Array[(Int, Array[Double])], nprobe: Int) extends KnnScorer {
+                       centroids: Array[(Int, Array[Double])], nprobe: Int) extends CellProbe {
     def columns: Seq[String] =
       if (centroids.isEmpty) Seq("id", "codes") else Seq("id", "codes", "cluster")
     def describe: String = if (centroids.isEmpty) "pq adc" else s"residual pq adc nprobe=$nprobe"
+    /** Plain PQ: the one implicit cell 0. */
+    def probe(q: Array[Double]): Array[Int] =
+      if (centroids.isEmpty) Array(0)
+      else if (q == null) Array.empty[Int]
+      else VecKernels.nearestClusters(q, centroids, nprobe)
   }
 
   /** LSH bucket probe: a pair is scored by `metric` only when, in some
@@ -113,8 +136,8 @@ object KnnScorer {
   * ([[KnnTopKMergeExec]]) takes each query's global k best and outputs
   * (qid, id, score) in (qid asc, score desc, id asc) order. A `collect`
   * of the result is one job, the merge running on the driver as task
-  * results arrive; a plan that consumes the rows gets them from one
-  * partition behind a shuffle inside the merge node.
+  * results arrive; a plan that consumes the rows reads the merged rows
+  * from one partition.
   *
   * Rank order is (unrounded score desc — Spark's double order, so NaN
   * first and null last — then id asc). Queries with equal qids share a
@@ -147,6 +170,8 @@ case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "pairsScored" -> SQLMetrics.createMetric(sparkContext, "pairs scored"),
     "sq8Pruned" -> SQLMetrics.createMetric(sparkContext, "pairs pruned by SQ8 bound"),
+    // counts only rows that reach the operator: rows a corpus-side
+    // restriction (KnnTopK.Restrict) removed below it are not pairs here
     "probeSkipped" -> SQLMetrics.createMetric(sparkContext,
       "pairs skipped by probe (IVF or PQ cell, LSH bucket, no shared BM25 term)"),
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
@@ -194,39 +219,46 @@ case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
     copy(left = l, right = r)
 }
 
-/** Final phase: merges the per-partition heaps per qid and outputs
-  * (qid asc, score desc, id asc), rounding scores to 4 dp when the scorer
-  * says so (selection is by the unrounded score, the output order by the
-  * rounded one, then id). Spark's own global top-k idiom
+/** Final phase: merges the per-partition heaps per qid into (qid asc,
+  * score desc, id asc), rounding scores to 4 dp when the scorer says so
+  * (selection is by the unrounded score, the output order by the rounded
+  * one, then id), then applies `projectList` and, when given, re-sorts by
+  * `sortOrder` (over the projected output). Spark's own global top-k idiom
   * (`TakeOrderedAndProjectExec`): the node requires no child distribution,
   * so the planner adds no exchange and adaptive execution runs no stage
-  * job for it.
-  *  - `executeCollect` (a `collect` of the result) runs the per-partition
-  *    pass as one job and merges each task's heaps into the driver-side
-  *    heaps as the task's result arrives, so the driver holds at most
-  *    k·|Q| rows plus one task's output.
-  *  - `doExecute` (any plan that consumes the rows) moves the per-partition
-  *    heaps to one partition through a shuffle inside the node and merges
-  *    them there; its read and write metrics are the node's.
-  * Both paths merge with one [[KnnTopK.Merge]]. */
+  * job for it, and a caller's projection and sort above the search (a
+  * single query's (id, score) under its sort) run inside it on the ≤ k·|Q|
+  * merged rows. `executeCollect` runs the per-partition pass as one job
+  * and merges each task's heaps into the driver-side heaps as the task's
+  * result arrives, so the driver holds at most k·|Q| rows plus one task's
+  * output. A plan that consumes the rows (a join or an aggregate above)
+  * reads those rows from one partition: bounded by the broadcast query
+  * block, they need no shuffle. */
 case class KnnTopKMergeExec(k: Int, roundScores: Boolean, qid: Attribute, idAttr: Attribute,
-                            score: Attribute, child: SparkPlan) extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
+                            score: Attribute, projectList: Seq[NamedExpression],
+                            sortOrder: Seq[SortOrder], child: SparkPlan) extends UnaryExecNode {
+  override def output: Seq[Attribute] = projectList.map(_.toAttribute)
   override def outputPartitioning: Partitioning = SinglePartition
   override def outputOrdering: Seq[SortOrder] =
-    Seq(SortOrder(qid, Ascending), SortOrder(score, Descending), SortOrder(idAttr, Ascending))
-  override def stringArgs: Iterator[Any] = Iterator(k, roundScores)
+    if (sortOrder.nonEmpty) sortOrder
+    else if (output == child.output)
+      Seq(SortOrder(qid, Ascending), SortOrder(score, Descending), SortOrder(idAttr, Ascending))
+    else Nil
+  override def stringArgs: Iterator[Any] = Iterator(k, roundScores, projectList, sortOrder)
 
-  private lazy val writeMetrics = SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sparkContext)
-  private lazy val readMetrics = SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sparkContext)
-  override lazy val metrics: Map[String, SQLMetric] = readMetrics ++ writeMetrics ++ Map(
+  override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override def executeCollect(): Array[InternalRow] = {
     val m = new KnnTopK.Merge(k, roundScores, qid.dataType, idAttr.dataType)
     sparkContext.runJob(child.execute(), (rows: Iterator[InternalRow]) => rows.map(_.copy()).toArray,
       (_: Int, rows: Array[InternalRow]) => rows.foreach(m.offer))
-    val out = m.result()
+    val proj = InterpretedUnsafeProjection.createProjection(
+      BindReferences.bindReferences(projectList, child.output))
+    val projected: Array[InternalRow] = m.result().map(r => proj(r).copy())
+    val out =
+      if (sortOrder.isEmpty) projected
+      else { val ord = new InterpretedOrdering(sortOrder, output); projected.sortWith(ord.lt) }
     val mOut = metrics("numOutputRows")
     mOut += out.length
     SQLMetrics.postDriverMetricUpdates(sparkContext,
@@ -234,22 +266,8 @@ case class KnnTopKMergeExec(k: Int, roundScores: Boolean, qid: Attribute, idAttr
     out
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val rows = child.execute()
-    val one =
-      if (rows.getNumPartitions == 1) rows
-      else new ShuffledRowRDD(ShuffleExchangeExec.prepareShuffleDependency(rows, child.output,
-        SinglePartition, new UnsafeRowSerializer(child.output.size), writeMetrics), readMetrics)
-    val (kk, rnd, qidType, idType) = (k, roundScores, qid.dataType, idAttr.dataType)
-    val mOut = metrics("numOutputRows")
-    one.mapPartitions { part =>
-      val m = new KnnTopK.Merge(kk, rnd, qidType, idType)
-      part.foreach(m.offer)
-      val out = m.result()
-      mOut += out.length
-      out.iterator
-    }
-  }
+  override protected def doExecute(): RDD[InternalRow] =
+    sparkContext.parallelize(executeCollect().toSeq, 1)
 
   override protected def withNewChildInternal(c: SparkPlan): KnnTopKMergeExec = copy(child = c)
 }
@@ -401,13 +419,9 @@ object KnnTopK {
         counts(0) += nq
       }
 
-      case KnnScorer.IvfCells(metric, centroids, nprobe) =>
+      case ivf @ KnnScorer.IvfCells(metric, _, _) =>
         val cOrd = ords(2)
-        // a null query vector probes the lowest cluster ids (null
-        // distances sort first)
-        val cells = byCell(nq, j => Option(qs.vecs(j))
-          .map(VecKernels.nearestClusters(_, centroids, nprobe))
-          .getOrElse(centroids.map(_._1).sorted.take(math.max(1, nprobe))))
+        val cells = byCell(nq, j => ivf.probe(qs.vecs(j)))
         val none = Array.empty[Int]
         row => {
           val js = if (row.isNullAt(cOrd)) none else cells.getOrElse(row.getInt(cOrd), none)
@@ -425,7 +439,7 @@ object KnnTopK {
           }
         }
 
-      case KnnScorer.Adc(codebooks, centroids, nprobe) =>
+      case adc @ KnnScorer.Adc(codebooks, centroids, _) =>
         val codesOrd = ords(1)
         val residual = centroids.nonEmpty
         val cOrd = if (residual) ords(2) else -1
@@ -439,10 +453,7 @@ object KnnTopK {
           throw new IllegalArgumentException(
             s"duplicate qid in ResidualPQ.searchBatch: ${qs.groupQid(qs.group(dup))}")
         }
-        val cells = byCell(nq, j =>
-          if (!residual) Array(0)
-          else if (qs.vecs(j) == null) Array.empty[Int]
-          else VecKernels.nearestClusters(qs.vecs(j), centroids, nprobe))
+        val cells = byCell(nq, j => adc.probe(qs.vecs(j)))
         // per probed cell, its queries and their tables (null for a null query)
         val probes = cells.map { case (c, js) => c -> (js, js.map { j =>
           val q = qs.vecs(j)
@@ -668,6 +679,30 @@ object KnnTopK {
     (q, id, s) => proj(new GenericInternalRow(Array[Any](q, id, s))).copy()
   }
 
+  /** A restriction of the corpus side, applied below the operator: rows
+    * whose `id` is in `ids` (a frame with an `id` column), and, for an
+    * IVF-celled corpus, whose `cluster` is in `cells`. A `cells` set that
+    * holds every query's probe set ([[KnnScorer.CellProbe.probedCells]])
+    * drops only rows the scorer would skip, so results are unchanged; on
+    * a `partitionBy(cluster)` parquet read it becomes partition pruning. */
+  final case class Restrict(ids: Option[DataFrame] = None, cells: Option[Seq[Int]] = None) {
+    def apply(corpus: DataFrame): DataFrame = {
+      // an array literal, not an IN list: its values are not inlined into
+      // generated code, so a new cell set costs no fresh compile
+      val inCells = cells.fold(corpus)(cs => corpus.where(array_contains(typedLit(cs.toArray), col("cluster"))))
+      ids.fold(inCells)(allow => inCells.join(allow.select(col("id")), Seq("id"), "left_semi"))
+    }
+  }
+  object Restrict { val none: Restrict = Restrict() }
+
+  /** A local (qid LONG, qv ARRAY<DOUBLE>) query block of driver-held
+    * vectors (null for a null vector): the operator reads it with no job. */
+  def block(spark: SparkSession, queries: Seq[(Long, Array[Double])]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(queries.map { case (qid, v) =>
+        Row(qid, if (v == null) null else v.toSeq) }: _*),
+      StructType(Seq(StructField("qid", LongType, nullable = false),
+        StructField("qv", ArrayType(DoubleType, containsNull = false), nullable = true))))
+
   /** Register the planner strategy on this session (idempotent). */
   def install(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies
@@ -695,13 +730,27 @@ object KnnTopK {
 /** Planner strategy: logical [[KnnTopK]] → per-partition exec under the
   * merge exec. Neither requires a child distribution, so the planner adds
   * no exchange: the per-partition exec broadcasts the query block itself,
-  * and the merge exec brings the heaps together itself (on the driver for
-  * a `collect`, else through its own single-partition shuffle). */
+  * and the merge exec brings the heaps together itself, on the driver. A
+  * deterministic projection right above the search, and a global sort
+  * above that, plan into the merge exec (the operator's own order under a
+  * projection needs no sort). */
 object KnnStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case KnnTopK(k, scorer, cols, qid, qv, score, left, right) =>
-      KnnTopKMergeExec(k, scorer.roundScores, qid, cols.head, score,
-        KnnTopKExec(k, scorer, cols, qid, qv, score, planLater(left), planLater(right))) :: Nil
+    case Sort(order, true, Project(list, knn: KnnTopK), _) if list.forall(_.deterministic) =>
+      merge(knn, list, order) :: Nil
+    case Project(list, Sort(order, true, knn: KnnTopK, _))
+        if list.forall(_.deterministic) && order.map(_.semanticHash()) == ordering(knn).map(_.semanticHash()) =>
+      merge(knn, list, Nil) :: Nil
+    case knn: KnnTopK => merge(knn, knn.output, Nil) :: Nil
     case _ => Nil
   }
+
+  /** The operator's own output order. */
+  private def ordering(knn: KnnTopK): Seq[SortOrder] = Seq(SortOrder(knn.qid, Ascending),
+    SortOrder(knn.score, Descending), SortOrder(knn.corpusCols.head, Ascending))
+
+  private def merge(knn: KnnTopK, list: Seq[NamedExpression], order: Seq[SortOrder]): SparkPlan =
+    KnnTopKMergeExec(knn.k, knn.scorer.roundScores, knn.qid, knn.corpusCols.head, knn.score,
+      list, order, KnnTopKExec(knn.k, knn.scorer, knn.corpusCols, knn.qid, knn.qv, knn.score,
+        planLater(knn.left), planLater(knn.right)))
 }

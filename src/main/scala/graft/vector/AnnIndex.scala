@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.model.Manifest
+import graft.plans.KnnTopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
@@ -9,18 +10,27 @@ import org.apache.spark.storage.StorageLevel
   * `self.index`, local_db.py:42–52): one case per effective index type,
   * each wrapping an existing index class, and each type's knob mapping.
   * `data` is the canonical (id, doc, vector, meta) frame, `n` its row
-  * count; batch query frames carry (qid, __qv). */
+  * count. */
 private[graft] sealed trait AnnIndex {
   import AnnIndex._
 
-  /** Top-k probe for one query: (id, score). `pre` is the optional
-    * pre-filter, PUSHED INTO the index probe (r2 VERDICT next-round #6):
-    * cluster/bucket pruning happens first, then the filter semi-joins the
-    * pruned candidates — a filtered IVF query still reads nprobe/nlist of
-    * the data instead of silently degenerating to a full exact scan. */
-  def search(data: DataFrame, n: Long, manifest: Manifest,
-             q: Array[Double], k: Int, pre: Option[Column] = None): DataFrame = {
-    lazy val restrict = pre.map(p => data.where(p).select(col("id")))
+  /** Top-k probe for a block of driver-held query vectors (qid, vector or
+    * null): (qid, id, score), qid asc, score desc, id asc — one query and
+    * a query matrix take this one plan (≙ the reference's one
+    * `index.search`, ldb:137–200). `pre` is the optional pre-filter,
+    * PUSHED INTO the index probe (r2 VERDICT next-round #6): a left-semi
+    * join of the filtered ids under the search operator's corpus side, so
+    * cluster/bucket pruning still happens — a filtered IVF query reads
+    * nprobe/nlist of the data instead of silently degenerating to a full
+    * exact scan. For ivf and ivfpq the corpus side also keeps only the
+    * cells the block probes, so an `open`ed on-disk index reads only
+    * those `cluster=` directories. */
+  def searchBatch(data: DataFrame, n: Long, manifest: Manifest,
+                  block: Seq[(Long, Array[Double])], k: Int,
+                  pre: Option[Column] = None): DataFrame = {
+    val queries = KnnTopK.block(data.sparkSession, block)
+    val vectors = block.map(_._2)
+    val ids = pre.map(p => data.where(p).select(col("id")))
     // a filter thins every probed partition, so widen the probe budget to
     // keep ≥ topK survivors likely (facade doc: filtered probes stay
     // probe-bounded; efSearch ≥ 10 × nlist is the exact escape hatch)
@@ -28,32 +38,26 @@ private[graft] sealed trait AnnIndex {
     this match {
       case Ivf(ivf) =>
         // hnsw-substitute recall knob: ef_search → nprobe (SURVEY §2.5.2)
-        ivf.search(q, k, nprobe = widen * math.max(1, manifest.efSearch / 10),
-          restrict = restrict)
-      case IvfPq(rpq) =>
-        if (manifest.efSearch >= 10 * manifest.ivfClusters)
-          // exact escape hatch THROUGH the codes: the stored per-row err
-          // brackets the true distance, so the bound-pruned float rerank
-          // is bit-identical to the flat scan (searchExactRaw's proof)
-          rpq.searchExactRaw(q, k, data, "id", "vector", restrict = restrict)
-        else
-          // reference nprobe rule: max(1, ivf_clusters // 10) on the
-          // CONFIGURED cluster count (ldb:52) — capped naturally by nlist
-          rpq.search(q, k,
-            nprobe = widen * IVFIndex.defaultNprobe(manifest.ivfClusters),
-            restrict = restrict)
+        val nprobe = widen * math.max(1, manifest.efSearch / 10)
+        ivf.searchBatch(queries, "qid", "qv", k, nprobe,
+          restrict = KnnTopK.Restrict(ids, ivf.probedCells(vectors, nprobe)))
+      case IvfPq(rpq) if manifest.efSearch < 10 * manifest.ivfClusters =>
+        // residual ADC: reference nprobe rule max(1, ivf_clusters // 10) on
+        // the CONFIGURED cluster count (ldb:52) — capped naturally by nlist
+        val nprobe = widen * IVFIndex.defaultNprobe(manifest.ivfClusters)
+        rpq.searchBatch(queries, "qid", "qv", k, nprobe,
+          KnnTopK.Restrict(ids, rpq.probedCells(vectors, nprobe)))
       case Pq(pq) =>
         // raw PQ (FAISS IndexPQ): flat ADC over the compressed codes — no
-        // coarse quantizer, the probe IS the full codes scan; a filter
-        // restricts the scored rows via semi-join
-        pq.search(q, k, among = restrict)
+        // coarse quantizer, the probe IS the full codes scan
+        pq.searchBatch(queries, "qid", "qv", k, KnnTopK.Restrict(ids))
       case Lsh(lsh) =>
         // ef_search → multiprobe radius (50 ≙ the reference's default
         // ef_search ↔ radius 1; radius 0 is the pure bucket probe);
         // a filter widens the radius by one ring
-        lsh.search(q, k,
+        lsh.searchBatch(queries, "qid", "qv", k,
           probeRadius = math.max(0, manifest.efSearch / 50) + (widen / 4),
-          restrict = restrict)
+          restrict = KnnTopK.Restrict(ids))
       case Graph(graph) =>
         // ef_search → traversal beam, its native hnsw meaning; ≥ corpus
         // size ⇒ unbounded (exact); a filter widens the beam like every
@@ -62,42 +66,18 @@ private[graft] sealed trait AnnIndex {
         val ef =
           if (manifest.efSearch >= n) 0
           else widen * math.max(k, manifest.efSearch)
-        graph.search(q, k, ef = ef, restrict = restrict)
-      case Flat =>
-        ExactKNN.topK(pre.map(data.where).getOrElse(data), "id", "vector", q, k)
+        graph.searchBatch(queries, "qid", "qv", k, ef = ef, restrict = ids)
+      case IvfPq(_) | Flat =>
+        // flat, and ivfpq's exact escape hatch (efSearch ≥ 10 × nlist):
+        // the exact answer is the exact scan, the filter a plain `where`
+        ExactKNN.topKBatch(pre.fold(data)(data.where), "id", "vector", queries, "qid", "qv", k)
     }
   }
 
-  /** Batch twin of [[search]] over a (qid, __qv) query frame: (qid, id,
-    * score). No filter arm — batch callers restrict on the fused frame.
-    * Same recall knobs per type as the single-query path. */
-  def searchBatch(data: DataFrame, n: Long, manifest: Manifest,
-                  q: DataFrame, k: Int): DataFrame = this match {
-    case Ivf(ivf) =>
-      ivf.searchBatch(q, "qid", "__qv", k,
-        nprobe = math.max(1, manifest.efSearch / 10))
-    case IvfPq(rpq) if manifest.efSearch < 10 * manifest.ivfClusters =>
-      // residual ADC, batch twin: per-query coarse probe at the
-      // reference nprobe rule (ldb:52) — batch ≡ single probe sets,
-      // pinned in VectorDatabaseSpec
-      rpq.searchBatch(q, "qid", "__qv", k,
-        nprobe = IVFIndex.defaultNprobe(manifest.ivfClusters))
-    case Pq(pq) =>
-      pq.searchBatch(q, "qid", "__qv", k)
-    case Lsh(lsh) =>
-      lsh.searchBatch(q, "qid", "__qv", k,
-        probeRadius = math.max(0, manifest.efSearch / 50))
-    case Graph(graph) =>
-      val ef = if (manifest.efSearch >= n) 0
-               else math.max(k, manifest.efSearch)
-      graph.searchBatch(q, "qid", "__qv", k, ef = ef)
-    case IvfPq(_) | Flat =>
-      // ivfpq's exact escape hatch, batch shape: the exact answer is the exact
-      // answer — the bounded-heap full scan reproduces the single-query hatch
-      // bit for bit (same squaredL2/distToScore expressions), so
-      // hybridSearchBatch ≡ per-query hybridSearch holds on ivfpq too
-      ExactKNN.topKBatchHeap(data, "id", "vector", q, "qid", "__qv", k)
-  }
+  /** [[searchBatch]] for one query vector: (id, score), score desc, id asc. */
+  def search(data: DataFrame, n: Long, manifest: Manifest,
+             q: Array[Double], k: Int, pre: Option[Column] = None): DataFrame =
+    searchBatch(data, n, manifest, Seq((0L, q)), k, pre).select(col("id"), col("score"))
 
   /** Adopts a batch through the EXISTING quantizer: the index over old ∪ batch. */
   def append(batch: DataFrame, manifest: Manifest): AnnIndex = this match {

@@ -6,14 +6,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Exact (brute-force) K-nearest-neighbor search — the reference's `flat`
-  * index (faiss.IndexFlatL2, local_db.py:48, 173–176), re-expressed as a
-  * declarative scan-score-topk plan.
+  * index (faiss.IndexFlatL2, local_db.py:48, 173–176).
   *
-  * Physical shape at scale: the distance expression is whole-stage-codegen'd
-  * into the Parquet scan projection; `orderBy(dist).limit(k)` is planned as
-  * `TakeOrderedAndProject` — per-partition top-k heaps merged at the driver,
-  * no global sort, no shuffle of the data. Only (k × partitions) rows ever
-  * leave the executors, so this holds at 100 TB as long as k is small.
+  * One plan for one query and for a query matrix: the fused
+  * [[graft.plans.KnnTopK]] operator scans the corpus once, scores every
+  * row against the broadcast query block in compiled Scala and keeps a
+  * bounded heap per query; the heaps merge on the driver for a `collect`.
+  * A single query ([[topK]]) is a block of one. Only k rows per query per
+  * partition ever leave the executors, so this holds at 100 TB as long as
+  * k is small.
   */
 object ExactKNN {
 
@@ -56,13 +57,13 @@ object ExactKNN {
   }
 
   /** Single-query top-k: (id, score), score desc, deterministic id-asc
-    * tie-break (the reference leaves ties to numpy argsort; we pin them,
-    * SURVEY §2.5.7). */
+    * tie-break on the unrounded score (the reference leaves ties to numpy
+    * argsort; we pin them, SURVEY §2.5.7) — [[topKBatch]] over the block
+    * of one. */
   def topK(data: DataFrame, idCol: String, vecCol: String,
            query: Array[Double], k: Int, metric: Metric = L2Sq): DataFrame =
-    scoreAll(data, idCol, vecCol, query, metric)
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
+    topKBatch(data, idCol, vecCol, graft.plans.KnnTopK.block(data.sparkSession, Seq((0L, query))),
+      "qid", "qv", k, metric).select(col("id"), col("score"))
 
   /** Batch top-k: every row of `queries` (qidCol, qvecCol) against every row
     * of `data` — the bulk-similarity-join workload, `IndexFlatL2.search`

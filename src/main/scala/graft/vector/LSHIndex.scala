@@ -1,5 +1,6 @@
 package graft.vector
 
+import graft.plans.{KnnScorer, KnnTopK}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -15,9 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * driver-held — O(tables × dim)); bucket_t(v) = floor(v·w_t / bucketLength).
   * The corpus is hashed ONCE into `hashed(id, vector, hashes ARRAY<INT>)`;
   * a query touches only rows falling within `probeRadius` buckets of the
-  * query's bucket in SOME table — a pushed-down range predicate over the
-  * hash columns, then an exact re-rank of the candidates
-  * ([[ExactKNN.topK]] contract: score = 1/(1+d²), desc, id-asc ties).
+  * query's bucket in SOME table, and only those candidates are re-ranked
+  * exactly ([[ExactKNN.topK]] contract: score = 1/(1+d²), desc, id-asc
+  * ties).
   *
   * Exact-recoverable configuration (the oracle-verified gate): because every
   * direction is unit-norm, |v·w − q·w| ≤ ‖v − q‖ ≤ ‖v‖ + ‖q‖ ≤ maxNorm +
@@ -72,26 +73,26 @@ final class LSHIndex(val hyperplanes: Array[Array[Double]],
     hashed.where(pred)
   }
 
-  /** BULK ANN through the LSH tables in one pass of the fused
-    * [[graft.plans.KnnTopK]] operator — the batch analog of [[search]]
-    * (whose bucket predicate is driver-built per query; a loop over it is
-    * N Spark jobs). Each task hashes every query once with the same
-    * planes; a (row, query) pair is re-ranked exactly only when the row
-    * falls within the probe radius of the query's bucket in some table,
-    * and one bounded heap per query keeps the top k. The corpus is never
-    * exploded, joined or shuffled. `exact = true` widens the radius to the
-    * provable-superset bound over the WHOLE batch (max corpus norm + max
-    * query norm), making the result bit-equal to the exact batch scan —
-    * the oracle-gated configuration. Output contract matches
-    * [[ExactKNN.topKBatch]]: (qid, id, score). */
+  /** ANN through the LSH tables, one query or N, in one pass of the fused
+    * [[graft.plans.KnnTopK]] operator. Each task hashes every query once
+    * with the same planes; a (row, query) pair is re-ranked exactly only
+    * when the row falls within the probe radius of the query's bucket in
+    * some table, and one bounded heap per query keeps the top k. The
+    * corpus is never exploded, joined or shuffled. `exact = true` widens
+    * the radius to the provable-superset bound over the WHOLE batch (max
+    * corpus norm + max query norm), making the result bit-equal to the
+    * exact batch scan — the oracle-gated configuration. `restrict` (an id
+    * allow-list) narrows the hashed rows below the operator. Output
+    * contract matches [[ExactKNN.topKBatch]]: (qid, id, score). */
   def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
                   k: Int, probeRadius: Int = 0, exact: Boolean = false,
-                  metric: ExactKNN.Metric = ExactKNN.L2Sq): DataFrame = {
+                  metric: ExactKNN.Metric = ExactKNN.L2Sq,
+                  restrict: KnnTopK.Restrict = KnnTopK.Restrict.none): DataFrame = {
     val q = queries.select(col(qidCol).as("qid"),
       col(qvecCol).cast("array<double>").as("__qv"))
-    graft.plans.KnnTopK(hashed.select(col("id"), col("vector"), col("hashes")),
+    KnnTopK(restrict(hashed).select(col("id"), col("vector"), col("hashes")),
       q.select(col("qid"), col("__qv").as("qv")), k,
-      graft.plans.KnnScorer.LshBuckets(hyperplanes, bucketLength,
+      KnnScorer.LshBuckets(hyperplanes, bucketLength,
         batchRadius(q, probeRadius, exact), metric))
   }
 
@@ -156,24 +157,13 @@ final class LSHIndex(val hyperplanes: Array[Array[Double]],
   def candidateCount(query: Array[Double], radius: Int): Long =
     candidates(query, radius).count()
 
-  /** Top-k via bucket probe + exact re-rank on candidates. `exact = true`
-    * widens the probe to the provable-superset radius (see class doc).
-    * `restrict` (an (id, …) frame) pre-filters candidates via a semi-join —
-    * the bucket-range predicate still prunes first, so a filtered query
-    * scans only in-bucket rows. */
+  /** Top-k via bucket probe + exact re-rank for one query: [[searchBatch]]
+    * over the block of one. `exact = true` widens the probe to the
+    * provable-superset radius (see class doc). Output: (id, score). */
   def search(query: Array[Double], k: Int, probeRadius: Int = 0,
-             exact: Boolean = false,
-             restrict: Option[DataFrame] = None): DataFrame = {
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    val r =
-      if (exact) math.ceil((maxNorm + qNorm) / bucketLength).toInt
-      else probeRadius
-    val cand0 = candidates(query, r)
-    val cand = restrict
-      .map(rf => cand0.join(rf.select(col("id")), Seq("id"), "left_semi"))
-      .getOrElse(cand0)
-    ExactKNN.topK(cand, "id", "vector", query, k)
-  }
+             exact: Boolean = false): DataFrame =
+    searchBatch(KnnTopK.block(hashed.sparkSession, Seq((0L, query))), "qid", "qv", k,
+      probeRadius, exact).select(col("id"), col("score"))
 }
 
 object LSHIndex {

@@ -1,5 +1,6 @@
 package graft.vector
 
+import graft.plans.{KnnScorer, KnnTopK}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -15,10 +16,10 @@ import org.apache.spark.storage.StorageLevel
   * (dim × 4 bytes → m bytes, a 16–32× compression at the reference's
   * defaults). Queries use asymmetric distance computation (ADC): the query
   * is NOT quantized — per subspace, a 256-entry table of squared distances
-  * from the query sub-vector to each centroid is built driver-side (m × 256
-  * doubles, independent of N), broadcast, and the distance of a stored
-  * vector is the sum of m table lookups — `element_at` on a broadcast array
-  * literal, fully codegen-friendly, no per-row float math beyond the adds.
+  * from the query sub-vector to each centroid is built once per query per
+  * task (m × 256 doubles, independent of N), and the distance of a stored
+  * vector is the sum of m table lookups — no per-row float math beyond the
+  * adds ([[searchBatch]]).
   *
   * Index frames: `codes(id, codes ARRAY<INT>)` (the compressed corpus) and
   * driver-held codebooks `Array[m][256][subDim]`. Codebook training collects
@@ -69,18 +70,26 @@ final class PQIndex(val codes: DataFrame,
     Array.tabulate(m)(s => flat.slice(s * kk, s * kk + codebooks(s).length))
   }
 
-  /** BULK ADC: N queries against the compressed corpus in one pass of the
-    * fused [[graft.plans.KnnTopK]] operator — the batch analog of
-    * [[search]]. Each task builds every query's m × 256 distance table
-    * once; a row's distance is its m table lookups summed in ascending
-    * subspace order, so no (row, query) pair is materialized. A code
-    * outside its codebook fails with a named error. Output: (qid, id,
-    * score), score = 1/(1+dist), same contract as [[ExactKNN.topKBatch]]. */
-  def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String, k: Int): DataFrame =
-    graft.plans.KnnTopK(
-      codes.select(col("id"), col("codes").cast("array<int>").as("codes")),
+  /** ADC top-k, one query or N, in one pass of the fused
+    * [[graft.plans.KnnTopK]] operator: each task builds every query's
+    * m × 256 distance table once; a row's distance is its m table lookups
+    * summed in ascending subspace order, so no (row, query) pair is
+    * materialized. A code outside its codebook fails with a named error.
+    * `restrict` (an id allow-list) narrows the scored rows below the
+    * operator. Output: (qid, id, score), score = 1/(1+dist), same contract
+    * as [[ExactKNN.topKBatch]]. */
+  def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
+                  restrict: KnnTopK.Restrict = KnnTopK.Restrict.none): DataFrame =
+    KnnTopK(
+      restrict(codes).select(col("id"), col("codes").cast("array<int>").as("codes")),
       queries.select(col(qidCol).as("qid"), col(qvecCol).cast("array<double>").as("qv")),
-      k, graft.plans.KnnScorer.Adc(codebooks, Array.empty, nprobe = 1))
+      k, KnnScorer.Adc(codebooks, Array.empty, nprobe = 1))
+
+  /** Approximate top-k by ADC for one query: [[searchBatch]] over the
+    * block of one. Output: (id, score = 1/(1+d̂)), desc, id tiebreak. */
+  def search(query: Array[Double], k: Int): DataFrame =
+    searchBatch(KnnTopK.block(codes.sparkSession, Seq((0L, query))), "qid", "qv", k)
+      .select(col("id"), col("score"))
 
   /** Per-(subspace, code) quantization-CELL RADIUS: max over assigned rows
     * of ‖x_s − c_{s,code}‖, computed in ONE distributed pass (codes ⋈
@@ -135,9 +144,8 @@ final class PQIndex(val codes: DataFrame,
     *   a_s − r_s ≤ ‖q_s − x_s‖ ≤ a_s + r_s,   a_s = ‖q_s − c_s(x)‖,
     * so  dLo = Σ_s max(0, a_s − r_s)²  ≤  d  ≤  Σ_s (a_s + r_s)² = dHi.
     * Pass 1 reads CODES only — the lo²/hi² addends ship as two m×256
-    * broadcast literal tables, so the scan stays `element_at` sums like
-    * [[search]]. T = the k-th smallest dHi (+ the SQIndex rounded-tie
-    * slack): every true top-k row has dLo ≤ d ≤ (k-th true d) ≤ T, so the
+    * broadcast literal tables, so the scan stays `element_at` sums.
+    * T = the k-th smallest dHi (+ the SQIndex rounded-tie slack): every true top-k row has dLo ≤ d ≤ (k-th true d) ≤ T, so the
     * dLo ≤ T survivors are a PROVABLE superset, reranked on floats via
     * one semi-join against `vectors`. Exact for ANY codebook — codebook
     * quality moves the candidate count, never the answer. Output contract
@@ -211,25 +219,6 @@ final class PQIndex(val codes: DataFrame,
     bounds.where(col("dlo") <= t0 + 2e-4 * (1.0 + t0) * (1.0 + t0)).count()
   }
 
-  /** Approximate top-k by ADC: Σ_s table_s[code_s]. Same output contract as
-    * [[ExactKNN.topK]] (score = 1/(1+d²-approx), desc, id tiebreak).
-    * `among` restricts scoring to a candidate id set (left-semi join) — the
-    * IVF-probe composition used by the facade's ivfpq path. */
-  def search(query: Array[Double], k: Int, among: Option[DataFrame] = None): DataFrame = {
-    val tables = adcTables(query)
-    // literal ARRAY<ARRAY<DOUBLE>>, broadcast with the plan (m×256 doubles)
-    val tablesCol: Column = array(tables.map(t => array(t.map(lit): _*)): _*)
-    val dist = (0 until m).map(s =>
-      element_at(element_at(tablesCol, s + 1), element_at(col("codes"), s + 1) + 1))
-      .reduce(_ + _)
-    val basis = among match {
-      case Some(cand) => codes.join(cand.select(col("id")), Seq("id"), "left_semi")
-      case None => codes
-    }
-    basis.select(col("id"), (lit(1.0) / (lit(1.0) + dist)).as("score"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-  }
 }
 
 object PQIndex {

@@ -1,5 +1,6 @@
 package graft.vector
 
+import graft.plans.{KnnScorer, KnnTopK}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -18,10 +19,10 @@ import org.apache.spark.storage.StorageLevel
   * in [[PQIndex.searchExact]] (d̂ = ‖q − (centroid + ĉ(r))‖² is the
   * distance to the full reconstruction, so √d̂ ± err brackets ‖q − x‖ by
   * the triangle inequality) — a provable candidate superset from a
-  * codes-only pass, float-reranked. Every rung computes d̂ as one per-row
+  * codes-only pass, float-reranked. Both rungs compute d̂ as one per-row
   * fold over flat ADC tables built by [[graft.expr.VecKernels.adcTable]]:
-  * the exact rung and the single-query [[search]] ship [[flatAdc]] in a
-  * task closure; [[searchBatch]] runs the fused
+  * the exact rung ships [[flatAdc]] in a task closure; the approximate
+  * [[searchBatch]] (one query or N) runs the fused
   * [[graft.plans.KnnTopK]] operator, which builds each query's tables
   * once per task for its probed cells only.
   *
@@ -74,8 +75,7 @@ final class ResidualPQ(val codes: DataFrame, // (id, cluster, codes, err)
   /** The per-query flat ADC table (round 17/18): entry
     * [c·m·kk + s·kk + j] = ‖(q − centroid_c)_s − codebook_s(j)‖², built
     * driver-side per query (FAISS's per-probe discipline, nlist·m·|book|
-    * doubles) and shipped in a task closure — shared by the exact rung's
-    * bounds and (round 18, VERDICT #7) the approximate ADC [[search]]. */
+    * doubles) and shipped in a task closure — the exact rung's bounds. */
   private def flatAdc(query: Array[Double]): Array[Double] = {
     requireCoarse()
     val kk = codebooks.map(_.length).max
@@ -88,134 +88,55 @@ final class ResidualPQ(val codes: DataFrame, // (id, cluster, codes, err)
   private def requireCoarse(): Unit = require(centroids.nonEmpty,
     "ResidualPQ has no coarse centroids — cannot build ADC tables")
 
-  /** FAISS `IndexIVFPQ`'s actual QUERY path (round 11 — the approximate
-    * ADC rung beside [[searchExact]]'s exact one): the `nprobe` coarse
-    * cells nearest to q are selected driver-side (the centroid table is
-    * nlist × dim doubles — never corpus-sized), the codes frame prunes to
-    * those clusters (at rest this is partition pruning on a
-    * `partitionBy(cluster)` layout), and the broadcast per-cluster ADC
-    * frame join + ONE map-side-combined sum computes d̂ = ‖q − recon‖²
-    * over probed rows only. Approximate on two axes exactly like FAISS
-    * (quantized distances + probed subset); recall pinned in
-    * ResidualPQSpec, never fixed contents. Output contract =
-    * [[ExactKNN.topK]]: (id, score = 1/(1+d̂)), score desc, id asc. */
-  def search(query: Array[Double], k: Int, nprobe: Int = 4,
-             restrict: Option[DataFrame] = None): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
-    val probed = centroids.sortBy { case (_, cen) =>
-      var d = 0.0; var i = 0
-      while (i < dim) { val x = query(i) - cen(i); d += x * x; i += 1 }
-      d
-    }.take(nprobe).map(_._1)
-    // `restrict` (first column = id) thins the PROBED rows before scoring —
-    // the facade's filter-pushed-into-the-probe contract: cluster pruning
-    // first, then the allow-list semi-join, so a filtered query still
-    // reads nprobe/nlist of the codes
-    val pruned = codes.where(col("cluster").isin(probed.map(Int.box): _*))
-    val basis = restrict
-      .map(r => pruned.join(
-        r.select(col(r.columns(0)).cast("long").as("id")), Seq("id"), "left_semi"))
-      .getOrElse(pruned)
-    // Round 18 (VERDICT #7 — the exactBounds kernel applied to the
-    // approximate rung): d̂ as one per-row fold over the flat ADC closure
-    // table, replacing the codes explode + broadcast join + groupBy re-key
-    // (a probed-rows×m shuffle per query whose only job was summing m
-    // same-row lookups). Fixed ascending-s fold; the old shuffle-merge sum
-    // order was nondeterministic, so this is strictly tighter pinning.
-    // Malformed persisted codes fail with a named error instead of an
-    // executor ArrayIndexOutOfBounds (round-17 ADVICE).
-    val flat = flatAdc(query)
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val mm = m
-    val kkc = codebooks.map(_.length).max
-    basis
-      .select(col("id").cast("long"), col("cluster").cast("int"),
-        col("codes").cast("array<int>"))
-      .as[(Long, Int, Seq[Int])]
-      .mapPartitions(_.map { case (id, cluster, cs) =>
-        val base = cluster * mm * kkc
-        require(base >= 0 && base + mm * kkc <= flat.length,
-          s"ResidualPQ codes row $id has cluster $cluster outside the trained quantizer")
-        var dhat = 0.0
-        var s = 0
-        while (s < mm) {
-          val code = cs(s)
-          require(code >= 0 && code < kkc,
-            s"ResidualPQ codes row $id has code $code outside the trained codebooks")
-          dhat += flat(base + s * kkc + code); s += 1
-        }
-        (id, dhat)
-      })
-      .toDF("id", "dist")
-      .select(col("id"), (lit(1.0) / (lit(1.0) + col("dist"))).as("score"))
-      .orderBy(col("score").desc, col("id").asc)
-      .limit(k)
-  }
-
-  /** BULK residual ADC: N queries against the compressed corpus in one
-    * pass of the fused [[graft.plans.KnnTopK]] operator — the batch analog
-    * of [[search]], with the same probe sets (each query's `nprobe`
-    * nearest centroids, ties by cluster id) and the same fixed
-    * ascending-s fold. Each task inverts the probe sets into cell →
-    * queries and builds a query's ADC tables once, only for its probed
-    * cells; a row is scored only against the queries probing its cell.
-    * Only (qid, qv) is broadcast, never a table. A code outside its
+  /** FAISS `IndexIVFPQ`'s actual QUERY path, one query or N (the
+    * approximate ADC rung beside [[searchExact]]'s exact one), in one pass
+    * of the fused [[graft.plans.KnnTopK]] operator: each query's probe set
+    * is its `nprobe` nearest centroids (ties by cluster id), each task
+    * inverts the probe sets into cell → queries and builds a query's ADC
+    * tables once, only for its probed cells, and a row's d̂ = ‖q − recon‖²
+    * is one fixed ascending-s fold, scored only against the queries
+    * probing its cell. Only (qid, qv) is broadcast, never a table.
+    * Approximate on two axes exactly like FAISS (quantized distances +
+    * probed subset); recall pinned in ResidualPQSpec, never fixed
+    * contents. `restrict` narrows the codes below the operator: an id
+    * allow-list and/or a cell set ([[probedCells]] of the block, partition
+    * pruning on a `partitionBy(cluster)` layout). A code outside its
     * codebook, or an index without coarse centroids, fails with a named
-    * error. Output contract = [[PQIndex.searchBatch]]: (qid, id, score),
-    * (score desc, id asc) per qid. Qids must identify ONE query each: a
-    * repeated qid would merge two queries' heaps, and collapsing
+    * error. Output contract = [[PQIndex.searchBatch]]: (qid, id, score =
+    * 1/(1+d̂)), (score desc, id asc) per qid. Qids must identify ONE query
+    * each: a repeated qid would merge two queries' heaps, and collapsing
     * duplicates has no defined winner in a distributed plan (round-12
     * ADVICE: the old `dropDuplicates` was a nondeterministic pick).
     * Uniqueness is asserted by the scorer on the collected query block
     * (no extra job runs): duplicate qids fail the query with a named
     * error. */
   def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
-                  k: Int, nprobe: Int = 4): DataFrame = {
+                  k: Int, nprobe: Int = 4,
+                  restrict: KnnTopK.Restrict = KnnTopK.Restrict.none): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1: $nprobe")
     requireCoarse()
-    val q = queries.select(col(qidCol).as("qid"),
-      col(qvecCol).cast("array<double>").as("qv"))
-    graft.plans.KnnTopK(
-      codes.select(col("id"), col("codes").cast("array<int>").as("codes"),
+    KnnTopK(
+      restrict(codes).select(col("id"), col("codes").cast("array<int>").as("codes"),
         col("cluster").cast("int").as("cluster")),
-      q, k, graft.plans.KnnScorer.Adc(codebooks, centroids, nprobe))
+      queries.select(col(qidCol).as("qid"), col(qvecCol).cast("array<double>").as("qv")),
+      k, scorer(nprobe))
   }
+
+  /** The cells a block of query vectors probes at `nprobe` (None: all). */
+  def probedCells(queries: Seq[Array[Double]], nprobe: Int): Option[Seq[Int]] =
+    scorer(nprobe).probedCells(queries)
+
+  private def scorer(nprobe: Int): KnnScorer.Adc = KnnScorer.Adc(codebooks, centroids, nprobe)
 
   /** EXACT top-k through the residual codes: pass 1 joins the exploded
     * codes to the broadcast per-cluster ADC frame and brackets each row
     * with its stored err; T = k-th smallest upper bound (+ the rounded-tie
     * slack); survivors float-rerank via one semi-join. Output contract =
-    * [[ExactKNN.topK]] with the oracle's rounded-order tie semantics.
-    * `restrict` (first column = id) narrows the search to an allow-list:
-    * both the bound pass and the rerank see only allowed rows, so T is the
-    * k-th smallest RESTRICTED upper bound — a global T over unfiltered
-    * codes could sit below a restricted winner and wrongly prune it. */
+    * [[ExactKNN.topK]] with the oracle's rounded-order tie semantics. */
   def searchExact(query: Array[Double], k: Int,
-                  vectors: DataFrame, idCol: String, vecCol: String,
-                  restrict: Option[DataFrame] = None): DataFrame =
-    exactTopK(query, k, vectors, idCol, vecCol, restrict, rounded = true)
-
-  /** [[searchExact]] with RAW scores and the raw tie order — bit-identical
-    * to [[ExactKNN.topK]] over the same vectors (same squaredL2/distToScore
-    * expressions on the rerank). The facade's `ivfpq` exact escape hatch
-    * (round 12): T needs no rounding slack because every true top-k row
-    * has d ≤ (k-th smallest true d) ≤ (k-th smallest dhi) = T, so the
-    * dlo ≤ T survivors are a provable superset under the raw order too. */
-  def searchExactRaw(query: Array[Double], k: Int,
-                     vectors: DataFrame, idCol: String, vecCol: String,
-                     restrict: Option[DataFrame] = None): DataFrame =
-    exactTopK(query, k, vectors, idCol, vecCol, restrict, rounded = false)
-
-  private def exactTopK(query: Array[Double], k: Int,
-                        vectors: DataFrame, idCol: String, vecCol: String,
-                        restrict: Option[DataFrame], rounded: Boolean): DataFrame = {
+                  vectors: DataFrame, idCol: String, vecCol: String): DataFrame = {
     import graft.functions.VectorFunctions
-    val allow = restrict.map(r =>
-      r.select(col(r.columns(0)).cast("long").as("id")))
-    val bounds = allow
-      .map(a => exactBounds(query).join(a, Seq("id"), "left_semi"))
-      .getOrElse(exactBounds(query))
+    val bounds = exactBounds(query)
     val t0row = bounds.select(col("dhi")).orderBy(col("dhi").asc).limit(k)
       .agg(max(col("dhi"))).head()
     val base = vectors.select(col(idCol).cast("long").as("id"),
@@ -223,13 +144,12 @@ final class ResidualPQ(val codes: DataFrame, // (id, cluster, codes, err)
     if (t0row.isNullAt(0))
       return base.select(col("id"), lit(0.0).as("score")).limit(0)
     val t0 = t0row.getDouble(0)
-    val t = if (rounded) t0 + 2e-4 * (1.0 + t0) * (1.0 + t0) else t0
+    val t = t0 + 2e-4 * (1.0 + t0) * (1.0 + t0) // rounded-tie slack (SQIndex doc)
     val qc = VectorFunctions.vecLit(query)
-    val rawScore = VectorFunctions.distToScore(
-      VectorFunctions.squaredL2(col("vector"), qc))
     base.join(bounds.where(col("dlo") <= t).select(col("id")), Seq("id"), "left_semi")
       .select(col("id"),
-        (if (rounded) round(rawScore, 4) else rawScore).as("score"))
+        round(VectorFunctions.distToScore(
+          VectorFunctions.squaredL2(col("vector"), qc)), 4).as("score"))
       .orderBy(col("score").desc, col("id").asc)
       .limit(k)
   }

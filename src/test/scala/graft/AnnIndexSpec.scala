@@ -2,12 +2,18 @@ package graft
 
 import graft.model.Manifest
 import graft.vector.AnnIndex
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The facade's one vector-index slot ([[AnnIndex]]): what each effective
-  * type caches, what a save/load round trip restores, and that a missing
-  * artifact fails loudly by name. */
-class AnnIndexSpec extends AnyFunSuite {
+  * type caches, what a save/load round trip restores, that a missing
+  * artifact fails loudly by name, that a single query is the batch path's
+  * block of one, and that a lazily loaded IVF reads only probed cells. */
+class AnnIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private def sc = spark.sparkContext
 
@@ -191,4 +197,135 @@ class AnnIndexSpec extends AnyFunSuite {
         db2.close()
       } finally dirs.foreach(graft.streaming.StreamingGates.rmrf)
     }
+
+  private def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  /** `queryVector` as (qid, id, score) rows. */
+  private def single(db: VectorDatabase, qid: Long, q: Array[Float], k: Int,
+                     pre: Option[org.apache.spark.sql.Column]): Seq[(Long, Long, java.lang.Double)] =
+    db.queryVector(q, topK = k, preFilter = pre).collect().toSeq
+      .map(r => (qid, r.getLong(0), java.lang.Double.valueOf(r.getDouble(1))))
+
+  private val bulkSchema = StructType(Seq(StructField("id", LongType, nullable = false),
+    StructField("doc", StringType), StructField("vector", ArrayType(FloatType, containsNull = false))))
+
+  for (t <- Manifest.knownTypes.toSeq.sorted)
+    test(s"[$t] single == batch; exact configs == brute force at partitions {1,3,7} x shuffle {1,7}") {
+      val (n, k, nlist) = (48, 5, 4)
+      val local = new scala.util.Random(t.hashCode)
+      def v(): Array[Float] = Array.fill(dim)(local.nextFloat())
+      val rows = (0 until n).map(i => (i.toLong, v()))
+      val corpus = rows.map { case (id, x) => (id, x.map(_.toDouble)) }
+      // one query on a corpus vector (a distance-0 hit), two off it
+      val qs = Seq(rows(5)._2, v(), v())
+      val filters = Seq(None -> ((_: Long) => true),
+        Some(col("id") % 3 =!= 0) -> ((id: Long) => id % 3 != 0))
+      val tuned = t match {
+        case "ivf" | "ivfpq" => 10 // nprobe 1 of 4; 4 of 4 under a filter
+        case "graph" | "hnsw" => 8 // a beam of k ≪ n; 4·k under a filter
+        case _ => 50
+      }
+      // the exact escape hatches, where a type has one
+      val exactEf = t match {
+        case "ivf" | "ivfpq" => Some(10 * nlist)
+        case "graph" | "hnsw" => Some(n)
+        case "flat" => Some(tuned)
+        case _ => None
+      }
+      for (sp <- Seq(1, 7); parts <- Seq(1, 3, 7)) withShufflePartitions(sp) {
+        val at = s"[$t] parts=$parts sp=$sp"
+        val db = VectorDatabase.create(spark, dim, t, ivfClusters = nlist, efSearch = tuned)
+        db.addBulkWithIds(spark.createDataFrame(sc.parallelize(rows.map { case (id, x) =>
+          Row(id, s"doc $id", x.toSeq) }, parts), bulkSchema), "doc", "vector", None, "id")
+        assert(db.data.rdd.getNumPartitions == parts, at)
+        for ((pre, _) <- filters) {
+          val singles = qs.indices.map(j => single(db, j.toLong, qs(j), k, pre))
+          val index = db.indexIfBuilt.getOrElse(fail(s"$at: no index after a query"))
+          val batch = BruteForceKnn.collect(index.searchBatch(db.data, db.count, db.manifest,
+            qs.indices.map(j => (j.toLong, qs(j).map(_.toDouble))), k, pre))
+          for (j <- qs.indices) {
+            val want = batch.filter(_._1 == j)
+            assert(want.length == k, s"$at pre=$pre q$j: batch gave $want")
+            assert(BruteForceKnn.same(singles(j), want),
+              s"$at pre=$pre q$j: single ${singles(j)} != batch $want")
+          }
+        }
+        db.indexIfBuilt match {
+          case Some(AnnIndex.Pq(pq)) =>
+            val codes = BruteForceKnn.adcRows(pq.codes)
+            for ((pre, keep) <- filters; j <- qs.indices) {
+              val want = BruteForceKnn.topK(codes.filter(r => keep(r._1)),
+                Seq((j.toLong, qs(j).map(_.toDouble))), k, BruteForceKnn.Adc(pq.codebooks, Map.empty))
+              assert(BruteForceKnn.same(single(db, j.toLong, qs(j), k, pre), want), s"$at pre=$pre q$j")
+            }
+          case _ =>
+        }
+        exactEf.foreach { ef =>
+          db.setEf(ef)
+          for ((pre, keep) <- filters; j <- qs.indices) {
+            val want = BruteForceKnn.topK(corpus.filter(r => keep(r._1)),
+              Seq((j.toLong, qs(j).map(_.toDouble))), k, BruteForceKnn.L2Sq)
+            assert(BruteForceKnn.same(single(db, j.toLong, qs(j), k, pre), want),
+              s"$at efSearch=$ef pre=$pre q$j")
+          }
+        }
+        db.close()
+      }
+    }
+
+  test("lazy ivf: queryVector and the hybrid probe arm read only the probed cluster directories") {
+    import spark.implicits._
+    val nlist = 8
+    val local = new scala.util.Random(5)
+    val vs = Seq.fill(80)(Array.fill(dim)(local.nextFloat()))
+    // efSearch 10 → nprobe 1 of 8
+    val db = VectorDatabase.create(spark, dim, "ivf", ivfClusters = nlist, efSearch = 10)
+    db.add(vs.indices.map(i => s"doc $i"), vs, None)
+    val p = tmpDir("prune")
+    try {
+      db.save(p.toString)
+      db.close()
+      // the eager load caches the same parquet read, which a later lazy
+      // read would then hit: measure the lazy load before it exists
+      val lazyDb = VectorDatabase.load(spark, p.toString, lazyIndexes = true)
+      val ivf = lazyDb.indexIfBuilt match {
+        case Some(AnnIndex.Ivf(i)) => i
+        case other => fail(s"slot holds $other")
+      }
+      assert(ivf.nlist == nlist)
+      def probed(qs: Seq[Array[Float]]): Set[Int] =
+        qs.map(q => ivf.probeOrder(q.map(_.toDouble)).head).toSet
+      // the cluster directories each assignments scan of `body` opened
+      def partitionsRead(body: => Unit): Seq[Long] =
+        SparkProbe.plans(body).flatMap(plan => collect(plan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.endsWith("assignments")) =>
+            s.metrics("numPartitions").value
+        })
+      val q = vs(5)
+      assert(partitionsRead(lazyDb.queryVector(q, 3).collect()) == Seq(probed(Seq(q)).size.toLong))
+      def pairs(db: VectorDatabase) =
+        db.queryVector(q, 3).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+      val block = Seq(3, 17, 42).map(vs)
+      val cells = probed(block)
+      assert(cells.size < nlist, s"the block probes every cell: $cells")
+      val qdf = block.zipWithIndex.map { case (v, j) => (j.toLong, s"doc ${j * 7}", v.map(_.toDouble).toSeq) }
+        .toDF("qid", "qtext", "qv")
+      def hybrid(db: VectorDatabase) =
+        db.hybridSearchBatch(qdf, "qid", "qtext", "qv", topK = 3, exactThreshold = 0L).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(partitionsRead(hybrid(lazyDb)) == Seq(cells.size.toLong))
+      val (lazyPairs, lazyHybrid) = (pairs(lazyDb), hybrid(lazyDb))
+      val eager = VectorDatabase.load(spark, p.toString)
+      assert(lazyPairs == pairs(eager))
+      assert(lazyHybrid == hybrid(eager))
+      eager.close(); lazyDb.close()
+    } finally graft.streaming.StreamingGates.rmrf(p)
+  }
 }

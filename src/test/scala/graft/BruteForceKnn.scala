@@ -66,6 +66,14 @@ object BruteForceKnn {
     df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")).collect().toSeq
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray))
 
+  /** The [[Adc]] rows of a PQ codes frame: (id, cell +: codes), cell 0
+    * when the frame has no `cluster` column (plain PQ). */
+  def adcRows(codes: DataFrame): Seq[(Long, Vec)] = {
+    val cell = if (codes.columns.contains("cluster")) col("cluster") else org.apache.spark.sql.functions.lit(0)
+    codes.select(col("id").cast("long"), cell.cast("int"), col("codes")).collect().toSeq
+      .map(r => (r.getLong(0), (r.getInt(1) +: r.getSeq[Int](2)).map(_.toDouble).toArray))
+  }
+
   /** > 0 when score `a` ranks before `b`. */
   def compareScores(a: java.lang.Double, b: java.lang.Double): Int =
     if (a == null) { if (b == null) 0 else -1 }

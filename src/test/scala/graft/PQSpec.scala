@@ -198,35 +198,72 @@ class PQSpec extends AnyFunSuite {
   }
 
   test("searchBatch: the distributed ADC join matches the per-query driver-table path") {
+    // the per-query driver-table path is BruteForceKnn.Adc; the single-query
+    // `search` is the batch path's block of one, so it answers the same
     import org.apache.spark.sql.functions.col
     val qids = Seq(5L, 42L, 99L)
     val queries = emb.where(col("vec_id").isin(qids.map(Long.box): _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val batch = pq.searchBatch(queries, "qid", "qv", k = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        math.floor(r.getDouble(2) * 1e9 + 0.5) / 1e9)).toSeq
-    val single = qids.flatMap { qid =>
-      pq.search(queryVec(qid), 4).collect()
-        .map(r => (qid, r.getLong(0), math.floor(r.getDouble(1) * 1e9 + 0.5) / 1e9))
-    }.sortBy { case (q, id, sc) => (q, -sc, id) }
-    assert(batch == single)
+    val want = BruteForceKnn.topK(BruteForceKnn.adcRows(pq.codes),
+      BruteForceKnn.rows(queries, "qid", "qv"), 4, BruteForceKnn.Adc(pq.codebooks, Map.empty))
+    val batch = BruteForceKnn.collect(pq.searchBatch(queries, "qid", "qv", k = 4))
+    assert(BruteForceKnn.same(batch, want), s"\n got: $batch\nwant: $want")
+    for (qid <- qids) {
+      val single = pq.search(queryVec(qid), 4).collect().toSeq
+        .map(r => (qid, r.getLong(0), java.lang.Double.valueOf(r.getDouble(1))))
+      assert(BruteForceKnn.same(single, want.filter(_._1 == qid)), s"qid $qid: $single")
+    }
   }
 
   test("searchBatch: a code outside its codebook fails with a named error") {
     import org.apache.spark.sql.functions.{array, col, lit, when}
-    // row 42's first code points one past its codebook: unchecked, the
-    // lookup would read the next subspace's table and score it silently
-    val book = pq.codebooks.head.length
-    val corrupt = pq.codes.withColumn("codes", when(col("id") === 42L,
-      array((lit(book) +: Seq.fill(pq.m - 1)(lit(0))): _*)).otherwise(col("codes")))
-    val bad = new PQIndex(corrupt, pq.codebooks, pq.dim)
-    val queries = emb.where(col("vec_id") === 5L)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val e = intercept[Exception](bad.searchBatch(queries, "qid", "qv", k = 3).collect())
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else String.valueOf(t.getMessage) +: msgs(t.getCause)
-    assert(msgs(e).exists(_.contains(s"PQIndex codes row 42 has code $book outside the trained codebooks")),
-      s"expected the named error, got: ${msgs(e)}")
+    def failsNamed(what: String, id: Long, code: Int)(run: => Unit): Unit = {
+      val e = intercept[Exception](run)
+      assert(msgs(e).exists(_.contains(s"PQIndex codes row $id has code $code outside the trained codebooks")),
+        s"$what: expected the named error, got: ${msgs(e)}")
+    }
+    def corrupt(codes: org.apache.spark.sql.DataFrame, id: Long, code: Int, m: Int) =
+      codes.withColumn("codes", when(col("id") === id,
+        array((lit(code) +: Seq.fill(m - 1)(lit(0))): _*)).otherwise(col("codes")))
+    val queries = emb.where(col("vec_id") === 5L)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    // row 42's first code points one past its codebook (unchecked, the
+    // lookup would read the next subspace's table and score it silently)
+    // or at -2 (unchecked, an element_at lookup counts it from the end)
+    val book = pq.codebooks.head.length
+    for (code <- Seq(book, -2)) {
+      val bad = new PQIndex(corrupt(pq.codes, 42L, code, pq.m), pq.codebooks, pq.dim)
+      failsNamed(s"searchBatch code=$code", 42L, code)(
+        bad.searchBatch(queries, "qid", "qv", k = 3).collect())
+      failsNamed(s"search code=$code", 42L, code)(bad.search(queryVec(5), 3).collect())
+    }
+    // and through a pq collection's queryVector, over codes saved corrupt
+    val rnd = new scala.util.Random(3)
+    val vs = Seq.fill(40)(Array.fill(8)(rnd.nextFloat()))
+    val db = VectorDatabase.create(spark, 8, "pq")
+    db.add(vs.indices.map(i => s"doc $i"), vs, None)
+    db.queryVector(vs(0), topK = 1).collect()
+    val (m, dbBook) = db.indexIfBuilt match {
+      case Some(graft.vector.AnnIndex.Pq(p)) => (p.m, p.codebooks.head.length)
+      case other => fail(s"slot holds $other")
+    }
+    for (code <- Seq(dbBook, -2)) {
+      val dir = java.nio.file.Files.createTempDirectory("graftpq_corrupt")
+      try {
+        db.save(dir.toString)
+        val codesDir = dir.resolve("index/pq/codes")
+        corrupt(spark.read.parquet(codesDir.toString), 7L, code, m)
+          .write.parquet(dir.resolve("codes_bad").toString)
+        graft.streaming.StreamingGates.rmrf(codesDir)
+        java.nio.file.Files.move(dir.resolve("codes_bad"), codesDir)
+        val loaded = VectorDatabase.load(spark, dir.toString)
+        try failsNamed(s"queryVector code=$code", 7L, code)(loaded.queryVector(vs(3), topK = 3).collect())
+        finally loaded.close()
+      } finally graft.streaming.StreamingGates.rmrf(dir)
+    }
+    db.close()
   }
 
   test("anchor-codebook build: codes bounded by anchor count, deterministic") {
@@ -245,7 +282,9 @@ class PQSpec extends AnyFunSuite {
   test("search restricted to a candidate set never returns outside it") {
     import org.apache.spark.sql.functions.col
     val cand = emb.select(col("vec_id").as("id")).where(col("id") < 100)
-    val r = pq.search(queryVec(7), 10, among = Some(cand)).collect().map(_.getLong(0))
+    val r = pq.searchBatch(graft.plans.KnnTopK.block(spark, Seq((0L, queryVec(7)))), "qid", "qv", 10,
+        graft.plans.KnnTopK.Restrict(ids = Some(cand)))
+      .collect().map(_.getLong(1))
     assert(r.nonEmpty && r.forall(_ < 100))
   }
 

@@ -14,10 +14,15 @@ class PlanShapeSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
-  test("knn_l2: top-k plans as TakeOrderedAndProject, no global sort, no shuffle of the corpus") {
+  /** The plan below the fused top-k merge: the per-partition heaps and
+    * the corpus they read. A sort above the merge orders ≤ k rows. */
+  private def belowMerge(p: String): String = p.substring(math.max(0, p.indexOf("KnnTopKMerge")))
+
+  test("knn_l2: top-k runs on KnnTopK heaps, no global sort, no shuffle of the corpus") {
     val p = plan("knn_l2")
-    assert(p.contains("TakeOrderedAndProject"), p)
-    assert(!p.contains("SortExec"), s"unexpected full sort:\n$p")
+    assert(p.contains("KnnTopK 10, exact L2Sq"), p)
+    assert(!p.contains("Exchange"), s"unexpected shuffle:\n$p")
+    assert(!belowMerge(p).contains("Sort ["), s"unexpected full sort:\n$p")
   }
 
   test("dedup_embedding: pure equi-join structure — degrades to shuffle joins, never NLJ") {
@@ -43,10 +48,12 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("ann_lsh: candidate filter precedes the re-rank (filter, then top-k)") {
+    // the bucket filter is the LSH scorer's per-pair check before each
+    // exact re-rank inside the top-k operator (its candidate set is pinned
+    // against brute force in KnnTopKSpec)
     val p = plan("ann_lsh")
-    assert(p.contains("TakeOrderedAndProject"), p)
-    assert(p.contains("Filter"), p)
-    assert(!p.contains("SortExec"), p)
+    assert(p.contains("KnnTopK 10, lsh radius="), p)
+    assert(!belowMerge(p).contains("Sort ["), s"unexpected full sort:\n$p")
   }
 
   test("knn_batch_topk: custom heap operator, not a window sort") {
@@ -56,9 +63,10 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("ann_pq: ADC is a scan-side projection (no join against a codebook table)") {
+    // ADC scores inside the top-k operator's scan of the codes
     val p = plan("ann_pq")
-    assert(p.contains("TakeOrderedAndProject"), p)
-    assert(!p.contains("SortMergeJoin"), p)
+    assert(p.contains("KnnTopK 10, pq adc"), p)
+    assert(!p.contains("Join"), p)
   }
 
   test("tpch_q4/anti_inactive_customers: EXISTS/NOT EXISTS stay semi/anti joins — rows never multiplied") {

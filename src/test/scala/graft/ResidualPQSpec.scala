@@ -97,13 +97,18 @@ class ResidualPQSpec extends AnyFunSuite {
     res.dispose(); raw.dispose(); civf.dispose(); data.unpersist()
   }
 
+  /** One query through the residual ADC probe: its ids, best first. */
+  private def probeIds(q: Array[Double], k: Int, nprobe: Int): Array[Long] =
+    rpq.searchBatch(graft.plans.KnnTopK.block(spark, Seq((0L, q))), "qid", "qv", k, nprobe)
+      .collect().map(_.getLong(1))
+
   test("search (coarse probe + residual ADC): recall >= 0.5 full-probe, probe-subset discipline") {
     // full probe: approximate only through quantization — PQSpec's bound
     val recalls = (0L until 10L).map { i =>
       val q = queryVec(i * 11)
       val exact = ExactKNN.topK(emb, "vec_id", "embedding", q, 10)
         .collect().map(_.getLong(0)).toSet
-      val approx = rpq.search(q, 10, nprobe = 8).collect().map(_.getLong(0)).toSet
+      val approx = probeIds(q, 10, nprobe = 8).toSet
       (exact intersect approx).size / 10.0
     }
     val mean = recalls.sum / recalls.size
@@ -112,9 +117,9 @@ class ResidualPQSpec extends AnyFunSuite {
     // query's own vector still ranks first (self-distance = its own
     // quantization error, minimal by construction)
     val q = queryVec(42)
-    val got = rpq.search(q, 3, nprobe = 2).collect()
-    assert(got.head.getLong(0) == 42L, s"self not first: ${got.toSeq}")
-    val probedRows = rpq.search(q, 2000, nprobe = 2).collect().map(_.getLong(0)).toSet
+    val got = probeIds(q, 3, nprobe = 2)
+    assert(got.head == 42L, s"self not first: ${got.toSeq}")
+    val probedRows = probeIds(q, 2000, nprobe = 2).toSet
     val clusterOf = rpq.codes.select(col("id"), col("cluster"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val probedClusters = probedRows.map(clusterOf)
@@ -122,18 +127,26 @@ class ResidualPQSpec extends AnyFunSuite {
   }
 
   test("searchBatch == per-query search at the same nprobe; full-probe recall bound holds") {
-    import org.apache.spark.sql.functions.col
+    // both shapes against the driver-side brute-force ADC over each
+    // query's probed cells: the batch, and each query as a block of one
     val qids = Seq(7L, 29L, 99L)
     val queries = emb.where(col("vec_id").isin(qids.map(Long.box): _*))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val codes = BruteForceKnn.adcRows(rpq.codes)
+    val cell = codes.map { case (id, x) => id -> x(0).toInt }.toMap
+    def probe(q: Array[Double], nprobe: Int): Set[Int] =
+      graft.expr.VecKernels.nearestClusters(q, rpq.centroids, nprobe).toSet
     for (np <- Seq(2, 8)) {
-      val batch = rpq.searchBatch(queries, "qid", "qv", k = 5, nprobe = np)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.rint(r.getDouble(2) * 1e9))).toSeq
-      val single = qids.flatMap(qid =>
-        rpq.search(queryVec(qid), 5, nprobe = np).collect()
-          .map(r => (qid, r.getLong(0), math.rint(r.getDouble(1) * 1e9))))
-      assert(batch.sorted == single.sorted, s"nprobe=$np: batch != per-query")
+      val want = BruteForceKnn.topK(codes, BruteForceKnn.rows(queries, "qid", "qv"), 5,
+        BruteForceKnn.Adc(rpq.codebooks, rpq.centroids.toMap),
+        eligible = (_, q, id) => probe(q, np).contains(cell(id)))
+      val batch = BruteForceKnn.collect(rpq.searchBatch(queries, "qid", "qv", k = 5, nprobe = np))
+      assert(BruteForceKnn.same(batch, want), s"nprobe=$np\n got: $batch\nwant: $want")
+      for (qid <- qids) {
+        val single = BruteForceKnn.collect(rpq.searchBatch(
+          graft.plans.KnnTopK.block(spark, Seq((qid, queryVec(qid)))), "qid", "qv", k = 5, nprobe = np))
+        assert(BruteForceKnn.same(single, want.filter(_._1 == qid)), s"nprobe=$np qid=$qid: $single")
+      }
     }
     val recalls = qids.map { qid =>
       val exact = ExactKNN.topK(emb, "vec_id", "embedding", queryVec(qid), 5)

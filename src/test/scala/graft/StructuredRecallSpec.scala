@@ -95,7 +95,8 @@ class StructuredRecallSpec extends AnyFunSuite {
     val rpq = graft.vector.ResidualPQ.build(ivf, dim = 64, m = 16)
     val recalls = qids.map { id =>
       val q = qvec(id)
-      rpq.search(q, 10, nprobe = 2).collect().map(_.getLong(0)).toSet
+      rpq.searchBatch(graft.plans.KnnTopK.block(spark, Seq((0L, q))), "qid", "qv", 10, nprobe = 2)
+        .collect().map(_.getLong(1)).toSet
         .intersect(exactTop(q, 10)).size / 10.0
     }
     val recall = recalls.sum / recalls.size
