@@ -77,33 +77,6 @@ object GraphRecallCurve {
         f"candidates = $cand%9d (${frac * 100}%5.1f%% of nodes x corpus)  ${dt}%6.2f s")
     }
     ivf.dispose()
-
-    // ---- GraphIndex tuned-beam sweep over the same nodes (round 6):
-    // recall@k vs ef at fixed hop budget — the production knob of the
-    // real graph index; ef=0 (unbounded) is the exact arm gated by
-    // ann_graph, pinned here as the curve's ceiling.
-    val tB = System.nanoTime()
-    val gi = graft.vector.GraphIndex.build(cached, "vec_id", "embedding", k = 8)
-    println(f"[graph] graphindex build (${factor}x): ${(System.nanoTime() - tB) / 1e9}%6.2f s")
-    val qdf = cached.where(col("vec_id") < nNodes)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exactTop = exact // the nprobe = nlist graph over the same nodes
-    for (ef <- Seq(16, 32, 64, 128, 0)) {
-      val t0 = System.nanoTime()
-      // k+1 then drop the guaranteed self-hit, like knnGraph
-      val got = gi.searchBatch(qdf, "qid", "qv", k + 1, ef = ef, maxHops = 8)
-        .where(col("qid") =!= col("id"))
-      val cut = graft.plans.TopK.perKey(got, Seq("qid"),
-          Seq("score" -> true, "id" -> false), k)
-        .collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(_.getLong(1)).toSet).toMap
-      val dt = (System.nanoTime() - t0) / 1e9
-      val recall = exactTop.map { case (q, ids) =>
-        cut.getOrElse(q, Set.empty).intersect(ids).size.toDouble / ids.size
-      }.sum / exactTop.size
-      println(f"[graph] graphindex ef=$ef%4d hops=8  recall@$k = $recall%.3f  ${dt}%6.2f s")
-    }
-    gi.dispose()
     spark.stop()
   }
 }

@@ -667,10 +667,11 @@ object VectorDatabase {
     * `indexType = "hnsw"` (the reference default, ldb:21) selects the REAL
     * navigable-graph index ([[graft.vector.GraphIndex]]) since round 7:
     * `m` → per-node k-NN edge count (its native hnsw meaning), `efSearch`
-    * → traversal beam width (efSearch ≥ corpus size = the exact escape
-    * hatch: unbounded beam over the connected graph), `efConstruction` →
-    * build-time edge accuracy. "graph" is an alias (round 6's opt-in
-    * name). The flip is measured, not aesthetic: SCALE.md's curves have
+    * → the beam width each shard searches with (efSearch ≥ corpus size =
+    * the exact escape hatch, the scan over the graph's vectors).
+    * `efConstruction` has no graph meaning: the edges are exact within a
+    * shard. "graph" is an alias (round 6's opt-in name). The flip is
+    * measured, not aesthetic: SCALE.md's curves have
     * the graph beam at recall 0.96+ where the IVF probe reached 0.28–0.38
     * at the reference-default ef_search on the same corpus.
     *

@@ -449,7 +449,8 @@ case class AdcFlatTables(child: Expression,
   * the relational groupBy-sum it replaces had a nondeterministic merge
   * order, so any fixed order is strictly tighter pinning). For plain PQ
   * pass `cluster = lit(0)` (the [[AdcFlatTables]] empty-centroids
-  * convention). */
+  * convention). A code outside [0, kk) fails with the named error the
+  * ADC scorer of [[graft.plans.KnnTopK]] raises. */
 case class AdcLookupSum(codesArr: Expression, cluster: Expression, tables: Expression,
                         m: Int, kk: Int)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
@@ -478,7 +479,7 @@ case class AdcLookupSum(codesArr: Expression, cluster: Expression, tables: Expre
     var s = 0
     val n = math.min(m, codes.numElements())
     while (s < n) {
-      acc += t.getDouble(base + s * kk + codes.getInt(s))
+      acc += t.getDouble(base + s * kk + AdcLookupSum.checked(codes.getInt(s), kk))
       s += 1
     }
     acc
@@ -493,7 +494,8 @@ case class AdcLookupSum(codesArr: Expression, cluster: Expression, tables: Expre
          |final int $base = $cl * ${m * kk};
          |double $acc = 0.0;
          |for (int $s = 0; $s < $n; $s++) {
-         |  $acc += $tb.getDouble($base + $s * $kk + $cs.getInt($s));
+         |  $acc += $tb.getDouble($base + $s * $kk +
+         |    graft.expr.AdcLookupSum.checked($cs.getInt($s), $kk));
          |}
          |${ev.value} = $acc;
          |""".stripMargin
@@ -501,6 +503,14 @@ case class AdcLookupSum(codesArr: Expression, cluster: Expression, tables: Expre
 
   override protected def withNewChildrenInternal(f: Expression, sec: Expression, t: Expression): Expression =
     copy(codesArr = f, cluster = sec, tables = t)
+}
+
+object AdcLookupSum {
+  /** `code` when it indexes a codebook of `kk` entries, else the named error. */
+  def checked(code: Int, kk: Int): Int = {
+    require(code >= 0 && code < kk, s"adc_lookup_sum codes row has code $code outside the trained codebooks")
+    code
+  }
 }
 
 /** |A ∩ B| of two SORTED, de-duplicated ARRAY<STRING> columns via a single

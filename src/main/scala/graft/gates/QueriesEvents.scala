@@ -184,7 +184,7 @@ private[graft] trait QueriesEvents { this: Queries.type =>
     * lazily over the whole streamed corpus at first query (a batch landing
     * AFTER a build adopts through [[graft.vector.GraphIndex.append]] — the
     * adoptBatch arm `incremental_add_graph_knn` pins off-stream).
-    * efSearch ≥ corpus ⇒ unbounded beam ⇒ shares the exact-KNN oracle;
+    * efSearch ≥ corpus ⇒ the exact scan ⇒ shares the exact-KNN oracle;
     * completes the streaming × index-family matrix (flat:
     * streaming_ingest_knn / _multibatch; graph: this gate). */
   private[graft] val streamGraphDbCache = new Memo[VectorDatabase](memoMax, "streamGraphDbCache")(_.close())

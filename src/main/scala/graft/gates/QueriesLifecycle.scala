@@ -272,14 +272,12 @@ private[graft] trait QueriesLifecycle { this: Queries.type =>
 
   /** S2+K4 incremental maintenance for the graph type — the graph analog
     * of `incremental_add_knn`: build the navigable graph over the first
-    * 90% of the embeddings (save forces the build), LOAD it (edges +
-    * vectors come off disk), `addBulk` the last 10% — the loaded graph
-    * adopts the batch through [[graft.vector.GraphIndex.append]]
-    * (tuned-beam k-NN edges into the existing graph + merged-rank
-    * skip-ring edges incident to the batch; the base graph is untouched,
-    * cost ∝ batch) — then answer the full-corpus exact-KNN oracle through
-    * the unbounded beam: appends preserve skip-ring connectivity, so the
-    * exact escape hatch survives incremental maintenance. Completes the
+    * 90% of the embeddings (save forces the build), LOAD it (nodes and
+    * their edges come off disk), `addBulk` the last 10% — the loaded graph
+    * adopts the batch through [[graft.vector.GraphIndex.append]], which
+    * re-wires only the shards the batch lands in — then answer the
+    * full-corpus exact-KNN oracle through the exact escape hatch, which
+    * survives incremental maintenance. Completes the
     * incremental matrix (ivf: incremental_add_knn; jaccard:
     * dedup_incremental; embedding: dedup_embedding_incremental; bm25:
     * text_bm25_incremental). */
@@ -295,8 +293,7 @@ private[graft] trait QueriesLifecycle { this: Queries.type =>
           col("vec_id").cast("string").as("doc"))
       val n = e.count()
       val cut = n - math.max(1L, n / 10) // the last 10% arrives as the append batch
-      // same cheap approximate-edge build as [[graphDb]] — append + query
-      // exactness ride the skip-ring, not edge quality
+      // the same build as [[graphDb]]; edges never touch the exact answer
       val db = VectorDatabase.create(spark, 64, "graph",
         efConstruction = 25, m = 8, ivfClusters = 16, efSearch = Int.MaxValue)
       db.addBulk(e.where(col("vec_id") < cut), "doc", "embedding", None, "vec_id")

@@ -241,8 +241,8 @@ private[graft] trait QueriesSearch { this: Queries.type =>
        |SELECT id, round(raw, 4) AS score FROM top ORDER BY score DESC, id""".stripMargin
 
   /** The widened-probe batch-hybrid arm through the GRAPH-typed facade:
-    * `AnnIndex.searchBatch`'s graph arm (iterative frontier traversal,
-    * unbounded beam at efSearch ≥ corpus ⇒ the probe's top-100 is exact)
+    * `AnnIndex.searchBatch`'s graph arm (the exact scan over the graph's
+    * vectors at efSearch ≥ corpus ⇒ the probe's top-100 is exact)
     * feeding the same zero-scatter + fusion pipeline — so the gate shares
     * hybrid_batch_probe's oracle VERBATIM while exercising a completely
     * different physical probe. Collection domain is identical (docs ⋈
@@ -552,24 +552,17 @@ private[graft] trait QueriesSearch { this: Queries.type =>
       LSHIndex.build(tbl(spark, dir, "embeddings"), "vec_id", "embedding",
         numHashTables = 4, bucketLength = 0.25))
 
-  /** Memoized navigable-graph index per (session, dir) — the REAL
-    * graph-traversal analog of the reference's hnsw (round 6; SURVEY §8):
-    * exact k-NN edges + the deterministic skip-ring. */
+  /** Memoized navigable-graph index per (session, dir), graft's analog of
+    * the reference's hnsw (SURVEY §8): per-shard exact k-NN edges plus the
+    * skip-ring. */
   private[graft] val graphCache = new Memo[graft.vector.GraphIndex](memoMax, "graphCache")(_.dispose())
 
   private[graft] def graphIndex(spark: SparkSession, dir: String): graft.vector.GraphIndex =
     graphCache.get(spark, dir)(
-      // graphNprobe 4/16: APPROXIMATE edges — the 100 TB build path. The
-      // gate's unbounded-beam search stays provably exact regardless
-      // (completeness rides the skip-ring connectivity, not edge
-      // quality), so this only cheapens the build, never the answer.
-      graft.vector.GraphIndex.build(tbl(spark, dir, "embeddings"), "vec_id", "embedding",
-        k = 8, nlist = 16, graphNprobe = 4))
+      graft.vector.GraphIndex.build(tbl(spark, dir, "embeddings"), "vec_id", "embedding", k = 8))
 
-  /** ANN through REAL graph traversal in its exact-recoverable
-    * configuration: unbounded beam over the connected (skip-ring) graph
-    * visits every node, so iterative frontier expansion delivers the
-    * exact batch answer and shares the exact batch oracle — the graph
+  /** The graph index's exact configuration (`ef = 0`): the scan over the
+    * graph's vectors, so it shares the exact batch oracle — the graph
     * analog of nprobe = nlist / superset radius. Tuned-beam recall is
     * pinned in GraphIndexSpec. */
   private[graft] def annGraph(spark: SparkSession, dir: String): DataFrame = {
@@ -582,7 +575,7 @@ private[graft] trait QueriesSearch { this: Queries.type =>
   }
 
   /** ann_graph's DECADE-value-check twin (round 16, r15 VERDICT #5):
-    * the same unbounded-beam exactness config over FOUR md5-SELECTED
+    * the same exact config over FOUR md5-SELECTED
     * query ids — `ORDER BY md5('agq_' || vec_id) LIMIT 4`, a selection
     * both engines derive identically at ANY corpus size — so the gate
     * runs in the driver suite at sf0.01 AND, pointed at an sf10-ind
@@ -603,12 +596,11 @@ private[graft] trait QueriesSearch { this: Queries.type =>
       .orderBy(col("qid").asc, col("score").desc, col("id").asc)
   }
 
-  /** K5 metric dispatch for the GRAPH index: the unbounded-beam traversal
-    * under COSINE scoring — the walk is metric-independent (coverage is a
-    * graph property), only the final scoring scan changes, so the exact
-    * cosine oracle is shared by the same argument as ann_graph's. Pins
-    * that the traversal operator is metric-generic like the IVF probe
-    * (ann_ivf_cosine) and the SQ8 bound (ann_sq8_cosine). */
+  /** K5 metric dispatch for the GRAPH index: its exact configuration
+    * under COSINE scoring, sharing the exact cosine oracle by the same
+    * argument as ann_graph's. Pins that the graph's search is
+    * metric-generic like the IVF probe (ann_ivf_cosine) and the SQ8 bound
+    * (ann_sq8_cosine). */
   private[graft] def annGraphCosine(spark: SparkSession, dir: String): DataFrame = {
     val e = tbl(spark, dir, "embeddings")
     val queries = e.where(col("vec_id").isin(11L, 12L, 13L))
@@ -620,20 +612,15 @@ private[graft] trait QueriesSearch { this: Queries.type =>
   }
 
   /** Memoized 'graph'-typed facade collection (docs ⋈ embeddings) at the
-    * exact escape hatch: efSearch ≥ corpus ⇒ the traversal beam is
-    * unbounded and the graph answer IS the exact answer. */
+    * exact escape hatch: efSearch ≥ corpus ⇒ the graph answer is the exact
+    * scan over the graph's vectors. */
   private[graft] val graphDbCache = new Memo[VectorDatabase](memoMax, "graphDbCache")(_.close())
 
   private[graft] def graphDb(spark: SparkSession, dir: String): VectorDatabase =
     graphDbCache.get(spark, dir) {
-      // efConstruction 25 / m 8 / ivfClusters 16 ⇒ a cheap
-      // approximate-edge build (k=8, nlist=16, graphNprobe=2, insert
-      // beam 25), one notch below the ann_graph gate index's nprobe=4.
-      // Edge quality never touches these gates' answers —
-      // the unbounded beam (efSearch ≥ corpus) is exact over the skip-ring
-      // regardless — so the reference-default exact-edge build (m=16,
-      // nprobe=nlist=100) only taxed the bench cold run (r8 VERDICT #2:
-      // facade_graph_knn 38 s driver cold).
+      // m 8 ⇒ 8 k-NN edges per node, as the ann_graph gate index. Edges
+      // never touch these gates' answers (efSearch ≥ corpus is the exact
+      // scan)
       val db = VectorDatabase.create(spark, 64, "graph",
         efConstruction = 25, m = 8, ivfClusters = 16, efSearch = Int.MaxValue)
       db.addBulk(
@@ -645,23 +632,20 @@ private[graft] trait QueriesSearch { this: Queries.type =>
 
   /** The reference API end to end over the REAL graph index (round 6):
     * `queryVector` through the 'graph' facade type — create → addBulk →
-    * lazy graph build → iterative traversal — sharing the exact-KNN
-    * oracle via the escape hatch. Tuned-beam facade behavior is pinned in
+    * lazy graph build → search — sharing the exact-KNN oracle via the
+    * escape hatch. Tuned-beam facade behavior is pinned in
     * GraphFacadeSpec. */
   private[graft] def facadeGraphKnn(spark: SparkSession, dir: String): DataFrame =
     graphDb(spark, dir).queryVector(qvec(spark, dir, 51).map(_.toFloat), topK = 10)
       .select(col("id"), r4(col("score")).as("score"))
       .orderBy(col("score").desc, col("id").asc)
 
-  /** F5 through the REAL graph index: the traversal routes UNRESTRICTED
-    * (cutting filtered nodes out of the graph would disconnect it —
-    * [[graft.vector.GraphIndex.searchBatch]]'s filtered-ANN contract, the
-    * same stance hnswlib takes with its allow-list filters), and the
-    * pre-filter semi-joins the candidate pool before the final top-k cut.
-    * Unbounded beam (efSearch ≥ corpus) ⇒ the filtered answer is exact and
-    * shares the filtered exact-KNN oracle; tuned-beam filtered recall is
-    * the usual widened-probe story (AnnIndex.search widens ef 4× under a
-    * filter). */
+  /** F5 through the REAL graph index. At efSearch ≥ corpus the pre-filter
+    * semi-joins the exact scan, so the filtered answer shares the filtered
+    * exact-KNN oracle. A tuned beam walks filtered-out nodes too (cutting
+    * them out would disconnect the graph — hnswlib's allow-list stance,
+    * [[graft.vector.GraphIndex.searchBatch]]) and widens ef 4×, as every
+    * filtered probe widens. */
   private[graft] def knnPrefilterGraph(spark: SparkSession, dir: String): DataFrame =
     graphDb(spark, dir)
       .queryVector(qvec(spark, dir, 17).map(_.toFloat), topK = 5,

@@ -108,30 +108,34 @@ private[graft] trait QueriesSupport { this: Queries.type =>
 
   private[graft] val r4 = (c: Column) => round(c, 4)
 
+  /** Guards [[noAqe]]'s session-global AQE save/restore. One JVM-global
+    * lock: two interleaved save/restore pairs could otherwise restore each
+    * other's midflight "false" and leave AQE off for the whole session
+    * (round-8 review finding). */
+  private val aqeLock = new Object
+
   /** Runs `f` (plan construction + eager materialization) with AQE off,
-    * restoring the previous setting — round 17, the GraphIndex coverage-
-    * walk discipline applied to the BATCH-BOUNDED incremental dedup
-    * funnels: their frames are a few rows per incoming doc, so runtime
+    * restoring the previous setting — round 17, for the BATCH-BOUNDED
+    * incremental dedup funnels: their frames are a few rows per incoming doc, so runtime
     * re-planning buys nothing, while AQE's per-exchange query-stage
     * materialization adds a driver-synchronized job round per broadcast/
     * shuffle of an already-tiny plan (measured in-JVM, interleaved arms:
     * dedup_incremental_durable 21 jobs → 13, median 4.24 → 3.00 s;
     * dedup_embedding_incremental 19 → 10 jobs, 2.19 → 1.62 s — the
-    * AqeFunnelProbe tool). Guarded by the JVM-global
-    * [[graft.vector.GraphIndex.aqeLock]] so two toggle sites can never
-    * restore each other's midflight value. The caller must materialize
+    * AqeFunnelProbe tool). Guarded by the JVM-global [[aqeLock]], so two
+    * calls can never restore each other's midflight value. The caller must materialize
     * inside `f` (the returned frame's execution is what the toggle must
     * cover); corpus-scale plans KEEP AQE — this is only for funnels whose
     * per-batch boundedness is a documented contract.
     *
     * Threading contract (round-17 ADVICE): the lock serializes toggle
-    * SITES against each other, nothing more — an unrelated query planned
+    * calls against each other, nothing more — an unrelated query planned
     * on the same session during the window would silently run without
     * AQE. The toggle therefore assumes a single-threaded driver per
     * session, which is the bench/Verify harness's shape; a concurrent
     * server would scope this per-query via a forked session instead. */
   private[graft] def noAqe[T](spark: SparkSession)(f: => T): T =
-    graft.vector.GraphIndex.aqeLock.synchronized {
+    aqeLock.synchronized {
       val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
@@ -146,7 +150,7 @@ private[graft] trait QueriesSupport { this: Queries.type =>
   /** Temp-dir build guard (round-11 review): a memo's dispose closure only
     * runs for a COMPLETED build, so a save/load that throws mid-way would
     * leak its temp directory (and half-written parquet) until reboot —
-    * the disk transpose of the GraphIndex unpersist-before-throw rule.
+    * the disk transpose of the unpersist-before-throw rule.
     * Wrap the steps between createTempDirectory and the memo tuple.
     * `cleanup` releases whatever in-memory resource the body had open
     * (the cached-frames analog of the same leak); both cleanup and the

@@ -7,14 +7,15 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, BoundReference, Descending, GenericInternalRow, InterpretedOrdering, InterpretedUnsafeProjection, Literal, NamedExpression, Round, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project, Sort}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, BoundReference, Descending, EqualTo, GenericInternalRow, InterpretedOrdering, InterpretedUnsafeProjection, Literal, NamedExpression, Round, SortOrder}
+import org.apache.spark.sql.catalyst.plans.ExistenceJoin
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, JoinHint, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.functions.{array_contains, col, typedLit}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.functions.{array_contains, col, lit, typedLit}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
@@ -113,6 +114,16 @@ object KnnScorer {
     def describe: String = s"lsh radius=$radius $metric"
   }
 
+  /** Best-first beam search over a sharded graph frame
+    * ([[graft.vector.GraphIndex]]): per shard, a beam of width `ef` per
+    * query walks the `nbrs` edges both ways, and its `allowed` nodes are
+    * offered to the query's heap, scored by `metric`. The corpus side is
+    * clustered and sorted by `shard`; `id` is LONG. */
+  final case class GraphBeam(metric: ExactKNN.Metric, ef: Int) extends KnnScorer {
+    def columns: Seq[String] = Seq("id", "vector", "shard", "nbrs", "allowed")
+    def describe: String = s"graph beam ef=$ef $metric"
+  }
+
   /** Okapi BM25 over the index's forward frame (sorted distinct `terms`,
     * aligned `tfs`, `dl`): qv is the query's weighted-term payload
     * ([[BM25.payloadType]]). A pair is scored by [[BM25.fold]] only when
@@ -163,8 +174,17 @@ case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
   override def output: Seq[Attribute] = Seq(qid, corpusCols.head, score)
   override def outputPartitioning: Partitioning =
     UnknownPartitioning(left.outputPartitioning.numPartitions)
+  /** The graph beam's `shard` column: its corpus side is clustered and
+    * sorted by it in each task. */
+  private def shardKey: Option[Attribute] = scorer match {
+    case g: KnnScorer.GraphBeam => Some(corpusCols(g.columns.indexOf("shard")))
+    case _ => None
+  }
   override def requiredChildDistribution: Seq[Distribution] =
-    UnspecifiedDistribution :: UnspecifiedDistribution :: Nil
+    shardKey.fold[Distribution](UnspecifiedDistribution)(c => ClusteredDistribution(Seq(c))) ::
+      UnspecifiedDistribution :: Nil
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
+    shardKey.toSeq.map(SortOrder(_, Ascending)) :: Nil :: Nil
   override def stringArgs: Iterator[Any] = Iterator(k, scorer.describe)
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
@@ -201,8 +221,11 @@ case class KnnTopKExec(k: Int, scorer: KnnScorer, corpusCols: Seq[Attribute],
         val idOrd = KnnTopK.ordering(types.head)
         val heaps = Array.fill(block.nGroups)(new KnnHeap(kk, idOrd))
         val counts = new Array[Long](3) // scored, pruned, skipped
-        val scan = KnnTopK.rowScanner(sc, block, heaps, ords, types, counts)
-        rows.foreach(scan)
+        sc match {
+          case g: KnnScorer.GraphBeam =>
+            graft.vector.GraphIndex.searchShards(rows, g, block, heaps, ords, types, counts)
+          case _ => rows.foreach(KnnTopK.rowScanner(sc, block, heaps, ords, types, counts))
+        }
         mScored += counts(0); mPruned += counts(1); mSkipped += counts(2)
         val out = KnnTopK.emitter(qidType, types.head)
         heaps.indices.iterator.flatMap { g =>
@@ -530,6 +553,9 @@ object KnnTopK {
           }
         }
 
+      case _: KnnScorer.GraphBeam =>
+        throw new IllegalArgumentException("a graph beam scans whole shards, not rows")
+
       case KnnScorer.Bm25(stats, only) =>
         val termsOrd = ords(1); val tfsOrd = ords(2); val dlOrd = ords(3)
         val queries = qs.rows.map(r =>
@@ -690,7 +716,25 @@ object KnnTopK {
       // an array literal, not an IN list: its values are not inlined into
       // generated code, so a new cell set costs no fresh compile
       val inCells = cells.fold(corpus)(cs => corpus.where(array_contains(typedLit(cs.toArray), col("cluster"))))
-      ids.fold(inCells)(allow => inCells.join(allow.select(col("id")), Seq("id"), "left_semi"))
+      // marked, then filtered: the optimizer would push a left-semi join
+      // into each branch of a unioned corpus (an appended index), and each
+      // branch would broadcast the allow-list again
+      if (ids.isEmpty) inCells else mark(inCells).where(col("allowed")).drop("allowed")
+    }
+
+    /** The corpus with an `allowed` column instead of dropped rows: true
+      * when `ids` is unset or lists the row's id (an existence join, so
+      * a broadcast allow-list keeps the corpus side's layout). */
+    def mark(corpus: DataFrame): DataFrame = ids match {
+      case None => corpus.withColumn("allowed", lit(true))
+      case Some(allow) =>
+        val left = GraftColumnBridge.analyzedPlan(corpus)
+        // a fresh name: the allow-list may come from the corpus's own lineage
+        val right = GraftColumnBridge.analyzedPlan(allow.select(col("id").as("allowed_id")))
+        val allowed = AttributeReference("allowed", BooleanType, nullable = false)()
+        val id = left.output.find(_.name == "id").get
+        GraftColumnBridge.ofRows(corpus.sparkSession, Join(left, right, ExistenceJoin(allowed),
+          Some(EqualTo(id, right.output.head)), JoinHint.NONE))
     }
   }
   object Restrict { val none: Restrict = Restrict() }
@@ -728,9 +772,11 @@ object KnnTopK {
 }
 
 /** Planner strategy: logical [[KnnTopK]] → per-partition exec under the
-  * merge exec. Neither requires a child distribution, so the planner adds
-  * no exchange: the per-partition exec broadcasts the query block itself,
-  * and the merge exec brings the heaps together itself, on the driver. A
+  * merge exec. Neither requires a child distribution (but the graph
+  * beam's corpus side, which the graph frame's cache already meets), so
+  * the planner adds no exchange: the per-partition exec broadcasts the
+  * query block itself, and the merge exec brings the heaps together
+  * itself, on the driver. A
   * deterministic projection right above the search, and a global sort
   * above that, plan into the merge exec (the operator's own order under a
   * projection needs no sort). */

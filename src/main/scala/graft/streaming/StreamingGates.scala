@@ -599,8 +599,7 @@ object StreamingGates {
       // joins): ONE localCheckpoint per micro-batch (the batch fps). The
       // growing index accumulates those checkpointed RDDs as an RDD-level
       // union over the seed (no plan growth, no re-checkpoint of the
-      // union — the same segment discipline as GraphIndex's coverage
-      // walk), and each batch's emitted pairs are collected straight to
+      // union: an RDD union adds no plan nodes), and each batch's emitted pairs are collected straight to
       // the driver (they are the gate's driver-sized output rows) instead
       // of being checkpointed, unioned, and re-collected at the end.
       // accumulator state is mutated from the streaming micro-batch thread
@@ -622,7 +621,7 @@ object StreamingGates {
           .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
             // materialize-and-count in ONE job (RDD-level localCheckpoint
             // is lazy; count() both persists the blocks and pays one
-            // driver round — the GraphIndex matCount discipline)
+            // driver round)
             val bFpsRdd = TextAnalysis.winnow(b, "doc_id", "text")
               .join(dropFps, Seq("fp"), "left_anti").rdd.localCheckpoint()
             bFpsRdd.count()

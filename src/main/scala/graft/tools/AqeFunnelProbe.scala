@@ -8,8 +8,7 @@ import org.apache.spark.sql.SparkSession
   * overhead — AQE materializes every exchange of the tiny funnel as its
   * own job — not data volume. This probe times the same gates warm, in ONE
   * JVM, alternating spark.sql.adaptive.enabled per run block, so host
-  * drift cannot masquerade as a config effect (the same-JVM alternation
-  * discipline GraphIndex used to justify its walk-scoped AQE toggle).
+  * drift cannot masquerade as a config effect (same-JVM alternation).
   * Usage: runMain graft.tools.AqeFunnelProbe [sfDir] [gate,gate,...]
   */
 object AqeFunnelProbe {

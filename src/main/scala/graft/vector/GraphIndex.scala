@@ -1,532 +1,431 @@
 package graft.vector
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.expr.{VecKernels, VectorExpr}
+import graft.plans.{KnnHeap, KnnScorer, KnnTopK}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, GenericInternalRow, SortOrder, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 
-/** A REAL navigable-graph ANN index — the graph-traversal analog of the
-  * reference's hnsw (local_db.py:41–46) that rounds 1–5 substituted with
-  * IVF/LSH probes. Small-world graph search (Malkov & Yashunin's NSW
-  * lineage, TPAMI 2020): greedy best-first expansion of a candidate beam
-  * over a neighborhood graph. Spark-first decomposition:
+import scala.collection.mutable
+
+/** A navigable-graph ANN index, graft's form of the reference's hnsw
+  * (local_db.py:41–46): Malkov & Yashunin's best-first beam search (TPAMI
+  * 2020) over a sharded k-NN graph. Each shard holds its own graph; a query
+  * fans out to every shard and the shards' hits merge into one top-k.
   *
-  *  - BUILD is the bulk k-NN graph this engine already computes as ONE
-  *    distributed plan ([[IVFIndex.knnGraph]] — shuffle arm, bounded
-  *    heaps), symmetrized, UNIONED with a deterministic skip-ring: nodes
-  *    ranked by id, edges rank → rank ± 2^j for every j. The skip-ring is
-  *    the flattened analog of HNSW's layer hierarchy — it guarantees the
-  *    graph is CONNECTED with O(log N) diameter regardless of how the
-  *    k-NN edges cluster, which is what makes an exact-recoverable
-  *    configuration possible at all (an hnswlib graph guarantees neither).
-  *  - SEARCH is an iterative frontier expansion, each hop ONE join:
-  *    frontier ⋈ edges → unseen neighbors → score against the query →
-  *    bounded per-query beam ([[graft.plans.TopK.perKey]]) → next
-  *    frontier = the beam's newly-admitted nodes. All queries in a batch
-  *    advance together through the same hop joins — N queries cost the
-  *    same number of Spark jobs as one.
-  *  - `ef = 0` (unbounded beam) + hops ≥ diameter visits every node of
-  *    the connected graph: the search IS the exact scan, delivered
-  *    through graph traversal — the oracle-gated configuration (`ann_graph`
-  *    gate shares the exact batch-KNN oracle), like IVF's nprobe = nlist
-  *    and LSH's superset radius. Tuned (ef, hops) is the production
-  *    path; recall is spec-pinned in GraphIndexSpec.
+  * `frame` is (shard INT, id LONG, vector ARRAY<FLOAT>, nbrs ARRAY<INT>),
+  * cached under a leaf plan that is hash-partitioned by `shard` and sorted
+  * by (shard, id) within each partition, so a search plans no exchange and
+  * no sort. A node's position is its rank in its shard by (id, then
+  * vector). `nbrs` lists positions: the node's `k` nearest shard-mates by
+  * squared L2 (ties by position), and its skip-ring targets, position +
+  * 2^j. The ring keeps every shard connected with O(log s) diameter,
+  * however the k-NN edges cluster; it is the flattened analog of HNSW's
+  * layer hierarchy. The search walks every edge both ways.
   *
-  * At 100 TB: `edges` is a narrow 2-LONG-column table bucketed by `src`
-  * (the frontier join is then co-located); each hop shuffles only
-  * |Q| × beam rows; hop count is the O(log N) skip-ring bound, not
-  * corpus size. Degree is bounded by 2k + 2⌈log₂N⌉, so the frontier
-  * join's fan-out is a constant factor of the beam.
+  * Sharding: a corpus of at most `shardTarget` rows is one shard. A larger
+  * corpus is sharded by IVF cell (⌈n / shardTarget⌉ sample-trained cells).
+  * A cell of more than `shardTarget` rows is split by id hash into
+  * ⌈size / shardTarget⌉ shards. Each shard is wired inside its own task.
+  *
+  * Search ([[searchBatch]]) is one [[KnnTopK]] pass. `ef ≤ 0` is the exact
+  * scan over the graph's vectors ([[KnnScorer.Exact]]); the oracle gates
+  * use it. A tuned `ef` runs [[KnnScorer.GraphBeam]]: each task builds the
+  * adjacency of its shards once, then runs a width-ef beam per query from
+  * each shard's entry node, position 0.
   */
-final class GraphIndex(val edges: DataFrame, val vectors: DataFrame,
-                       val entryId: Long, val n: Long,
-                       private val retained: Seq[DataFrame]) {
+final class GraphIndex private (val frame: DataFrame, val n: Long, val k: Int,
+                                private val layout: GraphIndex.Layout) {
+  import GraphIndex._
 
-  def dispose(): Unit = {
-    retained.foreach(_.unpersist(blocking = false))
-    // free the coverage walk's checkpointed segments too (r7 ADVICE #3:
-    // on graphCache eviction they otherwise linger until the
-    // ContextCleaner GCs the RDDs)
-    coverageRdds.foreach(_.unpersist(blocking = false))
-    coverageRdds = Nil
-    coverageCache = null
-  }
+  /** The number of shards the layout routes to (some may be empty). */
+  def shards: Int = layout.shards
 
-  /** Exact-arm coverage (the id set reachable from `entryId`) is a
-    * property of the GRAPH, independent of query and call — memoized per
-    * index instance like every other deterministic index artifact, so
-    * only the first unbounded-beam search on an index pays the BFS
-    * rounds. `append` returns a NEW instance, invalidating naturally.
-    * The backing checkpointed segment RDDs are tracked for [[dispose]]. */
-  @volatile private var coverageCache: DataFrame = null
-  @volatile private var coverageRdds: List[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = Nil
+  def dispose(): Unit = frame.unpersist(blocking = false)
 
-  /** Batch graph search. `ef = 0` means an unbounded beam (exact over the
-    * connected graph when `maxHops` ≥ diameter — the skip-ring bounds it
-    * by 2⌈log₂N⌉ + 2, the default). On the unbounded arm two hops are
-    * fused per driver round, so an ODD `maxHops` is rounded UP to the
-    * next even hop count (a budget, not an exact walk length — the walk
-    * also early-exits the moment coverage completes). Output contract
-    * matches
-    * [[ExactKNN.topKBatch]]: (qid, id, score), score desc, id-asc ties.
-    * The bounded result (k × |Q| rows) is returned as an eagerly
-    * checkpointed frame — materialized distributed, never funneled
-    * through the driver (r6 VERDICT #6) — so corpus-scale batch callers
-    * (`append`, facade bulk queries) compose it into further plans or
-    * write it out without a driver round-trip. */
-  /** `restrict` (an (id, …) frame) implements the standard filtered-ANN
-    * semantics for graph search: the TRAVERSAL runs unrestricted (routing
-    * may pass through excluded nodes — cutting them out of the graph
-    * would disconnect it), and the filter semi-joins the candidate pool
-    * before the final top-k cut. Exact under the unbounded beam; under a
-    * tuned beam the caller widens ef like any filtered probe. */
+  /** Top-k per query: (qid, id, score), qid asc, score desc, id asc, as
+    * [[ExactKNN.topKBatch]] gives them. `ef ≤ 0` is the exact scan.
+    * Otherwise every shard runs a beam of width max(ef, k) per query.
+    *
+    * `restrict` (an (id, …) frame) is the filtered-ANN contract hnswlib's
+    * allow-list takes: the beam walks every node of a shard, and only
+    * allowed ids enter the result. Cutting the other nodes out would
+    * disconnect the graph. Under the exact scan they filter the corpus. */
   def searchBatch(queries: DataFrame, qidCol: String, qvecCol: String,
-                  k: Int, ef: Int = 64, maxHops: Int = -1,
+                  k: Int, ef: Int = 64,
                   metric: ExactKNN.Metric = ExactKNN.L2Sq,
                   restrict: Option[DataFrame] = None): DataFrame = {
-    val spark = queries.sparkSession
-    val hops =
-      if (maxHops > 0) maxHops
-      else 2 * (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))) + 2
-    val beam = if (ef <= 0) Int.MaxValue else math.max(ef, k)
-    val q = queries.select(col(qidCol).as("qid"),
-      col(qvecCol).cast("array<double>").as("__qv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    q.count()
-    def scored(ids: DataFrame): DataFrame = ids
-      .join(vectors, Seq("id"))
-      .join(q, Seq("qid"))
-      .select(col("qid"), col("id"),
-        metric.score(metric.dist(col("vector"), col("__qv"))).as("score"))
-    // Materialize-and-count in ONE job: DataFrame.localCheckpoint + a
-    // separate count() is two driver-synchronized job rounds per hop, and
-    // per-round scheduling overhead — not data volume — dominated the
-    // r6 driver bench (ann_graph 46 s median on sf0.1). An RDD-level
-    // localCheckpoint is lazy, so the count() both materializes the
-    // blocks and returns the row count in a single action; the rebuilt
-    // frame scans the checkpointed RDD (flat plan, lineage truncated),
-    // exactly what the eager DataFrame checkpoint gave us.
-    def matCount(df: DataFrame): (DataFrame, Long, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd.localCheckpoint()
-      val cnt = rdd.count()
-      (spark.createDataFrame(rdd, df.schema), cnt, rdd)
-    }
-    // hop 0: every query starts at the shared entry node. Each hop's pool
-    // and frontier are eagerly checkpointed: an iterative frame's
-    // logical plan otherwise nests exponentially (pool appears in both
-    // the beam cut and the frontier anti-join) and the plan tree alone
-    // OOMs after a few hops — checkpointing truncates lineage to the
-    // materialized partitions, the standard Spark iterative-algorithm
-    // discipline (GraphFrames/Pregel do the same).
-    var pool: DataFrame = null
-    // a caller-TRUNCATED coverage walk (maxHops > 0) is not memoized, so
-    // its per-round checkpointed segments must be freed once the final
-    // result materializes — otherwise they leak until JVM exit (round-10
-    // review; the memoized full walk parks its segments in coverageRdds
-    // for dispose())
-    var tempSegments: List[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = Nil
-    // the bounded arm's FINAL pool checkpoint, freed after `out` materializes
-    var tempPoolFree: () => Unit = () => ()
-    if (beam == Int.MaxValue) {
-      // Unbounded (exact) arm: no beam cut ⇒ per-hop scores are never
-      // consulted AND the traversal is query-INDEPENDENT — every query
-      // starts at the same entry node and expands unrestricted, so all
-      // visited sets are identical. Run the BFS once over bare ids (≤ n
-      // rows in flight, no qid dimension, no vector payload) and score
-      // the coverage against every query at the end. Two edge hops are
-      // fused per checkpoint round — the intermediate expansion
-      // references only the checkpointed frontier, so plan depth stays
-      // constant — halving the number of driver-synchronized rounds the
-      // ~log₂N-diameter walk needs.
-      // visited = per-round checkpointed segments accumulated as an
-      // RDD-LEVEL union: an RDD union adds no plan nodes, so every
-      // round's anti-join scans ONE LogicalRDD leaf and the round plans
-      // are shape-identical — the generated code (and janino's compile)
-      // is reused across rounds. The prior DataFrame-union accumulation
-      // grew a fresh plan shape per round, and per-round codegen
-      // compilation — not data volume — dominated the walk's cold cost
-      // (r8: facade_graph_knn 38 s driver cold, ~1 s/round of it janino).
-      val coverage = synchronized {
-        // a caller-truncated walk (maxHops > 0) may be PARTIAL coverage —
-        // never cache it, never serve the full-walk cache for it
-        if (coverageCache != null && maxHops <= 0) coverageCache
-        else {
-          // AQE off for the walk only: its frames are id-only and
-          // bounded by n, so runtime re-planning buys nothing, while its
-          // per-shuffle-stage job materialization adds 3-4 extra driver
-          // round-trips to EVERY BFS round (measured ~half the walk's
-          // wall time at gate scale). Restored before scoring — the
-          // corpus-scale scoring join keeps its runtime re-plan.
-          // The toggle mutates SESSION-global conf, so the save/restore
-          // pair is guarded by a JVM-global lock: two indexes walking on
-          // one session interleaved could otherwise restore each other's
-          // midflight "false" and leave AQE off for the whole session
-          // (round-8 review finding).
-          GraphIndex.aqeLock.synchronized {
-          val aqePrev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-          try {
-          val sc = spark.sparkContext
-          val seed = spark.range(1).select(lit(entryId).as("id"))
-          val idSchema = seed.schema
-          var segments = List(seed.rdd.localCheckpoint())
-          segments.head.count()
-          def visited: DataFrame =
-            spark.createDataFrame(sc.union(segments), idSchema)
-          var frontier = visited
-          var visitedCount = 1L
-          var round = 0
-          val rounds = (hops + 1) / 2 // 2 hops per round (ADVICE r7: was
-          // hops/2 + 1, overshooting a caller's hop budget by a round)
-          var done = n == 1L
-          while (round < rounds && !done) {
-            val hop1 = frontier.join(edges, frontier("id") === edges("src"))
-              .select(col("dst").as("id")).distinct()
-            val hop2 = hop1.join(edges, hop1("id") === edges("src"))
-              .select(col("dst").as("id"))
-            val expandRdd = hop1.unionByName(hop2).distinct()
-              .join(visited, Seq("id"), "left_anti")
-              .rdd.localCheckpoint()
-            val moved = expandRdd.count()
-            if (moved > 0) segments ::= expandRdd
-            visitedCount += moved
-            frontier = spark.createDataFrame(expandRdd, idSchema)
-            // converged when the frontier died; or early-exit as soon as
-            // the walk has covered the whole corpus (skip-ring
-            // connectivity guarantees this within the diameter bound)
-            done = moved == 0 || visitedCount == n
-            round += 1
-          }
-          val cov = visited
-          if (maxHops <= 0) { coverageCache = cov; coverageRdds = segments }
-          else tempSegments = segments
-          cov
-          } finally spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
-          }
-        }
-      }
-      // coverage × queries: the small persisted q side broadcasts, so
-      // this is the brute-force scoring scan, delivered through graph
-      // traversal — same final plan shape the exact-KNN oracle runs
-      pool = scored(coverage.crossJoin(q.select(col("qid"))))
-    } else {
-      // NOTE (r8, measured): AQE STAYS ON here, unlike the unbounded
-      // arm's id-only walk — the hop loop's scored frames shuffle real
-      // (qid, id, score) volume through 32 static partitions, and AQE's
-      // partition coalescing saves more task overhead than its
-      // per-stage job materialization costs (toggling it off measured
-      // append 6.7 s → 11.2 s at sf0.1).
-      pool = scored(q.select(col("qid"), lit(entryId).as("id")))
-        .localCheckpoint(true)
-      // superseded per-hop pool checkpoints, freed once the NEXT pool is
-      // materialized (round 18, r17 VERDICT #5): each hop's marked frame
-      // fully materializes before the previous pool is touched again, so
-      // the previous blocks are provably dead — freeing them here keeps
-      // the block manager flat across hops and calls instead of waiting
-      // for the ContextCleaner. The FINAL pool's blocks are freed after
-      // `out` (the checkpointed result) materializes below.
-      var poolFree: () => Unit = { val p0 = pool; () => graft.Checkpoints.free(p0) }
-      var frontier = pool.select(col("qid"), col("id"))
-      var hop = 0
-      var done = false
-      while (hop < hops && !done) {
-        // one join per hop: frontier fan-out minus already-pooled nodes
-        val expand = frontier.join(edges, frontier("id") === edges("src"))
-          .select(col("qid"), col("dst").as("id")).distinct()
-          .join(pool.select(col("qid"), col("id")), Seq("qid", "id"), "left_anti")
-        val fresh = scored(expand)
-        // beam cut + admission marker in ONE materialized frame: `__old`
-        // tags survivors that were already pooled, so the convergence
-        // count and the next frontier both read the checkpointed blocks
-        // instead of re-running an anti-join over them (the r6 shape ran
-        // one checkpoint job + one full anti-join count job per hop)
-        val (marked, _, markedRdd) = matCount(
-          graft.plans.TopK.perKey(pool.unionByName(fresh),
-            Seq("qid"), Seq("score" -> true, "id" -> false), beam)
-            .join(pool.select(col("qid"), col("id"), lit(1).as("__old")),
-              Seq("qid", "id"), "left"))
-        poolFree() // previous hop's pool is dead: marked is materialized
-        poolFree = () => markedRdd.unpersist(blocking = false)
-        frontier = marked.where(col("__old").isNull)
-          .select(col("qid"), col("id"))
-        val moved = frontier.count()
-        pool = marked.drop("__old")
-        done = moved == 0
-        hop += 1
-      }
-      tempPoolFree = poolFree
-    }
-    val eligible = restrict
-      .map(r => pool.join(r.select(col("id")), Seq("id"), "left_semi"))
-      .getOrElse(pool)
-    // bounded: k rows per query — eagerly checkpointed so the iteration
-    // caches can lapse with this call frame, but NEVER collected: the
-    // result stays a distributed frame (r6 VERDICT #6 — `append` and
-    // corpus-batch callers would otherwise funnel |corpus| × k rows
-    // through the driver)
-    val out = graft.plans.TopK.perKey(eligible, Seq("qid"),
-        Seq("score" -> true, "id" -> false), k)
-      .orderBy(col("qid").asc, col("score").desc, col("id").asc)
-      .localCheckpoint(true)
-    // `out` is materialized above, so a truncated walk's segments and the
-    // bounded arm's final pool checkpoint can be freed now — nothing
-    // downstream recomputes through them
-    tempSegments.foreach(_.unpersist(blocking = false))
-    tempPoolFree()
-    q.unpersist(blocking = false)
-    out
+    val qs = queries.select(col(qidCol).as("qid"), col(qvecCol).as("qv"))
+    if (ef <= 0)
+      KnnTopK(KnnTopK.Restrict(restrict)(frame), qs, k, KnnScorer.Exact(metric))
+    else
+      KnnTopK(KnnTopK.Restrict(restrict).mark(frame), qs, k,
+        KnnScorer.GraphBeam(metric, math.max(ef, k)))
   }
 
-  /** Single-query convenience over [[searchBatch]] — same output contract
-    * as [[ExactKNN.topK]]: (id, score). */
+  /** [[searchBatch]] for one query vector: (id, score). */
   def search(query: Array[Double], k: Int, ef: Int = 64,
-             maxHops: Int = -1,
-             restrict: Option[DataFrame] = None): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val q = Seq((0L, query.toSeq)).toDF("qid", "qv")
-    searchBatch(q, "qid", "qv", k, ef, maxHops, restrict = restrict)
-      .select(col("id"), col("score"))
-  }
+             restrict: Option[DataFrame] = None): DataFrame =
+    searchBatch(KnnTopK.block(frame.sparkSession, Seq((0L, query))), "qid", "qv", k, ef,
+      restrict = restrict).select(col("id"), col("score"))
 
-  /** Incremental maintenance (≙ hnsw `add_items`, local_db.py:78–80):
-    * each new node gets (a) k-NN edges found by a tuned BEAM SEARCH
-    * through the EXISTING graph — the same insert-time trick hnsw itself
-    * uses, one batched traversal for the whole batch — and (b) skip-ring
-    * edges at the union's ranks, restricted to edges incident to the
-    * batch. Connectivity is preserved (every new node ring-links into
-    * the connected graph), so the exact-recoverable unbounded-beam
-    * configuration survives appends — spec-pinned by exact equality with
-    * the flat scan over the union. Cost: one tuned batch traversal
-    * (∝ |batch| × beam) plus a distributed id-only re-rank of the union
-    * ([[GraphIndex.rankById]] — range-partitioned, no single-partition
-    * stage); never a distance rescan of the indexed corpus. Intra-batch k-NN
-    * edges are NOT added (hnsw's sequential insert would see earlier
-    * batch items); recall for batch-internal neighbors rides the ring +
-    * old-graph paths, measured like every tuned configuration. */
-  def append(batch: DataFrame, idCol: String, vecCol: String,
-             k: Int = 8, ef: Int = 64): GraphIndex = {
-    val bVecs = batch.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<float>").as("vector"))
+  /** Incremental maintenance (≙ hnsw `add_items`, local_db.py:78–80): the
+    * batch routes to shards by the build's rule, and only the shards it
+    * lands in are re-wired, each inside its own task, at a cost bounded by
+    * their size. The other shards keep their stored edges. A re-wired
+    * shard is the shard a build over its rows gives, so a one-shard index
+    * after an append equals a build over the union. The frame passes
+    * through one shuffle, which keeps its plan a leaf and its lineage one
+    * shuffle deep; the superseded frame is released. Shards never split on
+    * append: rebuild to re-balance. */
+  def append(batch: DataFrame, idCol: String, vecCol: String): GraphIndex = {
+    val b = vectorsOf(batch, idCol, vecCol)
+      .select(layout.shardOf(col("vector"), col("id")).as("shard"), col("id"), col("vector"),
+        lit(null).cast(ArrayType(IntegerType, containsNull = false)).as("nbrs"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nB = bVecs.count()
-    if (nB == 0) return this
-    // edge-finding is an APPROXIMATE search by design (hnsw's own insert
-    // runs a bounded-ef traversal); the hop budget is DERIVED from the
-    // graph size (r7 VERDICT nit: was hard-coded 8) as ⌈log₂ n⌉/2 + 2 —
-    // half the skip-ring's one-way routing bound, where the tuned beam
-    // measurably stabilizes (the bounded arm also early-exits on a dead
-    // frontier; r8 measured the full ⌈log₂ n⌉ + 2 budget ~1.7× slower
-    // for identical gate output). Growth stays logarithmic: a
-    // billion-node graph gets 17 hops, a thousand-node graph 7. The
-    // appended index's search EXACTNESS rides the ring, not edge quality
-    // (spec-pinned); intra-batch recall is measured in SCALE.md.
-    val knnNew = searchBatch(
-        bVecs.select(col("id").as("qid"), col("vector").as("qv")),
-        "qid", "qv", k, ef,
-        maxHops = (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))) / 2 + 2)
-      .where(col("qid") =!= col("id")) // an id collision must not self-loop
-      .select(col("qid").as("src"), col("id").as("dst"))
-    val allVecs = vectors.unionByName(bVecs)
-    val ranked = GraphIndex.rankById(allVecs)
-    val n2 = n + nB
-    val newIds = bVecs.select(col("id"))
-    val ring2 = GraphIndex.skipRing(ranked, n2).get // nB ≥ 1 ⇒ n2 ≥ 2
-    // only edges incident to the batch: the old ring stays as built. TWO
-    // equi semi-joins, not one OR-predicate join — Spark can only plan
-    // the disjunction as a BroadcastNestedLoopJoin over the full
-    // n·log₂n-row ring (O(n·log n · |batch|) predicate evaluations and a
-    // batch-sized broadcast), which broke this method's cost ∝ |batch|
-    // contract (round-10 review). Duplicates (both ends new) die at the
-    // distinct below.
-    val ringNew = ring2
-      .join(newIds.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-      .select(col("src"), col("dst"))
-      .unionByName(ring2
-        .join(newIds.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
-    val fwd = knnNew.unionByName(ringNew).distinct()
-    val newEdges = fwd
-      .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    newEdges.count()
-    new GraphIndex(edges.unionByName(newEdges),
-      vectors.unionByName(bVecs), math.min(entryId,
-        bVecs.agg(min(col("id"))).head().getLong(0)), n2,
-      Seq(bVecs, newEdges) ++ retained)
+    val nB = b.count()
+    val out =
+      if (nB == 0) this
+      else {
+        val grown = new GraphIndex(wire(frame.unionByName(b), k, shards), n + nB, k, layout)
+        dispose()
+        grown
+      }
+    b.unpersist(blocking = false)
+    out
   }
 }
 
 object GraphIndex {
 
-  /** Guards every session-global AQE save/restore in the repo — the
-    * coverage walk's toggle site in `searchBatch`, and (round 17)
-    * `Queries.noAqe`'s scoped materialization of the batch-bounded
-    * incremental dedup funnels. One JVM-global lock: interleaved
-    * save/restore pairs from two sites could otherwise restore each
-    * other's midflight "false" (round-8 review finding). */
-  private[graft] val aqeLock = new Object
-
-  // ---- persistence (S3/S4 for the graph artifact, matching the other
-  // index families: parquet frames + a tiny params frame) ----
-
-  /** Bucket count for the persisted edge table. 32 matches the session's
-    * shuffle parallelism at gate scale; at 100 TB it is a deployment
-    * knob (buckets ≈ cluster cores). */
-  val edgeBuckets = 32
-
-  private def freshTableName(tag: String): String =
-    s"graft_graph_edges_${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-
-  /** Edges are saved BUCKETED BY src (the class-doc 100 TB layout): a
-    * loaded index's per-hop frontier join then reads the (huge) edge
-    * table pre-partitioned on the join key — no exchange on the edges
-    * side, only the small frontier moves (plan-pinned in
-    * GraphIndexSpec). Spark's bucketed writer requires a catalog entry,
-    * so save/load register a TRANSIENT external table purely as
-    * scaffolding: the files (bucket ids in the file names) are the
-    * artifact, and the entry is dropped as soon as the write/resolve
-    * completes — the resolved DataFrame keeps the bucketing metadata. */
-  def save(index: GraphIndex, path: String): Unit = {
-    val spark = index.vectors.sparkSession
-    import spark.implicits._
-    val tmp = freshTableName("save")
-    // repartition on the bucket key first ⇒ exactly one file per bucket
-    index.edges.repartition(edgeBuckets, col("src"))
-      .write.mode("overwrite")
-      .bucketBy(edgeBuckets, "src").sortBy("src")
-      .option("path", s"$path/edges")
-      .saveAsTable(tmp)
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    Seq((index.entryId, index.n)).toDF("entryId", "n")
-      .write.mode("overwrite").parquet(s"$path/params")
-  }
-
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): GraphIndex = {
-    val p = spark.read.parquet(s"$path/params").head()
-    val vectors = spark.read.parquet(s"$path/vectors")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val tmp = freshTableName("load")
-    spark.sql(
-      s"""CREATE TABLE $tmp (src BIGINT, dst BIGINT) USING PARQUET
-         |CLUSTERED BY (src) SORTED BY (src) INTO $edgeBuckets BUCKETS
-         |LOCATION '$path/edges'""".stripMargin)
-    // Resolve BEFORE dropping (Dataset creation runs the analyzer eagerly,
-    // baking the bucketed HadoopFsRelation into the plan), and persist
-    // AFTER: DropTableCommand uncaches any cached plan referencing the
-    // table, so a persist-then-drop order silently voids the cache and
-    // every hop join re-reads the edge parquet (round-8 review finding).
-    val edges = spark.table(tmp)
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
-    new GraphIndex(edges, vectors, p.getLong(0), p.getLong(1), Seq(vectors, edges))
-  }
-
-  /** SHARDED-BUILD sizing (round-13, r12 VERDICT #2): the exact k-NN-graph
-    * build is quadratic in corpus size (every node scores every other —
-    * measured ×10→×100 cold 19.0 s → 2 066.7 s at 200 k nodes), so corpora
-    * past [[exactBuildMax]] auto-route to a sharded construction, the I4
-    * degrade-ladder discipline applied to I2: shard = IVF cluster sized to
-    * ~[[shardTarget]] rows (nlist = n/shardTarget, sample-trained), and
-    * each node's k-NN edge candidates come from its [[shardedNprobe]]
-    * nearest shards — per-shard subgraphs with cross-shard neighbor
-    * exchange through second-nearest-cluster probing, the standard
-    * k-means-sharded k-NN-graph construction. Candidate volume becomes
-    * n × shardedNprobe × shardTarget — LINEAR in n at fixed shard size
-    * (measured in SCALE.md round 13). Search EXACTNESS is untouched:
-    * the unbounded beam's completeness rides the skip-ring, never edge
-    * quality (spec-pinned); tuned-beam recall over sharded edges is
-    * floor-pinned in StructuredRecallSpec. */
-  val exactBuildMax = 50000L
+  /** Rows per shard a build aims at: one shard up to this size. */
   val shardTarget = 4096
-  val shardedNprobe = 2
 
-  /** The build's resolved (nlist, nprobe) — exposed so the routing rule is
-    * spec-pinnable without paying a build. Explicit caller values are
-    * honored verbatim; defaults (−1) auto-route on `n`. */
-  def buildPlan(n: Long, nlist: Int, graphNprobe: Int): (Int, Int) = {
-    val nl =
-      if (nlist > 0) nlist
-      else if (n > exactBuildMax)
-        math.max(16, math.min(1 << 16, (n / shardTarget).toInt))
-      else 16
-    val np =
-      if (graphNprobe > 0) graphNprobe
-      else if (n > exactBuildMax) shardedNprobe
-      else nl // exact edges: probe everything
-    (nl, np)
+  /** How rows route to shards: one shard when `centroids` is empty, else
+    * IVF cell c owns shards base(c) until base(c) + pieces(c), a row
+    * taking the one its id hashes to. */
+  private[vector] final case class Layout(centroids: Array[(Int, Array[Double])],
+                                          base: Array[Int], pieces: Array[Int]) {
+    def shards: Int = base.last + pieces.last
+
+    def shardOf(vector: Column, id: Column): Column =
+      if (centroids.isEmpty) lit(0)
+      else {
+        val cell = coalesce(VectorExpr.nearestCentroid(vector, centroids.map(_._2)), lit(0)) + 1
+        (element_at(typedLit(base), cell) +
+          pmod(xxhash64(id), element_at(typedLit(pieces), cell).cast(LongType))).cast(IntegerType)
+      }
   }
 
-  /** Distributed build: bulk exact-or-probed k-NN graph + symmetrization
-    * + the deterministic skip-ring. `nlist`/`graphNprobe` default to the
-    * [[buildPlan]] auto-routing: bounded corpora get exact edges
-    * (nprobe = nlist), corpora past [[exactBuildMax]] get the sharded
-    * linear-cost construction. Explicit values are honored verbatim
-    * (gates pin nlist = 16 exact as part of their oracle contract;
-    * approximate EDGES only reduce tuned recall, never correctness of
-    * the exact-recoverable search, whose completeness rides the
-    * skip-ring). */
-  /** Dense 0-based rank of every node in ascending-id order — the
-    * skip-ring's coordinate system. Distributed: a RANGE-partitioned sort
-    * (ascending ranges land in ascending partition indices) followed by
-    * zipWithIndex's two-pass per-partition offset scheme — one tiny job
-    * counts partition sizes, the second adds each partition's prefix
-    * offset locally. No single-partition window anywhere, so the rank is
-    * as scalable as any global sort; ranks need not be stable across
-    * builds, only dense within one. */
-  private def rankById(vectors: DataFrame): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    vectors.select(col("id")).orderBy(col("id"))
-      .as[Long].rdd.zipWithIndex()
-      .toDF("id", "rank")
-  }
+  private def vectorsOf(data: DataFrame, idCol: String, vecCol: String): DataFrame =
+    data.select(col(idCol).cast(LongType).as("id"), col(vecCol).cast("array<float>").as("vector"))
 
-  /** The rank → rank + 2^j forward skip edges (j = 0..⌈log₂(n−1)⌉) as ONE
-    * shuffle join: each node explodes its ⌈log₂N⌉ target ranks, then a
-    * single equi-join on rank resolves targets to ids. The r6 shape ran
-    * one join PER j level (11 shuffles at sf0.1) — the fused form is a
-    * ~log N-fold fan-out of a LONG pair frame into one exchange, the
-    * difference between 11 stages and 2 at any scale. None when n = 1. */
-  private def skipRing(ranked: DataFrame, n: Long): Option[DataFrame] = {
-    if (n <= 1) return None
-    val maxJ = 63 - java.lang.Long.numberOfLeadingZeros(n - 1)
-    val targets = ranked.select(col("id").as("src"),
-      explode(array((0L to maxJ).map(j => col("rank") + lit(1L << j)): _*)).as("rank2"))
-    Some(targets.join(
-        ranked.select(col("id").as("dst"), col("rank").as("rank2")), Seq("rank2"))
-      .select(col("src"), col("dst")))
-  }
-
+  /** Builds the index over `data`: `k` nearest-neighbour edges per node
+    * plus the skip-ring, in shards of about `shardTarget` rows. */
   def build(data: DataFrame, idCol: String, vecCol: String,
-            k: Int = 8, nlist: Int = -1, graphNprobe: Int = -1): GraphIndex = {
-    val vectors = data.select(col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<float>").as("vector"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+            k: Int = 8, shardTarget: Int = shardTarget): GraphIndex = {
+    require(shardTarget > 0, s"shardTarget must be positive, got $shardTarget")
+    val vectors = vectorsOf(data, idCol, vecCol)
     val n = vectors.count()
-    // fail fast with a real message: an empty corpus would otherwise NPE
-    // on the min(id) unbox below, and an n=0 index is unusable anyway
-    // (no entry node, hop math on n-1; round-10 review). Release the
-    // just-persisted empty frame before throwing — a failed build must
-    // not leak cached state until JVM exit (round-10 ADVICE).
-    if (n == 0) vectors.unpersist(blocking = false)
     require(n > 0, "cannot build a graph index over an empty corpus")
-    val (nl, nprobe) = buildPlan(n, nlist, graphNprobe)
-    val ivf = IVFIndex.build(vectors, "id", "vector", nl)
-    val knn = ivf.knnGraph(vectors, "id", "vector", k,
-      math.min(nprobe, ivf.nlist))
-      .select(col("qid").as("src"), col("id").as("dst"))
-    val ranked = rankById(vectors)
-    val skips = skipRing(ranked, n)
-    val fwd = skips.map(knn.unionByName).getOrElse(knn) // n = 1 ⇒ no ring
-    val edges = fwd
-      .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val layout =
+      if (n <= shardTarget) Layout(Array.empty, Array(0), Array(1))
+      else {
+        val cells = math.min(1L << 16, (n + shardTarget - 1) / shardTarget).toInt
+        val ivf = IVFIndex.build(vectors, "id", "vector", cells)
+        val sizes = ivf.assignments.groupBy(col("cluster")).count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        ivf.dispose()
+        val pieces = ivf.centroids.map { case (c, _) =>
+          math.max(1L, (sizes.getOrElse(c, 0L) + shardTarget - 1) / shardTarget).toInt }
+        Layout(ivf.centroids, pieces.scanLeft(0)(_ + _).init, pieces)
+      }
+    val rows = vectors.select(layout.shardOf(col("vector"), col("id")).as("shard"), col("id"),
+      col("vector"), lit(null).cast(ArrayType(IntegerType, containsNull = false)).as("nbrs"))
+    new GraphIndex(wire(rows, k, layout.shards), n, k, layout)
+  }
+
+  /** The frame over `rows` (shard, id, vector, nbrs): every shard holding
+    * a row with null `nbrs` is (re-)wired, the others keep their edges.
+    * Laid out by shard in min(shards, spark.sql.shuffle.partitions)
+    * partitions, cached and materialized. */
+  private def wire(rows: DataFrame, k: Int, shards: Int): DataFrame = {
+    val spark = rows.sparkSession
+    val parts = math.max(1, math.min(shards, spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    val laid = rows.repartition(parts, col("shard")).sortWithinPartitions(col("shard"), col("id"))
+    val rdd = laid.queryExecution.toRdd.mapPartitions(it => wireShards(it, k))
+    require(rdd.getNumPartitions == parts, s"graph frame laid out in ${rdd.getNumPartitions} of $parts partitions")
+    val out = Seq(AttributeReference("shard", IntegerType, nullable = false)(),
+      AttributeReference("id", LongType)(),
+      AttributeReference("vector", ArrayType(FloatType, containsNull = false))(),
+      AttributeReference("nbrs", ArrayType(IntegerType, containsNull = false), nullable = false)())
+    val frame = GraftColumnBridge.laidOut(spark, out, rdd, HashPartitioning(Seq(out.head), parts),
+      Seq(SortOrder(out.head, Ascending), SortOrder(out(1), Ascending)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
-    ivf.dispose()
-    val entry = vectors.agg(min(col("id"))).head().getLong(0)
-    new GraphIndex(edges, vectors, entry, n, Seq(vectors, edges))
+    frame.count()
+    frame
+  }
+
+  /** Position order of a shard's nodes: by id, then vector (lexicographic,
+    * null first). */
+  private def positions(ids: Array[Long], vecs: Array[Array[Double]]): Array[Int] = {
+    def vecCmp(a: Array[Double], b: Array[Double]): Int =
+      if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+      else {
+        var i = 0
+        var c = 0
+        while (c == 0 && i < math.min(a.length, b.length)) { c = java.lang.Double.compare(a(i), b(i)); i += 1 }
+        if (c != 0) c else Integer.compare(a.length, b.length)
+      }
+    ids.indices.toArray.sortWith { (x, y) =>
+      val c = java.lang.Long.compare(ids(x), ids(y))
+      (if (c != 0) c else vecCmp(vecs(x), vecs(y))) < 0
+    }
+  }
+
+  /** `nbrs` of every position of a shard in position order: its `k`
+    * nearest non-null neighbours by squared L2 (ties by position) and its
+    * forward skip-ring targets, sorted and distinct. */
+  private def edges(vecs: Array[Array[Double]], k: Int): Array[Array[Int]] = {
+    val s = vecs.length
+    val near = Array.fill(s)(new BeamHeap(worstOnTop = true))
+    var u = 0
+    while (u < s) {
+      if (vecs(u) != null) {
+        var v = u + 1
+        while (v < s) {
+          if (vecs(v) != null) {
+            // a nearer neighbour scores higher: rank by −d
+            val d = -VecKernels.squaredL2(vecs(u), vecs(v), math.min(vecs(u).length, vecs(v).length))
+            near(u).offer(d, v, k)
+            near(v).offer(d, u, k)
+          }
+          v += 1
+        }
+      }
+      u += 1
+    }
+    Array.tabulate(s) { p =>
+      val ring = Iterator.iterate(1)(_ * 2).takeWhile(j => j > 0 && p + j < s).map(p + _)
+      (near(p).positions ++ ring).toArray.distinct.sorted
+    }
+  }
+
+  private final class Node(val id: Long, val vector: Array[Float], val nbrs: Array[Int])
+
+  /** Wires the shards of one partition, sorted by shard: a shard holding a
+    * row with null `nbrs` gets fresh edges ([[edges]]), the others pass
+    * through. Emits (shard, id, vector, nbrs) in (shard, position) order. */
+  private def wireShards(rows: Iterator[InternalRow], k: Int): Iterator[InternalRow] = {
+    val in = rows.buffered
+    new Iterator[Iterator[InternalRow]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Iterator[InternalRow] = {
+        val shard = in.head.getInt(0)
+        val nodes = mutable.ArrayBuffer.empty[Node]
+        while (in.hasNext && in.head.getInt(0) == shard) {
+          val r = in.next()
+          nodes += new Node(r.getLong(1),
+            if (r.isNullAt(2)) null else r.getArray(2).toFloatArray(),
+            if (r.isNullAt(3)) null else r.getArray(3).toIntArray())
+        }
+        val vecs = nodes.map(x => if (x.vector == null) null else x.vector.map(_.toDouble)).toArray
+        val order = positions(nodes.map(_.id).toArray, vecs)
+        val nbrs =
+          if (nodes.forall(_.nbrs != null)) order.map(nodes(_).nbrs)
+          else edges(order.map(vecs), k)
+        order.indices.iterator.map { p =>
+          val x = nodes(order(p))
+          new GenericInternalRow(Array[Any](shard, x.id,
+            if (x.vector == null) null else UnsafeArrayData.fromPrimitiveArray(x.vector),
+            UnsafeArrayData.fromPrimitiveArray(nbrs(p))))
+        }
+      }
+    }.flatten
+  }
+
+  /** A bounded heap of (score, position) under (score desc, position asc):
+    * the worst retained entry on top when `worstOnTop`, else the best. */
+  private final class BeamHeap(worstOnTop: Boolean) {
+    private var scores = new Array[Double](8)
+    private var pos = new Array[Int](8)
+    var size = 0
+
+    def clear(): Unit = size = 0
+    def topScore: Double = scores(0)
+    def topPos: Int = pos(0)
+
+    private def above(i: Int, j: Int): Boolean =
+      if (worstOnTop) before(scores(j), pos(j), scores(i), pos(i))
+      else before(scores(i), pos(i), scores(j), pos(j))
+
+    private def swap(i: Int, j: Int): Unit = {
+      val s = scores(i); scores(i) = scores(j); scores(j) = s
+      val p = pos(i); pos(i) = pos(j); pos(j) = p
+    }
+
+    def push(s: Double, p: Int): Unit = {
+      if (size == scores.length) {
+        scores = java.util.Arrays.copyOf(scores, size * 2); pos = java.util.Arrays.copyOf(pos, size * 2)
+      }
+      scores(size) = s; pos(size) = p
+      var i = size
+      size += 1
+      while (i > 0 && above(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+    }
+
+    def pop(): Unit = {
+      size -= 1
+      scores(0) = scores(size); pos(0) = pos(size)
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1; val r = l + 1
+        var w = i
+        if (l < size && above(l, w)) w = l
+        if (r < size && above(r, w)) w = r
+        if (w == i) done = true else { swap(i, w); i = w }
+      }
+    }
+
+    /** Keeps (s, p) among the `cap` best (worst-on-top heaps only). */
+    def offer(s: Double, p: Int, cap: Int): Unit =
+      if (size < cap) push(s, p)
+      else if (cap > 0 && before(s, p, scores(0), pos(0))) { pop(); push(s, p) }
+
+    def positions: Iterator[Int] = pos.iterator.take(size)
+    def entries: Iterator[(Double, Int)] = scores.iterator.zip(pos.iterator).take(size)
+  }
+
+  /** (s1, p1) ranks before (s2, p2): score desc in Spark's double order,
+    * then position asc. */
+  private def before(s1: Double, p1: Int, s2: Double, p2: Int): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(s1, s2)
+    c > 0 || (c == 0 && p1 < p2)
+  }
+
+  /** The [[KnnScorer.GraphBeam]] pass over one partition of the frame,
+    * ordered by shard: per shard, the symmetric adjacency once, then for
+    * each query a best-first beam of width `ef` from the entry node (the
+    * first position with a vector) that stops when its best unexpanded
+    * candidate ranks after the beam's worst. Every node is walked; only
+    * allowed nodes enter the beam, and the beam's nodes are offered to
+    * the query's heap. A null query vector offers every allowed node with
+    * a null score, as the exact scan does. `counts` as
+    * [[KnnTopK.rowScanner]]: (pairs scored, -, pairs never scored). */
+  private[graft] def searchShards(rows: Iterator[InternalRow], beam: KnnScorer.GraphBeam,
+                                  qs: KnnTopK.QueryBlock, heaps: Array[KnnHeap],
+                                  ords: Seq[Int], types: Seq[DataType], counts: Array[Long]): Unit = {
+    val Seq(idOrd, vOrd, shardOrd, nbrsOrd, allowedOrd) = ords
+    val vFloat = KnnTopK.isFloatArray(types(1))
+    val in = rows.buffered
+    val cand = new BeamHeap(worstOnTop = false)
+    val best = new BeamHeap(worstOnTop = true)
+    while (in.hasNext) {
+      val shard = in.head.getInt(shardOrd)
+      val ids = mutable.ArrayBuffer.empty[Long]
+      val vs = mutable.ArrayBuffer.empty[Array[Double]]
+      val fwd = mutable.ArrayBuffer.empty[Array[Int]]
+      val ok = mutable.ArrayBuffer.empty[Boolean]
+      while (in.hasNext && in.head.getInt(shardOrd) == shard) {
+        val r = in.next()
+        ids += r.getLong(idOrd)
+        vs += (if (r.isNullAt(vOrd)) null else {
+          val a = r.getArray(vOrd); VecKernels.toDoubles(a, vFloat, a.numElements()) })
+        fwd += r.getArray(nbrsOrd).toIntArray()
+        ok += r.getBoolean(allowedOrd)
+      }
+      val order = positions(ids.toArray, vs.toArray)
+      val s = order.length
+      val (id, vec, allowed) = (order.map(ids), order.map(vs), order.map(ok))
+      val adj = adjacency(shard, order.map(fwd), id)
+      val seen = new Array[Int](s)
+      val entry = vec.indexWhere(_ != null)
+      var scored = 0L
+      var j = 0
+      while (j < qs.size) {
+        val q = qs.vecs(j)
+        val heap = heaps(qs.group(j))
+        val mark = j + 1
+        if (q == null) {
+          var p = 0
+          while (p < s) { if (allowed(p)) heap.offer(isNull = true, 0.0, id(p)); p += 1 }
+          scored += s
+        } else if (entry >= 0) {
+          cand.clear(); best.clear()
+          def visit(p: Int): Unit = {
+            seen(p) = mark
+            if (vec(p) != null) {
+              val sc = beam.metric.scoreOf(vec(p), q)
+              scored += 1
+              if (best.size < beam.ef || before(sc, p, best.topScore, best.topPos)) {
+                cand.push(sc, p)
+                if (allowed(p)) { best.push(sc, p); if (best.size > beam.ef) best.pop() }
+              }
+            }
+          }
+          visit(entry)
+          var done = false
+          while (!done && cand.size > 0) {
+            val (cs, c) = (cand.topScore, cand.topPos)
+            cand.pop()
+            if (best.size >= beam.ef && before(best.topScore, best.topPos, cs, c)) done = true
+            else adj(c).foreach(e => if (seen(e) != mark) visit(e))
+          }
+          best.entries.foreach { case (sc, p) => heap.offer(isNull = false, sc, id(p)) }
+        }
+        j += 1
+      }
+      counts(0) += scored
+      counts(2) += s.toLong * qs.size - scored
+    }
+  }
+
+  /** The symmetric adjacency of one shard from its forward lists (in
+    * position order): sorted, distinct, no self-loops. A position outside
+    * the shard fails with a named error. */
+  private def adjacency(shard: Int, fwd: Array[Array[Int]], ids: Array[Long]): Array[Array[Int]] = {
+    val s = fwd.length
+    val lists = Array.fill(s)(mutable.ArrayBuilder.make[Int])
+    var p = 0
+    while (p < s) {
+      fwd(p).foreach { q =>
+        if (q < 0 || q >= s)
+          throw new IllegalStateException(
+            s"graph shard $shard node ${ids(p)} lists neighbour position $q outside its $s nodes")
+        if (q != p) { lists(p) += q; lists(q) += p }
+      }
+      p += 1
+    }
+    lists.map(_.result().sorted.distinct)
+  }
+
+  /** The graph artifacts [[save]] writes under a graph directory. */
+  val artifacts: Seq[String] = Seq("nodes", "layout")
+
+  def save(index: GraphIndex, path: String): Unit = {
+    val spark = index.frame.sparkSession
+    import spark.implicits._
+    index.frame.write.mode("overwrite").parquet(s"$path/nodes")
+    val l = index.layout
+    Seq((index.n, index.k, l.centroids.map(_._1), l.centroids.map(_._2), l.base, l.pieces))
+      .toDF("n", "k", "cells", "centroids", "base", "pieces")
+      .write.mode("overwrite").parquet(s"$path/layout")
+  }
+
+  /** Restores what [[save]] wrote: the nodes keep their edges. */
+  def load(spark: SparkSession, path: String): GraphIndex = {
+    val r = spark.read.parquet(s"$path/layout").head()
+    val cells = r.getSeq[Int](2)
+    val layout = Layout(cells.zip(r.getSeq[scala.collection.Seq[Double]](3).map(_.toArray)).toArray,
+      r.getSeq[Int](4).toArray, r.getSeq[Int](5).toArray)
+    val nodes = spark.read.parquet(s"$path/nodes")
+      .select(col("shard"), col("id"), col("vector"), col("nbrs"))
+    new GraphIndex(wire(nodes, r.getInt(1), layout.shards), r.getLong(0), r.getInt(1), layout)
   }
 }

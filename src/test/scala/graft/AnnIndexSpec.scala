@@ -3,7 +3,6 @@ package graft
 import graft.model.Manifest
 import graft.vector.AnnIndex
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -120,7 +119,7 @@ class AnnIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "ivfpq" -> Seq("index/pq/codes", "index/pq/codebooks", "index/pq/centroids"),
       "pq" -> Seq("index/pq/codes", "index/pq/codebooks"),
       "lsh" -> Seq("index/lsh/hashed", "index/lsh/planes"),
-      "graph" -> Seq("index/graph/edges", "index/graph/vectors", "index/graph/params"))
+      "graph" -> Seq("index/graph/nodes", "index/graph/layout"))
     for ((t, artifacts) <- table) {
       val db = VectorDatabase.create(spark, dim, t, ivfClusters = 4)
       db.add(Seq.tabulate(40)(i => s"doc $i"), Seq.fill(40)(vec()), None)
@@ -137,6 +136,23 @@ class AnnIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       }
       db.close()
     }
+  }
+
+  test("a graph saved in the pre-shard layout (edges, vectors, params) fails with a named error") {
+    import spark.implicits._
+    val db = VectorDatabase.create(spark, dim, "graph")
+    db.add(Seq.tabulate(20)(i => s"doc $i"), Seq.fill(20)(vec()), None)
+    val p = tmpDir("oldgraph")
+    try {
+      db.save(p.toString)
+      val g = p.resolve("index/graph")
+      Seq("nodes", "layout").foreach(a => graft.streaming.StreamingGates.rmrf(g.resolve(a)))
+      Seq((0L, 1L)).toDF("src", "dst").write.parquet(g.resolve("edges").toString)
+      Seq((0L, Seq(0f))).toDF("id", "vector").write.parquet(g.resolve("vectors").toString)
+      Seq((0L, 20L)).toDF("entryId", "n").write.parquet(g.resolve("params").toString)
+      val e = intercept[IllegalStateException](VectorDatabase.load(spark, p.toString))
+      assert(e.getMessage.contains(s"$g/edges") && e.getMessage.contains("sharded"), e.getMessage)
+    } finally { db.close(); graft.streaming.StreamingGates.rmrf(p) }
   }
 
   /** Types whose configured efSearch takes an exact escape hatch: ivf and
@@ -300,13 +316,7 @@ class AnnIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(ivf.nlist == nlist)
       def probed(qs: Seq[Array[Float]]): Set[Int] =
         qs.map(q => ivf.probeOrder(q.map(_.toDouble)).head).toSet
-      // the cluster directories each assignments scan of `body` opened
-      def partitionsRead(body: => Unit): Seq[Long] =
-        SparkProbe.plans(body).flatMap(plan => collect(plan) {
-          case s: FileSourceScanExec
-              if s.relation.location.rootPaths.exists(_.toString.endsWith("assignments")) =>
-            s.metrics("numPartitions").value
-        })
+      def partitionsRead(body: => Unit): Seq[Long] = SparkProbe.partitionsRead("assignments")(body)
       val q = vs(5)
       assert(partitionsRead(lazyDb.queryVector(q, 3).collect()) == Seq(probed(Seq(q)).size.toLong))
       def pairs(db: VectorDatabase) =

@@ -100,8 +100,8 @@ class GraphFacadeSpec extends AnyFunSuite {
   }
 
   test("low efConstruction (approximate edges) cannot break the exact escape hatch") {
-    // efConstruction -> build-time edge accuracy (graphNprobe); search
-    // exactness under the unbounded beam rides the skip-ring, not edges
+    // efConstruction has no graph meaning (edges are exact within a
+    // shard); the escape hatch is the exact scan whatever it is set to
     val g = VectorDatabase.create(spark, 64, "graph",
       efConstruction = 25, efSearch = 100000)
     val rows = corpus(60)

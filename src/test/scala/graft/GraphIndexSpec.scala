@@ -1,10 +1,15 @@
 package graft
 
-import graft.vector.{ExactKNN, GraphIndex}
+import graft.plans.KnnTopKExec
+import graft.vector.GraphIndex
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-class GraphIndexSpec extends AnyFunSuite {
+class GraphIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -15,6 +20,39 @@ class GraphIndexSpec extends AnyFunSuite {
     emb.where(emb("vec_id") === id).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble).toArray
 
+  private def queriesOf(ids: Long*): DataFrame =
+    emb.where(col("vec_id").isin(ids.map(Long.box): _*))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
+  private def exact(queries: DataFrame, k: Int) =
+    BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
+      BruteForceKnn.rows(queries, "qid", "qv"), k, BruteForceKnn.L2Sq)
+
+  /** Each shard's (id, nbrs) rows in position order. */
+  private def shardsOf(g: GraphIndex): Map[Int, Seq[(Long, Seq[Int])]] =
+    g.frame.select("shard", "id", "nbrs").collect().toSeq.groupBy(_.getInt(0)).map { case (s, rs) =>
+      s -> rs.map(r => (r.getLong(1), r.getSeq[Int](2))).sortBy(_._1)
+    }
+
+  private val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+    StructField("v", ArrayType(FloatType, containsNull = false))))
+
+  private def randomRows(n: Int, dim: Int, seed: Int): Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map(i => (i.toLong, Array.fill(dim)(rnd.nextFloat())))
+  }
+
+  private def frameOf(rows: Seq[(Long, Array[Float])], parts: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (id, v) => Row(id, v.toSeq) }, parts), schema)
+
+  private def withShufflePartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, prev)
+  }
+
   test("build on an empty corpus fails fast with a real message (round-10 review)") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Seq[Float])].toDF("id", "v")
@@ -22,260 +60,238 @@ class GraphIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("empty corpus"))
   }
 
-  test("append's ring restriction plans as equi joins, not a nested loop (round-10 review)") {
-    import spark.implicits._
-    val batch = (9000L until 9004L)
-      .map(i => (i, Seq.tabulate(64)(j => (i + j).toFloat / 100f))).toDF("id", "v")
-    val appended = index.append(batch, "id", "v")
-    // correctness: the appended rows are findable through the new edges
-    val q = (9001 until 9065).map(j => (9001.0 + j - 9001) / 100.0).toArray
-    val got = appended.search(q, 3, ef = 0).collect().map(_.getLong(0))
-    assert(got.contains(9001L), s"appended row unreachable: ${got.toSeq}")
-    appended.dispose()
-  }
-
   test("skip-ring connectivity: every node is an edge source and target") {
+    val shards = shardsOf(index)
+    assert(shards.keySet == Set(0), "a corpus under shardTarget is one shard")
+    val nodes = shards(0)
+    val s = nodes.length
+    assert(s == emb.count())
+    nodes.zipWithIndex.foreach { case ((id, nb), p) =>
+      assert(nb.nonEmpty && nb.forall(q => q >= 0 && q < s && q != p), s"node $id: $nb")
+      Iterator.iterate(1)(_ * 2).takeWhile(p + _ < s).foreach(j =>
+        assert(nb.contains(p + j), s"node $id lacks ring edge to position ${p + j}"))
+    }
+    // the search walks every edge both ways: each node is a target too
+    val targets = nodes.indices.flatMap(p => nodes(p)._2.flatMap(q => Seq(p, q))).toSet
+    assert(targets == nodes.indices.toSet)
+  }
+
+  test("nbrs hold each node's exact k nearest shard-mates by squared L2") {
+    val rows = BruteForceKnn.rows(emb, "vec_id", "embedding").sortBy(_._1)
+    val pos = rows.map(_._1).zipWithIndex.toMap
+    val nodes = shardsOf(index)(0)
+    for (p <- Seq(0, 7, 123, rows.length - 1)) {
+      val (id, v) = rows(p)
+      val want = BruteForceKnn.topK(rows.filter(_._1 != id), Seq((id, v)), 8, BruteForceKnn.L2Sq)
+        .map(h => pos(h._2)).toSet
+      assert(want.subsetOf(nodes(p)._2.toSet), s"node $id: nbrs ${nodes(p)._2} lack $want")
+    }
+  }
+
+  test("append re-wires only the shards the batch lands in; one shard equals a build over the union") {
+    val cut = 400L
+    def rowsOf(g: GraphIndex) =
+      g.frame.select("shard", "id", "nbrs").collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Int](2))).toSeq
+    val base = GraphIndex.build(emb.where(col("vec_id") < cut), "vec_id", "embedding", k = 8)
+    val appended = base.append(emb.where(col("vec_id") >= cut), "vec_id", "embedding")
+    val whole = GraphIndex.build(emb, "vec_id", "embedding", k = 8)
+    assert(appended.n == whole.n)
+    assert(rowsOf(appended).sortBy(_._2) == rowsOf(whole).sortBy(_._2))
+    appended.dispose(); whole.dispose()
+
+    val sharded = GraphIndex.build(emb.where(col("vec_id") < cut), "vec_id", "embedding", k = 8,
+      shardTarget = 60)
+    val before = rowsOf(sharded).groupBy(_._1)
+    val batch = emb.where(col("vec_id").between(cut, cut + 4))
+    val grown = sharded.append(batch, "vec_id", "embedding")
+    val after = rowsOf(grown).groupBy(_._1)
+    val touched = after.values.flatten.filter(_._2 >= cut).map(_._1).toSet
+    assert(touched.nonEmpty && touched.size < sharded.shards, s"batch landed in $touched")
+    for ((s, rs) <- before if !touched(s)) assert(after(s).sortBy(_._2) == rs.sortBy(_._2), s"shard $s")
+    for (s <- touched) assert(after(s).length == before.getOrElse(s, Nil).length +
+      after(s).count(_._2 >= cut))
+    grown.dispose()
+  }
+
+  test("dispose and append release the superseded frame") {
+    val data = frameOf(randomRows(64, 4, 3), 2)
+    val idx = GraphIndex.build(data, "id", "v", k = 4)
+    assert(idx.frame.storageLevel != StorageLevel.NONE)
+    val grown = idx.append(frameOf(randomRows(4, 4, 4).map { case (i, v) => (i + 100, v) }, 1), "id", "v")
+    assert(idx.frame.storageLevel == StorageLevel.NONE, "append kept the superseded frame cached")
+    assert(grown.frame.storageLevel != StorageLevel.NONE)
+    assert(grown.frame.queryExecution.logical.children.isEmpty, "the appended frame is not a leaf plan")
+    grown.dispose()
+    assert(grown.frame.storageLevel == StorageLevel.NONE)
+  }
+
+  test("shard rule: one shard up to shardTarget, IVF cells above it, each shard near the target") {
+    assert(index.shards == 1)
     val n = emb.count()
-    assert(index.edges.select(col("src")).distinct().count() == n)
-    assert(index.edges.select(col("dst")).distinct().count() == n)
-    // symmetric by construction
-    val asym = index.edges
-      .join(index.edges.select(col("dst").as("src"), col("src").as("dst")),
-        Seq("src", "dst"), "left_anti")
-    assert(asym.count() == 0)
-  }
-
-  test("maxHops is honored on the unbounded arm: a 4-hop node is invisible at budget 2 (r7 ADVICE)") {
-    import spark.implicits._
-    // A line corpus: k-NN edges connect adjacent ranks, the skip-ring adds
-    // rank ± 2^j — so rank 15 is EXACTLY 4 edge-hops from entry rank 0
-    // (15 = 8+4+2+1; no 3-hop combination of ±powers reaches it, and the
-    // k=4 nearest-neighbor edges only span ±2). The old rounds arithmetic
-    // (hops/2 + 1) walked 4 hops on a maxHops = 2 budget and WOULD find it.
-    val line = (0L until 16L).map(i => (i, Seq.fill(4)(i.toDouble)))
-      .toDF("id", "v")
-    val idx = GraphIndex.build(line, "id", "v", k = 4, nlist = 1)
-    val q = Seq((0L, Seq(15.0, 15.0, 15.0, 15.0))).toDF("qid", "qv")
-    def top(maxHops: Int): Long =
-      idx.searchBatch(q, "qid", "qv", k = 1, ef = 0, maxHops = maxHops)
-        .collect().head.getLong(1)
-    assert(top(4) == 15L, "4 hops must reach rank 15")
-    assert(top(2) != 15L, "a 2-hop budget must NOT reach the 4-hop node")
-    idx.dispose()
-  }
-
-  test("dispose frees the coverage walk's checkpointed segment blocks (r7 ADVICE)") {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    // earlier tests' async unpersists / ContextCleaner GCs land on their
-    // own schedule — settle the persistent-RDD count to two consecutive
-    // equal readings before snapshotting, or the deltas below are racy
-    def settled(): Int = {
-      var prev = -1
-      var cur = sc.getPersistentRDDs.size
-      val deadline = System.nanoTime() + 20_000_000_000L
-      while (prev != cur && System.nanoTime() < deadline) {
-        prev = cur; System.gc(); Thread.sleep(400)
-        cur = sc.getPersistentRDDs.size
-      }
-      cur
-    }
-    val pre = settled() // snapshot BEFORE this index exists
-    val data = (0L until 64L).map(i => (i, Seq.fill(4)(math.sin(i.toDouble))))
-      .toDF("id", "v")
-    val idx = GraphIndex.build(data, "id", "v", k = 4, nlist = 2)
-    val q = Seq((0L, Seq(0.5, 0.5, 0.5, 0.5))).toDF("qid", "qv")
-    idx.searchBatch(q, "qid", "qv", k = 3, ef = 0).collect() // builds + caches coverage
-    assert(sc.getPersistentRDDs.size > pre,
-      "expected vectors + edges + coverage segments to be persisted")
-    idx.dispose()
-    // dispose must free vectors, edges AND every coverage segment; the one
-    // legitimate survivor of this test is the searchBatch result's own
-    // checkpoint. unpersist is async (blocking = false): poll briefly.
-    val deadline = System.nanoTime() + 15_000_000_000L
-    var after = sc.getPersistentRDDs.size
-    while (after > pre + 1 && System.nanoTime() < deadline) {
-      System.gc(); Thread.sleep(200); after = sc.getPersistentRDDs.size
-    }
-    assert(after <= pre + 1,
-      s"dispose left coverage segments persisted (pre=$pre, after=$after)")
-  }
-
-  test("buildPlan auto-routing: exact below the cap, sharded above (r12 VERDICT #2)") {
-    // bounded corpora: the historical exact default (nlist 16, probe all)
-    assert(GraphIndex.buildPlan(1000L, -1, -1) == ((16, 16)))
-    assert(GraphIndex.buildPlan(50000L, -1, -1) == ((16, 16))) // boundary stays exact
-    // the ×100 kill size routes to the sharded construction
-    assert(GraphIndex.buildPlan(200000L, -1, -1) == ((48, 2)))
-    // linear candidate volume at fixed shard size: nprobe × n/nlist stays
-    // ~shardTarget-bounded per node across decades — the quadratic exact
-    // build (n per node) is structurally unreachable by default past the cap
-    for (n <- Seq(100000L, 1000000L, 10000000L, 100000000L)) {
-      val (nl, np) = GraphIndex.buildPlan(n, -1, -1)
-      val candPerNode = np.toDouble * n / nl
-      assert(candPerNode <= 2.5 * GraphIndex.shardTarget,
-        s"n=$n nlist=$nl nprobe=$np candPerNode=$candPerNode")
-      assert(np < nl, s"sharded plan must not probe everything: n=$n")
-    }
-    // past the 2^16 shard cap (n ≳ 2.7e8, where a sample-trained coarse
-    // quantizer stops being meaningful anyway) shards grow with n again,
-    // but the scanned FRACTION keeps falling — never the quadratic cliff
-    val (nlB, npB) = GraphIndex.buildPlan(1000000000L, -1, -1)
-    assert(nlB == 65536 && npB == 2)
-    // explicit caller values are honored verbatim (gates pin 16/exact)
-    assert(GraphIndex.buildPlan(200000L, 16, 4) == ((16, 4)))
-    assert(GraphIndex.buildPlan(200000L, 16, -1) == ((16, 2)))
+    val sharded = GraphIndex.build(emb, "vec_id", "embedding", k = 8, shardTarget = 100)
+    val sizes = shardsOf(sharded).values.map(_.length)
+    assert(sizes.sum == n)
+    assert(sizes.size >= ((n + 99) / 100).toInt, s"shards $sizes")
+    assert(sizes.max <= 150, s"a shard far over the target: $sizes")
+    sharded.dispose()
   }
 
   test("sharded-path build: unbounded beam stays EXACT over approximate edges") {
-    import spark.implicits._
-    // aggressively sharded edges (nlist 4, probe 1 — each node's k-NN
-    // candidates come from ONE shard of ~16 rows): the unbounded beam's
-    // completeness rides the skip-ring, so the search still equals the
-    // flat scan bit-for-bit — the invariant that makes sharded builds safe
-    val rnd = new scala.util.Random(5)
-    val data = (0L until 64L).map(i => (i, Seq.fill(8)(rnd.nextFloat()))).toDF("id", "v")
-    val idx = GraphIndex.build(data, "id", "v", k = 4, nlist = 4, graphNprobe = 1)
+    // 64 rows in shards of ~16: ef = 0 is the exact scan, and a beam at
+    // least as wide as a shard walks all of it (the ring connects it)
+    val rows = randomRows(64, 8, 5)
+    val data = frameOf(rows, 3)
+    val idx = GraphIndex.build(data, "id", "v", k = 4, shardTarget = 16)
+    assert(idx.shards >= 4)
     val q = Array.fill(8)(0.5)
-    val got = idx.search(q, 5, ef = 0).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val want = ExactKNN.topK(data, "id", "v", q, 5)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(got.toSeq == want.toSeq)
+    val want = BruteForceKnn.topK(rows.map { case (i, v) => (i, v.map(_.toDouble)) }, Seq((0L, q)), 5,
+      BruteForceKnn.L2Sq).map(h => (h._2, h._3.doubleValue))
+    for (ef <- Seq(0, 64)) {
+      val got = idx.search(q, 5, ef = ef).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      assert(got.toSeq == want, s"ef=$ef")
+    }
     idx.dispose()
   }
 
-  test("degree is bounded by 2k + 2 log2 n (the frontier fan-out bound)") {
-    val n = emb.count()
-    val bound = 2 * 8 + 2 * (64 - java.lang.Long.numberOfLeadingZeros(n - 1)) + 2
-    val maxDeg = index.edges.groupBy(col("src")).count()
-      .agg(max(col("count"))).head().getLong(0)
-    assert(maxDeg <= bound, s"max degree $maxDeg > bound $bound")
-  }
-
   test("unbounded beam (ef = 0) is EXACT: equals the flat batch scan bit for bit") {
-    val queries = emb.where(col("vec_id").isin(3L, 21L, 77L))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
-      BruteForceKnn.rows(queries, "qid", "qv"), 5, BruteForceKnn.L2Sq)
+    val queries = queriesOf(3L, 21L, 77L)
     val viaGraph = BruteForceKnn.collect(index.searchBatch(queries, "qid", "qv", k = 5, ef = 0))
-    assert(BruteForceKnn.same(viaGraph, exact), s"$viaGraph\n$exact")
+    assert(BruteForceKnn.same(viaGraph, exact(queries, 5)))
   }
 
-  test("searchBatch returns a checkpointed distributed frame — no driver collect (r6 VERDICT #6)") {
-    val queries = emb.where(col("vec_id").isin(3L, 21L))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val r = index.searchBatch(queries, "qid", "qv", k = 3, ef = 16, maxHops = 4)
-    // an eager localCheckpoint leaves a LogicalRDD leaf: the bounded
-    // result lives in executor blocks, composable into further plans,
-    // and a second action re-reads blocks instead of re-traversing
-    assert(r.queryExecution.logical.toString.contains("LogicalRDD"),
-      s"expected a checkpointed leaf, got:\n${r.queryExecution.logical}")
-    assert(r.count() == r.count())
+  test("searchBatch is one KnnTopK pass: a collected search is one job at any ef") {
+    val queries = block(Seq(3L, 21L))
+    for (ef <- Seq(0, 16)) {
+      val df = index.searchBatch(queries, "qid", "qv", k = 3, ef = ef)
+      df.collect()
+      assert(SparkProbe.jobs(df.collect()) == 1, s"ef=$ef")
+    }
   }
+
+  private def block(ids: Seq[Long]): DataFrame =
+    graft.plans.KnnTopK.block(spark, ids.map(i => (i, queryVec(i))))
 
   test("single-query search finds the query's own vector first") {
-    val r = index.search(queryVec(42), k = 5, ef = 0).collect()
-    assert(r.head.getLong(0) == 42L)
-    assert(math.abs(r.head.getDouble(1) - 1.0) < 1e-9)
+    for (ef <- Seq(0, 16)) {
+      val r = index.search(queryVec(42), k = 5, ef = ef).collect()
+      assert(r.head.getLong(0) == 42L)
+      assert(math.abs(r.head.getDouble(1) - 1.0) < 1e-9)
+    }
   }
 
   test("tuned beam recall@10 >= 0.6 over 10 queries at ef = 64 (one batch traversal)") {
     val qids = (0L until 10L).map(_ * 13)
-    val queries = emb.where(col("vec_id").isin(qids.map(Long.box): _*))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
-        BruteForceKnn.rows(queries, "qid", "qv"), 10, BruteForceKnn.L2Sq)
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val got = index.searchBatch(queries, "qid", "qv", k = 10, ef = 64, maxHops = 6)
+    val queries = queriesOf(qids: _*)
+    val want = exact(queries, 10).groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val got = index.searchBatch(queries, "qid", "qv", k = 10, ef = 64)
       .collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val recalls = qids.map(q => (exact(q) intersect got.getOrElse(q, Set.empty)).size / 10.0)
+    val recalls = qids.map(q => (want(q) intersect got.getOrElse(q, Set.empty)).size / 10.0)
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.6, s"mean graph recall@10 = $mean (per-query: $recalls)")
+  }
+
+  test("tuned hits carry their exact scores, and a filtered beam returns only allowed ids") {
+    val queries = queriesOf(5L, 60L)
+    val truth = exact(queries, emb.count().toInt).map(h => (h._1, h._2) -> h._3).toMap
+    val tuned = BruteForceKnn.collect(index.searchBatch(queries, "qid", "qv", k = 10, ef = 16))
+    assert(tuned.length == 20)
+    tuned.foreach { case (q, id, s) => assert(truth((q, id)) == s, s"q$q id $id") }
+    val allow = emb.where(col("vec_id") % 5 === 0).select(col("vec_id").as("id"))
+    val filtered = BruteForceKnn.collect(index.searchBatch(queries, "qid", "qv", k = 10, ef = 16,
+      restrict = Some(allow)))
+    assert(filtered.length == 20 && filtered.forall(_._2 % 5 == 0), s"$filtered")
+    // a beam as wide as the shard walks every node: the filtered exact answer
+    val wide = BruteForceKnn.collect(index.searchBatch(queries, "qid", "qv", k = 10,
+      ef = emb.count().toInt, restrict = Some(allow)))
+    val want = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding").filter(_._1 % 5 == 0),
+      BruteForceKnn.rows(queries, "qid", "qv"), 10, BruteForceKnn.L2Sq)
+    assert(BruteForceKnn.same(wide, want))
+  }
+
+  test("tuned results are bit-identical at corpus partitions {1,3,7} x shuffle {1,7,32}, one shard and several") {
+    val rows = randomRows(200, 8, 11)
+    val qs = graft.plans.KnnTopK.block(spark, Seq((0L, Array.fill(8)(0.3)), (1L, rows(17)._2.map(_.toDouble)),
+      (2L, Array.fill(8)(0.7))))
+    def answers(parts: Int, sp: Int): Seq[Seq[(Long, Long, java.lang.Double)]] = withShufflePartitions(sp) {
+      val data = frameOf(rows, parts)
+      val allow = data.where(col("id") % 2 === 0).select(col("id"))
+      Seq(GraphIndex.shardTarget, 40).flatMap { target =>
+        val g = GraphIndex.build(data, "id", "v", k = 6, shardTarget = target)
+        try Seq(None, Some(allow)).map(r =>
+          BruteForceKnn.collect(g.searchBatch(qs, "qid", "qv", k = 5, ef = 12, restrict = r)))
+        finally g.dispose()
+      }
+    }
+    val ref = answers(1, 1)
+    assert(ref.forall(_.length == 15))
+    for (parts <- Seq(1, 3, 7); sp <- Seq(1, 7, 32) if (parts, sp) != ((1, 1)))
+      assert(answers(parts, sp).zip(ref).forall { case (a, b) => BruteForceKnn.same(a, b) },
+        s"parts=$parts sp=$sp")
   }
 
   test("save/load roundtrip preserves the graph and its exact search") {
     val path = java.nio.file.Files.createTempDirectory("graftgraph").toString
     GraphIndex.save(index, path)
     val loaded = GraphIndex.load(spark, path)
-    assert(loaded.n == index.n && loaded.entryId == index.entryId)
-    assert(loaded.edges.count() == index.edges.count())
-    // the loaded edge table must ACTUALLY be cached: dropping the
-    // transient catalog entry after persist used to uncache it silently
-    // (round-8 review), regressing every hop join to a parquet re-read
-    assert(loaded.edges.storageLevel.useMemory || loaded.edges.storageLevel.useDisk,
-      s"loaded edges not cached: ${loaded.edges.storageLevel}")
+    assert(loaded.n == index.n && loaded.shards == index.shards)
+    assert(shardsOf(loaded) == shardsOf(index))
+    assert(loaded.frame.storageLevel != StorageLevel.NONE, "loaded frame not cached")
     val q = queryVec(42)
-    val a = index.search(q, 10, ef = 0).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val b = loaded.search(q, 10, ef = 0).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(a.sameElements(b))
-    loaded.dispose()
-  }
-
-  test("loaded edges are bucketed by src: the hop join plans NO exchange on the edges side") {
-    val path = java.nio.file.Files.createTempDirectory("graftgraphbkt").toString
-    GraphIndex.save(index, path)
-    val loaded = GraphIndex.load(spark, path)
-    // force the shuffle-join regime (at 100 TB the frontier is not
-    // broadcast-able) and pin: the frontier side exchanges INTO the edge
-    // table's bucketing; the edges side is scanned in place
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // AQE wraps the join in an AdaptiveSparkPlan node; disable it so
-      // the static plan is inspectable (the bucketed-scan property being
-      // pinned is identical either way)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val frontier = spark.range(5).select(col("id"))
-      val hop = frontier.join(loaded.edges, frontier("id") === loaded.edges("src"))
-      val plan = hop.queryExecution.executedPlan
-      def subtree(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
-        p.nodeName +: p.children.toSeq.flatMap(subtree)
-      // locate the join; its edges-side child subtree must contain no
-      // ShuffleExchange (the bucketed scan already satisfies the join's
-      // required distribution)
-      val joins = plan.collect {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-      }
-      assert(joins.nonEmpty, s"no shuffle join found in:\n$plan")
-      val edgesSide = joins.head.children.last
-      assert(!subtree(edgesSide).exists(_.toLowerCase.contains("exchange")),
-        s"edges side re-shuffles despite bucketing:\n$edgesSide")
-      // and the result is still correct
-      assert(hop.count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    for (ef <- Seq(0, 16)) {
+      val a = index.search(q, 10, ef = ef).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val b = loaded.search(q, 10, ef = ef).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      assert(a.sameElements(b), s"ef=$ef")
     }
     loaded.dispose()
+    graft.streaming.StreamingGates.rmrf(java.nio.file.Path.of(path))
+  }
+
+  test("a loaded frame keeps its layout: the tuned search plans no exchange and no sort") {
+    val path = java.nio.file.Files.createTempDirectory("graftgraphlayout").toString
+    val sharded = GraphIndex.build(emb, "vec_id", "embedding", k = 8, shardTarget = 100)
+    GraphIndex.save(sharded, path)
+    val loaded = GraphIndex.load(spark, path)
+    val df = loaded.searchBatch(block(Seq(3L, 4L)), "qid", "qv", k = 5, ef = 16)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Sort ["), plan)
+    assert(BruteForceKnn.same(BruteForceKnn.collect(df),
+      BruteForceKnn.collect(sharded.searchBatch(block(Seq(3L, 4L)), "qid", "qv", k = 5, ef = 16))))
+    sharded.dispose(); loaded.dispose()
+    graft.streaming.StreamingGates.rmrf(java.nio.file.Path.of(path))
   }
 
   test("append preserves connectivity: exact search over the union equals the flat scan") {
     val cut = 400L
-    val base = GraphIndex.build(emb.where(col("vec_id") < cut),
-      "vec_id", "embedding", k = 8)
+    val base = GraphIndex.build(emb.where(col("vec_id") < cut), "vec_id", "embedding", k = 8,
+      shardTarget = 100)
     val appended = base.append(emb.where(col("vec_id") >= cut), "vec_id", "embedding")
-    assert(appended.n == emb.count())
-    val queries = emb.where(col("vec_id").isin(3L, 450L)) // one old, one appended
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = BruteForceKnn.topK(BruteForceKnn.rows(emb, "vec_id", "embedding"),
-      BruteForceKnn.rows(queries, "qid", "qv"), 5, BruteForceKnn.L2Sq)
-    val viaGraph = BruteForceKnn.collect(appended.searchBatch(queries, "qid", "qv", k = 5, ef = 0))
-    assert(BruteForceKnn.same(viaGraph, exact), s"$viaGraph\n$exact")
-    // every appended node is wired into the graph (ring + knn edges)
-    val srcs = appended.edges.select(col("src")).distinct().count()
-    assert(srcs == appended.n)
+    val n = emb.count()
+    assert(appended.n == n)
+    val queries = queriesOf(3L, 450L) // one old, one appended
+    for (ef <- Seq(0, n.toInt)) {
+      val viaGraph = BruteForceKnn.collect(appended.searchBatch(queries, "qid", "qv", k = 5, ef = ef))
+      assert(BruteForceKnn.same(viaGraph, exact(queries, 5)), s"ef=$ef")
+    }
     appended.dispose()
   }
 
   test("beam search visits a bounded fraction at tuned ef (not a rebadged scan)") {
-    // with ef = 16 and 3 hops the pool can hold at most
-    // ef + hops * ef * maxDegree scored rows — structurally bounded; pin
-    // the observable: results come back and differ from exact (tiny beam)
-    val q = queryVec(7)
-    val got = index.search(q, 10, ef = 16, maxHops = 3).collect()
-    assert(got.length == 10)
-    assert(got.head.getLong(0) == 7L) // still navigates to the query itself
+    // 2,000 clustered rows in one shard: a width-16 beam scores a small
+    // share of the (row, query) pairs; pairsScored counts every score
+    val n = 2000
+    val data = graft.tools.StructuredEmbeddings.frame(spark, n, 64, 20, sigma = 0.1, seed = 7L)
+    val g = GraphIndex.build(data, "vec_id", "embedding", k = 8)
+    val qs = graft.plans.KnnTopK.block(spark,
+      graft.tools.StructuredEmbeddings.rows(n, 64, 20, 0.1, 7L).take(10).map { case (id, v, _) => (id, v.map(_.toDouble)) })
+    val df = g.searchBatch(qs, "qid", "qv", k = 10, ef = 16)
+    df.collect()
+    val e = collect(df.queryExecution.executedPlan) { case x: KnnTopKExec => x }.head
+    val (scored, skipped) = (e.metrics("pairsScored").value, e.metrics("probeSkipped").value)
+    val pairs = n.toLong * 10
+    assert(scored + skipped == pairs)
+    // measured 4,150 of 20,000
+    assert(scored > 0 && scored <= pairs / 3, s"scored $scored of $pairs pairs")
+    g.dispose()
   }
 }

@@ -202,9 +202,9 @@ class IVFSpec extends AnyFunSuite {
       assert(opened.nlist == index.nlist)
       val q = queryVec(7)
       val viaDisk = opened.search(q, k = 5, nprobe = 2)
-      val plan = viaDisk.queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
-        s"probe did not prune parquet partitions:\n$plan")
+      assert(index.nlist > 2)
+      assert(SparkProbe.partitionsRead("assignments")(viaDisk.collect()) == Seq(2L),
+        "the probe read unprobed cluster directories")
       val got = viaDisk.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = index.search(q, k = 5, nprobe = 2)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

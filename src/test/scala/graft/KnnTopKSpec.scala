@@ -415,6 +415,33 @@ class KnnTopKSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(SparkProbe.jobs(hybrid()) == 3, "hybrid probe arm: vocabulary lookup, vector pass, BM25 pass")
   }
 
+  test("jobs: a collected hnsw queryVector is one job, a filtered probe two, and an append's cache fill one more") {
+    val local = new scala.util.Random(17)
+    def vecs(n: Int) = Seq.fill(n)(Array.fill(dim)(local.nextFloat()))
+    def metas(n: Int) = Some(Seq.tabulate(n)(i => Map[String, Any]("cat" -> s"c${i % 4}")))
+    val vs = vecs(300)
+    val q = vs(7)
+    // efSearch 50 < 300 rows: the tuned beam; ivfpq's nprobe 1 of 8 cells
+    for (t <- Seq("hnsw", "ivfpq")) {
+      val db = VectorDatabase.create(spark, dim, t, ivfClusters = 8)
+      db.add(vs.indices.map(i => s"doc $i"), vs, metas(vs.length))
+      val pre = Some(db.metaValue("cat") === org.apache.spark.sql.functions.lit("\"c1\""))
+      db.queryVector(q, 10).collect() // builds the index, filling the collection's cache
+      def unfiltered() = SparkProbe.jobs(db.queryVector(q, 10).collect())
+      def filtered() = SparkProbe.jobs(db.queryVector(q, 10, preFilter = pre).collect())
+      if (t == "hnsw") assert(unfiltered() == 1, t)
+      assert(filtered() == 2, s"$t: the broadcast allow-list and the pass")
+      db.add(Seq.tabulate(25)(i => s"more $i"), vecs(25), metas(25))
+      // the allow-list still broadcasts (the facade knows the row count
+      // the unfilled cache cannot give Spark); the first filtered call
+      // also fills the collection's new cache
+      if (t == "hnsw") assert(unfiltered() == 1, s"$t appended") else unfiltered()
+      assert(filtered() == 3, s"$t appended: the cache fill, the allow-list and the pass")
+      assert(filtered() == 2, s"$t appended")
+      db.close()
+    }
+  }
+
   test("metrics: BM25 pairs scored are the (doc, query) pairs sharing a term, the rest skipped") {
     val (docs, ix, qs) = text
     val sharing = (for (d <- docs; (_, q) <- qs

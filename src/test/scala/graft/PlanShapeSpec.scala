@@ -25,6 +25,24 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!belowMerge(p).contains("Sort ["), s"unexpected full sort:\n$p")
   }
 
+  test("graph beam: no exchange and no sort below the merge over a cached graph frame") {
+    import org.apache.spark.sql.functions.col
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val g = graft.vector.GraphIndex.build(emb, "vec_id", "embedding", k = 8, shardTarget = 100)
+    val qs = graft.plans.KnnTopK.block(spark, Seq((0L, Array.fill(64)(0.1))))
+    val allow = emb.where(col("vec_id") % 2 === 0).select(col("vec_id").as("id"))
+    for (r <- Seq(None, Some(allow))) {
+      val df = g.searchBatch(qs, "qid", "qv", 5, ef = 16, restrict = r)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("graph beam ef=16"), p)
+      // a filter broadcasts its allow-list; the frame is read in place
+      val below = belowMerge(p).replace("BroadcastExchange", "")
+      assert(!below.contains("Exchange") && !below.contains("Sort ["), s"filter=${r.isDefined}:\n$p")
+    }
+    g.dispose()
+  }
+
   test("dedup_embedding: pure equi-join structure — degrades to shuffle joins, never NLJ") {
     // at sf0.001 the optimizer may legitimately broadcast the 500-row corpus;
     // the 100 TB property is that with size-based broadcast off the plan is

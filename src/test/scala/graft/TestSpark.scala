@@ -22,7 +22,7 @@ object TestSpark {
   * actions (through a query-execution listener). Both event streams are
   * asynchronous but ordered, so each waits for a marker action run after
   * the block. */
-object SparkProbe {
+object SparkProbe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import java.util.concurrent.ConcurrentLinkedQueue
   import java.util.concurrent.atomic.AtomicLong
   import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -66,4 +66,13 @@ object SparkProbe {
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq.takeWhile(!isMarker(_)).map(_.executedPlan)
   }
+
+  /** The partition directories each parquet scan of `body` opened whose
+    * root path ends in `root` (a `partitionBy` read's pruned count). */
+  def partitionsRead(root: String)(body: => Unit): Seq[Long] =
+    plans(body).flatMap(plan => collect(plan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.endsWith(root)) =>
+        s.metrics("numPartitions").value
+    })
 }

@@ -493,13 +493,21 @@ class VectorDatabaseSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     db.add(many.indices.map(i => s"doc $i"), many, None)
     val path = java.nio.file.Files.createTempDirectory("graftivflazy").toString
     db.save(path)
-    val eager = VectorDatabase.load(spark, path)
+    // the lazy collection first: the eager load caches the same parquet
+    // read, and Spark's cache manager would then serve the lazy one from it
     val lazyDb = VectorDatabase.load(spark, path, lazyIndexes = true)
-    val plan = lazyDb.queryVector(many(5), 3).queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cluster"),
-      s"lazy ivf probe did not prune partitions:\n$plan")
-    val a = eager.queryVector(many(5), 3).collect().map(x => (x.getLong(0), x.getDouble(1)))
+    val ivf = lazyDb.indexIfBuilt match {
+      case Some(graft.vector.AnnIndex.Ivf(i)) => i
+      case other => fail(s"slot holds $other")
+    }
+    // efSearch 20 → nprobe 2 of the 4 cells
+    val probed = ivf.probeOrder(many(5).map(_.toDouble)).take(2)
+    assert(probed.length < ivf.nlist)
+    assert(SparkProbe.partitionsRead("assignments")(lazyDb.queryVector(many(5), 3).collect()) ==
+      Seq(probed.length.toLong), "the lazy probe read unprobed cluster directories")
     val b = lazyDb.queryVector(many(5), 3).collect().map(x => (x.getLong(0), x.getDouble(1)))
+    val eager = VectorDatabase.load(spark, path)
+    val a = eager.queryVector(many(5), 3).collect().map(x => (x.getLong(0), x.getDouble(1)))
     assert(a.sameElements(b))
   }
 
@@ -646,7 +654,11 @@ class VectorDatabaseSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // silent fallback to a full exact scan); nprobe here is 4 × efSearch/10
     // (the presence of a filter widens the probe budget)
     assert(p.contains("cluster"), s"no cluster pruning in plan:\n$p")
-    assert(p.contains("LeftSemi"), s"filter not applied as semi-join:\n$p")
+    // the allow-list is an existence join under the probe, filtered on its
+    // mark (KnnTopK.Restrict): a semi-join would be pushed into each branch
+    // of an appended (unioned) index and broadcast once per branch
+    assert(p.contains("ExistenceJoin") && p.contains("Filter allowed"),
+      s"filter not applied as a join under the probe:\n$p")
   }
 
   test("a preFilter widens the ivf probe budget 4x (probe-bounded recall, r3 ADVICE)") {
