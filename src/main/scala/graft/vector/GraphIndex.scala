@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, GenericInternalRow, SortOrder, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
@@ -28,16 +28,18 @@ import scala.collection.mutable
   * however the k-NN edges cluster; it is the flattened analog of HNSW's
   * layer hierarchy. The search walks every edge both ways.
   *
-  * Sharding: a corpus of at most `shardTarget` rows is one shard. A larger
-  * corpus is sharded by IVF cell (⌈n / shardTarget⌉ sample-trained cells).
-  * A cell of more than `shardTarget` rows is split by id hash into
-  * ⌈size / shardTarget⌉ shards. Each shard is wired inside its own task.
+  * Sharding: a corpus of at most `shardTarget` (4,096) rows is one shard.
+  * A larger corpus is sharded by IVF cell (⌈n / shardTarget⌉
+  * sample-trained cells). A cell of more than `shardTarget` rows is split
+  * by id hash into ⌈size / shardTarget⌉ shards, and [[append]] splits a
+  * cell that outgrows its shards the same way. Each shard is wired inside
+  * its own task.
   *
   * Search ([[searchBatch]]) is one [[KnnTopK]] pass. `ef ≤ 0` is the exact
   * scan over the graph's vectors ([[KnnScorer.Exact]]); the oracle gates
   * use it. A tuned `ef` runs [[KnnScorer.GraphBeam]]: each task builds the
   * adjacency of its shards once, then runs a width-ef beam per query from
-  * each shard's entry node, position 0.
+  * each shard's entry node, the first position with a vector.
   */
 final class GraphIndex private (val frame: DataFrame, val n: Long, val k: Int,
                                 private val layout: GraphIndex.Layout) {
@@ -75,26 +77,38 @@ final class GraphIndex private (val frame: DataFrame, val n: Long, val k: Int,
       restrict = restrict).select(col("id"), col("score"))
 
   /** Incremental maintenance (≙ hnsw `add_items`, local_db.py:78–80): the
-    * batch routes to shards by the build's rule, and only the shards it
-    * lands in are re-wired, each inside its own task, at a cost bounded by
-    * their size. The other shards keep their stored edges. A re-wired
-    * shard is the shard a build over its rows gives, so a one-shard index
-    * after an append equals a build over the union. The frame passes
-    * through one shuffle, which keeps its plan a leaf and its lineage one
-    * shuffle deep; the superseded frame is released. Shards never split on
-    * append: rebuild to re-balance. */
+    * batch routes to cells and shards by the build's rule, and only the
+    * shards it lands in are re-wired, each inside its own task, at a cost
+    * bounded by their size. The other shards keep their stored edges. A
+    * cell that grows past `shardTarget` rows per shard at least doubles
+    * its shards: its rows re-route by id hash and all of its shards are
+    * re-wired, so every shard stays bounded and the re-wiring a row causes
+    * is amortized constant. A re-wired shard is the shard a build over its
+    * rows gives, so a one-shard index after an append within the target
+    * equals a build over the union. The frame passes through one shuffle,
+    * which keeps its plan a leaf and its lineage one shuffle deep; the
+    * superseded frame is released. */
   def append(batch: DataFrame, idCol: String, vecCol: String): GraphIndex = {
-    val b = vectorsOf(batch, idCol, vecCol)
-      .select(layout.shardOf(col("vector"), col("id")).as("shard"), col("id"), col("vector"),
-        lit(null).cast(ArrayType(IntegerType, containsNull = false)).as("nbrs"))
+    val b = vectorsOf(batch, idCol, vecCol).withColumn("cell", layout.cellOf(col("vector")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nB = b.count()
+    val added = b.groupBy(col("cell")).count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val out =
-      if (nB == 0) this
+      if (added.isEmpty) this
       else {
-        val grown = new GraphIndex(wire(frame.unionByName(b), k, shards), n + nB, k, layout)
+        val grown = layout.grow(added)
+        val split = layout.pieces.indices.filter(c => grown.pieces(c) != layout.pieces(c))
+        val kept =
+          if (split.isEmpty) frame
+          else {
+            val cell = layout.cellOfShard(col("shard"))
+            frame.select(grown.shardOf(cell, col("id")).as("shard"), col("id"), col("vector"),
+              when(cell.isin(split: _*), noNbrs).otherwise(col("nbrs")).as("nbrs"))
+          }
+        val rows = kept.unionByName(b.select(grown.shardOf(col("cell"), col("id")).as("shard"),
+          col("id"), col("vector"), noNbrs.as("nbrs")))
+        val next = new GraphIndex(wire(rows, k, grown.shards), n + added.values.sum, k, grown)
         dispose()
-        grown
+        next
       }
     b.unpersist(blocking = false)
     out
@@ -104,49 +118,76 @@ final class GraphIndex private (val frame: DataFrame, val n: Long, val k: Int,
 object GraphIndex {
 
   /** Rows per shard a build aims at: one shard up to this size. */
-  val shardTarget = 4096
+  private[graft] val shardTarget = 4096
 
-  /** How rows route to shards: one shard when `centroids` is empty, else
-    * IVF cell c owns shards base(c) until base(c) + pieces(c), a row
-    * taking the one its id hashes to. */
-  private[vector] final case class Layout(centroids: Array[(Int, Array[Double])],
-                                          base: Array[Int], pieces: Array[Int]) {
-    def shards: Int = base.last + pieces.last
+  /** How rows route to shards. A row's cell is its nearest of `centroids`,
+    * or the one cell 0 when there are none. Cell c holds `rows(c)` rows in
+    * `pieces(c)` shards, base(c) until base(c) + pieces(c), a row taking
+    * the one its id hashes to; a build or an append keeps each cell at
+    * most `target` rows per piece. */
+  private[vector] final case class Layout(target: Int, centroids: Array[(Int, Array[Double])],
+                                          pieces: Array[Int], rows: Array[Long]) {
+    val base: Array[Int] = pieces.scanLeft(0)(_ + _).init
+    def shards: Int = pieces.sum
 
-    def shardOf(vector: Column, id: Column): Column =
+    def cellOf(vector: Column): Column =
       if (centroids.isEmpty) lit(0)
-      else {
-        val cell = coalesce(VectorExpr.nearestCentroid(vector, centroids.map(_._2)), lit(0)) + 1
-        (element_at(typedLit(base), cell) +
-          pmod(xxhash64(id), element_at(typedLit(pieces), cell).cast(LongType))).cast(IntegerType)
-      }
+      else coalesce(VectorExpr.nearestCentroid(vector, centroids.map(_._2)), lit(0))
+
+    /** The cell whose pieces include `shard`. */
+    def cellOfShard(shard: Column): Column =
+      element_at(typedLit(pieces.indices.flatMap(c => Seq.fill(pieces(c))(c)).toArray), shard + 1)
+
+    def shardOf(cell: Column, id: Column): Column =
+      if (shards == 1) lit(0)
+      else (element_at(typedLit(base), cell + 1) +
+        pmod(xxhash64(id), element_at(typedLit(pieces), cell + 1).cast(LongType))).cast(IntegerType)
+
+    /** This layout after `added(c)` more rows land in cell c: a cell over
+      * `target` rows per piece gets at least twice its pieces. */
+    def grow(added: Map[Int, Long]): Layout = {
+      val now = rows.indices.map(c => rows(c) + added.getOrElse(c, 0L)).toArray
+      copy(pieces = pieces.indices.map(c =>
+        if (now(c) <= pieces(c).toLong * target) pieces(c)
+        else math.max(2 * pieces(c), piecesFor(now(c), target))).toArray, rows = now)
+    }
   }
+
+  private def piecesFor(rows: Long, target: Int): Int =
+    math.max(1L, (rows + target - 1) / target).toInt
+
+  private def noNbrs: Column = lit(null).cast(ArrayType(IntegerType, containsNull = false))
 
   private def vectorsOf(data: DataFrame, idCol: String, vecCol: String): DataFrame =
     data.select(col(idCol).cast(LongType).as("id"), col(vecCol).cast("array<float>").as("vector"))
 
   /** Builds the index over `data`: `k` nearest-neighbour edges per node
-    * plus the skip-ring, in shards of about `shardTarget` rows. */
-  def build(data: DataFrame, idCol: String, vecCol: String,
-            k: Int = 8, shardTarget: Int = shardTarget): GraphIndex = {
-    require(shardTarget > 0, s"shardTarget must be positive, got $shardTarget")
+    * plus the skip-ring, in shards of at most about 4,096 rows. */
+  def build(data: DataFrame, idCol: String, vecCol: String, k: Int = 8): GraphIndex =
+    build(data, idCol, vecCol, k, shardTarget)
+
+  /** [[build]] in shards of at most about `target` rows. */
+  private[graft] def build(data: DataFrame, idCol: String, vecCol: String,
+                           k: Int, target: Int): GraphIndex = {
+    require(target > 0, s"shardTarget must be positive, got $target")
     val vectors = vectorsOf(data, idCol, vecCol)
     val n = vectors.count()
     require(n > 0, "cannot build a graph index over an empty corpus")
     val layout =
-      if (n <= shardTarget) Layout(Array.empty, Array(0), Array(1))
+      if (n <= target) Layout(target, Array.empty, Array(1), Array(n))
       else {
-        val cells = math.min(1L << 16, (n + shardTarget - 1) / shardTarget).toInt
+        val cells = math.min(1L << 16, piecesFor(n, target).toLong).toInt
         val ivf = IVFIndex.build(vectors, "id", "vector", cells)
-        val sizes = ivf.assignments.groupBy(col("cluster")).count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
         ivf.dispose()
-        val pieces = ivf.centroids.map { case (c, _) =>
-          math.max(1L, (sizes.getOrElse(c, 0L) + shardTarget - 1) / shardTarget).toInt }
-        Layout(ivf.centroids, pieces.scanLeft(0)(_ + _).init, pieces)
+        val cellular = Layout(target, ivf.centroids, Array.fill(ivf.centroids.length)(1),
+          new Array[Long](ivf.centroids.length))
+        val sizes = vectors.groupBy(cellular.cellOf(col("vector"))).count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val rows = cellular.rows.indices.map(c => sizes.getOrElse(c, 0L)).toArray
+        cellular.copy(pieces = rows.map(piecesFor(_, target)), rows = rows)
       }
-    val rows = vectors.select(layout.shardOf(col("vector"), col("id")).as("shard"), col("id"),
-      col("vector"), lit(null).cast(ArrayType(IntegerType, containsNull = false)).as("nbrs"))
+    val rows = vectors.select(layout.shardOf(layout.cellOf(col("vector")), col("id")).as("shard"),
+      col("id"), col("vector"), noNbrs.as("nbrs"))
     new GraphIndex(wire(rows, k, layout.shards), n, k, layout)
   }
 
@@ -172,8 +213,9 @@ object GraphIndex {
   }
 
   /** Position order of a shard's nodes: by id, then vector (lexicographic,
-    * null first). */
-  private def positions(ids: Array[Long], vecs: Array[Array[Double]]): Array[Int] = {
+    * null first), over `vec`, which is read on id ties only. A shard that
+    * arrives in position order, as the frame stores it, is not re-sorted. */
+  private def positions(ids: Array[Long], vec: Int => Array[Double]): Array[Int] = {
     def vecCmp(a: Array[Double], b: Array[Double]): Int =
       if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
       else {
@@ -182,10 +224,13 @@ object GraphIndex {
         while (c == 0 && i < math.min(a.length, b.length)) { c = java.lang.Double.compare(a(i), b(i)); i += 1 }
         if (c != 0) c else Integer.compare(a.length, b.length)
       }
-    ids.indices.toArray.sortWith { (x, y) =>
+    def cmp(x: Int, y: Int): Int = {
       val c = java.lang.Long.compare(ids(x), ids(y))
-      (if (c != 0) c else vecCmp(vecs(x), vecs(y))) < 0
+      if (c != 0) c else vecCmp(vec(x), vec(y))
     }
+    val order = ids.indices.toArray
+    if ((1 until ids.length).forall(i => cmp(i - 1, i) <= 0)) order
+    else order.sortWith(cmp(_, _) < 0)
   }
 
   /** `nbrs` of every position of a shard in position order: its `k`
@@ -235,7 +280,7 @@ object GraphIndex {
             if (r.isNullAt(3)) null else r.getArray(3).toIntArray())
         }
         val vecs = nodes.map(x => if (x.vector == null) null else x.vector.map(_.toDouble)).toArray
-        val order = positions(nodes.map(_.id).toArray, vecs)
+        val order = positions(nodes.map(_.id).toArray, vecs(_))
         val nbrs =
           if (nodes.forall(_.nbrs != null)) order.map(nodes(_).nbrs)
           else edges(order.map(vecs), k)
@@ -313,11 +358,12 @@ object GraphIndex {
     * ordered by shard: per shard, the symmetric adjacency once, then for
     * each query a best-first beam of width `ef` from the entry node (the
     * first position with a vector) that stops when its best unexpanded
-    * candidate ranks after the beam's worst. Every node is walked; only
-    * allowed nodes enter the beam, and the beam's nodes are offered to
-    * the query's heap. A null query vector offers every allowed node with
-    * a null score, as the exact scan does. `counts` as
-    * [[KnnTopK.rowScanner]]: (pairs scored, -, pairs never scored). */
+    * candidate ranks after the beam's worst. A node's vector is decoded
+    * when a beam first reaches it. Every node is walked; only allowed
+    * nodes enter the beam, and the beam's nodes are offered to the query's
+    * heap. A null query vector offers every allowed node with a null
+    * score, as the exact scan does. `counts` as [[KnnTopK.rowScanner]]:
+    * (pairs scored, -, pairs never scored). */
   private[graft] def searchShards(rows: Iterator[InternalRow], beam: KnnScorer.GraphBeam,
                                   qs: KnnTopK.QueryBlock, heaps: Array[KnnHeap],
                                   ords: Seq[Int], types: Seq[DataType], counts: Array[Long]): Unit = {
@@ -328,24 +374,36 @@ object GraphIndex {
     val best = new BeamHeap(worstOnTop = true)
     while (in.hasNext) {
       val shard = in.head.getInt(shardOrd)
-      val ids = mutable.ArrayBuffer.empty[Long]
-      val vs = mutable.ArrayBuffer.empty[Array[Double]]
-      val fwd = mutable.ArrayBuffer.empty[Array[Int]]
-      val ok = mutable.ArrayBuffer.empty[Boolean]
+      val ids = mutable.ArrayBuilder.make[Long]
+      val raws = mutable.ArrayBuffer.empty[ArrayData]
+      val fwds = mutable.ArrayBuffer.empty[Array[Int]]
+      val oks = mutable.ArrayBuilder.make[Boolean]
       while (in.hasNext && in.head.getInt(shardOrd) == shard) {
         val r = in.next()
         ids += r.getLong(idOrd)
-        vs += (if (r.isNullAt(vOrd)) null else {
-          val a = r.getArray(vOrd); VecKernels.toDoubles(a, vFloat, a.numElements()) })
-        fwd += r.getArray(nbrsOrd).toIntArray()
-        ok += r.getBoolean(allowedOrd)
+        raws += (if (r.isNullAt(vOrd)) null else r.getArray(vOrd).copy())
+        fwds += r.getArray(nbrsOrd).toIntArray()
+        oks += r.getBoolean(allowedOrd)
       }
-      val order = positions(ids.toArray, vs.toArray)
+      val arrived = ids.result()
+      // ties compare the vectors as the build ranked them (wireShards)
+      val order = positions(arrived, i => if (raws(i) == null) null
+        else if (vFloat) raws(i).toFloatArray().map(_.toDouble) else raws(i).toDoubleArray())
       val s = order.length
-      val (id, vec, allowed) = (order.map(ids), order.map(vs), order.map(ok))
-      val adj = adjacency(shard, order.map(fwd), id)
+      val (id, raw, allowed) = (order.map(arrived), order.map(raws), order.map(oks.result()))
+      val (start, to) = adjacency(shard, order.map(fwds), id)
+      val vecs = new Array[Array[Double]](s)
+      val decoded = new Array[Boolean](s)
+      def vec(p: Int): Array[Double] = {
+        if (!decoded(p)) {
+          decoded(p) = true
+          if (raw(p) != null) vecs(p) = VecKernels.toDoubles(raw(p), vFloat, raw(p).numElements())
+        }
+        vecs(p)
+      }
       val seen = new Array[Int](s)
-      val entry = vec.indexWhere(_ != null)
+      var entry = 0
+      while (entry < s && vec(entry) == null) entry += 1
       var scored = 0L
       var j = 0
       while (j < qs.size) {
@@ -356,12 +414,13 @@ object GraphIndex {
           var p = 0
           while (p < s) { if (allowed(p)) heap.offer(isNull = true, 0.0, id(p)); p += 1 }
           scored += s
-        } else if (entry >= 0) {
+        } else if (entry < s) {
           cand.clear(); best.clear()
           def visit(p: Int): Unit = {
             seen(p) = mark
-            if (vec(p) != null) {
-              val sc = beam.metric.scoreOf(vec(p), q)
+            val v = vec(p)
+            if (v != null) {
+              val sc = beam.metric.scoreOf(v, q)
               scored += 1
               if (best.size < beam.ef || before(sc, p, best.topScore, best.topPos)) {
                 cand.push(sc, p)
@@ -375,7 +434,10 @@ object GraphIndex {
             val (cs, c) = (cand.topScore, cand.topPos)
             cand.pop()
             if (best.size >= beam.ef && before(best.topScore, best.topPos, cs, c)) done = true
-            else adj(c).foreach(e => if (seen(e) != mark) visit(e))
+            else {
+              var e = start(c)
+              while (e < start(c + 1)) { if (seen(to(e)) != mark) visit(to(e)); e += 1 }
+            }
           }
           best.entries.foreach { case (sc, p) => heap.offer(isNull = false, sc, id(p)) }
         }
@@ -387,22 +449,55 @@ object GraphIndex {
   }
 
   /** The symmetric adjacency of one shard from its forward lists (in
-    * position order): sorted, distinct, no self-loops. A position outside
-    * the shard fails with a named error. */
-  private def adjacency(shard: Int, fwd: Array[Array[Int]], ids: Array[Long]): Array[Array[Int]] = {
+    * position order), as offsets: position p's neighbours are
+    * to(start(p) until start(p + 1)), sorted and distinct, no self-loops.
+    * A position outside the shard fails with a named error. */
+  private def adjacency(shard: Int, fwd: Array[Array[Int]], ids: Array[Long]): (Array[Int], Array[Int]) = {
     val s = fwd.length
-    val lists = Array.fill(s)(mutable.ArrayBuilder.make[Int])
+    // deg(p + 1): the list lengths with repeats, then their running sums
+    val deg = new Array[Int](s + 1)
     var p = 0
     while (p < s) {
-      fwd(p).foreach { q =>
+      val f = fwd(p)
+      var i = 0
+      while (i < f.length) {
+        val q = f(i)
         if (q < 0 || q >= s)
           throw new IllegalStateException(
             s"graph shard $shard node ${ids(p)} lists neighbour position $q outside its $s nodes")
-        if (q != p) { lists(p) += q; lists(q) += p }
+        if (q != p) { deg(p + 1) += 1; deg(q + 1) += 1 }
+        i += 1
       }
       p += 1
     }
-    lists.map(_.result().sorted.distinct)
+    p = 0
+    while (p < s) { deg(p + 1) += deg(p); p += 1 }
+    val fill = java.util.Arrays.copyOf(deg, s)
+    val to = new Array[Int](deg(s))
+    p = 0
+    while (p < s) {
+      val f = fwd(p)
+      var i = 0
+      while (i < f.length) {
+        val q = f(i)
+        if (q != p) { to(fill(p)) = q; fill(p) += 1; to(fill(q)) = p; fill(q) += 1 }
+        i += 1
+      }
+      p += 1
+    }
+    // sort each list and drop its repeats in place
+    val start = new Array[Int](s + 1)
+    var w = 0
+    p = 0
+    while (p < s) {
+      java.util.Arrays.sort(to, deg(p), deg(p + 1))
+      start(p) = w
+      var e = deg(p)
+      while (e < deg(p + 1)) { if (w == start(p) || to(w - 1) != to(e)) { to(w) = to(e); w += 1 }; e += 1 }
+      p += 1
+    }
+    start(s) = w
+    (start, to)
   }
 
   /** The graph artifacts [[save]] writes under a graph directory. */
@@ -413,17 +508,18 @@ object GraphIndex {
     import spark.implicits._
     index.frame.write.mode("overwrite").parquet(s"$path/nodes")
     val l = index.layout
-    Seq((index.n, index.k, l.centroids.map(_._1), l.centroids.map(_._2), l.base, l.pieces))
-      .toDF("n", "k", "cells", "centroids", "base", "pieces")
+    Seq((index.n, index.k, l.target, l.centroids.map(_._1), l.centroids.map(_._2), l.pieces, l.rows))
+      .toDF("n", "k", "target", "cells", "centroids", "pieces", "rows")
       .write.mode("overwrite").parquet(s"$path/layout")
   }
 
   /** Restores what [[save]] wrote: the nodes keep their edges. */
   def load(spark: SparkSession, path: String): GraphIndex = {
-    val r = spark.read.parquet(s"$path/layout").head()
-    val cells = r.getSeq[Int](2)
-    val layout = Layout(cells.zip(r.getSeq[scala.collection.Seq[Double]](3).map(_.toArray)).toArray,
-      r.getSeq[Int](4).toArray, r.getSeq[Int](5).toArray)
+    val r = spark.read.parquet(s"$path/layout")
+      .select("n", "k", "target", "cells", "centroids", "pieces", "rows").head()
+    val layout = Layout(r.getInt(2),
+      r.getSeq[Int](3).zip(r.getSeq[scala.collection.Seq[Double]](4).map(_.toArray)).toArray,
+      r.getSeq[Int](5).toArray, r.getSeq[Long](6).toArray)
     val nodes = spark.read.parquet(s"$path/nodes")
       .select(col("shard"), col("id"), col("vector"), col("nbrs"))
     new GraphIndex(wire(nodes, r.getInt(1), layout.shards), r.getLong(0), r.getInt(1), layout)

@@ -100,7 +100,7 @@ class GraphIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     appended.dispose(); whole.dispose()
 
     val sharded = GraphIndex.build(emb.where(col("vec_id") < cut), "vec_id", "embedding", k = 8,
-      shardTarget = 60)
+      target = 60)
     val before = rowsOf(sharded).groupBy(_._1)
     val batch = emb.where(col("vec_id").between(cut, cut + 4))
     val grown = sharded.append(batch, "vec_id", "embedding")
@@ -128,7 +128,7 @@ class GraphIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("shard rule: one shard up to shardTarget, IVF cells above it, each shard near the target") {
     assert(index.shards == 1)
     val n = emb.count()
-    val sharded = GraphIndex.build(emb, "vec_id", "embedding", k = 8, shardTarget = 100)
+    val sharded = GraphIndex.build(emb, "vec_id", "embedding", k = 8, target = 100)
     val sizes = shardsOf(sharded).values.map(_.length)
     assert(sizes.sum == n)
     assert(sizes.size >= ((n + 99) / 100).toInt, s"shards $sizes")
@@ -136,12 +136,35 @@ class GraphIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     sharded.dispose()
   }
 
+  test("append past shardTarget splits the shard: every shard stays bounded, search stays exact") {
+    // 30 rows in one shard of target 40, then 210 and 100 more: each
+    // overflowing append at least doubles the cell's hash pieces
+    val rows = randomRows(340, 8, 13)
+    val q = Array.fill(8)(0.5)
+    var idx = GraphIndex.build(frameOf(rows.take(30), 2), "id", "v", k = 4, target = 40)
+    assert(idx.shards == 1)
+    for ((upTo, minShards) <- Seq((240, 6), (340, 12))) {
+      idx = idx.append(frameOf(rows.slice(idx.n.toInt, upTo), 3), "id", "v")
+      val sizes = shardsOf(idx).values.map(_.length)
+      assert(idx.n == upTo && sizes.sum == upTo)
+      assert(idx.shards >= minShards && sizes.max <= 80, s"shards ${idx.shards}: $sizes")
+      val want = BruteForceKnn.topK(rows.take(upTo).map { case (i, v) => (i, v.map(_.toDouble)) },
+        Seq((0L, q)), 5, BruteForceKnn.L2Sq).map(h => (h._2, h._3.doubleValue))
+      // ef = 0 is the exact scan; a beam as wide as a shard walks all of it
+      for (ef <- Seq(0, upTo)) {
+        val got = idx.search(q, 5, ef = ef).collect().map(r => (r.getLong(0), r.getDouble(1)))
+        assert(got.toSeq == want, s"n=$upTo ef=$ef")
+      }
+    }
+    idx.dispose()
+  }
+
   test("sharded-path build: unbounded beam stays EXACT over approximate edges") {
     // 64 rows in shards of ~16: ef = 0 is the exact scan, and a beam at
     // least as wide as a shard walks all of it (the ring connects it)
     val rows = randomRows(64, 8, 5)
     val data = frameOf(rows, 3)
-    val idx = GraphIndex.build(data, "id", "v", k = 4, shardTarget = 16)
+    val idx = GraphIndex.build(data, "id", "v", k = 4, target = 16)
     assert(idx.shards >= 4)
     val q = Array.fill(8)(0.5)
     val want = BruteForceKnn.topK(rows.map { case (i, v) => (i, v.map(_.toDouble)) }, Seq((0L, q)), 5,
@@ -216,7 +239,7 @@ class GraphIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val data = frameOf(rows, parts)
       val allow = data.where(col("id") % 2 === 0).select(col("id"))
       Seq(GraphIndex.shardTarget, 40).flatMap { target =>
-        val g = GraphIndex.build(data, "id", "v", k = 6, shardTarget = target)
+        val g = GraphIndex.build(data, "id", "v", k = 6, target = target)
         try Seq(None, Some(allow)).map(r =>
           BruteForceKnn.collect(g.searchBatch(qs, "qid", "qv", k = 5, ef = 12, restrict = r)))
         finally g.dispose()
@@ -248,7 +271,7 @@ class GraphIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a loaded frame keeps its layout: the tuned search plans no exchange and no sort") {
     val path = java.nio.file.Files.createTempDirectory("graftgraphlayout").toString
-    val sharded = GraphIndex.build(emb, "vec_id", "embedding", k = 8, shardTarget = 100)
+    val sharded = GraphIndex.build(emb, "vec_id", "embedding", k = 8, target = 100)
     GraphIndex.save(sharded, path)
     val loaded = GraphIndex.load(spark, path)
     val df = loaded.searchBatch(block(Seq(3L, 4L)), "qid", "qv", k = 5, ef = 16)
@@ -264,10 +287,12 @@ class GraphIndexSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("append preserves connectivity: exact search over the union equals the flat scan") {
     val cut = 400L
     val base = GraphIndex.build(emb.where(col("vec_id") < cut), "vec_id", "embedding", k = 8,
-      shardTarget = 100)
+      target = 100)
     val appended = base.append(emb.where(col("vec_id") >= cut), "vec_id", "embedding")
     val n = emb.count()
     assert(appended.n == n)
+    val sizes = shardsOf(appended).values.map(_.length)
+    assert(sizes.sum == n && sizes.max <= 150, s"a shard far over the target after append: $sizes")
     val queries = queriesOf(3L, 450L) // one old, one appended
     for (ef <- Seq(0, n.toInt)) {
       val viaGraph = BruteForceKnn.collect(appended.searchBatch(queries, "qid", "qv", k = 5, ef = ef))

@@ -215,6 +215,27 @@ class PQSpec extends AnyFunSuite {
     }
   }
 
+  test("adc_lookup_sum: a code outside [0, kk) fails with the named error, interpreted and codegen") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
+    // one subspace of kk = 4 entries: table values 1..4
+    def sum(code: Int) = graft.expr.AdcLookupSum(Literal.create(Array(code), ArrayType(IntegerType)),
+      Literal(0), Literal.create(Array(1.0, 2.0, 3.0, 4.0), ArrayType(DoubleType)), 1, 4)
+    def interpreted(code: Int): Double = sum(code).eval(InternalRow.empty).asInstanceOf[Double]
+    def generated(code: Int): Double =
+      GenerateUnsafeProjection.generate(Seq(sum(code))).apply(InternalRow.empty).getDouble(0)
+    for ((path, eval) <- Seq[(String, Int => Double)](("interpreted", interpreted), ("codegen", generated))) {
+      assert(eval(2) == 3.0, path)
+      for (code <- Seq(-2, 4)) {
+        val e = intercept[IllegalArgumentException](eval(code))
+        assert(e.getMessage.contains(s"adc_lookup_sum codes row has code $code outside the trained codebooks"),
+          s"$path code=$code: ${e.getMessage}")
+      }
+    }
+  }
+
   test("searchBatch: a code outside its codebook fails with a named error") {
     import org.apache.spark.sql.functions.{array, col, lit, when}
     def msgs(t: Throwable): Seq[String] =

@@ -28,7 +28,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("graph beam: no exchange and no sort below the merge over a cached graph frame") {
     import org.apache.spark.sql.functions.col
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val g = graft.vector.GraphIndex.build(emb, "vec_id", "embedding", k = 8, shardTarget = 100)
+    val g = graft.vector.GraphIndex.build(emb, "vec_id", "embedding", k = 8, target = 100)
     val qs = graft.plans.KnnTopK.block(spark, Seq((0L, Array.fill(64)(0.1))))
     val allow = emb.where(col("vec_id") % 2 === 0).select(col("vec_id").as("id"))
     for (r <- Seq(None, Some(allow))) {

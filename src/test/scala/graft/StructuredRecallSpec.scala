@@ -73,7 +73,7 @@ class StructuredRecallSpec extends AnyFunSuite {
     // shard and the hits merge. On clustered geometry the true neighbours
     // share a cell, so tuned recall must hold the one-graph floor — this
     // pins the sharded build's quality, not just its cost
-    val gi = GraphIndex.build(emb, "vec_id", "embedding", k = 8, shardTarget = 100)
+    val gi = GraphIndex.build(emb, "vec_id", "embedding", k = 8, target = 100)
     assert(gi.shards >= 10, s"${gi.shards} shards")
     val recalls = qids.map { id =>
       val q = qvec(id)
