@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.VectorFunctions
+import graft.plans.{BucketPairs, PairVerifier}
 import graft.text.{BM25, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -12,17 +13,24 @@ import org.apache.spark.sql.functions._
   * Scale notes (the 100 TB story):
   *  - exact dedup is one hash aggregate — map-side combined, one shuffle on
   *    the 16-byte fingerprint, no text moves after the md5 projection.
-  *  - MinHash/LSH is the scale path for near-dup: cost is
-  *    O(rows × shingles × seeds) map work plus a shuffle keyed on
-  *    (band, band-hash); candidate verification touches only bucket
-  *    collisions, never the N² pair space.
-  *  - n-gram Jaccard self-join is exact but quadratic in the worst case —
-  *    use it to verify candidates or on bounded corpora; LSH above is the
-  *    funnel that keeps it bounded.
+  *  - every keyed pair funnel (MinHash bands, SimHash blocks, Jaccard
+  *    prefix grams, SemDeDup clusters) is ONE hash exchange on the key into
+  *    [[graft.plans.BucketPairs]]: per bucket, each task applies the
+  *    `maxBucket` size guard, enumerates the pairs a < b and verifies them
+  *    in place against the rows' payloads (gram sets, sim64, unit
+  *    vectors). No candidate pair is materialized, shuffled or joined back
+  *    to its payloads; a pair found in several buckets is collapsed by one
+  *    `distinct` over the (few) verified pairs.
+  *  - MinHash/LSH is the scale path for near-dup: O(rows × shingles ×
+  *    seeds) map work in one per-doc expression (no seeds cross join, no
+  *    signature aggregate), then the keyed exchange on (band, band-hash);
+  *    verification touches only bucket collisions, never the N² pair space.
+  *  - n-gram Jaccard is exact but quadratic in the worst case — use it on
+  *    bounded corpora; LSH above is the funnel that keeps it bounded.
   *  - SimHash reduces each doc to a 64-bit signature via one aggregation;
   *    banding over 16-bit blocks (pigeonhole: hamming ≤ 3 ⇒ one of 4 blocks
-  *    equal) turns pair-finding into an equi-join, with a bucket-size skew
-  *    guard against degenerate boilerplate buckets.
+  *    equal) keys the pair pass, with a bucket-size skew guard against
+  *    degenerate boilerplate buckets.
   *  - exact n-gram Jaccard stays exact AND sub-quadratic through
   *    prefix-filter candidate generation (rarest-first global gram order).
   *  - embedding near-dup: exact block-partitioned equi-join (O(N²) FLOPs is
@@ -48,19 +56,22 @@ object Dedup {
         i => concat_ws(" ", (0 until n).map(j => get(toksCol, i + lit(j))): _*)))
       .otherwise(array().cast("array<string>"))
 
-  /** Fallback-path hygiene (round-10 review): the per-call persisted
-    * helper frames (bands/signatures built when the caller passes no
-    * memoized frame) previously leaked until JVM exit — persist for the
-    * multi-consumption, FORCE the (pairs-sized) result, release the
-    * helpers, hand the caller a persisted result it can unpersist
-    * normally. Only the no-memo fallback pays the eager materialization;
-    * the memoized gate paths are untouched. */
-  private def eagerRelease(result: DataFrame, tmp: DataFrame*): DataFrame = {
+  /** The no-memo contract of the pair funnels: a persisted, materialized
+    * (pairs-sized) result, so a consumer that reads it repeatedly (the
+    * connected-components loop) never re-runs the funnel; the caller
+    * unpersists it normally. Memoized gate paths get the lazy frame. */
+  private def materialized(result: DataFrame): DataFrame = {
     val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
-    tmp.foreach(_.unpersist(blocking = false))
     out
   }
+
+  /** (a, b, jac) of a Jaccard [[BucketPairs]] pass: each pair once, jac
+    * rounded to 4 dp, ordered by (jac desc, a, b). */
+  private def jaccardResult(pairs: DataFrame): DataFrame =
+    pairs.select(col("a"), col("b"), col("score")).distinct()
+      .select(col("a"), col("b"), round(col("score"), 4).as("jac"))
+      .orderBy(col("jac").desc, col("a").asc, col("b").asc)
 
   /** (id, gram) — distinct token n-gram shingles per document.
     *
@@ -105,10 +116,11 @@ object Dedup {
     * Pairs Similarity Search", WWW'07): jac(A,B) ≥ t implies
     * |A∩B| ≥ t·max(|A|,|B|), so under ANY global gram order the two
     * (|X| − ⌈t·|X|⌉ + 1)-prefixes must intersect. Ordering grams rarest-
-    * first makes those prefixes the lowest-df grams — the candidate
-    * equi-join touches only rare-gram collisions instead of every shared
-    * shingle (a hot boilerplate gram no longer fans out quadratically),
-    * and exact verification of candidates preserves exactness.
+    * first makes those prefixes the lowest-df grams — the keyed pair pass
+    * ([[graft.plans.BucketPairs]] over prefix grams) touches only
+    * rare-gram collisions instead of every shared shingle (a hot
+    * boilerplate gram no longer fans out quadratically), and exact
+    * in-place verification of candidates preserves exactness.
     * Output: (a, b, jac). */
   /** `candidateBudget` (round 14, measured): the full-corpus funnel had
     * no candidate-volume guard — the r13 candidate-counted degradation
@@ -152,20 +164,14 @@ object Dedup {
                    candidateBudget: Long = 200000000L): (DataFrame, () => Unit) = {
     val sh = shingleFrame.getOrElse(shingles(docs, idCol, textCol, n))
     val gramSets = gramSetsFrame.getOrElse(docGramSets(sh))
-    // The candidate generator self-joins the prefix frame, and Spark does
-    // NOT reuse the exchange across the two sides (the window's expression
-    // ids defeat canonicalization) — an unmaterialized prefix plan runs its
-    // whole df-join-window chain TWICE (measured: the cold funnel's single
-    // biggest slice, r4 VERDICT #4). Callers re-running pair queries should
-    // pass a persisted `prefixFrame` ([[corpusPrefixes]]).
-    // When the caller did not hand us a (memoized) prefix frame AND the
-    // budget estimate is about to run a job anyway, persist the local
-    // chain: the estimate + the self-join's two sides would otherwise
-    // recompute the full df-join-window pipeline THREE times (r14 review;
-    // the pre-guard shape already ran it twice — r4 VERDICT #4). The
-    // cache is released on the fail-fast path; on success it stays warm
-    // for the join the caller is about to run (bounded: one narrow row
-    // per (doc, prefix gram) — the same frame gate callers memoize).
+    // The prefix frame is the expensive df-join-window chain. Callers
+    // re-running pair queries should pass a persisted `prefixFrame`
+    // ([[corpusPrefixes]]). When the caller did not AND the budget
+    // estimate is about to run a job over it, persist the local chain:
+    // the estimate and the pair pass would otherwise each recompute it.
+    // The cache is released on the fail-fast path; on success it stays
+    // warm for the pass the caller is about to run (bounded: one narrow
+    // row per (doc, prefix gram) — the same frame gate callers memoize).
     val localPrefix = prefixFrame.isEmpty && candidateBudget > 0
     val prefixes = {
       val p = prefixFrame.getOrElse(corpusPrefixes(sh, gramSets, threshold))
@@ -194,23 +200,19 @@ object Dedup {
       require(est <= candidateBudget,
         s"jaccardPairs: estimated candidate volume $est exceeds candidateBudget = " +
           s"$candidateBudget (rule: Sum_gram C(prefix_df, 2) prices the prefix " +
-          "self-join before it runs; a corpus this gram-dense makes the EXACT " +
+          "pair pass before it runs; a corpus this gram-dense makes the EXACT " +
           "funnel inherently quadratic — use minhashPairs64 or " +
           "embeddingPairsBanded, whose candidate volume is linear by " +
           "construction, or raise the budget on a cluster sized for it)")
     }
-    // shuffle-hash, not broadcast: the prefix frame's size is invisible to
-    // the parquet-derived estimate (it sits above an explode), and the
-    // planner's rogue broadcast of a million-row side is a driver OOM on a
-    // real cluster
-    val cand = prefixes.as("l")
-      .join(prefixes.as("r").hint("shuffle_hash"),
-        col("l.gram") === col("r.gram") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("r.id").as("b")).distinct()
+    // each (doc, prefix gram) row carries the doc's gram set, so the
+    // prefix-gram buckets verify in place: no candidate pair frame
+    val pairs = BucketPairs(prefixes.join(gramSets, Seq("id")), Seq("gram"),
+      PairVerifier.Jaccard(threshold), Int.MaxValue)
     val release: () => Unit =
       if (localPrefix) () => { prefixes.unpersist(blocking = false); () }
       else () => ()
-    (verifiedJaccard(cand, gramSets, threshold), release)
+    (jaccardResult(pairs), release)
   }
 
   /** The corpus prefix frame (rarest-first Bayardo prefixes) from the
@@ -350,8 +352,7 @@ object Dedup {
     val cand = newVsCorpus.unionByName(newVsNew)
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-    verifiedJaccard(cand, index.gramSets.unionByName(gsN), index.threshold,
-      broadcastCand = true)
+    verifiedJaccard(cand, index.gramSets.unionByName(gsN), index.threshold)
   }
 
   /** (id, grams): per-doc SORTED distinct-shingle array — one compact row
@@ -363,21 +364,14 @@ object Dedup {
   def docGramSets(sh: DataFrame): DataFrame =
     sh.groupBy(col("id")).agg(sort_array(collect_list(col("gram"))).as("grams"))
 
-  /** Exact-Jaccard verification of candidate pairs (a, b) against the
-    * per-doc gram-set frame — the shared back half of [[jaccardPairs]],
-    * [[minhashPairs]] and [[minhashPairs64]]. Two one-row-per-doc joins +
-    * a merge-walk intersect per pair; the old exploded formulation
-    * (cand ⨝ shingles(a) ⨝ shingles(b) on (id, gram) + count) shuffled
-    * |cand| × |doc| rows and dominated the whole funnel once candidates
-    * outnumbered true pairs (measured 84 of ~90 s at 10× sf0.1, where the
-    * low-entropy corpus yields 1.19 M candidates for 2 560 real pairs).
-    * A length-ratio prefilter (jac ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|),
-    * Bayardo WWW'07 §3.1) drops size-mismatched pairs before the walk. */
-  /** `broadcastCand = true` is the INCREMENTAL caller's shape: the pair
-    * frame is batch-GENERATED, so broadcasting it (and the first join's
-    * result) lets the corpus-sized gram-set frame stream in place with no
-    * exchange. The full-corpus callers keep the default — their candidate
-    * frames are corpus-scale and must shuffle.
+  /** Exact-Jaccard verification of [[jaccardPairsIncremental]]'s
+    * candidate pairs (a, b) against the per-doc gram-set frame: two
+    * one-row-per-doc joins + a merge-walk intersect per pair, after a
+    * length-ratio prefilter (jac ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|),
+    * Bayardo WWW'07 §3.1). The pair frame is batch-GENERATED, so it is
+    * broadcast (with the first join's result) and the corpus-sized
+    * gram-set frame streams in place with no exchange. The full-corpus
+    * funnels verify inside [[graft.plans.BucketPairs]] instead.
     *
     * GUARD (round 13 — found by the INDEPENDENT sf1 sweep, not the
     * replicas): a batch's candidate volume is bounded by
@@ -395,28 +389,24 @@ object Dedup {
     * the honest work — and never ∝ corpus. */
   private def verifiedJaccard(cand: DataFrame, gramSets: DataFrame,
                               threshold: Double,
-                              broadcastCand: Boolean = false,
                               broadcastMaxCand: Long = 200000L): DataFrame = {
     val inter = graft.expr.VectorExpr
       .sortedIntersectCount(col("ga"), col("gb")).cast("double")
     val jac = col("inter") / (col("sza") + col("szb") - col("inter"))
     val gsA = gramSets.select(col("id").as("a"), col("grams").as("ga"))
     val gsB = gramSets.select(col("id").as("b"), col("grams").as("gb"))
+    val c0 = cand.localCheckpoint(true)
     val paired =
-      if (!broadcastCand) cand.join(gsA, Seq("a")).join(gsB, Seq("b"))
+      if (c0.count() <= broadcastMaxCand)
+        broadcast(broadcast(c0).join(gsA, Seq("a"))).join(gsB, Seq("b"))
       else {
-        val c0 = cand.localCheckpoint(true)
-        if (c0.count() <= broadcastMaxCand)
-          broadcast(broadcast(c0).join(gsA, Seq("a"))).join(gsB, Seq("b"))
-        else {
-          val ids = c0.select(col("a").as("id"))
-            .unionAll(c0.select(col("b").as("id"))).distinct()
-          val touched = gramSets.join(broadcast(ids), Seq("id"), "left_semi")
-          c0.join(touched.select(col("id").as("a"), col("grams").as("ga"))
-              .hint("shuffle_hash"), Seq("a"))
-            .join(touched.select(col("id").as("b"), col("grams").as("gb"))
-              .hint("shuffle_hash"), Seq("b"))
-        }
+        val ids = c0.select(col("a").as("id"))
+          .unionAll(c0.select(col("b").as("id"))).distinct()
+        val touched = gramSets.join(broadcast(ids), Seq("id"), "left_semi")
+        c0.join(touched.select(col("id").as("a"), col("grams").as("ga"))
+            .hint("shuffle_hash"), Seq("a"))
+          .join(touched.select(col("id").as("b"), col("grams").as("gb"))
+            .hint("shuffle_hash"), Seq("b"))
       }
     paired
       .select(col("a"), col("b"),
@@ -438,124 +428,54 @@ object Dedup {
       .orderBy(col("jac").desc, col("a").asc, col("b").asc)
   }
 
-  /** MinHash signatures (Broder, "On the resemblance and containment of
-    * documents", SEQUENCES 1997): for each of `numHashes` seeds, the
-    * minimum of md5(seed ++ "_" ++ shingle) over the doc's shingle set —
-    * hex-string min, which orders identically in any engine. */
-  def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val seeds = (0 until numHashes).map(_.toLong).toDF("seed")
-    sh.crossJoin(broadcast(seeds))
-      .groupBy(col("id"), col("seed"))
-      .agg(min(md5(concat(col("seed").cast("string"), lit("_"), col("gram")))).as("mh"))
-  }
-
-  /** LSH banding: `rowsPerBand` signature rows concatenated (seed order) and
-    * re-hashed per band. Docs colliding in any band become candidate pairs.
+  /** (id, grams, band, bh): one row per (doc, LSH band) — the doc's
+    * gram set and its band hash, from [[graft.expr.MinhashBands]] (one
+    * per-doc expression; see there for the md5 and xxhash64 families).
     * P(collision per band) = jaccard^rowsPerBand — deeper bands keep the
-    * candidate set ~linear even on high-overlap corpora. */
-  def lshBands(sig: DataFrame, rowsPerBand: Int): DataFrame = {
-    val slots = (0 until rowsPerBand).map(k =>
-      min(when(col("seed") % rowsPerBand === k, col("mh"))))
-    sig.groupBy(col("id"), floor(col("seed") / rowsPerBand).as("band"))
-      .agg(md5(concat_ws("|", slots: _*)).as("bh"))
-  }
+    * candidate set ~linear even on high-overlap corpora. A doc with no
+    * grams has no rows. */
+  private[graft] def minhashBuckets(gramSets: DataFrame, numHashes: Int, rowsPerBand: Int,
+                                    wide: Boolean): DataFrame =
+    gramSets.select(col("id"), col("grams"), posexplode(graft.expr.TextExpr
+        .minhashBands(col("grams"), numHashes, rowsPerBand, wide)).as(Seq("band", "bh")))
 
-  /** Shingles → signatures → banded buckets, in one call (the reusable
-    * front half of [[minhashPairs]]). */
-  def minhashBands(sh: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame =
-    lshBands(minhashSignatures(sh, numHashes), rowsPerBand)
-
-  /** PRODUCTION-SCALE signature variant: min(xxhash64(seed, gram)) per
-    * (id, seed) — a LONG signature, so the aggregate has a fixed-width
-    * buffer and runs as a map-side-combined HashAggregate, where the
-    * md5-hex [[minhashSignatures]] forces SortAggregate (var-length string
-    * min). The trade: xxhash64 is engine-private, so an external SQL oracle
-    * cannot reproduce the buckets — use this path at scale and the md5 path
-    * where cross-engine bit-parity is required. Candidate recall is
-    * statistically equivalent (both are uniform hash families; see the
-    * differential spec in DedupSpec). */
-  def minhashSignatures64(sh: DataFrame, numHashes: Int): DataFrame = {
-    val spark = sh.sparkSession
-    import spark.implicits._
-    val seeds = (0 until numHashes).map(_.toLong).toDF("seed")
-    sh.crossJoin(broadcast(seeds))
-      .groupBy(col("id"), col("seed"))
-      .agg(min(xxhash64(col("seed"), col("gram"))).as("mh"))
-  }
-
-  /** LONG-signature banding twin of [[lshBands]]: the band hash is one
-    * xxhash64 over the band's slot minima — fixed-width end to end. */
-  def lshBands64(sig: DataFrame, rowsPerBand: Int): DataFrame = {
-    val slots = (0 until rowsPerBand).map(k =>
-      min(when(col("seed") % rowsPerBand === k, col("mh"))))
-    sig.groupBy(col("id"), floor(col("seed") / rowsPerBand).as("band"))
-      .agg(xxhash64(slots: _*).as("bh"))
-  }
-
-  /** MinHash+LSH near-dup over LONG signatures — same funnel as
-    * [[minhashPairs]] (bands → guarded bucket candidates → exact-Jaccard
-    * verification, so results are EXACT pairs above threshold either way;
-    * only candidate recall depends on the hash family). The scale default;
-    * [[minhashPairs]] is the oracle-parity twin. */
-  def minhashPairs64(docs: DataFrame, idCol: String, textCol: String,
-                     n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
-                     threshold: Double = 0.8,
-                     shingleFrame: Option[DataFrame] = None,
-                     maxBucket: Int = 2000,
-                     bandsFrame: Option[DataFrame] = None,
-                     gramSetsFrame: Option[DataFrame] = None): DataFrame = {
-    // same caller contract as [[minhashPairs]]: pass persisted bands/gram-set
-    // frames when running repeated queries over one collection (the bands
-    // self-join consumes its input twice)
-    val sh = shingleFrame.getOrElse(shingles(docs, idCol, textCol, n))
-    // persisted like the md5 twin: the guard's groupBy plus BOTH self-join
-    // sides consume bands — the unpersisted fallback re-ran the seed
-    // crossJoin + signature aggregation ~3× per call (round-10 review)
-    val bands0 = bandsFrame.getOrElse(
-      lshBands64(minhashSignatures64(sh, numHashes), rowsPerBand)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val bands = bucketGuard(bands0, Seq("band", "bh"), maxBucket)
-    val cand = bands.as("l")
-      .join(bands.as("r"), col("l.band") === col("r.band") && col("l.bh") === col("r.bh")
-        && col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("r.id").as("b")).distinct()
-    val res = verifiedJaccard(cand, gramSetsFrame.getOrElse(docGramSets(sh)), threshold)
-    if (bandsFrame.isEmpty) eagerRelease(res, bands0) else res
-  }
-
-  /** MinHash+LSH near-dup: signatures → bands → bucket-collision candidates
-    * → exact-Jaccard verification of candidates only.
-    * Output: (a, b, jac) with jac ≥ threshold, a < b. */
+  /** MinHash+LSH near-dup: per-doc band hashes → one keyed pass over the
+    * (band, band-hash) buckets, guarded by `maxBucket`, each collision
+    * verified by exact Jaccard in place. Output: (a, b, jac) with
+    * jac ≥ threshold, a < b — EXACT pairs above threshold; only candidate
+    * recall depends on the hash family. Callers re-running pair queries
+    * over one collection pass a persisted `gramSetsFrame` and get a lazy
+    * frame; without one the gram sets are built straight from the corpus
+    * and the result comes back persisted and materialized. */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
                    threshold: Double = 0.8,
-                   shingleFrame: Option[DataFrame] = None,
                    maxBucket: Int = 2000,
-                   bandsFrame: Option[DataFrame] = None,
-                   gramSetsFrame: Option[DataFrame] = None): DataFrame = {
-    // Callers that run several dedup ops over one collection should pass a
-    // persisted shingleFrame (bounded: one per collection) — a per-call
-    // persist here would leak executor memory across a session's queries.
-    // Same for bandsFrame (callers re-running pair queries: memoize
-    // `minhashBands` once — see graft.Queries' caches).
-    val sh = shingleFrame.getOrElse(shingles(docs, idCol, textCol, n))
-    // persisted: the self-join consumes bands twice, and everything under it
-    // (seed crossJoin + two SortAggregates — min(STRING) has a var-length
-    // buffer, so HashAggregate is unavailable) would otherwise run twice.
-    // One row per (doc, band): tiny relative to the corpus.
-    val bands0 = bandsFrame.getOrElse(minhashBands(sh, numHashes, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // skew guard: a hot (band, bh) bucket makes the self-join quadratic in
-    // its size (r1 VERDICT #5); see [[oversizedBuckets]] for what a cap drops
-    val bands = bucketGuard(bands0, Seq("band", "bh"), maxBucket)
-    val cand = bands.as("l")
-      .join(bands.as("r"), col("l.band") === col("r.band") && col("l.bh") === col("r.bh")
-        && col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("r.id").as("b")).distinct()
-    val res = verifiedJaccard(cand, gramSetsFrame.getOrElse(docGramSets(sh)), threshold)
-    if (bandsFrame.isEmpty) eagerRelease(res, bands0) else res
+                   gramSetsFrame: Option[DataFrame] = None): DataFrame =
+    minhashFunnel(docs, idCol, textCol, n, numHashes, rowsPerBand, threshold, maxBucket,
+      gramSetsFrame, wide = false)
+
+  /** [[minhashPairs]] over LONG xxhash64 signatures — the scale default:
+    * fixed-width end to end, but engine-private, so an external SQL
+    * oracle cannot reproduce the buckets; [[minhashPairs]] is the
+    * oracle-parity twin. Candidate recall is statistically equivalent
+    * (both are uniform hash families; see the differential spec). */
+  def minhashPairs64(docs: DataFrame, idCol: String, textCol: String,
+                     n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4,
+                     threshold: Double = 0.8,
+                     maxBucket: Int = 2000,
+                     gramSetsFrame: Option[DataFrame] = None): DataFrame =
+    minhashFunnel(docs, idCol, textCol, n, numHashes, rowsPerBand, threshold, maxBucket,
+      gramSetsFrame, wide = true)
+
+  private def minhashFunnel(docs: DataFrame, idCol: String, textCol: String, n: Int,
+                            numHashes: Int, rowsPerBand: Int, threshold: Double,
+                            maxBucket: Int, gramSetsFrame: Option[DataFrame],
+                            wide: Boolean): DataFrame = {
+    val gramSets = gramSetsFrame.getOrElse(docGramSetsDirect(docs, idCol, textCol, n))
+    val res = jaccardResult(BucketPairs(minhashBuckets(gramSets, numHashes, rowsPerBand, wide),
+      Seq("band", "bh"), PairVerifier.Jaccard(threshold), maxBucket))
+    if (gramSetsFrame.isEmpty) materialized(res) else res
   }
 
   /** SimHash width in bits; 64 bits = first 16 md5 nibbles × 4 bits each.
@@ -605,36 +525,27 @@ object Dedup {
 
   /** SimHash near-dup pairs with hamming distance ≤ `maxHamming` (≤ 3):
     * pigeonhole banding over 4 × 16-bit blocks (hamming ≤ 3 ⇒ some block
-    * identical) turns candidate generation into an equi-join; exact hamming
-    * check on candidates. Output: (a, b, hamming). */
+    * identical) keys one [[graft.plans.BucketPairs]] pass; the exact
+    * hamming check runs in place. Output: (a, b, hamming). */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    simFrame: Option[DataFrame] = None,
                    maxBucket: Int = 2000): DataFrame = {
     require(maxHamming < 4, "4-block banding guarantees recall only for hamming <= 3")
     // callers running repeated queries should pass a persisted simFrame
-    // (one LONG per doc) — same contract as minhashPairs' shingleFrame;
-    // otherwise persist locally for the two-sided self-join.
-    val sim = simFrame.getOrElse(simhash64(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val blocks0 = sim.select(col("id"), col("sim64"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("blk"),
-            shiftrightunsigned(col("sim64"), 16 * (3 - b)).bitwiseAND(lit(0xFFFFL)).as("bs"))): _*)).as("e"))
-      .select(col("id"), col("sim64"), col("e.blk"), col("e.bs"))
-    // skew guard, as in minhashPairs (boilerplate-heavy corpora share
-    // 16-bit blocks; an unguarded hot bucket is an in-bucket N² join)
-    val blocks = bucketGuard(blocks0, Seq("blk", "bs"), maxBucket)
-    val cand = blocks.as("l")
-      .join(blocks.as("r"), col("l.blk") === col("r.blk") && col("l.bs") === col("r.bs")
-        && col("l.id") < col("r.id"))
-      .select(col("l.id").as("a"), col("l.sim64").as("sa"),
-        col("r.id").as("b"), col("r.sim64").as("sb")).distinct()
-    val res = cand.select(col("a"), col("b"),
-        bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
+    // (one LONG per doc) and get a lazy frame; without one the result
+    // comes back persisted and materialized
+    val sim = simFrame.getOrElse(simhash64(docs, idCol, textCol))
+    val blocks = sim.select(col("id"), col("sim64"),
+      posexplode(array((0 until 4).map(b =>
+        shiftrightunsigned(col("sim64"), 16 * (3 - b)).bitwiseAND(lit(0xFFFFL))): _*))
+        .as(Seq("blk", "bs")))
+    // skew guard in the pass (boilerplate-heavy corpora share 16-bit
+    // blocks; an unguarded hot bucket is an in-bucket N² enumeration)
+    val res = BucketPairs(blocks, Seq("blk", "bs"), PairVerifier.Hamming(maxHamming), maxBucket)
+      .select(col("a"), col("b"), col("score").as("hamming")).distinct()
       .orderBy(col("hamming").asc, col("a").asc, col("b").asc)
-    if (simFrame.isEmpty) eagerRelease(res, sim) else res
+    if (simFrame.isEmpty) materialized(res) else res
   }
 
   /** Embedding-cosine near-dup pairs (a < b, cos ≥ threshold), EXACT, as a
@@ -905,8 +816,9 @@ object Dedup {
   private def assignToAnchors(emb: DataFrame, idCol: String, vecCol: String,
                               nAnchors: Int): (DataFrame, Array[Array[Double]], Array[Long]) = {
     val rows = normalized(emb, idCol, vecCol)
-    val anchorRows = rows.where(col("id") < nAnchors).orderBy(col("id"))
-      .collect() // ≤ nAnchors rows — driver-sized by construction
+    // ≤ nAnchors rows, so sorted after the collect: a distributed sort
+    // would run its own sampling and shuffle jobs
+    val anchorRows = rows.where(col("id") < nAnchors).collect().sortBy(_.getLong(0))
     require(anchorRows.nonEmpty, s"no anchor rows with $idCol < $nAnchors")
     val centroids = anchorRows.map(_.getSeq[Double](1).toArray)
     val anchorIds = anchorRows.map(_.getLong(0))
@@ -920,12 +832,12 @@ object Dedup {
       .withColumn("cluster", element_at(array(anchorIds.map(lit(_)): _*), col("ci") + 1))
       .drop("ci")
 
-  /** (ib, cluster, max_cos) over a within-cluster pair frame — the shared
-    * tail of both semantic-drop arms. */
+  /** (id, cluster, max_cos) over a within-cluster (ib, cluster, cos) pair
+    * frame — the shared tail of both semantic-drop arms. */
   private def dropRows(pairs: DataFrame): DataFrame =
     pairs
       .groupBy(col("ib"), col("cluster"))
-      .agg(round(max(VectorFunctions.dot(col("va"), col("vb"))), 4).as("max_cos"))
+      .agg(round(max(col("cos")), 4).as("max_cos"))
       .select(col("ib").as("id"), col("cluster"), col("max_cos"))
       .orderBy(col("id"))
 
@@ -940,18 +852,12 @@ object Dedup {
     * frame — the shared back half of [[semanticDrop]] (anchor centroids)
     * and [[semanticDropTrained]] (k-means centroids). */
   private def semanticDropAssigned(assigned: DataFrame, threshold: Double,
-                                   maxCluster: Int): DataFrame = {
-    // per-cluster occupancy guard: ≤ nClusters rows — always broadcast
-    val okClusters = assigned.groupBy(col("cluster")).agg(count(lit(1)).as("n"))
-      .where(col("n") <= maxCluster).select("cluster")
-    val ok = assigned.join(broadcast(okClusters), Seq("cluster"))
-    val dot = VectorFunctions.dot(col("va"), col("vb"))
-    dropRows(
-      ok.select(col("cluster"), col("id").as("ia"), col("vn").as("va"))
-        .join(ok.select(col("cluster"), col("id").as("ib"), col("vn").as("vb")), Seq("cluster"))
-        .where(col("ia") < col("ib"))
-        .where(dot >= threshold))
-  }
+                                   maxCluster: Int): DataFrame =
+    // one pass keyed by cluster, the occupancy guard applied per cluster;
+    // its output stays clustered by cluster, so the (ib, cluster)
+    // aggregate needs no second exchange
+    dropRows(BucketPairs(assigned, Seq("cluster"), PairVerifier.Cosine(threshold), maxCluster)
+      .select(col("b").as("ib"), col("cluster"), col("score").as("cos")))
 
   /** SemDeDup with TRAINED centroids (round 13, r12 VERDICT #6) — the
     * paper's actual clustering: k-means on the unit sphere (the IVF
@@ -1147,7 +1053,8 @@ object Dedup {
     val vsBatch = b.select(col("cluster"), col("id").as("ia"), col("vn").as("va"))
       .join(batchSide(right), Seq("cluster"))
       .where(col("ia") < col("ib"))
-    dropRows(vsCorpus.unionByName(vsBatch).where(dot >= index.threshold))
+    dropRows(vsCorpus.unionByName(vsBatch).where(dot >= index.threshold)
+      .select(col("ib"), col("cluster"), dot.as("cos")))
   }
 
   /** Sign-random-projection banded buckets: (id, band, sig) — one narrow row

@@ -3,11 +3,13 @@ package graft.expr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import java.nio.charset.StandardCharsets
 
 /** SINGLE SOURCE OF TRUTH for the word n-gram kernel (round-11 review:
   * [[WordShingles]], [[RepetitionStats]] and the streaming decontamination
@@ -124,22 +126,6 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
       s"$prettyName requires a STRING arg, got ${other.simpleString}")
   }
 
-  private[this] val hexDigits = "0123456789abcdef".toCharArray
-
-  private def hex(hi: Long, lo: Long): String = {
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) { out(i) = hexDigits(((hi >>> (60 - 4 * i)) & 0xF).toInt); i += 1 }
-    while (i < 32) { out(i) = hexDigits(((lo >>> (60 - 4 * (i - 16))) & 0xF).toInt); i += 1 }
-    new String(out)
-  }
-
-  // unsigned 128-bit big-endian compare == lexicographic order of the hex
-  private def less(aHi: Long, aLo: Long, bHi: Long, bLo: Long): Boolean = {
-    val c = java.lang.Long.compareUnsigned(aHi, bHi)
-    c < 0 || (c == 0 && java.lang.Long.compareUnsigned(aLo, bLo) < 0)
-  }
-
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
     // code-point start offsets; fast path when no surrogate pairs
@@ -164,9 +150,7 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
       val until = if (cps == null) i + k else cps(i + k)
       val d = md.digest(s.substring(from, until)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      var h = 0L; var l = 0L; var b = 0
-      while (b < 8) { h = (h << 8) | (d(b) & 0xFFL); l = (l << 8) | (d(b + 8) & 0xFFL); b += 1 }
-      hi(i) = h; lo(i) = l
+      hi(i) = Md5Hex.word(d, 0); lo(i) = Md5Hex.word(d, 8)
       i += 1
     }
     // monotonic-deque sliding minimum: O(nGrams) total comparisons
@@ -175,10 +159,10 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
     var head = 0; var tail = 0 // dq[head, tail) ascending by value
     var j = 0
     while (j < nGrams) {
-      while (tail > head && !less(hi(dq(tail - 1)), lo(dq(tail - 1)), hi(j), lo(j))) tail -= 1
+      while (tail > head && !Md5Hex.less(hi(dq(tail - 1)), lo(dq(tail - 1)), hi(j), lo(j))) tail -= 1
       dq(tail) = j; tail += 1
       if (dq(head) <= j - w) head += 1
-      if (j >= w - 1) { val m = dq(head); seen.add(hex(hi(m), lo(m))) }
+      if (j >= w - 1) { val m = dq(head); seen.add(Md5Hex.hex(hi(m), lo(m))) }
       j += 1
     }
     val out = new Array[Any](seen.size)
@@ -249,9 +233,134 @@ case class RepetitionStats(child: Expression, n: Int)
     copy(child = newChild)
 }
 
+/** MinHash LSH band hashes of ONE document in ONE expression (Broder,
+  * "On the resemblance and containment of documents", SEQUENCES 1997):
+  * the doc's gram array → one band hash per band of `rowsPerBand`
+  * consecutive seeds (the last band holds the remainder when `numHashes`
+  * is not a multiple). Replaces the per-corpus seeds cross join, the
+  * (id, seed) minimum aggregate and the (id, band) regroup: the signature
+  * never becomes Catalyst rows.
+  *
+  * md5 (`wide = false`): slot s is the minimum of the lowercase hex
+  * md5(s ++ "_" ++ gram) — compared as unsigned 128-bit big-endian values,
+  * the same order as the hex strings — and a band's hash is the hex
+  * md5 of its slots joined by "|". Bit-identical to
+  * `min(md5(concat(seed, '_', gram)))` and `md5(concat_ws('|', slots))`,
+  * so an external SQL engine reproduces every bucket.
+  *
+  * xxhash64 (`wide = true`): slot s is the (signed) minimum of Spark's
+  * `xxhash64(s, gram)`, a band's hash `xxhash64(slots…)` — LONG end to
+  * end, engine-private, bit for bit Spark's own function.
+  *
+  * Semantics: null → null; an empty array (a doc with fewer than n
+  * tokens) → an empty array, so an explode emits no band rows for it. */
+case class MinhashBands(child: Expression, numHashes: Int, rowsPerBand: Int, wide: Boolean)
+    extends UnaryExpression with CodegenFallback {
+  require(numHashes >= 1 && rowsPerBand >= 1, "numHashes and rowsPerBand must be >= 1")
+
+  override def prettyName: String = "minhash_bands"
+  override def dataType: DataType =
+    ArrayType(if (wide) LongType else StringType, containsNull = false)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an ARRAY<STRING> arg, got ${other.simpleString}")
+  }
+
+  /** The seeds of band b, in slot order. */
+  private def slots(b: Int): Range = b * rowsPerBand until math.min(numHashes, (b + 1) * rowsPerBand)
+  private def nBands: Int = (numHashes + rowsPerBand - 1) / rowsPerBand
+  @transient private lazy val md5Prefixes =
+    Array.tabulate(numHashes)(s => s"${s}_".getBytes(StandardCharsets.UTF_8))
+  @transient private lazy val xxSeeds =
+    Array.tabulate(numHashes)(s => XxHash64Function.hash(s.toLong, LongType, 42L))
+
+  override def nullSafeEval(input: Any): Any = {
+    val grams = input.asInstanceOf[ArrayData]
+    if (grams.numElements() == 0) new GenericArrayData(Array.empty[Any])
+    else if (wide) xxBands(grams)
+    else md5Bands(grams)
+  }
+
+  private def md5Bands(grams: ArrayData): GenericArrayData = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hi = Array.fill(numHashes)(-1L)
+    val lo = Array.fill(numHashes)(-1L)
+    val d = new Array[Byte](16)
+    var g = 0
+    while (g < grams.numElements()) {
+      val bytes = grams.getUTF8String(g).getBytes
+      var s = 0
+      while (s < numHashes) {
+        md.update(md5Prefixes(s)); md.update(bytes)
+        md.digest(d, 0, 16)
+        val h = Md5Hex.word(d, 0); val l = Md5Hex.word(d, 8)
+        if (Md5Hex.less(h, l, hi(s), lo(s))) { hi(s) = h; lo(s) = l }
+        s += 1
+      }
+      g += 1
+    }
+    new GenericArrayData(Array.tabulate[Any](nBands) { b =>
+      val band = slots(b).map(s => Md5Hex.hex(hi(s), lo(s))).mkString("|")
+      val h = md.digest(band.getBytes(StandardCharsets.UTF_8))
+      UTF8String.fromString(Md5Hex.hex(Md5Hex.word(h, 0), Md5Hex.word(h, 8)))
+    })
+  }
+
+  private def xxBands(grams: ArrayData): GenericArrayData = {
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    var g = 0
+    while (g < grams.numElements()) {
+      val gram = grams.getUTF8String(g)
+      var s = 0
+      while (s < numHashes) {
+        mins(s) = math.min(mins(s), XxHash64Function.hash(gram, StringType, xxSeeds(s)))
+        s += 1
+      }
+      g += 1
+    }
+    new GenericArrayData(Array.tabulate[Any](nBands)(b =>
+      slots(b).foldLeft(42L)((h, s) => XxHash64Function.hash(mins(s), LongType, h))))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** md5 digests as two big-endian longs, rendered as Spark's lowercase hex. */
+private[graft] object Md5Hex {
+  private val digits = "0123456789abcdef".toCharArray
+
+  /** Unsigned 128-bit big-endian compare == lexicographic order of the hex. */
+  def less(aHi: Long, aLo: Long, bHi: Long, bLo: Long): Boolean = {
+    val c = java.lang.Long.compareUnsigned(aHi, bHi)
+    c < 0 || (c == 0 && java.lang.Long.compareUnsigned(aLo, bLo) < 0)
+  }
+
+  def word(d: Array[Byte], off: Int): Long = {
+    var w = 0L; var b = 0
+    while (b < 8) { w = (w << 8) | (d(off + b) & 0xFFL); b += 1 }
+    w
+  }
+
+  def hex(hi: Long, lo: Long): String = {
+    val out = new Array[Char](32)
+    var i = 0
+    while (i < 16) { out(i) = digits(((hi >>> (60 - 4 * i)) & 0xF).toInt); i += 1 }
+    while (i < 32) { out(i) = digits(((lo >>> (60 - 4 * (i - 16))) & 0xF).toInt); i += 1 }
+    new String(out)
+  }
+}
+
 object TextExpr {
   def wordShingles(text: Column, n: Int): Column =
     GraftColumnBridge.column(WordShingles(GraftColumnBridge.expression(text), n))
+
+  def minhashBands(grams: Column, numHashes: Int, rowsPerBand: Int, wide: Boolean): Column =
+    GraftColumnBridge.column(MinhashBands(GraftColumnBridge.expression(grams), numHashes,
+      rowsPerBand, wide))
 
   def repetitionStats(text: Column, n: Int): Column =
     GraftColumnBridge.column(RepetitionStats(GraftColumnBridge.expression(text), n))

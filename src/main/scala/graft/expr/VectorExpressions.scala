@@ -505,6 +505,20 @@ case class AdcLookupSum(codesArr: Expression, cluster: Expression, tables: Expre
     copy(codesArr = f, cluster = sec, tables = t)
 }
 
+object SortedIntersectCount {
+  /** The merge walk, for interpreted callers ([[graft.plans.BucketPairs]]). */
+  def count(a: ArrayData, b: ArrayData): Long = {
+    var i = 0; var j = 0; var n = 0L
+    while (i < a.numElements() && j < b.numElements()) {
+      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      if (c == 0) { n += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    n
+  }
+}
+
 object AdcLookupSum {
   /** `code` when it indexes a codebook of `kk` entries, else the named error. */
   def checked(code: Int, kk: Int): Int = {
@@ -535,17 +549,8 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
           s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
     }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
-    var i = 0; var j = 0; var n = 0L
-    while (i < a.numElements() && j < b.numElements()) {
-      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (c == 0) { n += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    n
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    SortedIntersectCount.count(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 private[graft] trait QueriesDedup { this: Queries.type =>
 
   /** Memoized persisted shingle frame per (session, dir) — one bounded copy
-    * shared by the Jaccard and MinHash dedup plans. */
+    * behind the Jaccard prefix frame. */
   private[graft] val shingleCache = new Memo[DataFrame](memoMax, "shingleCache")(unp)
 
   /** persist() alone is lazy: a cold query whose plan scans the frame from
@@ -190,26 +190,17 @@ private[graft] trait QueriesDedup { this: Queries.type =>
           .localCheckpoint(true)))
   }
 
-  /** Memoized persisted banded-signature frame (one row per doc × band) —
-    * the expensive SortAggregate chain behind minhash runs once per
-    * (session, dir), not once per bench run. */
-  private[graft] val minhashBandsCache = new Memo[DataFrame](memoMax, "minhashBandsCache")(unp)
-
-  private[graft] def docMinhashBands(spark: SparkSession, dir: String): DataFrame =
-    minhashBandsCache.get(spark, dir)(
-      eager(Dedup.minhashBands(docShingles(spark, dir), numHashes = 16, rowsPerBand = 4)))
-
   /** Memoized verified MinHash pair frame — the maintained near-dup pair
-    * index, same contract as [[jaccardPairsCache]]: the banded candidate
-    * join + merge-walk verification run once per (session, dir); repeated
-    * queries read the tiny verified frame. */
+    * index, same contract as [[jaccardPairsCache]]: the band hashes, the
+    * keyed bucket pass and its in-place verification run once per
+    * (session, dir); repeated queries read the tiny verified frame. The
+    * band hashes are not memoized on their own: they are one projection
+    * of the memoized gram sets, consumed once by this build. */
   private[graft] val minhashPairsCache = new Memo[DataFrame](memoMax, "minhashPairsCache")(unp)
 
   private[graft] def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
     minhashPairsCache.get(spark, dir)(
       eager(Dedup.minhashPairs(docsTbl(spark, dir), "doc_id", "text",
-        shingleFrame = Some(docShingles(spark, dir)),
-        bandsFrame = Some(docMinhashBands(spark, dir)),
         gramSetsFrame = Some(docGramSets(spark, dir)))))
 
   private[graft] def simhashQ(spark: SparkSession, dir: String): DataFrame =

@@ -1,6 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -131,14 +132,161 @@ class DedupSpec extends AnyFunSuite {
     md5.keySet.intersect(xx.keySet).foreach(k => assert(md5(k) == xx(k)))
   }
 
-  test("minhashSignatures64 builds via HashAggregate, the md5 path via SortAggregate (plan pin)") {
-    val sh = Dedup.shingles(docs, "id", "text", 3)
-    val planXx = Dedup.minhashSignatures64(sh, 16).queryExecution.executedPlan.toString
-    assert(planXx.contains("HashAggregate"), s"LONG min should hash-aggregate:\n$planXx")
-    assert(!planXx.contains("SortAggregate"), s"LONG min should not sort-aggregate:\n$planXx")
-    val planMd5 = Dedup.minhashSignatures(sh, 16).queryExecution.executedPlan.toString
-    assert(planMd5.contains("SortAggregate"),
-      s"if STRING min stops sort-aggregating, minhashPairs' persist notes are stale:\n$planMd5")
+  // The SQL formulation of the MinHash signatures and LSH bands that the
+  // per-doc expression replaced (a seeds cross join, the (id, seed)
+  // minimum, the (id, band) regroup): the bit-parity reference.
+  private def refSignatures(sh: DataFrame, numHashes: Int, wide: Boolean): DataFrame = {
+    val seeds = (0 until numHashes).map(_.toLong).toDF("seed")
+    val h =
+      if (wide) xxhash64(col("seed"), col("gram"))
+      else md5(concat(col("seed").cast("string"), lit("_"), col("gram")))
+    sh.crossJoin(broadcast(seeds)).groupBy(col("id"), col("seed")).agg(min(h).as("mh"))
+  }
+
+  private def refBands(sig: DataFrame, rowsPerBand: Int, wide: Boolean): DataFrame = {
+    val slots = (0 until rowsPerBand).map(k =>
+      min(when(col("seed") % rowsPerBand === k, col("mh"))))
+    sig.groupBy(col("id"), floor(col("seed") / rowsPerBand).as("band"))
+      .agg((if (wide) xxhash64(slots: _*) else md5(concat_ws("|", slots: _*))).as("bh"))
+  }
+
+  private def bandRows(df: DataFrame): Set[(Long, Long, String)] =
+    df.select(col("id"), col("band").cast("long"), col("bh").cast("string")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    import org.apache.spark.sql.execution.SparkPlan
+    def kids(p: SparkPlan): Seq[SparkPlan] = allChildren(p)
+    /** The executed (final adaptive) plan of `df` after collecting it. */
+    def executed(df: DataFrame): SparkPlan = { df.collect(); df.queryExecution.executedPlan }
+    def pairExecs(p: SparkPlan): Seq[graft.plans.BucketPairsExec] =
+      collect(p) { case b: graft.plans.BucketPairsExec => b }
+    def exchanges(p: SparkPlan): Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] =
+      collect(p) { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+    /** Whether the path from `p` down to a BucketPairsExec crosses an
+      * exchange; None when `p` has no BucketPairsExec below it. */
+    def exchangeAbovePairs(p: SparkPlan): Option[Boolean] = p match {
+      case _: graft.plans.BucketPairsExec => Some(false)
+      case _ => kids(p).iterator.flatMap(exchangeAbovePairs).nextOption().map(_ ||
+        p.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec])
+    }
+  }
+
+  test("MinhashBands expression == the SQL signature + band formulation, bit for bit") {
+    val corpus = docs.unionByName(Seq(
+      5L -> "a b c d e f g h i j k l m n o p",
+      6L -> "one two",                              // fewer than n tokens
+      7L -> "a b a b a b a b").toDF("id", "text"))
+    val sh = Dedup.shingles(corpus, "id", "text", 3)
+    // gram sets WITH the short doc's empty array: it must yield no band rows
+    val gs = corpus.select(col("id"),
+      sort_array(graft.expr.TextExpr.wordShingles(col("text"), 3)).as("grams"))
+    for (wide <- Seq(false, true); (hashes, perBand) <- Seq((16, 4), (10, 4), (3, 1))) {
+      val want = bandRows(refBands(refSignatures(sh, hashes, wide), perBand, wide))
+      val got = bandRows(Dedup.minhashBuckets(gs, hashes, perBand, wide))
+      assert(got == want, s"wide=$wide numHashes=$hashes rowsPerBand=$perBand")
+      assert(got.map(_._1) == Set(0L, 1L, 2L, 3L, 4L, 5L, 7L))
+      assert(got.size == 7 * ((hashes + perBand - 1) / perBand))
+    }
+  }
+
+  test("minhash signatures are one projection; each funnel is one keyed exchange into BucketPairsExec (plan pin)") {
+    val gs = Dedup.docGramSetsDirect(docs, "id", "text", 3)
+    for (wide <- Seq(false, true)) {
+      val sig = Dedup.minhashBuckets(gs, 16, 4, wide).queryExecution.executedPlan.toString
+      Seq("CartesianProduct", "BroadcastNestedLoopJoin", "Expand", "Aggregate", "Exchange")
+        .foreach(op => assert(!sig.contains(op), s"signature step runs $op:\n$sig"))
+    }
+    val sim = Dedup.simhash64(docs, "id", "text").persist()
+    val emb = (0L until 30L).map(i =>
+      (i, Seq.tabulate(4)(d => (if (d == i % 3) 1.0 else 0.0) + 0.01 * (i % 5)))).toDF("vec_id", "embedding")
+    val semantic = Dedup.semanticDrop(emb, "vec_id", "embedding", nAnchors = 3, threshold = 0.9)
+    val funnels = Seq(
+      // thresholds no earlier test uses: a result another test left
+      // cached would otherwise stand in for the plan
+      "minhash" -> Dedup.minhashPairs(docs, "id", "text", threshold = 0.45, gramSetsFrame = Some(gs)),
+      "minhash64" -> Dedup.minhashPairs64(docs, "id", "text", threshold = 0.45, gramSetsFrame = Some(gs)),
+      "simhash" -> Dedup.simhashPairs(docs, "id", "text", maxHamming = 2, simFrame = Some(sim)),
+      "semantic" -> semantic)
+    try funnels.foreach { case (name, df) =>
+      val plan = Plans.executed(df)
+      val execs = Plans.pairExecs(plan)
+      assert(execs.length == 1, s"$name: one BucketPairsExec expected:\n$plan")
+      val ex = Plans.exchanges(execs.head)
+      assert(ex.length == 1 && ex.head.outputPartitioning
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning],
+        s"$name: exactly one hash exchange under BucketPairsExec expected:\n$plan")
+    } finally sim.unpersist()
+    // the drop's (ib, cluster) aggregate reads the pass's clustering by
+    // cluster: no exchange between BucketPairsExec and its max_cos
+    val plan = Plans.executed(semantic)
+    val aggs = Plans.collect(plan) {
+      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a }
+    val above = aggs.flatMap(a => Plans.exchangeAbovePairs(a))
+    assert(above.nonEmpty && above.forall(!_), s"exchange between the pass and max_cos:\n$plan")
+  }
+
+  test("BucketPairsExec reports dropped buckets, verified and emitted pairs") {
+    val many = (0L until 30L).map(i => i -> "identical boilerplate text body").toDF("id", "text")
+    val sim = Dedup.simhash64(many, "id", "text").persist()
+    // a static plan: adaptive execution would replace the stage of an
+    // empty pass (and its metrics) by an empty relation
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    def metrics(maxBucket: Int): Map[String, Long] = {
+      val plan = Plans.executed(Dedup.simhashPairs(many, "id", "text", maxHamming = 2,
+        simFrame = Some(sim), maxBucket = maxBucket))
+      val execs = Plans.pairExecs(plan)
+      assert(execs.length == 1, plan.toString)
+      execs.head.metrics.map { case (k, m) => k -> m.value }
+    }
+    try {
+      // every doc shares all 4 blocks: 4 buckets of 30
+      assert(metrics(10) == Map("bucketsDropped" -> 4L, "pairsVerified" -> 0L, "pairsEmitted" -> 0L))
+      val pairs = 30L * 29 / 2
+      assert(metrics(2000) ==
+        Map("bucketsDropped" -> 0L, "pairsVerified" -> 4 * pairs, "pairsEmitted" -> 4 * pairs))
+    } finally { spark.conf.set(key, prev); sim.unpersist() }
+  }
+
+  test("minhashPairs, simhashPairs and semanticDrop are identical at every input x shuffle partitioning") {
+    val rnd = new scala.util.Random(41)
+    val vocab = (0 until 60).map(i => s"w$i")
+    val cores = Seq.fill(6)(Seq.fill(24)(vocab(rnd.nextInt(vocab.length))))
+    val texts = (0L until 48L).map { i =>
+      val core = cores((i % 6).toInt).toArray
+      // 0–2 token edits per copy: near-dups at varied Jaccard and hamming
+      (0 until (i / 6 % 3).toInt).foreach(_ => core(rnd.nextInt(core.length)) = vocab(rnd.nextInt(60)))
+      i -> core.mkString(" ")
+    }
+    def jig(axis: Int): Seq[Double] =
+      Seq.tabulate(4)(d => (if (d == axis) 1.0 else 0.0) + rnd.nextDouble() * 0.15)
+    val vecs = (0L until 48L).map(i => (i, jig((i % 3).toInt)))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+    def run(parts: Int): Seq[Seq[String]] = {
+      val d = texts.toDF("id", "text").repartition(parts)
+      val e = vecs.toDF("vec_id", "embedding").repartition(parts)
+      val mh = Dedup.minhashPairs(d, "id", "text", threshold = 0.5)
+      val sh = Dedup.simhashPairs(d, "id", "text")
+      try Seq(rows(mh), rows(sh),
+        rows(Dedup.semanticDrop(e, "vec_id", "embedding", nAnchors = 3, threshold = 0.95)))
+      finally { mh.unpersist(); sh.unpersist() }
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val results =
+      try for (parts <- Seq(1, 3, 7); shuffle <- Seq(1, 7, 32)) yield {
+        spark.conf.set(key, shuffle.toString)
+        (parts, shuffle) -> run(parts)
+      }
+      finally spark.conf.set(key, prev)
+    assert(results.head._2.forall(_.nonEmpty), s"degenerate fixture: ${results.head._2}")
+    results.tail.foreach { case (at, r) =>
+      r.zip(results.head._2).zipWithIndex.foreach { case ((a, b), i) =>
+        assert(a == b, s"result $i at (partitions, shuffle) = $at differs:\n$a\n$b")
+      }
+    }
   }
 
   test("simhash: identical docs get identical signatures; pairs found at hamming 0") {
@@ -371,6 +519,32 @@ class DedupSpec extends AnyFunSuite {
       .select(col("id"), col("e.blk"), col("e.bs"))
     val over = Dedup.oversizedBuckets(blocks, Seq("blk", "bs"), 10).collect()
     assert(over.nonEmpty && over.forall(_.getLong(2) == 30L))
+    // minhash: a family of docs sharing a 30-token core collides in each
+    // band's core bucket; the biggest of them is made hot. A pair whose
+    // only shared buckets are hot is dropped; a pair that also shares an
+    // ordinary bucket is still found (threshold 0 verifies every
+    // candidate, so the result is exactly the guarded candidate set)
+    val rnd = new scala.util.Random(5)
+    val core = Seq.fill(30)(s"c${rnd.nextInt(1000)}")
+    val family = (0L until 24L).map(i =>
+      i -> (core ++ Seq.fill(8)(s"u${rnd.nextInt(1000)}")).mkString(" ")).toDF("id", "text")
+    val buckets = bandRows(refBands(refSignatures(Dedup.shingles(family, "id", "text", 3), 16,
+        wide = false), 4, wide = false))
+      .groupBy { case (_, band, bh) => (band, bh) }.values.map(_.map(_._1)).toSeq
+    val maxBucket = buckets.map(_.size).max - 1
+    def shared(x: Long, y: Long) = buckets.filter(b => b(x) && b(y))
+    val candidates = for (x <- 0L until 24L; y <- (x + 1) until 24L if shared(x, y).nonEmpty)
+      yield (x, y)
+    val (onlyHot, withOrdinary) =
+      candidates.partition(p => shared(p._1, p._2).forall(_.size > maxBucket))
+    val hotToo = withOrdinary.filter(p => shared(p._1, p._2).exists(_.size > maxBucket))
+    assert(onlyHot.nonEmpty && hotToo.nonEmpty, s"degenerate fixture: $buckets")
+    val mh = Dedup.minhashPairs(family, "id", "text", threshold = 0.0, maxBucket = maxBucket)
+    val found = mh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    mh.unpersist()
+    assert(onlyHot.forall(p => !found(p)), s"pairs sharing only a hot bucket found: $onlyHot")
+    assert(hotToo.forall(found), s"pairs sharing a hot and an ordinary bucket lost: $hotToo")
+    assert(found == withOrdinary.toSet)
   }
 
   test("connectedComponents works over STRING ids (no silent long-cast null-out)") {
