@@ -86,8 +86,11 @@ case class BucketPairsExec(verifier: PairVerifier, maxBucket: Int, keys: Seq[Att
   override def output: Seq[Attribute] = keys ++ Seq(a, b, score)
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override def requiredChildDistribution: Seq[Distribution] = ClusteredDistribution(keys) :: Nil
-  /** Sorted by key, each bucket streams through the task on its own: at
-    * most `maxBucket` + 1 rows are held at once, and the sort spills. */
+  /** Sorted by key, each bucket streams through the task on its own: one
+    * bucket's rows are held at once (at most `maxBucket` + 1 of them; an
+    * uncapped pass, as the exact Jaccard prefix pass is, holds its largest
+    * bucket whole), the sort spills, and verified pairs stream out as they
+    * are found. */
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = keys.map(SortOrder(_, Ascending)) :: Nil
   override def stringArgs: Iterator[Any] = Iterator(verifier.describe, s"maxBucket=$maxBucket")
 
@@ -132,35 +135,43 @@ case class BucketPairsExec(verifier: PairVerifier, maxBucket: Int, keys: Seq[Att
         (key, n)
       }
 
-      def pairs(key: UnsafeRow): Iterator[InternalRow] = {
-        val members = bucket.filterNot(_.isNullAt(idOrd)).toArray
-        val ids = members.map(r => InternalRow.copyValue(r.get(idOrd, idType)))
-        val check = BucketPairs.checker(ver, members, payOrd, payFloat)
-        val keyVals = Array.tabulate[Any](nKeys)(i => key.get(i, keyRefs(i).dataType))
-        val out = ArrayBuffer.empty[InternalRow]
-        var verified = 0L
-        var i = 0
-        while (i < members.length) {
-          var j = i + 1
-          while (j < members.length) {
-            val c = idOrdering.compare(ids(i), ids(j))
-            if (c != 0) {
-              val (x, y) = if (c < 0) (i, j) else (j, i)
-              verified += 1
-              val s = check(x, y)
-              if (s != null) {
-                val row = new Array[Any](nKeys + 3)
-                System.arraycopy(keyVals, 0, row, 0, nKeys)
-                row(nKeys) = ids(x); row(nKeys + 1) = ids(y); row(nKeys + 2) = s
-                out += emit(new GenericInternalRow(row)).copy()
+      /** The verified pairs of the bucket in `bucket`, emitted as they
+        * are found: nothing past the bucket's own rows is held. */
+      def pairs(key: UnsafeRow): Iterator[InternalRow] = new Iterator[InternalRow] {
+        private val members = bucket.filterNot(_.isNullAt(idOrd)).toArray
+        private val ids = members.map(r => InternalRow.copyValue(r.get(idOrd, idType)))
+        private val check = BucketPairs.checker(ver, members, payOrd, payFloat)
+        private val row = new Array[Any](nKeys + 3)
+        (0 until nKeys).foreach(k => row(k) = key.get(k, keyRefs(k).dataType))
+        private var i = 0
+        private var j = 1
+        private var found: InternalRow = null
+
+        /** Walks (i, j) on to the next verified pair, if any. */
+        private def advance(): Unit =
+          while (found == null && i < members.length) {
+            if (j >= members.length) { i += 1; j = i + 1 }
+            else {
+              val c = idOrdering.compare(ids(i), ids(j))
+              if (c != 0) {
+                val (x, y) = if (c < 0) (i, j) else (j, i)
+                mVerified += 1
+                val s = check(x, y)
+                if (s != null) {
+                  row(nKeys) = ids(x); row(nKeys + 1) = ids(y); row(nKeys + 2) = s
+                  found = emit(new GenericInternalRow(row))
+                  mEmitted += 1
+                }
               }
+              j += 1
             }
-            j += 1
           }
-          i += 1
+
+        override def hasNext: Boolean = { advance(); found != null }
+        override def next(): InternalRow = {
+          if (!hasNext) throw new NoSuchElementException
+          val r = found; found = null; r
         }
-        mVerified += verified; mEmitted += out.length
-        out.iterator
       }
 
       new Iterator[InternalRow] {

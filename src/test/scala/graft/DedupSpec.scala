@@ -116,16 +116,18 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhashPairs recovers the same high-similarity pairs") {
-    val p = Dedup.minhashPairs(docs, "id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mh = Dedup.minhashPairs(docs, "id", "text", threshold = 0.5)
+    val p = mh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    mh.unpersist()
     assert(p.contains((0L, 4L)) && p.contains((0L, 1L)))
   }
 
   test("minhashPairs64 recovers the same pairs as the md5 path (scale-variant differential)") {
-    val md5 = Dedup.minhashPairs(docs, "id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val xx = Dedup.minhashPairs64(docs, "id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    def pairs(df: DataFrame): Map[(Long, Long), Double] =
+      try df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      finally df.unpersist()
+    val md5 = pairs(Dedup.minhashPairs(docs, "id", "text", threshold = 0.5))
+    val xx = pairs(Dedup.minhashPairs64(docs, "id", "text", threshold = 0.5))
     // both hash families must surface the planted dup pairs; verified jac
     // is exact, so any pair found by both carries the identical score
     assert(xx.contains((0L, 4L)) && xx.contains((0L, 1L)))
@@ -202,15 +204,15 @@ class DedupSpec extends AnyFunSuite {
       (i, Seq.tabulate(4)(d => (if (d == i % 3) 1.0 else 0.0) + 0.01 * (i % 5)))).toDF("vec_id", "embedding")
     val semantic = Dedup.semanticDrop(emb, "vec_id", "embedding", nAnchors = 3, threshold = 0.9)
     val funnels = Seq(
-      // thresholds no earlier test uses: a result another test left
-      // cached would otherwise stand in for the plan
-      "minhash" -> Dedup.minhashPairs(docs, "id", "text", threshold = 0.45, gramSetsFrame = Some(gs)),
-      "minhash64" -> Dedup.minhashPairs64(docs, "id", "text", threshold = 0.45, gramSetsFrame = Some(gs)),
-      "simhash" -> Dedup.simhashPairs(docs, "id", "text", maxHamming = 2, simFrame = Some(sim)),
+      "minhash" -> Dedup.minhashPairs(docs, "id", "text", threshold = 0.5, gramSetsFrame = Some(gs)),
+      "minhash64" -> Dedup.minhashPairs64(docs, "id", "text", threshold = 0.5, gramSetsFrame = Some(gs)),
+      "simhash" -> Dedup.simhashPairs(docs, "id", "text", maxHamming = 3, simFrame = Some(sim)),
       "semantic" -> semantic)
     try funnels.foreach { case (name, df) =>
       val plan = Plans.executed(df)
       val execs = Plans.pairExecs(plan)
+      // none when a persisted result of the same plan stands in for it: a
+      // call that leaves its result cached must unpersist it
       assert(execs.length == 1, s"$name: one BucketPairsExec expected:\n$plan")
       val ex = Plans.exchanges(execs.head)
       assert(ex.length == 1 && ex.head.outputPartitioning
@@ -296,8 +298,9 @@ class DedupSpec extends AnyFunSuite {
     assert(sims(0L).length == 64 && sims.values.forall(_.matches("[01]{64}")))
     // reversal has identical tf profile → identical simhash (order-insensitive)
     assert(sims(0L) == sims(2L))
-    val pairs = Dedup.simhashPairs(docs, "id", "text", maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val sp = Dedup.simhashPairs(docs, "id", "text", maxHamming = 3)
+    val pairs = sp.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    sp.unpersist()
     assert(pairs((0L, 4L)) == 0L && pairs((0L, 2L)) == 0L)
   }
 
@@ -507,9 +510,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("maxBucket guard drops hot buckets; oversizedBuckets reports them") {
     val many = (0L until 30L).map(i => i -> "identical boilerplate text body").toDF("id", "text")
-    val unguarded = Dedup.simhashPairs(many, "id", "text").collect()
+    def collected(df: DataFrame) = try df.collect() finally df.unpersist()
+    val unguarded = collected(Dedup.simhashPairs(many, "id", "text"))
     assert(unguarded.length == 30 * 29 / 2) // all pairs, hamming 0
-    val guarded = Dedup.simhashPairs(many, "id", "text", maxBucket = 10).collect()
+    val guarded = collected(Dedup.simhashPairs(many, "id", "text", maxBucket = 10))
     assert(guarded.isEmpty) // every bucket holds all 30 docs -> dropped
     val sim = Dedup.simhash64(many, "id", "text")
     val blocks = sim.select(col("id"),
